@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, concat_ws}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat_ws, hash, lit, pmod}
 
 /** Persisted form of the incremental-dedup corpus index
   * (SURVEY.md §2 extension; the 100 TB ingest layout).
@@ -34,6 +34,10 @@ import org.apache.spark.sql.functions.{col, concat_ws}
   * files into one, preserving the bucket spec, so probe cost stays
   * flat over the append history (SCALE_NOTES "index compaction").
   *
+  * The lifecycle plumbing (writes, compaction, tombstones, ledger,
+  * tiered folds, registries) is [[IndexCore]]'s; this object encodes
+  * batches into band/signature rows and probes them.
+  *
   * BandIndexSpec proves the plan property: with broadcast disabled,
   * the probe's physical plan contains NO shuffle exchange above either
   * persisted corpus scan, and the decisions are row-identical to
@@ -42,25 +46,17 @@ import org.apache.spark.sql.functions.{col, concat_ws}
   */
 object BandIndex {
 
-  /** DEFAULT bucket count — a BUILD parameter since round 17
-    * ([[persist]]'s `buckets`); post-build verbs read the table's
-    * actual count from the catalog ([[IndexCore.bucketsOf]]). */
+  /** DEFAULT bucket count — a BUILD parameter ([[persist]]'s
+    * `buckets`); post-build verbs read the table's actual count from
+    * the catalog ([[IndexCore.bucketsOf]]). */
   val Buckets = IndexCore.DefaultBuckets
 
-  def bandsTable(prefix: String): String = s"${prefix}_bands"
-  def sigsTable(prefix: String): String = s"${prefix}_sigs"
+  private val Bands = IndexCore.TableSpec("bands", "bkey", Seq("bkey"))
+  private val Sigs = IndexCore.TableSpec("sigs", "corpus_doc", Seq("corpus_doc"))
+  private val Fam = IndexCore.Family("graft_corpus", "", Seq("bands", "sigs"))
 
-  // Temp-dir lifecycle, per-persist serial, batch stamps and the rest
-  // of the family-neutral lifecycle plumbing live in [[IndexCore]]
-  // (round-17, VERDICT r16 item 5: the round-16 durability holes were
-  // drift bugs between per-family copies; one copy ends the class).
-  // JVM-unique serial rationale (round-9 ADVICE): the persist
-  // registries below are keyed by SparkSession, but sessions created
-  // via spark.newSession() SHARE one catalog — a (tag, dir)-only
-  // prefix would have both sessions Overwrite the same table names
-  // and double-append dd16's tables.
-  private def deleteDir(path: String): Unit = IndexCore.deleteDir(path)
-  private def serial = IndexCore.serial
+  def bandsTable(prefix: String): String = Bands.name(prefix)
+  def sigsTable(prefix: String): String = Sigs.name(prefix)
 
   /** The base-build batch stamp — see [[IndexCore.BaseBatch]]. */
   val BaseBatch: Long = IndexCore.BaseBatch
@@ -70,29 +66,12 @@ object BandIndex {
     * `<prefix>_bands` / `<prefix>_sigs`. */
   def persist(spark: SparkSession, dir: String, path: String,
       prefix: String = "graft_corpus", buckets: Int = Buckets): Unit = {
-    import org.apache.spark.sql.functions.lit
     val (bands, sigs) = Dedup.corpusIndex(spark, dir)
-    // bucket-aligned builds (round 18): one file per bucket — see
-    // LexIndex.writePostings; the build's exchange is the hash
-    // distribution a bucketed layout wants anyway (guide §6)
-    bands
-      .select(concat_ws(":", col("band"), col("key")).as("bkey"),
-        col("corpus_doc"))
-      .withColumn("ingest_batch", lit(BaseBatch))
-      .repartition(buckets, col("bkey"))
-      .write
-      .bucketBy(buckets, "bkey").sortBy("bkey")
-      .option("path", s"$path/bands")
-      .mode(SaveMode.Overwrite)
-      .saveAsTable(bandsTable(prefix))
-    sigs
-      .withColumn("ingest_batch", lit(BaseBatch))
-      .repartition(buckets, col("corpus_doc"))
-      .write
-      .bucketBy(buckets, "corpus_doc").sortBy("corpus_doc")
-      .option("path", s"$path/sigs")
-      .mode(SaveMode.Overwrite)
-      .saveAsTable(sigsTable(prefix))
+    IndexCore.writeTable(bands
+      .select(concat_ws(":", col("band"), col("key")).as("bkey"), col("corpus_doc"))
+      .withColumn("ingest_batch", lit(BaseBatch)), Bands, prefix, Some((path, buckets)))
+    IndexCore.writeTable(sigs.withColumn("ingest_batch", lit(BaseBatch)),
+      Sigs, prefix, Some((path, buckets)))
   }
 
   /** The incremental-batch decision table probed against the
@@ -106,17 +85,19 @@ object BandIndex {
   }
 
   /** [[probe]] that also returns the pinned batch signature frame the
-    * decisions were computed from (round 18, guide §1.2): the cycles'
-    * append step joins it down to the admitted ids instead of
-    * re-signing them from a second documents scan — one sign pass per
-    * cycle, identical written rows (signatures are deterministic per
-    * text). */
+    * decisions were computed from: the cycles' append step joins it
+    * down to the admitted ids instead of re-signing them from a second
+    * documents scan — one sign pass per cycle, identical written rows
+    * (signatures are deterministic per text). */
   private def probeSigned(spark: SparkSession, dir: String,
-      prefix: String,
-      excludeBatch: Option[Long] = None): (DataFrame, DataFrame) = {
-    val (bands, sigs) = corpusFrames(spark, prefix, excludeBatch)
+      prefix: String): (DataFrame, DataFrame) = {
+    val (bands, sigs) = corpusFrames(spark, prefix, None)
     Dedup.incrementalDecisionsSigned(spark, dir, bands, sigs)
   }
+
+  /** The batch docs a decision frame admits (dup_of null), as doc_id. */
+  private def novelIds(dec: DataFrame): DataFrame =
+    dec.filter(col("dup_of").isNull).select(col("batch_doc").as("doc_id"))
 
   /** Restrict a probe's pinned batch signature frame to the admitted
     * ids, shaped for the table writers (doc_id first, then the sig
@@ -127,23 +108,17 @@ object BandIndex {
       admitted.select(col(admitted.columns.head).as("doc_id")), "doc_id")
 
   // ------------------------------------------------------------------
-  // Tombstone retention (round 12; VERDICT r11 item 3) — bounded-cost
-  // deletes. `retire` rewrites the ENTIRE index to remove a bounded id
-  // set: correct, zero-exchange, but corpus-linear I/O per
-  // right-to-be-forgotten batch — at 100 TB that's the wrong cost
-  // model for a daily retention feed. The tombstone path makes the
-  // DELETE itself O(retired): expired ids land in a tiny
-  // `<prefix>_tombstones` table (one bounded append), every probe
-  // masks them with a broadcast anti-join (streamed side keeps its
-  // bucketed partitioning — the no-corpus-exchange property is
-  // untouched), and the NEXT compaction physically purges the masked
-  // rows and clears the tombstone set. Decisions after
-  // `retireTombstone` are DEFINED identical to an eager `retire` —
-  // dd19's three-phase oracle pins mask, purge, and their equality.
+  // Tombstone retention — bounded-cost deletes. `retire` rewrites the
+  // ENTIRE index to remove a bounded id set: correct, zero-exchange,
+  // but corpus-linear I/O per right-to-be-forgotten batch. The
+  // tombstone path makes the DELETE itself O(retired): expired ids land
+  // in a tiny `<prefix>_tombstones` table, every probe masks them with
+  // a broadcast anti-join (the streamed side keeps its bucketed
+  // partitioning), and the NEXT compaction physically purges the
+  // masked rows and clears the set. Decisions after `retireTombstone`
+  // are DEFINED identical to an eager `retire` — dd19's three-phase
+  // oracle pins mask, purge, and their equality.
   // ------------------------------------------------------------------
-
-  // Tombstone plumbing is family-neutral — [[IndexCore.tombstonesTable]] /
-  // recordTombstones / tombstoneFrame / clearTombstones (round 17).
 
   /** O(retired)-cost retention: tombstone the expired corpus docs.
     * Probes exclude them immediately; the physical rows persist until
@@ -152,33 +127,22 @@ object BandIndex {
       expired: DataFrame): Unit =
     IndexCore.recordTombstones(spark, prefix, bandsTable(prefix), expired)
 
-  /** The persisted corpus frames, optionally excluding one batch's
-    * rows ([[maintainBatch]]'s replay fence): the `ingest_batch != N`
-    * predicate is a plain long comparison pushed into the parquet
-    * scan, and a filter above a bucketed scan preserves its output
-    * partitioning, so the no-corpus-exchange probe property is
-    * untouched. Tombstoned corpus docs ([[retireTombstone]]) are
-    * masked here with the broadcast anti-join.
+  /** The persisted corpus frames as every probe reads them: merge-log
+    * visibility applied (folded rows still on disk must not serve
+    * beside their merged copy), optionally excluding one batch's rows
+    * ([[maintainBatch]]'s replay fence), and tombstoned docs masked by
+    * the broadcast anti-join. Every filter is a pushed comparison on
+    * one long column above a bucketed scan, so the no-corpus-exchange
+    * probe property is untouched.
     *
-    * The fence is NULL-SAFE (round-11 ADVICE): `!= N` alone is
-    * three-valued, so a corpus row with a NULL stamp — a table
-    * persisted by pre-stamp code, or an external writer that omitted
-    * the column — would silently vanish from the probe corpus and
-    * change dedup decisions. Unstamped rows are by definition not the
-    * in-flight batch, so they are KEPT: `batch != N OR batch IS NULL`
-    * (an OR of two pushable predicates, still fully pushed to the
-    * parquet scan). */
+    * The fence is NULL-SAFE: `!= N` alone is three-valued, so a corpus
+    * row with a NULL stamp (a table written by pre-stamp code, or an
+    * external writer that omitted the column) would silently vanish
+    * from the probe corpus. Unstamped rows are by definition not the
+    * in-flight batch, so they are KEPT: `batch != N OR batch IS NULL`. */
   private def corpusFrames(spark: SparkSession, prefix: String,
       excludeBatch: Option[Long]): (DataFrame, DataFrame) = {
     val tomb = IndexCore.tombstoneFrame(spark, prefix)
-    // Merge-log visibility (round 17 — [[tieredMerge]]): folded input
-    // rows still on disk (commit → GC crash window) must not serve
-    // alongside their merged copy — the same single choke point
-    // LexIndex reads through. The filter applies even with an EMPTY
-    // log: a fold that crashed before its first commit leaves
-    // reserved-stamp rows on disk with no log table at all — they
-    // must stay invisible. Literal comparisons on one long column,
-    // fully pushed.
     val log = IndexCore.readMergeLog(spark, prefix)
     def f(t: String): DataFrame = {
       val vis = spark.table(t).filter(IndexCore.visibleUnder(log))
@@ -190,91 +154,46 @@ object BandIndex {
     (f(bandsTable(prefix)), f(sigsTable(prefix)))
   }
 
-  // Idempotent persist registry for the dd15 catalog entry: one
-  // bucketed index per (session, dir, tag), written to a fresh temp
-  // path on first use and reused afterwards — the bench's repeated
-  // sweeps (and BenchCold's memo-clearing resets) re-time the PROBE,
-  // not the index build, which is the production read path: the index
-  // is a durable artifact, not per-query state. The prefix is dir-,
-  // tag- AND serial-scoped (see `serial`). Guarded by a lock against
-  // racing double-writes (same discipline as Dedup.memoFrame).
-  private val persistedFor =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-  private val persistLock = new Object
-
+  /** The dd15 catalog entry's index: built once per (session, dir,
+    * tag) in a fresh temp dir and reused, so repeated bench sweeps
+    * re-time the PROBE, not the build — the index is a durable
+    * artifact, not per-query state. */
   def ensurePersisted(spark: SparkSession, dir: String,
-      tag: String = "dd15"): String = {
-    val key = (spark, dir, tag)
-    persistedFor.get(key).getOrElse(persistLock.synchronized {
-      persistedFor.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      persistedFor.getOrElseUpdate(key, {
-        val prefix = s"graft_corpus_${tag}_${Integer.toHexString(dir.hashCode)}" +
-          s"_s${serial.incrementAndGet()}"
-        val path = IndexCore.newTempDir(tag)
-        persist(spark, dir, path, prefix)
-        prefix
-      })
-    })
-  }
+      tag: String = "dd15"): String =
+    IndexCore.ensurePersisted(spark, dir, Fam, tag, tag)((path, p) =>
+      persist(spark, dir, path, p))
 
   /** Day-N+1 MAINTENANCE: append an admitted batch's band and
     * signature rows to the persisted index — the step the dd13/dd15
     * scaladocs promise ("append-only; corpus text is never
-    * re-signed"), here made real and testable. `admitted` is a
-    * (doc_id) frame of batch docs the decision table called novel
-    * (dup_of null). `bucketBy` is STABLE under append: the new file
-    * set hashes into the same `Buckets` bucket ids as the original
-    * write, so the probe's no-corpus-exchange plan property survives
-    * (BandIndexSpec re-asserts it post-append). Only the batch's
-    * signature rows move — |admitted|·Bands band rows and |admitted|
-    * signature rows, never the corpus.
+    * re-signed"). `admitted` is a (doc_id) frame of batch docs the
+    * decision table called novel (dup_of null). `bucketBy` is STABLE
+    * under append: the new file set hashes into the same bucket ids as
+    * the original write, so the probe's no-corpus-exchange plan
+    * property survives (BandIndexSpec re-asserts it post-append).
     *
-    * The joined signature frame is MATERIALIZED once (cache + count)
-    * before the two table writes (round-9 ADVICE): `admitted` is
-    * usually a probe-derived plan, and without the pin the second
-    * write would re-run the full probe — against a bands table the
-    * first write just mutated, an ordering invariant no one should
-    * have to rely on. */
+    * The signature frame is MATERIALIZED once (cache + count) before
+    * the two table writes: `admitted` is usually a probe-derived plan,
+    * and without the pin the second write would re-run the full probe
+    * against a bands table the first write just mutated. */
   def append(spark: SparkSession, dir: String, admitted: DataFrame,
-      prefix: String, batchId: Long = BaseBatch): Unit =
-    withPinnedSigs(spark, dir, admitted) { sigs =>
-      writeBandRows(sigs, prefix, batchId)
-      writeSigRows(sigs, prefix, batchId)
-    }
-
-  /** The admitted batch's signature frame, MATERIALIZED (cache +
-    * count) before `body` runs its table writes — see the [[append]]
-    * scaladoc's ordering-invariant rationale. */
-  /** The admitted batch's signature frame, batch-scoped (round 17,
-    * guide §8): the id join prunes the documents scan BEFORE the
-    * signature projection, so an append's work is ∝ the batch — the
-    * old form joined the corpus-wide memoized signature array down
-    * to the batch, a dataflow that needs a corpus-sized cache at
-    * 100 TB. */
-  private def signedFor(spark: SparkSession, dir: String,
-      admitted: DataFrame): DataFrame = {
+      prefix: String, batchId: Long = BaseBatch): Unit = {
+    // batch-scoped signing: the id join prunes the documents scan
+    // BEFORE the signature projection, so an append's work is ∝ the
+    // batch
     val adm = admitted.select(col(admitted.columns.head).as("doc_id"))
-    Dedup.signDocs(
+    val sigs = Dedup.signDocs(
       graft.Tables.documents(spark, dir).join(adm, "doc_id")
-        .select("doc_id", "text"))
-  }
-
-  private def withPinnedSigs(spark: SparkSession, dir: String,
-      admitted: DataFrame)(body: DataFrame => Unit): Unit = {
-    val sigs = signedFor(spark, dir, admitted).cache()
+        .select("doc_id", "text")).cache()
     try {
       sigs.count() // pin BEFORE the first write mutates the bands table
-      body(sigs)
+      appendSigned(sigs, prefix, batchId)
     } finally sigs.unpersist()
   }
 
-  /** [[append]] over a PRE-SIGNED, caller-pinned frame (round 17):
-    * the multi-slice cycles sign the admitted union ONCE and lay each
-    * slice down as its own file set — same tables, same rows, one
-    * signature pass instead of one per slice (dd17's profile charged
-    * ~0.3 s per slice to re-signing). Maintenance's fenced verb
-    * ([[maintainBatch]]) keeps signing per batch: its batches arrive
-    * separately by definition. */
+  /** [[append]] over a PRE-SIGNED, caller-pinned frame: the
+    * multi-slice cycles sign the admitted union ONCE and lay each
+    * slice down as its own file set. */
   private def appendSigned(sigs: DataFrame, prefix: String,
       batchId: Long = BaseBatch): Unit = {
     writeBandRows(sigs, prefix, batchId)
@@ -282,88 +201,46 @@ object BandIndex {
   }
 
   /** One atomic, batch-stamped band-table append: a Spark parquet
-    * write job commits all-or-nothing (files become visible only at
-    * job commit), so with the stamp this is the unit of idempotence
-    * [[maintainBatch]] fences on. */
+    * write job commits all-or-nothing, so with the stamp this is the
+    * unit of idempotence [[maintainBatch]] fences on. */
   private def writeBandRows(sigs: DataFrame, prefix: String,
       batchId: Long): Unit = {
-    import org.apache.spark.sql.functions.lit
     val bandKeys = (0 until Dedup.Bands).map(b =>
       concat_ws(":", col(s"sig_${2 * b}"), col(s"sig_${2 * b + 1}")))
-    val b = IndexCore.bucketsOf(sigs.sparkSession, bandsTable(prefix))
-    sigs
+    IndexCore.writeTable(sigs
       .select(col("doc_id").as("corpus_doc"),
         org.apache.spark.sql.functions.posexplode(
           org.apache.spark.sql.functions.array(bandKeys: _*)).as(Seq("band", "key")))
       .select(concat_ws(":", col("band"), col("key")).as("bkey"), col("corpus_doc"))
-      .withColumn("ingest_batch", lit(batchId))
-      // bucket-aligned append: one file per bucket per batch, a file
-      // count independent of cluster width (round 18 — see
-      // LexIndex.writePostings; the un-aligned form lays down
-      // tasks × buckets files per append and the driver pays for
-      // every one of them at commit, footer-probe and listing time)
-      .repartition(b, col("bkey"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(b, "bkey")
-      .sortBy("bkey")
-      .saveAsTable(bandsTable(prefix))
+      .withColumn("ingest_batch", lit(batchId)), Bands, prefix, None)
   }
 
   /** One atomic, batch-stamped signature-table append (written SECOND
     * in every maintenance path, so its stamp's presence certifies the
     * whole batch landed). */
   private def writeSigRows(sigs: DataFrame, prefix: String,
-      batchId: Long): Unit = {
-    import org.apache.spark.sql.functions.lit
-    val b = IndexCore.bucketsOf(sigs.sparkSession, sigsTable(prefix))
-    sigs.toDF("corpus_doc" +: (0 until Dedup.MinhashK).map(j => s"b_sig_$j"): _*)
-      .withColumn("ingest_batch", lit(batchId))
-      // bucket-aligned append — see writeBandRows
-      .repartition(b, col("corpus_doc"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(b, "corpus_doc")
-      .sortBy("corpus_doc")
-      .saveAsTable(sigsTable(prefix))
-  }
-
-  // "Has batch N landed?" is the family-neutral storage fence —
-  // [[IndexCore.batchPresent]] (footer-pruned, cross-session refresh).
+      batchId: Long): Unit =
+    IndexCore.writeTable(
+      sigs.toDF("corpus_doc" +: (0 until Dedup.MinhashK).map(j => s"b_sig_$j"): _*)
+        .withColumn("ingest_batch", lit(batchId)), Sigs, prefix, None)
 
   /** Probe the index, append the batch docs judged NOVEL (dup_of
-    * null). Unlike the pre-round-10 run-once variant, this appends
-    * unconditionally — callers that must not stack appends own that
-    * guard (the dd16 catalog entry gets a FRESH index per invocation
-    * instead, so its bench timing covers the real cycle). */
-  def appendNovel(spark: SparkSession, dir: String, prefix: String): Unit = {
-    val novel = probe(spark, dir, prefix)
-      .filter(col("dup_of").isNull)
-      .select(col("batch_doc").as("doc_id"))
-    append(spark, dir, novel, prefix)
-  }
+    * null). Appends unconditionally — callers that must not stack
+    * appends own that guard (the dd16 catalog entry gets a FRESH index
+    * per invocation instead, so its bench timing covers the real
+    * cycle). */
+  def appendNovel(spark: SparkSession, dir: String, prefix: String): Unit =
+    append(spark, dir, novelIds(probe(spark, dir, prefix)), prefix)
 
-  // Run-once guard retained for spec fixtures that probe an appended
-  // index repeatedly (BandIndexSpec "specappend").
-  private val appendedFor =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Boolean]
-
+  /** [[appendNovel]] at most once per (session, dir, prefix) — for
+    * spec fixtures that probe an appended index repeatedly. */
   def appendNovelOnce(spark: SparkSession, dir: String, prefix: String): Unit = {
-    val key = (spark, dir, prefix)
-    if (!appendedFor.contains(key)) persistLock.synchronized {
-      appendedFor.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      if (!appendedFor.contains(key)) {
-        appendNovel(spark, dir, prefix)
-        appendedFor(key) = true
-      }
+    IndexCore.once(spark, dir, s"appended:$prefix") {
+      appendNovel(spark, dir, prefix)
+      prefix
     }
+    ()
   }
-
-  // ------------------------------------------------------------------
-  // Compaction — the day-N maintenance companion to `append`
-  // ------------------------------------------------------------------
-
-  // The bucket-preserving per-bucket local rewrite (zero exchange, one
-  // file per bucket, crash-safe swap) and the backing-file diagnostic
-  // are family-neutral — [[IndexCore.compactTable]] / [[IndexCore.tableFiles]].
 
   /** Compact both index tables (one file per bucket). Probe plans,
     * decisions, and the no-corpus-exchange property are unchanged —
@@ -371,33 +248,25 @@ object BandIndex {
     * merge the probe's sort-merge join performs reads ONE run instead
     * of one per historical append. Pending tombstones
     * ([[retireTombstone]]) are physically PURGED by the same rewrite
-    * (the anti-join rides the per-bucket local pass for free) and the
-    * tombstone set is cleared — decisions are unchanged because the
-    * probes were already masking exactly these rows. */
+    * and the tombstone set is cleared — decisions are unchanged
+    * because the probes were already masking exactly these rows. */
   def compact(spark: SparkSession, prefix: String): Unit = {
     val tomb = IndexCore.tombstoneFrame(spark, prefix)
-    IndexCore.compactTable(spark, bandsTable(prefix), "bkey", tomb)
-    IndexCore.compactTable(spark, sigsTable(prefix), "corpus_doc", tomb)
+    Seq(Bands, Sigs).foreach(IndexCore.compactTable(spark, _, prefix, tomb, "corpus_doc"))
     IndexCore.clearTombstones(spark, prefix)
   }
 
   /** RETENTION — remove a set of corpus docs from the persisted index
     * in place (right-to-be-forgotten, license takedown, rolling-window
-    * expiry: the day-N lifecycle's third verb after append and
-    * compact). Implementation IS the compaction rewrite with a
+    * expiry). Implementation IS the compaction rewrite with a
     * broadcast anti-join predicate: each bucket's rows are filtered
-    * and laid back down locally, one file per bucket, zero exchange —
-    * so a retention pass also absorbs any accumulated append files,
-    * and the probe's no-corpus-exchange property survives untouched
-    * (BandIndexSpec asserts plan, file count, and decisions). Probes
-    * after retire behave as if the retired docs were never indexed:
-    * a batch doc whose only match was retired becomes novel; one with
-    * a surviving second-best match falls back to it. */
+    * and laid back down locally, one file per bucket, zero exchange.
+    * Probes after retire behave as if the retired docs were never
+    * indexed: a batch doc whose only match was retired becomes novel;
+    * one with a surviving second-best match falls back to it. */
   def retire(spark: SparkSession, prefix: String,
-      expired: DataFrame): Unit = {
-    IndexCore.compactTable(spark, bandsTable(prefix), "bkey", Some(expired))
-    IndexCore.compactTable(spark, sigsTable(prefix), "corpus_doc", Some(expired))
-  }
+      expired: DataFrame): Unit =
+    Seq(Bands, Sigs).foreach(IndexCore.compactTable(spark, _, prefix, Some(expired), "corpus_doc"))
 
   /** Sources retired by the dd18 catalog entry — chosen so the
     * retention is OBSERVABLE at both oracle scales: between them they
@@ -406,6 +275,18 @@ object BandIndex {
     * from dup to novel in phase 1. */
   val RetiredSrcs: Seq[String] = Seq("src8", "src12")
 
+  private def cycle(spark: SparkSession, dir: String, tag: String)(
+      body: IndexCore.Cycle => DataFrame): DataFrame =
+    IndexCore.cycle(spark, dir, tag, Fam)((path, p) => persist(spark, dir, path, p))(body)
+
+  private def retiredDocs(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.documents(spark, dir)
+      .filter(col("source").isin(RetiredSrcs: _*))
+      .select("doc_id")
+
+  private def phaseRows(dec: DataFrame, col0: String, n: Int): DataFrame =
+    dec.select(lit(n).as(col0), col("batch_doc"), col("dup_of"), col("est_jaccard"))
+
   /** The dd18 cycle on a FRESH index: probe (phase 0, full corpus) →
     * retire [[RetiredSrcs]]'s docs → re-probe (phase 1). Output is
     * both phases' decision tables; the oracle replays phase 1 with
@@ -413,28 +294,10 @@ object BandIndex {
     * predicate — the engine must behave as if the retired docs were
     * never indexed. */
   def retentionCycle(spark: SparkSession, dir: String,
-      tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.lit
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") { freshIndex(spark, dir, tag) }
-    val dec0 = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix)
-        .select(lit(0).as("phase"), col("batch_doc"),
-          col("dup_of"), col("est_jaccard"))
-        .localCheckpoint()
-    }
-    val expired = graft.Tables.documents(spark, dir)
-      .filter(col("source").isin(RetiredSrcs: _*))
-      .select("doc_id")
-    Phases.time(tag, "retire") { retire(spark, prefix, expired) }
-    val dec1 = Phases.time(tag, "reprobe") {
-      probe(spark, dir, prefix)
-        .select(lit(1).as("phase"), col("batch_doc"),
-          col("dup_of"), col("est_jaccard"))
-        .localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
+      tag: String): DataFrame = cycle(spark, dir, tag) { c =>
+    val dec0 = c.probe("probe")(phaseRows(probe(spark, dir, c.prefix), "phase", 0))
+    c.phase("retire") { retire(spark, c.prefix, retiredDocs(spark, dir)) }
+    val dec1 = c.probe("reprobe")(phaseRows(probe(spark, dir, c.prefix), "phase", 1))
     dec0.unionByName(dec1).orderBy("phase", "batch_doc")
   }
 
@@ -448,391 +311,158 @@ object BandIndex {
     * dd18's two-phase SQL with phase 1 emitted twice — the gate
     * proves the mask, the purge, and their equality in one pass. */
   def tombstoneRetentionCycle(spark: SparkSession, dir: String,
-      tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.lit
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") { freshIndex(spark, dir, tag) }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    def phaseProbe(n: Int): DataFrame =
-      probe(spark, dir, prefix)
-        .select(lit(n).as("phase"), col("batch_doc"),
-          col("dup_of"), col("est_jaccard"))
-        .localCheckpoint()
-    val dec0 = Phases.time(tag, "probe") { phaseProbe(0) }
-    val expired = graft.Tables.documents(spark, dir)
-      .filter(col("source").isin(RetiredSrcs: _*))
-      .select("doc_id")
-    Phases.time(tag, "retire") { retireTombstone(spark, prefix, expired) }
-    val dec1 = Phases.time(tag, "reprobe") { phaseProbe(1) }
-    Phases.time(tag, "purge") { compact(spark, prefix) }
-    val dec2 = Phases.time(tag, "probe2") { phaseProbe(2) }
+      tag: String): DataFrame = cycle(spark, dir, tag) { c =>
+    def phaseProbe(n: Int): DataFrame = phaseRows(probe(spark, dir, c.prefix), "phase", n)
+    val dec0 = c.probe("probe")(phaseProbe(0))
+    c.phase("retire") { retireTombstone(spark, c.prefix, retiredDocs(spark, dir)) }
+    val dec1 = c.probe("reprobe")(phaseProbe(1))
+    c.phase("purge") { compact(spark, c.prefix) }
+    val dec2 = c.probe("probe2")(phaseProbe(2))
     dec0.unionByName(dec1).unionByName(dec2).orderBy("phase", "batch_doc")
   }
 
-  // ------------------------------------------------------------------
-  // Fresh maintenance cycle (dd16/dd17) — honest bench timing
-  // ------------------------------------------------------------------
+  /** Disjoint day-slice `i` of `n` (hash-sliced — the fixture's novel
+    * ids are residue-concentrated, so raw-mod slices can be empty). */
+  private def slice(sigs: DataFrame, n: Int, i: Int): DataFrame =
+    sigs.filter(pmod(hash(col("doc_id")), lit(n)) === lit(i))
 
-  // The previous invocation's index per (session, dir, tag): a new
-  // cycle retires it (drop tables, delete files) so repeated bench
-  // sweeps don't accumulate temp indexes. The LAST cycle's artifacts
-  // are cleaned by the shutdown hook.
-  private val lastCycle =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), (String, String)]
-
-  /** Retire the (session, dir, tag)'s previous ephemeral index, then
-    * persist a fresh one and register it for the next retirement. */
-  private def freshIndex(spark: SparkSession, dir: String,
-      tag: String): (String, String) = {
-    val key = (spark, dir, tag)
-    persistLock.synchronized {
-      lastCycle.remove(key).foreach { case (oldPrefix, oldPath) =>
-        drop(spark, oldPrefix)
-        IndexCore.retireTempDir(oldPath)
-      }
-      lastCycle.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    }
-    val prefix = s"graft_corpus_${tag}_${Integer.toHexString(dir.hashCode)}" +
-      s"_s${serial.incrementAndGet()}"
-    val path = IndexCore.newTempDir(tag)
-    persist(spark, dir, path, prefix)
-    (prefix, path)
+  /** The first probe's novel docs' signatures, pinned: derived from a
+    * checkpointed novel set and the probe's own signatures, so tables
+    * the cycle rewrites underneath never touch its lineage (a cached
+    * probe plan's recompute after an in-cycle compaction throws
+    * FILE_NOT_EXIST). The caller unpersists. */
+  private def novelSigs(spark: SparkSession, dir: String, prefix: String): DataFrame = {
+    val (dec, batchSigs) = probeSigned(spark, dir, prefix)
+    val sigs = sigsForAdmitted(batchSigs, novelIds(dec).localCheckpoint()).cache()
+    sigs.count() // materialize before the first write mutates the tables
+    sigs
   }
 
   /** One full day-N+1 maintenance cycle on a FRESH index: persist →
     * probe → append(novel) [in `appendSlices` separate appends] →
     * [compact if requested] → re-probe. Returns the re-probe decision
-    * frame (lazy; everything before it runs eagerly here).
-    *
-    * Round-9 VERDICT item 2 (bench honesty): the old dd16 entry
-    * guarded its append with run-once, so min-of-2 warm sweeps
-    * re-timed a cycle whose append was skipped. This variant rebuilds
-    * the index from the memoized signature stage on EVERY invocation
-    * — at bench scale that is cheap, and the timed number now covers
-    * the real maintenance work (probe → append → re-probe, plus the
-    * index write itself) on every sweep. */
+    * frame. The index is rebuilt on EVERY invocation, so the timed
+    * number covers the real maintenance work on every sweep; the
+    * phases ("append" = novel probe + appends) sum to it. */
   def freshCycle(spark: SparkSession, dir: String, tag: String,
-      appendSlices: Int = 1, doCompact: Boolean = false): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    // Per-phase wall times → the bench artifact's "phases" map
-    // (round-10 VERDICT item 3: the one full-cycle number buried the
-    // graded op under fixture rebuild). "append" covers the novel
-    // probe + the appends; the final probe is materialized HERE
-    // (localCheckpoint) so the stamped phases sum to the entry's
-    // bench number — and the returned frame no longer reads tables a
-    // later cycle will drop.
-    val (prefix, path) = Phases.time(tag, "persist") { freshIndex(spark, dir, tag) }
-    Phases.time(tag, "append") {
-      // the probe's pinned batch signature frame feeds the writes
-      // (round 18): the append used to RE-SIGN the admitted ids from
-      // a second documents scan — signatures the probe had already
-      // materialized. Same rows either way (signing is deterministic
-      // per text); the sign pass now runs once per cycle, in the
-      // probe.
-      val (dec, batchSigs) = probeSigned(spark, dir, prefix)
-      val novel = dec
-        .filter(col("dup_of").isNull)
-        .select(col("batch_doc").as("doc_id"))
-        .cache()
-      try {
-        novel.count()
-        // disjoint day-by-day slices when appendSlices > 1
-        // (hash-sliced — the fixture's novel ids are
-        // residue-concentrated, so raw-mod slices can be empty):
-        // same union as one append, but each append lays down its
-        // own file set per bucket — the file-growth regime
-        // compaction exists for. SEQUENTIAL writes by necessity,
-        // not oversight: overlapping the slice appends (guide §2.6)
-        // was tried and REVERTED — concurrent saveAsTable appends
-        // to one table share the Hadoop committer's `_temporary/0`
-        // staging dir, and one job's cleanup deletes the other's
-        // in-flight task files (TASK_WRITE_FAILED, caught by
-        // BandIndexSpec).
-        import org.apache.spark.sql.functions.{hash, lit, pmod}
-        val sigs = sigsForAdmitted(batchSigs, novel).cache()
+      appendSlices: Int = 1, doCompact: Boolean = false): DataFrame =
+    cycle(spark, dir, tag) { c =>
+      c.phase("append") {
+        val (dec, batchSigs) = probeSigned(spark, dir, c.prefix)
+        val novel = novelIds(dec).cache()
         try {
-          sigs.count() // materialize BEFORE the first write mutates the table
-          if (appendSlices <= 1) appendSigned(sigs, prefix)
-          else (0 until appendSlices).foreach { i =>
-            appendSigned(
-              sigs.filter(pmod(hash(col("doc_id")), lit(appendSlices)) === lit(i)),
-              prefix)
-          }
-        } finally sigs.unpersist()
-      } finally novel.unpersist()
+          novel.count()
+          // slice appends are SEQUENTIAL by necessity: concurrent
+          // saveAsTable appends to one table share the committer's
+          // `_temporary/0` staging dir, and one job's cleanup deletes
+          // the other's in-flight task files
+          val sigs = sigsForAdmitted(batchSigs, novel).cache()
+          try {
+            sigs.count() // materialize BEFORE the first write mutates the table
+            if (appendSlices <= 1) appendSigned(sigs, c.prefix)
+            else (0 until appendSlices).foreach(i =>
+              appendSigned(slice(sigs, appendSlices, i), c.prefix))
+          } finally sigs.unpersist()
+        } finally novel.unpersist()
+      }
+      if (doCompact) c.phase("compact") { compact(spark, c.prefix) }
+      c.probe("probe")(probe(spark, dir, c.prefix))
     }
-    if (doCompact) Phases.time(tag, "compact") { compact(spark, prefix) }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
-  /** Append with the AUTO-COMPACTION policy (round 12 — the
-    * operational glue between the verbs): after the append, if the
-    * bands table's file count exceeds `maxFilesPerBucket × Buckets`,
+  private def overFilePolicy(spark: SparkSession, prefix: String,
+      maxFilesPerBucket: Int): Boolean =
+    IndexCore.tableFiles(spark, bandsTable(prefix)).size >
+      maxFilesPerBucket * IndexCore.bucketsOf(spark, bandsTable(prefix))
+
+  /** Append with the AUTO-COMPACTION policy: after the append, if the
+    * bands table's file count exceeds `maxFilesPerBucket × buckets`,
     * run [[compact]] inline. Returns whether compaction fired. The
     * policy bounds what the probe's per-bucket merge reads to a
-    * CONSTANT number of runs regardless of append history — without
-    * it, file count (and the merge fan-in) grows linearly with
-    * micro-batches until someone remembers to compact. Decisions are
-    * invariant to when the policy fires (compaction is
-    * content-preserving; dd20 pins this under dd16's oracle).
-    * Compaction folding recent batch stamps into wide-[min,max] files
-    * weakens [[batchPresent]]'s pruning for those ids — the ledger
-    * fast-guard covers every normally-completed batch, so only a
-    * replay racing the compaction pays a full column scan
-    * (documented caveat on [[batchPresent]]). */
+    * CONSTANT number of runs regardless of append history. Decisions
+    * are invariant to when the policy fires (compaction is
+    * content-preserving; dd20 pins this under dd16's oracle). */
   def appendAuto(spark: SparkSession, dir: String, admitted: DataFrame,
       prefix: String, batchId: Long = BaseBatch,
       maxFilesPerBucket: Int = 4): Boolean = {
     append(spark, dir, admitted, prefix, batchId)
-    val fired =
-      IndexCore.tableFiles(spark, bandsTable(prefix)).size >
-        maxFilesPerBucket * IndexCore.bucketsOf(spark, bandsTable(prefix))
+    val fired = overFilePolicy(spark, prefix, maxFilesPerBucket)
     if (fired) compact(spark, prefix)
     fired
   }
 
   /** dd20: the dd16/dd17 maintenance cycle with compaction AUTOMATED
     * — one decision probe, the novel set signed once and appended in
-    * `slices` disjoint day-slices ([[appendSigned]]) under
-    * [[appendAuto]]'s file-count policy with a low threshold so it
-    * fires mid-history (asserted in-cycle, along with the file-count
-    * bound it exists to enforce), then the re-probe.
-    * Slices union to the same rows as one append and compaction is
-    * content-preserving, so decisions are DEFINED identical to
-    * dd16's — the oracle is the same SQL. */
+    * `slices` disjoint day-slices under [[appendAuto]]'s file-count
+    * policy with a low threshold so it fires mid-history (asserted
+    * in-cycle, along with the file-count bound it exists to enforce),
+    * then the re-probe. Slices union to the same rows as one append
+    * and compaction is content-preserving, so decisions are DEFINED
+    * identical to dd16's — the oracle is the same SQL. */
   def autoCompactCycle(spark: SparkSession, dir: String, tag: String,
-      slices: Int = 6, maxFilesPerBucket: Int = 2): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") { freshIndex(spark, dir, tag) }
-    Phases.time(tag, "append") {
-      // localCheckpoint, not cache: the mid-history compactions this
-      // cycle exists to exercise DELETE the files a cached probe
-      // plan's recompute would re-list — an eager lineage-free pin is
-      // the only derivation that survives the table being rewritten
-      // underneath it (measured: a cached `novel` recompute after the
-      // first in-policy compaction throws FILE_NOT_EXIST).
-      val (dec, batchSigs) = probeSigned(spark, dir, prefix)
-      val novel = dec
-        .filter(col("dup_of").isNull)
-        .select(col("batch_doc").as("doc_id"))
-        .localCheckpoint()
-      import org.apache.spark.sql.functions.{hash, lit, pmod}
-      // the probe's signatures feed all slices (round 18, as
-      // freshCycle — no re-sign); the frame derives from the PINNED
-      // batchSigs and novel ids only, so the in-policy compactions
-      // rewriting the index tables underneath never touch its lineage
-      val sigs = sigsForAdmitted(batchSigs, novel).cache()
-      var fires = 0
-      try {
-        sigs.count()
-        (0 until slices).foreach { i =>
-          appendSigned(
-            sigs.filter(pmod(hash(col("doc_id")), lit(slices)) === lit(i)),
-            prefix)
-          val fired =
-            IndexCore.tableFiles(spark, bandsTable(prefix)).size >
-              maxFilesPerBucket * IndexCore.bucketsOf(spark, bandsTable(prefix))
-          if (fired) { compact(spark, prefix); fires += 1 }
-          val bound = (maxFilesPerBucket + 1) * Buckets
-          val files = IndexCore.tableFiles(spark, bandsTable(prefix)).size
-          require(files <= bound,
-            s"auto-compaction failed to bound the file count: $files > $bound")
-        }
-      } finally sigs.unpersist()
-      require(fires > 0,
-        "fixture too small: the auto-compaction policy never fired")
-    }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
-
-  /** Refuse a maintenance fold while any stamped batch is mid-commit
-    * (stamped but not ledgered) — folding it would re-stamp its rows
-    * and destroy the replay fence, so a checkpoint restart would
-    * double-append the batch (the lexical family's round-16 hole,
-    * guarded identically there). Applies only where a ledger exists:
-    * ad-hoc appends on a never-streamed index have no replay to
-    * fence. */
-  private def requireLedgered(spark: SparkSession, prefix: String,
-      verb: String): Unit = {
-    val lt = IndexCore.ledgerTable(prefix)
-    if (spark.catalog.tableExists(lt)) {
-      // footer fast path (round 18, VERDICT item 1) — see
-      // LexIndex.requireLedgered; sigs files hold one stamp each
-      val unledgered = (
-        IndexCore.stampSetFromFooters(spark, lt, "batch_id"),
-        IndexCore.stampSetFromFooters(spark, sigsTable(prefix), "ingest_batch")
-      ) match {
-        case (Some(ledgered), Some(stamps)) =>
-          stamps.filter(b => b >= 0 && !ledgered.contains(b)).toSeq
-        case _ =>
-          spark.catalog.refreshTable(lt)
-          spark.catalog.refreshTable(sigsTable(prefix))
-          val ledgered = spark.table(lt).select("batch_id").distinct()
-            .collect().map(_.getLong(0)).toSet
-          spark.table(sigsTable(prefix))
-            .select("ingest_batch").distinct()
-            .collect().map(_.getLong(0))
-            .filter(b => b >= 0 && !ledgered.contains(b)).toSeq
+      slices: Int = 6, maxFilesPerBucket: Int = 2): DataFrame =
+    cycle(spark, dir, tag) { c =>
+      c.phase("append") {
+        val sigs = novelSigs(spark, dir, c.prefix)
+        var fires = 0
+        try {
+          (0 until slices).foreach { i =>
+            appendSigned(slice(sigs, slices, i), c.prefix)
+            if (overFilePolicy(spark, c.prefix, maxFilesPerBucket)) {
+              compact(spark, c.prefix)
+              fires += 1
+            }
+            val bound = (maxFilesPerBucket + 1) * Buckets
+            val files = IndexCore.tableFiles(spark, bandsTable(c.prefix)).size
+            require(files <= bound,
+              s"auto-compaction failed to bound the file count: $files > $bound")
+          }
+        } finally sigs.unpersist()
+        require(fires > 0,
+          "fixture too small: the auto-compaction policy never fired")
       }
-      require(unledgered.isEmpty,
-        s"$verb($prefix): batch(es) ${unledgered.mkString(",")} are " +
-          "mid-commit (stamped but not ledgered) — replay them through " +
-          "maintainBatch before any maintenance fold, or their replay " +
-          "fence is destroyed and a restart double-appends them")
+      c.probe("probe")(probe(spark, dir, c.prefix))
     }
-  }
 
-  /** SIZE-TIERED segment merge for the band index (round 17 — the
-    * second family through [[IndexCore]]'s merge log, proving the
-    * mechanism is family-neutral): fold ONLY the batch-stamped
-    * segments at or below `maxTierRows` into one merged segment
-    * across BOTH tables, leaving the base tier's files byte-untouched
-    * on disk. The bounded-work verb between "do nothing" and the
-    * corpus-sized [[compact]]:
-    *
-    *   - tier pick from parquet FOOTERS of the sigs table (one row
-    *     per doc — the natural segment-size measure), no data I/O;
-    *   - the fold reads exactly the sub-tier segments' rows (pushed
-    *     `ingest_batch IN (S)` literal, footer-pruned to S's files —
-    *     bytes ∝ arrivals, never the corpus) and appends them under
-    *     one reserved stamp, bucket-aligned (one task per bucket);
-    *   - the COMMIT is one atomic merge-log append covering both
-    *     tables (appends stamp bands and sigs with the same batch id,
-    *     so one (folded → out) record retires both tables' input
-    *     rows); before it the output rows are invisible by
-    *     reserved-stamp construction and the inputs serve — every
-    *     crash point leaves the probes seeing exactly pre- or
-    *     post-fold content, never a mix ([[corpusFrames]]'s
-    *     visibility filter is the single choke point);
-    *   - dead files are GC'd after the commit — pure cleanup, the
-    *     rows were already invisible.
-    *
-    * Unlike the lexical fold there is no per-segment metadata to
-    * recompute: band decisions read raw (bkey, corpus_doc) and
-    * signature rows, so the fold is purely a LAYOUT event — the probe
-    * answers are defined unchanged, which is exactly what dd22's
-    * oracle (dd16's SQL) checks. Returns true when a fold ran. */
+  /** SIZE-TIERED segment merge for the band index: fold ONLY the
+    * batch-stamped segments at or below `maxTierRows` (sized by the
+    * sigs table — one row per doc) into one merged segment across
+    * BOTH tables, leaving the base tier's files byte-untouched
+    * ([[IndexCore.tieredMerge]]). Appends stamp bands and sigs with
+    * the same batch id, so one merge-log commit retires both tables'
+    * input rows; [[corpusFrames]]'s visibility filter is the single
+    * read choke point. The fold is purely a LAYOUT event — band
+    * decisions read raw rows, so probe answers are defined unchanged,
+    * which is what dd22's oracle (dd16's SQL) checks. Refused while a
+    * maintained batch is mid-commit ([[IndexCore.requireLedgered]]).
+    * Returns true when a fold ran. */
   def tieredMerge(spark: SparkSession, prefix: String,
       maxTierRows: Long = Long.MaxValue): Boolean = {
-    requireLedgered(spark, prefix, "tieredMerge")
-    val bt = bandsTable(prefix)
-    val st = sigsTable(prefix)
-    spark.catalog.refreshTable(bt)
-    spark.catalog.refreshTable(st)
-    val log = IndexCore.readMergeLog(spark, prefix)
-    // ONE footer sweep per table, shared by GC, the tier pick and
-    // the fresh-stamp scan (round 17: the fold paid six sweeps)
-    val bSegs0 = IndexCore.fileSegments(spark, bt)
-    val sSegs0 = IndexCore.fileSegments(spark, st)
-    // GC any prior fold's leftovers FIRST: a crashed attempt's orphan
-    // files must go before a stamp could be reused, and folded files
-    // this cleans keep the footer listing below honest
-    val bGone = IndexCore.gcDeadFilesOf(spark, bt, log, bSegs0).toSet
-    val sGone = IndexCore.gcDeadFilesOf(spark, st, log, sSegs0).toSet
-    val bSegs = bSegs0.filterNot(s => bGone.contains(s._1))
-    val sSegs = sSegs0.filterNot(s => sGone.contains(s._1))
-    val sizes = IndexCore.segmentSizesOf(sSegs, log)
-    val fold = sizes.collect {
-      case (stamp, (rows, _))
-        if stamp != BaseBatch && rows <= maxTierRows => stamp
-    }.toSeq.sorted
-    if (fold.size < 2) false
-    else {
-      val usedMin = (sSegs.map(_._2) ++ bSegs.map(_._2) ++
-        log.outputs ++ Seq(IndexCore.MergeStampCeil + 1)).min
-      val out = math.min(log.nextStamp, usedMin - 1)
-      import org.apache.spark.sql.functions.lit
-      def foldInto(t: String, key: String): Unit = {
-        val b = IndexCore.bucketsOf(spark, t)
-        spark.table(t).filter(col("ingest_batch").isin(fold: _*))
-          .withColumn("ingest_batch", lit(out))
-          .repartition(b, col(key))
-          .write.mode(SaveMode.Append)
-          .bucketBy(b, key).sortBy(key)
-          .saveAsTable(t)
-      }
-      foldInto(bt, "bkey")
-      foldInto(st, "corpus_doc")
-      IndexCore.commitFold(spark, prefix, bt, fold, out)
-      // post-commit GC: the dead set under the just-committed log is
-      // exactly the folded stamps' files, already in hand from the
-      // shared sweeps — no log re-read, no footer re-walk
-      val log2 = IndexCore.MergeLog(log.folded ++ fold, log.outputs + out)
-      IndexCore.gcDeadFilesOf(spark, bt, log2, bSegs.filter(s => fold.contains(s._2)))
-      IndexCore.gcDeadFilesOf(spark, st, log2, sSegs.filter(s => fold.contains(s._2)))
-      true
-    }
+    IndexCore.requireLedgered(spark, prefix, sigsTable(prefix), "tieredMerge")
+    IndexCore.tieredMerge(spark, prefix, prefix, Seq(Bands, Sigs), maxTierRows)(
+      (spec, merged, _) => IndexCore.writeTable(merged, spec, prefix, None))
   }
 
-  /** dd22 (round 17): the dd16 cycle with the growth regime
-    * maintained by the BOUNDED fold instead of the corpus-sized
-    * rewrite — the novel batch lands in 3 disjoint slices, each under
-    * its own stamp (three sub-tier segments), [[tieredMerge]] folds
-    * them into one merged segment (the base build's files
-    * byte-untouched — asserted in-cycle along with the post-fold
-    * segment count), and the re-probe serves through the merge-log
-    * visibility filter. The fold is content-preserving by
-    * construction, so decisions are DEFINED identical to dd16's —
-    * the oracle is the same SQL, and one hash-match proves the fold,
-    * the commit and the visibility rule compose to a no-op on
-    * answers. */
+  /** dd22: the dd16 cycle with the growth regime maintained by the
+    * BOUNDED fold instead of the corpus-sized rewrite — the novel
+    * batch lands in 3 disjoint slices, each under its own stamp,
+    * [[tieredMerge]] folds them into one merged segment (base files
+    * byte-untouched, post-fold segment count asserted in-cycle), and
+    * the re-probe serves through the merge-log visibility filter.
+    * Decisions are DEFINED identical to dd16's — the oracle is the
+    * same SQL. */
   def tieredCycle(spark: SparkSession, dir: String, tag: String,
-      slices: Int = 3): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") { freshIndex(spark, dir, tag) }
-    Phases.time(tag, "append") {
-      // one sign pass for the probe AND every stamped slice (round
-      // 18) — the per-slice append used to re-sign its slice from a
-      // fresh documents scan
-      val (dec, batchSigs) = probeSigned(spark, dir, prefix)
-      val novel = dec
-        .filter(col("dup_of").isNull)
-        .select(col("batch_doc").as("doc_id"))
-        .localCheckpoint()
-      import org.apache.spark.sql.functions.{hash, lit, pmod}
-      val sigs = sigsForAdmitted(batchSigs, novel).cache()
-      try {
-        sigs.count() // materialize before the first write mutates the table
-        (0 until slices).foreach { i =>
-          appendSigned(
-            sigs.filter(pmod(hash(col("doc_id")), lit(slices)) === lit(i)),
-            prefix, batchId = i.toLong)
-        }
+      slices: Int = 3): DataFrame = cycle(spark, dir, tag) { c =>
+    c.phase("append") {
+      val sigs = novelSigs(spark, dir, c.prefix)
+      try (0 until slices).foreach { i =>
+        appendSigned(slice(sigs, slices, i), c.prefix, batchId = i.toLong)
       } finally sigs.unpersist()
     }
-    Phases.time(tag, "merge") {
-      val baseBefore = IndexCore.fileSegments(spark, bandsTable(prefix))
-        .filter(f => f._2 == BaseBatch && f._3 == BaseBatch)
-        .map(f => (f._1, f._5)).toSet
-      if (!tieredMerge(spark, prefix))
-        sys.error(s"$tag: sub-tier segments present but no fold ran")
-      val baseAfter = IndexCore.fileSegments(spark, bandsTable(prefix))
-        .filter(f => f._2 == BaseBatch && f._3 == BaseBatch)
-        .map(f => (f._1, f._5)).toSet
-      if (baseAfter != baseBefore)
-        sys.error(s"$tag: the fold touched the base tier's files")
-      val segs = IndexCore.segmentSizes(spark, sigsTable(prefix),
-        IndexCore.readMergeLog(spark, prefix))
-      if (segs.size != 2)
-        sys.error(s"$tag: expected base + merged segment, got ${segs.keySet}")
+    c.phase("merge") {
+      IndexCore.checkedFold(spark, tag, sigsTable(c.prefix), c.prefix)(
+        tieredMerge(spark, c.prefix))
     }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
+    c.probe("probe")(probe(spark, dir, c.prefix))
   }
 
   /** Day-2 re-ingest ids are day-1 ids shifted by this offset — far
@@ -852,23 +482,17 @@ object BandIndex {
     probeIdsSigned(spark, dir, prefix, ids, excludeBatch)._1
 
   /** [[probeIds]] that also returns the batch signature frame
-    * (batch-id-keyed, derived from the pinned original-text
-    * signatures) — [[maintainBatch]]'s writers join it down to the
-    * admitted ids instead of re-signing them (round 18, guide §1.2:
-    * the probe had already materialized exactly these signatures). */
+    * (batch-id-keyed) — [[maintainBatch]]'s writers join it down to
+    * the admitted ids instead of re-signing them. */
   private def probeIdsSigned(spark: SparkSession, dir: String, prefix: String,
-      ids: DataFrame,
-      excludeBatch: Option[Long] = None): (DataFrame, DataFrame) = {
+      ids: DataFrame, excludeBatch: Option[Long]): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions.when
     val idc = col(ids.columns.head)
     val shaped = ids.select(idc.as("batch_id"),
       when(idc >= DayOffset, idc - DayOffset).otherwise(idc).as("orig_id"))
-    // batch-scoped signing (round 17, guide §8): sign each DISTINCT
-    // original text once — work ∝ the micro-batch — then re-key to
-    // the batch ids; the old form joined the corpus-wide memoized
-    // signature array down to the batch. Pinned for the same reason
-    // as incrementalDecisions' batch side: the decision core consumes
-    // the signature frame three times.
+    // batch-scoped signing: sign each DISTINCT original text once —
+    // work ∝ the micro-batch — then re-key to the batch ids. Pinned:
+    // the decision core consumes the signature frame three times.
     val sigs = Dedup.signDocs(
       graft.Tables.documents(spark, dir)
         .join(shaped.select(col("orig_id").as("doc_id")).distinct(), "doc_id")
@@ -880,252 +504,148 @@ object BandIndex {
     (Dedup.incrementalDecisionsFor(batchSigs, corpusBands, corpusSigs), batchSigs)
   }
 
+  private def batchDocIds(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.documents(spark, dir)
+      .filter(col("source") === Dedup.IncBatchSrc)
+      .select("doc_id")
+
+  private def shifted(ids: DataFrame): DataFrame =
+    ids.select((col("doc_id") + lit(DayOffset)).as("doc_id"))
+
   /** The streaming ingest-maintenance LOOP's batch analog, two days
     * on a FRESH index: day 0 probes the batch and appends its novel
     * docs; day 1 re-ingests the SAME feed under [[DayOffset]]-shifted
     * ids and probes the index day 0 just grew. Sequencing is
-    * OBSERVABLE in the output, not just exercised: every day-0 novel
-    * doc's day-1 copy must come back dup_of its day-0 twin at
-    * est 1.0 (identical text ⇒ identical signature) — rows that are
-    * non-null ONLY because the append between the probes happened —
-    * while day-0 corpus dups keep their day-0 target (their twin was
-    * never admitted). This is exactly what a foreachBatch maintenance
-    * sink does per micro-batch (StreamingSpec drives the same two
-    * days through a real readStream and requires row-identical
-    * decisions); decisions are order-DEPENDENT by design, so the
-    * day split is deterministic and the st07 oracle replays the two
-    * phases verbatim, shifted ids included.
-    *
-    * Day 0's decision frame is pinned (localCheckpoint) BEFORE the
-    * append mutates the index it reads — same discipline as
-    * `append` itself. */
+    * OBSERVABLE in the output: every day-0 novel doc's day-1 copy must
+    * come back dup_of its day-0 twin at est 1.0 (identical text ⇒
+    * identical signature), while day-0 corpus dups keep their day-0
+    * target. This is exactly what a foreachBatch maintenance sink does
+    * per micro-batch (StreamingSpec drives the same two days through a
+    * real readStream); decisions are order-DEPENDENT by design, so the
+    * st07 oracle replays the two phases verbatim, shifted ids
+    * included. Day 0's decision frame is pinned BEFORE the append
+    * mutates the index it reads. */
   def sequencedCycle(spark: SparkSession, dir: String,
-      tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.lit
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") { freshIndex(spark, dir, tag) }
-    val (rawDec0, day0Sigs) = probeSigned(spark, dir, prefix)
-    val dec0 = Phases.time(tag, "probe") {
-      rawDec0
-        .select(lit(0).as("day"), col("batch_doc"),
-          col("dup_of"), col("est_jaccard"))
-        .localCheckpoint()
+      tag: String): DataFrame = cycle(spark, dir, tag) { c =>
+    val (rawDec0, day0Sigs) = probeSigned(spark, dir, c.prefix)
+    val dec0 = c.probe("probe")(phaseRows(rawDec0, "day", 0))
+    c.phase("append") {
+      // dec0 is pinned and day0Sigs derives from the probe's
+      // checkpoint, so the writes read no table they mutate
+      appendSigned(sigsForAdmitted(day0Sigs, novelIds(dec0)), c.prefix)
     }
-    Phases.time(tag, "append") {
-      // write from the probe's signatures (round 18) — dec0 is
-      // pinned and day0Sigs derives from the probe's checkpoint, so
-      // the writes read no table they mutate
-      appendSigned(sigsForAdmitted(day0Sigs,
-        dec0.filter(col("dup_of").isNull).select(col("batch_doc").as("doc_id"))),
-        prefix)
-    }
-    val day2Ids = graft.Tables.documents(spark, dir)
-      .filter(col("source") === Dedup.IncBatchSrc)
-      .select((col("doc_id") + lit(DayOffset)).as("doc_id"))
-    val dec1 = Phases.time(tag, "reprobe") {
-      probeIds(spark, dir, prefix, day2Ids)
-        .select(lit(1).as("day"), col("batch_doc"),
-          col("dup_of"), col("est_jaccard"))
-        .localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
+    val dec1 = c.probe("reprobe")(
+      phaseRows(probeIds(spark, dir, c.prefix, shifted(batchDocIds(spark, dir))), "day", 1))
     dec0.unionByName(dec1).orderBy("batch_doc")
   }
 
-  // ------------------------------------------------------------------
-  // Exactly-once maintenance (st08) — the append ledger
-  // ------------------------------------------------------------------
-
-  // Ledger table naming, the storage-root derivation and the
-  // cross-session done/record primitives are family-neutral —
-  // [[IndexCore.ledgerTable]] / indexRootOf / ledgerDoneIn / ledgerRecordIn.
-
-  private def ledgerDone(spark: SparkSession, prefix: String,
-      batchId: Long): Boolean =
-    IndexCore.ledgerDoneIn(spark, IndexCore.ledgerTable(prefix), batchId)
-
-  private def ledgerRecord(spark: SparkSession, prefix: String,
-      batchId: Long): Unit =
-    IndexCore.ledgerRecordIn(spark, IndexCore.ledgerTable(prefix), bandsTable(prefix), batchId)
-
   /** One ledger-guarded maintenance micro-batch: probe the CURRENT
     * index with this batch's ids, append the novel docs, record the
-    * batch in the ledger — or, if the ledger already holds `batchId`,
-    * do NOTHING and return None.
+    * batch in the ledger — or, if the batch already landed, do
+    * NOTHING and return None ([[IndexCore.maintainOnce]]'s fence).
     *
     * This is the idempotent foreachBatch sink Structured Streaming's
     * exactly-once contract asks for. The failure mode a restart must
-    * survive is REPLAY: the engine re-runs a batch whose commit
-    * marker was lost, with the same batchId — possibly against an
-    * index the first run already partially mutated. Round 11 closes
-    * the append→record crash window the round-10 docstring could only
-    * disclose, with two mechanisms (the round-10 ADVICE's suggested
-    * design, carried to both tables):
+    * survive is REPLAY of a batch whose commit marker was lost —
+    * possibly against an index the first run already partially
+    * mutated. Two mechanisms make every crash point converge:
     *
     *   - **Per-table idempotence**: every appended row carries the
-    *     batch stamp, and each table write is one atomic job commit —
-    *     so "did this table absorb batch N" is answerable from
-    *     storage ([[batchPresent]]), and the replay appends only to
-    *     the table(s) the crash left unwritten. Sigs are written
-    *     SECOND, so their stamp certifies the whole batch.
+    *     batch stamp and each table write is one atomic job commit,
+    *     so the replay appends only to the table(s) the crash left
+    *     unwritten. Sigs are written SECOND, so their stamp certifies
+    *     the whole batch.
     *   - **Self-excluding probe**: the decision probe always excludes
     *     the in-flight batch's own rows (`ingest_batch != batchId`,
-    *     pushed to the scans). First run: the predicate matches
-    *     nothing (no N rows exist yet) — decisions unchanged. Replay
-    *     over a partial commit: the crashed attempt's rows are
-    *     fenced out, so the replay probes EXACTLY the state the
-    *     first attempt saw and emits bit-identical decisions — the
-    *     "every first-run novel returns dup_of itself at est 1.0"
-    *     divergence is gone by construction.
+    *     pushed to the scans). Replay over a partial commit therefore
+    *     probes EXACTLY the state the first attempt saw and emits
+    *     bit-identical decisions.
     *
-    * At every crash point the replay therefore converges: before any
-    * commit → clean re-run; after bands only → identical decisions,
-    * bands skipped, sigs completed; after sigs → whole batch
-    * detected landed, no-op. The ledger row (written last, stored
-    * WITH the index) survives as the FAST guard — one tiny-table
-    * read instead of two stats-pruned fence checks — but is no
-    * longer load-bearing for correctness. [[selfFenceCycle]] drives
-    * the worst window (crash between the two table writes) as the
-    * st11 catalog entry; StreamingSpec proves the
-    * crash-after-record path through a real checkpoint restart with
-    * the commit marker deleted. */
+    * The ledger row (written last, stored WITH the index) is the FAST
+    * guard, not load-bearing for correctness. [[selfFenceCycle]]
+    * drives the worst window (crash between the two table writes) as
+    * the st11 catalog entry; StreamingSpec proves the
+    * crash-after-record path through a real checkpoint restart. */
   def maintainBatch(spark: SparkSession, dir: String, prefix: String,
-      ids: DataFrame, batchId: Long): Option[DataFrame] = {
-    // Streaming batch ids are non-negative; BaseBatch (-1) stamps the
-    // base build and ad-hoc appends, so admitting it here would
-    // false-skip any batch whose id collides with it (round-11 ADVICE).
-    require(batchId >= 0,
-      s"maintainBatch batchId must be >= 0, got $batchId (ids < 0 are " +
-        "reserved for the base-build/ad-hoc stamp)")
-    if (ledgerDone(spark, prefix, batchId)) None
-    else if (IndexCore.batchPresent(spark, sigsTable(prefix), batchId)) {
-      // The sigs-present fence fired: the batch fully landed but the
-      // crash window took the ledger row with it. Backfill it so every
-      // FUTURE replay of this id takes the tiny ledger read instead of
-      // re-paying the stats-pruned fence scan (round-11 ADVICE).
-      ledgerRecord(spark, prefix, batchId)
-      None
-    } else {
-      val (dec0, batchSigs) = probeIdsSigned(spark, dir, prefix, ids,
-        excludeBatch = Some(batchId))
-      val dec = dec0.localCheckpoint()
-      val admitted =
-        dec.filter(col("dup_of").isNull).select(col("batch_doc").as("doc_id"))
-      // writes join the PROBE's pinned signature frame down to the
-      // admitted ids (round 18) — the old withPinnedSigs path
-      // re-signed them from a second documents scan; same rows
-      // (signatures deterministic per text), one sign pass per batch.
-      // No extra pin needed: the frame derives from the probe's
-      // localCheckpoint and the pinned decision frame, so the writes
-      // read no table they mutate.
-      val sigs = sigsForAdmitted(batchSigs, admitted)
-      if (!IndexCore.batchPresent(spark, bandsTable(prefix), batchId))
-        writeBandRows(sigs, prefix, batchId)
+      ids: DataFrame, batchId: Long): Option[DataFrame] =
+    IndexCore.maintainOnce(spark, "maintainBatch", prefix, sigsTable(prefix),
+        ledgered = true, batchId) { landed =>
+      val (d0, batchSigs) = probeIdsSigned(spark, dir, prefix, ids, Some(batchId))
+      val dec = d0.localCheckpoint()
+      // the writes join the probe's pinned signatures down to the
+      // admitted ids, so they read no table they mutate
+      val sigs = sigsForAdmitted(batchSigs, novelIds(dec))
+      if (!landed(bandsTable(prefix))) writeBandRows(sigs, prefix, batchId)
       writeSigRows(sigs, prefix, batchId)
-      ledgerRecord(spark, prefix, batchId)
-      Some(dec)
+      dec
     }
-  }
+
+  private def dayRows(dec0: DataFrame, dec1: DataFrame): DataFrame =
+    phaseRows(dec0, "day", 0).unionByName(phaseRows(dec1, "day", 1)).orderBy("batch_doc")
 
   /** st07's two-day cycle driven through [[maintainBatch]], with
     * day 0 REPLAYED in between — the batch analog of a checkpoint
     * restart that lost day 0's commit marker. The replay must be a
     * ledger-skipped no-op (asserted here: a second mutation of the
-    * index would make day 1's decisions diverge from st07's, which
-    * the shared oracle would catch — every day-0 novel would come
-    * back dup_of itself instead of novel on the replayed probe).
-    * Output is DEFINED identical to st07's, so the oracle is the
-    * same two-phase SQL. */
+    * index would make day 1's decisions diverge from st07's). Output
+    * is DEFINED identical to st07's, so the oracle is the same
+    * two-phase SQL. */
   def replayedCycle(spark: SparkSession, dir: String,
-      tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.lit
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") { freshIndex(spark, dir, tag) }
-    val day0Ids = graft.Tables.documents(spark, dir)
-      .filter(col("source") === Dedup.IncBatchSrc)
-      .select("doc_id")
-    val dec0 = Phases.time(tag, "maintain0") {
-      maintainBatch(spark, dir, prefix, day0Ids, 0L)
+      tag: String): DataFrame = cycle(spark, dir, tag) { c =>
+    val day0Ids = batchDocIds(spark, dir)
+    val dec0 = c.phase("maintain0") {
+      maintainBatch(spark, dir, c.prefix, day0Ids, 0L)
         .getOrElse(sys.error("st08: fresh index claims day 0 already maintained"))
     }
-    if (maintainBatch(spark, dir, prefix, day0Ids, 0L).nonEmpty)
+    if (maintainBatch(spark, dir, c.prefix, day0Ids, 0L).nonEmpty)
       sys.error("st08: replayed batch 0 was not ledger-skipped")
-    val day1Ids = day0Ids.select((col("doc_id") + lit(DayOffset)).as("doc_id"))
-    val dec1 = Phases.time(tag, "maintain1") {
-      maintainBatch(spark, dir, prefix, day1Ids, 1L)
+    val dec1 = c.phase("maintain1") {
+      maintainBatch(spark, dir, c.prefix, shifted(day0Ids), 1L)
         .getOrElse(sys.error("st08: day 1 already maintained on a fresh index"))
     }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec0.select(lit(0).as("day"), col("batch_doc"), col("dup_of"), col("est_jaccard"))
-      .unionByName(dec1.select(lit(1).as("day"), col("batch_doc"),
-        col("dup_of"), col("est_jaccard")))
-      .orderBy("batch_doc")
+    dayRows(dec0, dec1)
   }
 
   /** st11: the exactly-once story's WORST crash window, driven as a
-    * catalog entry — the window the round-10 design could only
-    * document as residual exposure. Day 0's first attempt probes and
-    * then "crashes" between the two table writes: band rows for
-    * batch 0 are durably committed, signature rows and the ledger
-    * row are not. The replay runs through [[maintainBatch]], which
-    * must (a) NOT skip (the batch is incomplete), (b) emit decisions
-    * BIT-IDENTICAL to the first attempt's — the self-excluding probe
-    * fences out the orphaned band rows — and (c) complete the batch
-    * without duplicating bands (per-table idempotence skips the
-    * bands write). All three are asserted in-cycle; a fourth assert
-    * replays the now-complete batch and requires the whole-batch
-    * skip. Day 1 then re-ingests the shifted feed as batch 1. The
-    * completed index state and both days' decisions are DEFINED
+    * catalog entry. Day 0's first attempt probes and then "crashes"
+    * between the two table writes: band rows for batch 0 are durably
+    * committed, signature rows and the ledger row are not. The replay
+    * runs through [[maintainBatch]], which must (a) NOT skip, (b) emit
+    * decisions BIT-IDENTICAL to the first attempt's — the
+    * self-excluding probe fences out the orphaned band rows — and (c)
+    * complete the batch without duplicating bands. All three are
+    * asserted in-cycle; a fourth assert replays the now-complete batch
+    * and requires the whole-batch skip. Day 1 then re-ingests the
+    * shifted feed as batch 1. Both days' decisions are DEFINED
     * identical to st07/st08's cycle, so the entry shares their
-    * two-phase oracle — the gate proves crash-recovery changed
-    * nothing observable. */
+    * two-phase oracle. */
   def selfFenceCycle(spark: SparkSession, dir: String,
-      tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.lit
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") { freshIndex(spark, dir, tag) }
-    val day0Ids = graft.Tables.documents(spark, dir)
-      .filter(col("source") === Dedup.IncBatchSrc)
-      .select("doc_id")
+      tag: String): DataFrame = cycle(spark, dir, tag) { c =>
+    val day0Ids = batchDocIds(spark, dir)
     // First attempt: probe, commit BANDS ONLY, crash before sigs+ledger.
-    val dec0a = Phases.time(tag, "partial") {
-      val (d0, batchSigs) = probeIdsSigned(spark, dir, prefix, day0Ids,
-        excludeBatch = Some(0L))
+    val dec0a = c.phase("partial") {
+      val (d0, batchSigs) = probeIdsSigned(spark, dir, c.prefix, day0Ids, Some(0L))
       val dec = d0.localCheckpoint()
-      writeBandRows(sigsForAdmitted(batchSigs,
-        dec.filter(col("dup_of").isNull).select(col("batch_doc").as("doc_id"))),
-        prefix, 0L)
+      writeBandRows(sigsForAdmitted(batchSigs, novelIds(dec)), c.prefix, 0L)
       dec
     }
-    val dec0 = Phases.time(tag, "replay") {
-      maintainBatch(spark, dir, prefix, day0Ids, 0L)
+    val dec0 = c.phase("replay") {
+      maintainBatch(spark, dir, c.prefix, day0Ids, 0L)
         .getOrElse(sys.error("st11: partially-committed batch 0 must replay, not skip"))
     }
     if (!dec0.exceptAll(dec0a).isEmpty || !dec0a.exceptAll(dec0).isEmpty)
       sys.error("st11: replay decisions diverge from the crashed attempt's")
-    if (maintainBatch(spark, dir, prefix, day0Ids, 0L).nonEmpty)
+    if (maintainBatch(spark, dir, c.prefix, day0Ids, 0L).nonEmpty)
       sys.error("st11: completed batch 0 was not fence-skipped")
-    val day1Ids = day0Ids.select((col("doc_id") + lit(DayOffset)).as("doc_id"))
-    val dec1 = Phases.time(tag, "maintain1") {
-      maintainBatch(spark, dir, prefix, day1Ids, 1L)
+    val dec1 = c.phase("maintain1") {
+      maintainBatch(spark, dir, c.prefix, shifted(day0Ids), 1L)
         .getOrElse(sys.error("st11: day 1 already maintained on a fresh index"))
     }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec0.select(lit(0).as("day"), col("batch_doc"), col("dup_of"), col("est_jaccard"))
-      .unionByName(dec1.select(lit(1).as("day"), col("batch_doc"),
-        col("dup_of"), col("est_jaccard")))
-      .orderBy("batch_doc")
+    dayRows(dec0, dec1)
   }
 
   /** Drop the registered tables (files under `path` are external and
     * survive; callers own that directory's lifecycle). */
-  def drop(spark: SparkSession, prefix: String = "graft_corpus"): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${bandsTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${sigsTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${IndexCore.ledgerTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${IndexCore.tombstonesTable(prefix)}")
-  }
+  def drop(spark: SparkSession, prefix: String = "graft_corpus"): Unit =
+    Fam.drop(spark, prefix)
 }

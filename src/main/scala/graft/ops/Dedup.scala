@@ -918,8 +918,8 @@ object Dedup {
     // rows; compaction is a file rewrite under an unchanged bucket
     // spec), so a divergence means compaction changed the dataflow's
     // semantics — exactly what the gate must catch. Probe-time
-    // flatness over the append history is measured in
-    // tools/CompactBench (SCALE_NOTES "index compaction").
+    // flatness over the append history is recorded in SCALE_NOTES
+    // ("index compaction").
     "dd17_index_compact" -> ((s, d) =>
       BandIndex.freshCycle(s, d, "dd17", appendSlices = 4, doCompact = true)),
 

@@ -1,70 +1,110 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import scala.util.control.NonFatal
 
-/** Shared lifecycle core for the persisted index families
-  * ([[BandIndex]], [[VecIndex]], [[LexIndex]]) — round-17, VERDICT
-  * r16 items 2 and 5. All three families keep bucketed parquet
-  * tables alive through the same verbs (append / compact / retire /
-  * exactly-once maintain), and all three round-16 durability holes
-  * were DRIFT bugs between per-family copies of that plumbing. This
-  * object is the single home for the pieces added or generalized
-  * this round:
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
+
+/** The one lifecycle shared by the persisted index families
+  * ([[BandIndex]], [[VecIndex]], [[LexIndex]]). A family file holds
+  * only what is specific to it — how a batch is encoded into rows, how
+  * the tables are probed, its fixture cycles and its oracles. Layout
+  * and lifecycle live here.
   *
-  *   - **Bucket count as a TABLE property** ([[bucketsOf]]): the
-  *     per-family `Buckets = 8` constants capped maintenance
-  *     parallelism at 8 tasks and "one file per bucket" at
-  *     corpus/8 bytes per file — at 100 TB that is 8-way-parallel
-  *     compaction and 12 TB parquet files regardless of cluster
-  *     size. Builds now take a bucket count sized to cluster
-  *     parallelism; every later verb reads the count back from the
-  *     catalog's bucket spec, so appends/compactions/rewrites follow
-  *     whatever the build chose.
-  *   - **The external-location rename swap** ([[swapTable]]) — one
-  *     copy instead of LexIndex's and VecIndex's.
-  *   - **The segment MERGE LOG** — the crash-safe visibility
-  *     mechanism behind size-tiered merges ([[LexIndex.tieredMerge]]):
-  *     Lucene's segments_N commit point expressed as a tiny table.
-  *     A fold rewrites ONLY the sub-tier segments (bytes bounded by
-  *     the tier policy, never the corpus), writes the merged rows
-  *     under a reserved stamp, and commits by appending log rows —
-  *     readers derive row visibility from the log, so every crash
-  *     point leaves the index serving EXACTLY its pre-fold content.
+  * **What a family declares.**
+  *   - One [[TableSpec]] per bucketed table: name suffix (the table is
+  *     `<prefix>_<suffix>`, stored at `<index path>/<suffix>`), bucket
+  *     key and within-bucket sort columns.
+  *   - One [[Family]]: the prefix stem, the temp-dir tag and every
+  *     table suffix it registers, from which `drop` is derived (the
+  *     shared side tables — tombstones, ledger, merge log — are
+  *     added here).
+  *
+  * **Shared verbs.**
+  *   - Writes: [[writeTable]] (build at a path, or append) over the
+  *     single bucket-aligned writer [[writeBucketed]]
+  *     (`repartition(b, key)` → `bucketBy(b, key)` → `sortBy`, one
+  *     file per bucket per write). Build-time bucket counts come from
+  *     the caller (default [[DefaultBuckets]]); every later write
+  *     reads the count back from the catalog ([[bucketsOf]]).
+  *   - Rewrites: [[compactTable]] (per-bucket local rewrite, optional
+  *     broadcast anti-join purge) and every other full rewrite go
+  *     through [[swapTable]] — write beside the live table at a
+  *     location that does not exist yet, then the rename-aside swap
+  *     [[renameSwap]], the only place that renames tables.
+  *   - Side tables: [[appendSide]] (append, or create at the index
+  *     root) and [[dropWithFiles]] for tombstones, ledger, merge log.
+  *   - Size-tiered folds: [[tieredMerge]] — one footer sweep, GC, tier
+  *     pick, reserved output stamp, per-table rewrite, one atomic
+  *     merge-log commit ([[commitFold]]), post-commit GC. Readers
+  *     filter rows through [[visibleUnder]], so every crash point
+  *     serves exactly the pre- or post-fold content.
+  *   - Build-once indexes ([[ensurePersisted]]) and fresh per-run
+  *     fixture indexes ([[cycle]]) share one registry, one serial and
+  *     one lock.
+  *
+  * **Exactly-once fence order** ([[maintainOnce]]), per batch id:
+  *   1. the id is ≥ 0 (negative stamps are reserved: [[BaseBatch]]
+  *      for builds and ad-hoc appends, ≤ [[MergeStampCeil]] for fold
+  *      outputs);
+  *   2. ledger fast path — a ledgered batch is done;
+  *   3. the certifying table (written last) carries the stamp — the
+  *      batch landed; the ledger row is backfilled. Single-table
+  *      families have no ledger: their stamp IS the ledger, extended
+  *      by [[foldedUnder]] because a fold re-stamps a batch's rows;
+  *   4. otherwise the batch runs, and each earlier table is written
+  *      only if its own stamp is absent ([[batchPresent]]).
+  * Rewrites that re-stamp rows first call [[requireLedgered]]: no
+  * stamped batch may be mid-commit when its stamps are destroyed.
+  *
+  * Footer-derived answers ([[segStats]]) are cached in a per-table
+  * `_segstats_<col>.json` manifest validated against the live file
+  * listing; the manifest is a cache, never a source of truth, and a
+  * footer that cannot be read counts as "maybe present".
   */
 object IndexCore {
 
-  /** Batch stamp carried by every index row (round-11): the base
-    * build writes [[BaseBatch]]; maintenance appends stamp their
-    * micro-batch id. The stamp is what makes exactly-once
-    * SELF-FENCING (see [[BandIndex.maintainBatch]]): each appended
-    * file set's per-file column statistics hold a single batch id, so
-    * a "did batch N land in this table?" probe prunes to footer
-    * reads, and a probe that must replay deterministically excludes
-    * its own in-flight batch with a pushed `ingest_batch != N`
-    * filter. */
+  /** Batch stamp of the base build and of ad-hoc appends. Maintenance
+    * appends stamp their (non-negative) micro-batch id; each appended
+    * file holds a single stamp, so "did batch N land?" prunes to
+    * footer reads, and a replaying probe excludes its own in-flight
+    * batch with a pushed `ingest_batch != N` filter. */
   val BaseBatch: Long = -1L
 
-  /** Default bucket count for index builds that don't choose one —
-    * the historical constant, right for local[32] test scale. At
-    * cluster scale pass an explicit count ≈ target write/compact
-    * parallelism (e.g. executors × cores). `SPARK_GRAFT_INDEX_BUCKETS`
-    * overrides the default process-wide, which is how the FULL oracle
-    * sweep is re-run at a different width (round-17 evidence: the
-    * whole lexical/vector/band catalog hash-matches DuckDB at 64). */
+  /** Default bucket count for index builds that don't choose one.
+    * `SPARK_GRAFT_INDEX_BUCKETS` overrides it process-wide (how the
+    * oracle sweep is re-run at a different width). */
   val DefaultBuckets: Int = sys.env.get("SPARK_GRAFT_INDEX_BUCKETS")
     .flatMap(_.toIntOption).filter(_ > 0).getOrElse(8)
 
-  /** The bucket count `table` was BUILT with, from its catalog bucket
-    * spec — the one source of truth every post-build verb (append,
-    * compact, reindex, fold) must write with: a mismatched bucketBy
-    * on append wedges on "Specified bucketing does not match", and a
-    * mismatched rewrite would silently change the probe layout. */
-  private[ops] def bucketsOf(spark: SparkSession, table: String): Int =
+  /** One bucketed index table — see the object doc. */
+  private[ops] final case class TableSpec(suffix: String, key: String,
+      sort: Seq[String]) {
+    def name(prefix: String): String = s"${prefix}_$suffix"
+  }
+
+  /** One index family — see the object doc. */
+  private[ops] final case class Family(stem: String, dirTag: String,
+      tables: Seq[String]) {
+    def drop(spark: SparkSession, prefix: String): Unit =
+      (tables ++ Seq("tombstones", "ledger", "mergelog"))
+        .foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$s"))
+  }
+
+  private def meta(spark: SparkSession, table: String) =
     spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
 
+  /** The bucket count `table` was BUILT with — every post-build write
+    * must use it: a mismatched bucketBy on append fails with
+    * "Specified bucketing does not match", and a mismatched rewrite
+    * would silently change the probe layout. */
+  private[ops] def bucketsOf(spark: SparkSession, table: String): Int =
+    meta(spark, table).bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
+
+  /** JVM-wide serial for index prefixes, rewrite locations and aside
+    * names. Sessions from `spark.newSession()` share one catalog, so
+    * prefixes must be unique per JVM, not per session. */
   private[ops] val serial = new java.util.concurrent.atomic.AtomicLong(0)
 
   private[ops] def deleteDir(path: String): Unit =
@@ -77,15 +117,12 @@ object IndexCore {
             .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
         } finally walk.close()
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
-  // ------------------------------------------------------------------
-  // Temp-dir lifecycle (round-9 VERDICT item 7): every index directory
-  // the families create is registered here and deleted by a JVM
-  // shutdown hook, so `sbt test` + a bench run leave no orphan
-  // graft-*idx-* dirs behind. Dirs retired mid-run (a fresh cycle
-  // superseding the previous one) are deleted eagerly instead.
-  // ------------------------------------------------------------------
+  // Every index directory the families create is registered here and
+  // deleted by a JVM shutdown hook, so test and bench runs leave no
+  // orphan graft-*idx-* dirs; dirs superseded mid-run are deleted
+  // eagerly instead.
   private val tempDirs = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
 
   locally {
@@ -106,23 +143,125 @@ object IndexCore {
     deleteDir(path)
   }
 
-  /** Files currently backing `table` (diagnostic for specs/benches:
-    * append growth and compaction are asserted on this count). */
+  // ------------------------------------------------------------------
+  // Build-once and per-run index registries
+  // ------------------------------------------------------------------
+
+  private val lock = new Object
+  private val persistedFor =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
+  private val lastCycle = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), (Family, String, String)]
+
+  /** Run `build` once per (session, dir, key) and return its result on
+    * every later call. Builds are serialized behind one lock so racing
+    * callers never double-write an index. */
+  private[ops] def once(spark: SparkSession, dir: String, key: String)(
+      build: => String): String =
+    persistedFor.getOrElse((spark, dir, key), lock.synchronized {
+      persistedFor.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
+      persistedFor.getOrElseUpdate((spark, dir, key), build)
+    })
+
+  private def newIndex(fam: Family, dir: String, tag: String): (String, String) = {
+    val prefix = s"${fam.stem}_${tag}_${Integer.toHexString(dir.hashCode)}" +
+      s"_s${serial.incrementAndGet()}"
+    (prefix, newTempDir(fam.dirTag + tag))
+  }
+
+  /** A durable index built once per (session, dir, key) in a fresh
+    * temp dir: the catalog entries that serve from it re-time the
+    * probe, not the build. `persist(path, prefix)` lays it down. */
+  private[ops] def ensurePersisted(spark: SparkSession, dir: String, fam: Family,
+      key: String, tag: String)(persist: (String, String) => Unit): String =
+    once(spark, dir, s"${fam.stem}:$key") {
+      val (prefix, path) = newIndex(fam, dir, tag)
+      persist(path, prefix)
+      prefix
+    }
+
+  /** One fixture cycle's handle: its index prefix and the timed phases
+    * recorded under its tag (the bench artifact's `phases` map). */
+  private[ops] final class Cycle(tag: String, val prefix: String) {
+    def phase[T](name: String)(body: => T): T = graft.tools.Phases.time(tag, name)(body)
+
+    /** A timed probe, materialized here so the phases sum to the
+      * cycle's wall time and the result outlives the cycle's tables. */
+    def probe(name: String)(df: => DataFrame): DataFrame =
+      phase(name)(df.localCheckpoint())
+  }
+
+  /** Run one fixture cycle on a FRESH index: retire the previous
+    * cycle's index for (session, dir, tag) — tables and files — then
+    * persist a new one (phase "persist") and run `body` on it. The new
+    * index is retired by the next cycle with the same tag, or by the
+    * shutdown hook. */
+  private[ops] def cycle(spark: SparkSession, dir: String, tag: String,
+      fam: Family)(persist: (String, String) => Unit)(
+      body: Cycle => DataFrame): DataFrame = {
+    val key = (spark, dir, tag)
+    val (prefix, path) = graft.tools.Phases.time(tag, "persist") {
+      lock.synchronized {
+        lastCycle.remove(key).foreach { case (f, p, d) =>
+          f.drop(spark, p)
+          retireTempDir(d)
+        }
+        lastCycle.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
+      }
+      val (prefix, path) = newIndex(fam, dir, tag)
+      persist(path, prefix)
+      (prefix, path)
+    }
+    try body(new Cycle(tag, prefix))
+    finally lock.synchronized { lastCycle(key) = (fam, prefix, path) }
+  }
+
+  // ------------------------------------------------------------------
+  // Bucketed writes and rewrites
+  // ------------------------------------------------------------------
+
+  /** The one bucketed writer. A bucketed write emits one file per
+    * (task, bucket), so write tasks are aligned 1:1 with buckets by
+    * the batch-sized hash exchange — one file per bucket per write, a
+    * file count independent of cluster width. Over a bucketed scan
+    * of the same table the exchange is elided (the scan already has
+    * the partitioning), which is what makes [[compactTable]] a
+    * zero-exchange per-bucket rewrite. `at = Some(location)` lays the
+    * table down there (overwriting a stale registration); None
+    * appends. */
+  private[ops] def writeBucketed(rows: DataFrame, spec: TableSpec, table: String,
+      at: Option[String], buckets: Int): Unit = {
+    val w = rows.repartition(buckets, col(spec.key)).write
+      .bucketBy(buckets, spec.key).sortBy(spec.sort.head, spec.sort.tail: _*)
+    at.fold(w.mode(SaveMode.Append))(loc =>
+      w.option("path", loc).mode(SaveMode.Overwrite)).saveAsTable(table)
+  }
+
+  /** Write `rows` into `spec`'s table under `prefix`: `build =
+    * Some((indexPath, buckets))` builds it at `<indexPath>/<suffix>`,
+    * None appends with the table's own bucket count. */
+  private[ops] def writeTable(rows: DataFrame, spec: TableSpec, prefix: String,
+      build: Option[(String, Int)]): Unit = {
+    val t = spec.name(prefix)
+    build match {
+      case Some((path, b)) => writeBucketed(rows, spec, t, Some(s"$path/${spec.suffix}"), b)
+      case None => writeBucketed(rows, spec, t, None, bucketsOf(rows.sparkSession, t))
+    }
+  }
+
+  /** The files currently backing `table` (append growth and
+    * compaction are asserted on this count). */
   def tableFiles(spark: SparkSession, table: String): Seq[String] =
     tableFilesSized(spark, table).map(_._1)
 
-  /** [[tableFiles]] with sizes, in ONE filesystem pass (the visitor
-    * hands over each file's attributes, so no per-file stat call) —
-    * the live-listing anchor every footer-derived answer validates
-    * against. Skips `_temporary` subtrees (round-18 ADVICE: an
-    * in-flight write's task files must not be footer-probed) and
-    * tolerates files deleted mid-walk. Sorted for stable memo keys. */
+  /** [[tableFiles]] with sizes, in ONE filesystem pass — the live
+    * listing every footer-derived answer validates against. Skips
+    * `_temporary` subtrees (an in-flight write's task files must not
+    * be footer-probed) and tolerates files deleted mid-walk. Sorted
+    * for stable memo keys. */
   private[ops] def tableFilesSized(spark: SparkSession,
       table: String): Seq[(String, Long)] = {
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .location
-    val dir = java.nio.file.Paths.get(loc)
+    val dir = java.nio.file.Paths.get(meta(spark, table).location)
     if (!java.nio.file.Files.exists(dir)) Seq.empty
     else {
       val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
@@ -150,68 +289,167 @@ object IndexCore {
   }
 
   /** The index's storage root, derived from an anchor table's
-    * registered location — the ledger/tombstones/mergelog must live
-    * WITH the index (same durability domain), not in driver memory: a
-    * restarted query sees exactly the batches the index itself
-    * absorbed. Anchors: bands (band), cells (vector), postings
-    * (lexical). */
+    * location — the side tables live WITH the index (same durability
+    * domain), so a restarted query sees exactly what the index
+    * absorbed. */
   private[ops] def indexRootOf(spark: SparkSession, anchorTable: String): String = {
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(anchorTable))
-      .location.toString.stripSuffix("/")
+    val loc = meta(spark, anchorTable).location.toString.stripSuffix("/")
     loc.substring(0, loc.lastIndexOf('/'))
   }
 
+  /** Bucket-preserving compaction: rewrite every current file of
+    * `spec`'s table into ONE file per bucket, same bucket and sort
+    * spec, then swap it in ([[swapTable]]). `minus` purges rows whose
+    * `minusIdCol` is in that (bounded) frame with a broadcast
+    * anti-join, which streams the bucketed side and keeps the
+    * per-bucket rewrite. The sort spec is part of the table's
+    * bucketing metadata: a rewrite that dropped a sort column would
+    * wedge every later append and loosen the footer bounds probes
+    * prune on. */
+  private[ops] def compactTable(spark: SparkSession, spec: TableSpec, prefix: String,
+      minus: Option[DataFrame], minusIdCol: String): Unit = {
+    val table = spec.name(prefix)
+    // the last writer may have been ANOTHER session (a streaming
+    // foreachBatch runs in the query's session clone, whose appends
+    // don't invalidate this session's cached file listing) — without
+    // the refresh the rewrite silently drops every file this session
+    // hasn't seen
+    spark.catalog.refreshTable(table)
+    val b = bucketsOf(spark, table)
+    swapTable(spark, table, "compact") { (tmpT, loc) =>
+      // A bucketed scan yields exactly one bucket per task, so the
+      // write lays each bucket back down as one file with no
+      // exchange. Two planner settings keep that scan: with
+      // autoBucketedScan on, DisableUnnecessaryBucketedScan downgrades
+      // it to size-based chunks (the writer's exchange was already
+      // elided against it, so nothing "needs" the distribution); AQE's
+      // local-read rewrite would likewise re-chunk the read.
+      val aqe = "spark.sql.adaptive.enabled"
+      val abs = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+      val was = Seq(aqe, abs).map(k => k -> spark.conf.get(k, "true"))
+      Seq(aqe, abs).foreach(spark.conf.set(_, "false"))
+      try {
+        val t = spark.table(table)
+        val source = minus.fold(t) { ex =>
+          val expired = broadcast(ex.select(col(ex.columns.head).as("__expired_id")))
+          t.join(expired, t(minusIdCol) === col("__expired_id"), "left_anti")
+        }
+        writeBucketed(source, spec, tmpT, Some(loc), b)
+      } finally was.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+  }
+
+  /** Replace `table` with a rewrite: `write(tmpTable, location)` lays
+    * the replacement down at a sibling location that does not exist
+    * yet (serials restart per JVM, so a counter alone could name an
+    * earlier JVM's leftover directory), then [[renameSwap]] promotes
+    * it and the old files are deleted. A failed promotion leaves the
+    * original registration in place and removes the temp table AND its
+    * files, so a retry cannot hit TableAlreadyExists. */
+  private[ops] def swapTable(spark: SparkSession, table: String, tag: String)(
+      write: (String, String) => Unit): Unit = {
+    val oldLoc = meta(spark, table).location.toString
+    val newLoc = Iterator.continually(
+        oldLoc.stripSuffix("/") + s"_$tag${serial.incrementAndGet()}")
+      .find(l => !java.nio.file.Files.exists(java.nio.file.Paths.get(l.stripPrefix("file:"))))
+      .get
+    val tmpT = s"${table}_$tag"
+    write(tmpT, newLoc)
+    try renameSwap(spark, table, tmpT)
+    catch {
+      case NonFatal(e) =>
+        try spark.sql(s"DROP TABLE IF EXISTS $tmpT")
+        catch { case NonFatal(_) => () }
+        deleteDir(newLoc.stripPrefix("file:"))
+        throw e
+    }
+    deleteDir(oldLoc.stripPrefix("file:"))
+  }
+
+  /** The crash-safe rename swap — the only place index tables are
+    * renamed. A bare DROP-then-RENAME has a window where NO table is
+    * registered; instead the live table is renamed ASIDE first, then
+    * `incoming` takes its name, then the aside registration is
+    * dropped (its files stay; external tables keep their location).
+    * At every single-failure point either the original registration
+    * is intact or a complete aside-named table remains recoverable. A
+    * failed promotion restores the original name before rethrowing; a
+    * failed rollback is reported, not swallowed. */
+  private[ops] def renameSwap(spark: SparkSession, table: String,
+      incoming: String): Unit = {
+    val aside = s"${table}_old${serial.incrementAndGet()}"
+    spark.sql(s"ALTER TABLE $table RENAME TO $aside")
+    try spark.sql(s"ALTER TABLE $incoming RENAME TO $table")
+    catch {
+      case NonFatal(e) =>
+        try spark.sql(s"ALTER TABLE $aside RENAME TO $table")
+        catch {
+          case NonFatal(r) => System.err.println(
+            s"[indexcore] ROLLBACK FAILED for $table (recover manually from " +
+              s"$aside): ${r.getMessage}")
+        }
+        throw e
+    }
+    spark.sql(s"DROP TABLE $aside")
+  }
+
   // ------------------------------------------------------------------
-  // Persisted segment-stats manifest (round 18, VERDICT r17 item 1):
-  // every maintenance verb used to re-read EVERY table file's parquet
-  // footer on the driver, single-threaded (footerProvenAbsent,
-  // fileSegments) — O(files) serial metadata I/O per probe/fold that
-  // at 100 TB (10⁵–10⁶ files) is minutes of driver wall per verb. The
-  // footer data is immutable per file (parquet files never change
-  // after commit), so it is CACHED in a `_segstats_<col>.json` side
-  // file next to the table's data (leading underscore: invisible to
-  // Spark's file listing), validated entry-by-entry against one live
-  // directory listing (path + size), and footers are read only for
-  // files the manifest has not seen — O(arrivals) footer reads per
-  // verb instead of O(files). The manifest is a CACHE, never a source
-  // of truth: a missing, stale, torn or concurrently-clobbered
-  // manifest only causes footer re-reads; correctness rests on the
-  // live listing (which is also what keeps the cross-session
-  // discipline — a session-clone's append changes the listing, so no
-  // refreshTable is needed on this path). Writes are atomic
-  // (tmp + rename), so a crash mid-update leaves the previous intact.
-  // A deliberate deviation from the verdict's sketch ("written at
-  // append/fold commit"): updating lazily on READ instead of hooking
-  // every writer covers ad-hoc appends, streaming session clones and
-  // external rewrites without trusting any writer to have run the
-  // hook — the listing walk (one readdir, ~10³× cheaper per file
-  // than opening a footer) is the price of that self-healing.
+  // Side tables
+  // ------------------------------------------------------------------
+
+  /** Append `rows` to a side table, creating it at
+    * `<index root>/<dirName>` on first use. */
+  private[ops] def appendSide(spark: SparkSession, table: String, anchorTable: String,
+      dirName: String, rows: DataFrame): Unit = {
+    val w = rows.write.mode(SaveMode.Append)
+    if (spark.catalog.tableExists(table)) w.saveAsTable(table)
+    else w.option("path", s"${indexRootOf(spark, anchorTable)}/$dirName").saveAsTable(table)
+  }
+
+  /** Drop a side table AND its files: a later [[appendSide]]
+    * re-creates it at the same location, and surviving files would
+    * resurrect what the drop cleared. */
+  private[ops] def dropWithFiles(spark: SparkSession, table: String): Unit =
+    if (spark.catalog.tableExists(table)) {
+      val loc = meta(spark, table).location.toString
+      spark.sql(s"DROP TABLE $table")
+      deleteDir(loc.stripPrefix("file:"))
+    }
+
+  // ------------------------------------------------------------------
+  // Persisted segment-stats manifest: footer data is immutable per
+  // file, so it is cached in a `_segstats_<col>.json` side file next to
+  // the table's data (leading underscore: invisible to Spark's file
+  // listing), validated entry by entry against one live listing (path
+  // + size). Footers are read only for files the manifest has not
+  // seen — O(arrivals) footer reads per verb instead of O(files). A
+  // missing, stale or torn manifest only causes re-reads; writes are
+  // atomic (tmp + rename). Updating lazily on READ covers ad-hoc
+  // appends, streaming session clones and external rewrites without
+  // trusting any writer to maintain it.
   // ------------------------------------------------------------------
 
   /** One file's footer-derived stats for a single long column.
     * `mn > mx` encodes "no usable statistics"; `complete` means every
     * non-empty row group carried valid stats for the column — only a
-    * complete file can PROVE a value absent. */
+    * complete file can PROVE a value absent. `failed` marks a footer
+    * that could not be read: its row count is unknown, so it is
+    * never proven empty. */
   private[ops] final case class SegStat(path: String, size: Long, rows: Long,
-      mn: Long, mx: Long, complete: Boolean) {
+      mn: Long, mx: Long, complete: Boolean, failed: Boolean) {
     def hasStats: Boolean = mn <= mx
+    def provenEmpty: Boolean = rows == 0L && !failed
   }
 
-  /** Session memo over [[segStats]], keyed by the live listing —
-    * a verb chain re-probing the same unchanged table pays one
-    * directory walk, zero manifest/footer reads. */
+  /** Session memo over [[segStats]], keyed by the live listing — a
+    * verb chain re-probing the same unchanged table pays one directory
+    * walk, zero manifest/footer reads. */
   private val segStatsMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), (Seq[(String, Long)], Seq[SegStat])]
 
   private def manifestPathFor(spark: SparkSession, table: String,
-      col: String): java.nio.file.Path = {
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .location
-    java.nio.file.Paths.get(loc).resolve(s"_segstats_$col.json")
-  }
+      col: String): java.nio.file.Path =
+    java.nio.file.Paths.get(meta(spark, table).location).resolve(s"_segstats_$col.json")
 
   private def readManifest(p: java.nio.file.Path): Map[String, SegStat] =
     try {
@@ -236,14 +474,22 @@ object IndexCore {
           } buf(name) = SegStat(name, size, rows,
             fld(o, "mn").flatMap(_.toLongOption).getOrElse(Long.MaxValue),
             fld(o, "mx").flatMap(_.toLongOption).getOrElse(Long.MinValue),
-            fld(o, "c").contains("1"))
+            fld(o, "c").contains("1"), failed = false)
         }
         buf.toMap
       }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    } catch { case NonFatal(_) => Map.empty }
 
+  /** Write the manifest atomically. Temp siblings a crashed writer
+    * left behind are deleted first, so they cannot accumulate (a
+    * concurrent writer's temp may go too; its move then fails, which
+    * only costs a later footer re-read). */
   private def writeManifest(p: java.nio.file.Path, stats: Seq[SegStat]): Unit =
     try {
+      val stray = java.nio.file.Files.newDirectoryStream(p.getParent,
+        p.getFileName.toString + ".tmp*")
+      try stray.forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
+      finally stray.close()
       val body = stats.map { st =>
         val name = p.getParent.relativize(java.nio.file.Paths.get(st.path))
         val mnmx = if (st.hasStats) s""","mn":${st.mn},"mx":${st.mx}""" else ""
@@ -255,52 +501,59 @@ object IndexCore {
       java.nio.file.Files.move(tmp, p,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } catch { case scala.util.control.NonFatal(_) => () }
+    } catch { case NonFatal(_) => () }
+
+  /** Opens one file's parquet footer. A var so a spec can substitute a
+    * failing opener and prove an unreadable footer is "maybe
+    * present". */
+  @volatile private[ops] var openFooter
+      : (SparkSession, String) => org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    (spark, path) => {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf()))
+      try reader.getFooter finally reader.close()
+    }
 
   /** Read one file's footer stats for `col`. A failed read returns a
-    * stats-less, incomplete row (⇒ "maybe present" everywhere) and is
-    * NOT persisted, so the next verb retries it. */
+    * stats-less, incomplete, `failed` row (⇒ "maybe present"
+    * everywhere) that is never persisted or memoized, so the next
+    * verb retries it. */
   private def readFooterStat(spark: SparkSession, path: String, size: Long,
-      col: String): (SegStat, Boolean) =
+      col: String): SegStat =
     try {
-      val conf = spark.sessionState.newHadoopConf()
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(path), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val blocks = reader.getFooter.getBlocks
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        var rows = 0L
-        var complete = true
-        var i = 0
-        while (i < blocks.size()) {
-          val blk = blocks.get(i)
-          rows += blk.getRowCount
-          if (blk.getRowCount > 0L) {
-            var found = false
-            var j = 0
-            while (j < blk.getColumns.size()) {
-              val c = blk.getColumns.get(j)
-              if (c.getPath.toDotString == col && c.getStatistics != null &&
-                  !c.getStatistics.isEmpty && c.getStatistics.hasNonNullValue) {
-                val st = c.getStatistics
-                  .asInstanceOf[org.apache.parquet.column.statistics.LongStatistics]
-                mn = math.min(mn, st.genericGetMin)
-                mx = math.max(mx, st.genericGetMax)
-                found = true
-              }
-              j += 1
+      val blocks = openFooter(spark, path).getBlocks
+      var mn = Long.MaxValue
+      var mx = Long.MinValue
+      var rows = 0L
+      var complete = true
+      var i = 0
+      while (i < blocks.size()) {
+        val blk = blocks.get(i)
+        rows += blk.getRowCount
+        if (blk.getRowCount > 0L) {
+          var found = false
+          var j = 0
+          while (j < blk.getColumns.size()) {
+            val c = blk.getColumns.get(j)
+            if (c.getPath.toDotString == col && c.getStatistics != null &&
+                !c.getStatistics.isEmpty && c.getStatistics.hasNonNullValue) {
+              val st = c.getStatistics
+                .asInstanceOf[org.apache.parquet.column.statistics.LongStatistics]
+              mn = math.min(mn, st.genericGetMin)
+              mx = math.max(mx, st.genericGetMax)
+              found = true
             }
-            if (!found) complete = false
+            j += 1
           }
-          i += 1
+          if (!found) complete = false
         }
-        (SegStat(path, size, rows, mn, mx, complete), true)
-      } finally reader.close()
+        i += 1
+      }
+      SegStat(path, size, rows, mn, mx, complete, failed = false)
     } catch {
-      case scala.util.control.NonFatal(_) =>
-        (SegStat(path, size, 0L, Long.MaxValue, Long.MinValue, complete = false), false)
+      case NonFatal(_) =>
+        SegStat(path, size, 0L, Long.MaxValue, Long.MinValue, complete = false, failed = true)
     }
 
   /** Footer stats for every live file of `table`, through the memo →
@@ -326,45 +579,41 @@ object IndexCore {
           manifest.get(rel).filter(_.size == sz) match {
             case Some(st) => st.copy(path = p)
             case None =>
-              val (st, ok) = readFooterStat(spark, p, sz, col)
-              if (ok) fresh += 1 else failed += 1
+              val st = readFooterStat(spark, p, sz, col)
+              if (st.failed) failed += 1 else fresh += 1
               st
           }
         }
-        if (fresh > 0 && failed == 0) writeManifest(mPath, stats)
-        segStatsMemo.put(memoKey, (listing, stats))
+        if (failed == 0) {
+          if (fresh > 0) writeManifest(mPath, stats)
+          segStatsMemo.put(memoKey, (listing, stats))
+        }
         stats
     }
   }
 
   /** The EXACT set of `col` values present in `table`, from footers
-    * alone — `Some(set)` only when every live non-empty file has
-    * complete, single-valued stats (mn == mx), which every append/
-    * fold/rewrite file in these families satisfies (one stamp per
-    * file). Any spanning or stats-less file ⇒ `None`, and the caller
-    * falls back to the exact distinct-collect. Replaces
-    * requireLedgered's two exact collects per maintenance verb
-    * (round-17 "not yet optimized" #1). */
+    * alone — `Some(set)` only when every live file is proven empty or
+    * has complete, single-valued stats (mn == mx), which every append,
+    * fold and rewrite file in these families satisfies (one stamp per
+    * file). Any spanning, stats-less or unreadable file ⇒ `None`, and
+    * the caller falls back to the exact distinct-collect. */
   private[ops] def stampSetFromFooters(spark: SparkSession, table: String,
       col: String): Option[Set[Long]] = {
     val stats = segStats(spark, table, col)
-    if (stats.forall(st => st.rows == 0L ||
+    if (stats.forall(st => st.provenEmpty ||
         (st.complete && st.hasStats && st.mn == st.mx)))
       Some(stats.filter(_.rows > 0L).map(_.mn).toSet)
     else None
   }
 
-  /** Did batch `batchId` land in `table`? The per-family exactly-once
-    * fence behind the ledger fast path. The table is REFRESHED before
-    * the read: this guard's answer is load-bearing for exactly-once,
-    * and the appends it fences may have executed through a DIFFERENT
-    * session over the same catalog — Structured Streaming's
-    * foreachBatch hands the sink a frame bound to the stream's
-    * isolated session clone, so the write's cache invalidation lands
-    * in that clone, not here. Without the refresh, this session's
-    * cached relation (file listing taken before the append) reports
-    * the batch absent and a replay double-appends — caught by
-    * StreamingSpec's st10 restart test. */
+  /** Did batch `batchId` land in `table`? The table is REFRESHED
+    * before the exact read: the appends it fences may have executed
+    * through a DIFFERENT session over the same catalog (a streaming
+    * foreachBatch writes through the query's session clone, whose
+    * cache invalidation does not reach this session), and a stale
+    * listing would report the batch absent and let a replay
+    * double-append it. */
   private[ops] def batchPresent(spark: SparkSession, table: String,
       batchId: Long): Boolean =
     spark.catalog.tableExists(table) &&
@@ -373,31 +622,19 @@ object IndexCore {
         !spark.table(table).filter(col("ingest_batch") === batchId).isEmpty
       }
 
-  /** FOOTER-PROVEN absence (round 17, optimization guide §1.2 "per
-    * task work" / §7.3 driver costs): `id` cannot appear in `longCol`
-    * when every row group's [min, max] statistics exclude it —
-    * answered from driver-side parquet footer reads over the LIVE
-    * file listing ([[tableFiles]] walks the filesystem, so this is
-    * immune to the session-clone cache staleness refreshTable guards
-    * against), with NO Spark job. The stamp and ledger probes use it
-    * as their fast path: a FRESH batch — the common case on every
-    * maintenance cycle — was previously proven absent by
-    * refreshTable + plan + an isEmpty job PER TABLE (profiled at
-    * ~0.8 s of tx27's 13 s cycle across 11 probes); footers answer
-    * it in file-count-bounded metadata reads. Conservative by
-    * construction: a missing/empty statistics object, an unreadable
-    * file, or a block whose column is absent all return "maybe
-    * present", and the caller falls through to the exact check. */
+  /** FOOTER-PROVEN absence: `id` cannot appear in `longCol` when every
+    * live file's [min, max] statistics exclude it — answered from
+    * driver-side footer reads over the LIVE file listing (immune to
+    * session-clone cache staleness), with NO Spark job. The fast path
+    * for a fresh batch, the common case on every maintenance cycle.
+    * Conservative by construction: a missing statistics object, an
+    * unreadable footer, or a block whose column is absent all return
+    * "maybe present", and the caller falls through to the exact
+    * check. */
   private[ops] def footerProvenAbsent(spark: SparkSession, table: String,
       longCol: String, id: Long): Boolean =
-    // file-level [mn, mx] (manifest-cached) instead of the old
-    // per-row-group test: strictly more conservative (a file whose
-    // range CONTAINS id but whose row-group gaps exclude it now falls
-    // through to the exact check), and exact on the hot path — every
-    // append/fold file in these families holds a single stamp
     segStats(spark, table, longCol).forall { st =>
-      st.rows == 0L ||
-        (st.complete && st.hasStats && (id < st.mn || id > st.mx))
+      st.provenEmpty || (st.complete && st.hasStats && (id < st.mn || id > st.mx))
     }
 
   // ------------------------------------------------------------------
@@ -406,65 +643,37 @@ object IndexCore {
 
   def tombstonesTable(prefix: String): String = s"${prefix}_tombstones"
 
-  /** Record expired ids in the index's tombstone table — the
-    * O(retired) retention write (ids are corpus docs for the band
-    * family, vec_ids for the vector one, doc_ids for the lexical). */
+  /** Record expired ids (first column of `expired`) in the index's
+    * tombstone table — the O(retired) retention write. coalesce(1):
+    * the set is bounded by contract (it must broadcast at probe time),
+    * and without it the write's file count would scale with the
+    * deriving frame's task count, not with the retired set. */
   private[ops] def recordTombstones(spark: SparkSession, prefix: String,
-      anchorTable: String, expired: DataFrame): Unit = {
-    val t = tombstonesTable(prefix)
-    // coalesce(1): the set is bounded by contract (it must broadcast
-    // at probe time), and the deriving filter often runs over a
-    // corpus-partitioned frame — without the coalesce the write's
-    // I/O would scale with the SOURCE's task count (K footer-only
-    // files), not the retired set, muddying the O(retired) property
-    // this path exists for (measured: 18.8 KB of footers for 2.5 KB
-    // of ids at a 100× corpus).
-    val w = expired
-      .select(col(expired.columns.head).cast("long").as("retired_id"))
-      .coalesce(1)
-      .write.mode(SaveMode.Append)
-    if (spark.catalog.tableExists(t)) w.saveAsTable(t)
-    else w.option("path", s"${indexRootOf(spark, anchorTable)}/tombstones")
-      .saveAsTable(t)
-  }
+      anchorTable: String, expired: DataFrame): Unit =
+    appendSide(spark, tombstonesTable(prefix), anchorTable, "tombstones",
+      expired.select(col(expired.columns.head).cast("long").as("retired_id")).coalesce(1))
 
-  /** The current tombstone set as a broadcast-hinted frame, or None
-    * when the index has none. Refreshed before the read — the
-    * retention write may have run through a foreachBatch session
-    * clone (same rationale as [[batchPresent]]). The broadcast hint
-    * matters beyond size: it keeps the anti-join a broadcast-hash
-    * join even under `autoBroadcastJoinThreshold=-1`, so the masked
-    * corpus scan KEEPS its bucketed output partitioning and the
-    * probe's no-corpus-exchange property survives. */
+  /** The current tombstone set as a broadcast-hinted frame, or None.
+    * Refreshed before the read (same rationale as [[batchPresent]]).
+    * The broadcast hint keeps the anti-join a broadcast-hash join
+    * even with auto-broadcast disabled, so the masked scan keeps its
+    * bucketed output partitioning. */
   private[ops] def tombstoneFrame(spark: SparkSession,
       prefix: String): Option[DataFrame] = {
     val t = tombstonesTable(prefix)
     if (!spark.catalog.tableExists(t)) None
     else {
       spark.catalog.refreshTable(t)
-      Some(org.apache.spark.sql.functions.broadcast(
-        spark.table(t).select("retired_id")))
+      Some(broadcast(spark.table(t).select("retired_id")))
     }
   }
 
-  /** Drop the tombstone table AND its files — called after a
-    * compaction physically purged the masked rows. Files must go with
-    * the registration: a later `recordTombstones` re-creates the
-    * table at the same location, and surviving files would resurrect
-    * already-purged ids. */
-  private[ops] def clearTombstones(spark: SparkSession, prefix: String): Unit = {
-    val t = tombstonesTable(prefix)
-    if (spark.catalog.tableExists(t)) {
-      val loc = spark.sessionState.catalog
-        .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-        .location.toString
-      spark.sql(s"DROP TABLE $t")
-      deleteDir(loc.stripPrefix("file:"))
-    }
-  }
+  /** Drop the tombstones after a compaction purged the masked rows. */
+  private[ops] def clearTombstones(spark: SparkSession, prefix: String): Unit =
+    dropWithFiles(spark, tombstonesTable(prefix))
 
   // ------------------------------------------------------------------
-  // Exactly-once maintenance — the append ledger
+  // Exactly-once maintenance — the append ledger and the fence
   // ------------------------------------------------------------------
 
   def ledgerTable(prefix: String): String = s"${prefix}_ledger"
@@ -472,226 +681,106 @@ object IndexCore {
   private[ops] def ledgerDoneIn(spark: SparkSession, ledgerTbl: String,
       batchId: Long): Boolean =
     spark.catalog.tableExists(ledgerTbl) &&
-      // footer fast path (round 17): a fresh batch is proven
-      // un-ledgered from footer statistics over the live file walk —
-      // no refresh, no job; only a possibly-present id pays the exact
-      // check below
+      // a fresh batch is proven un-ledgered from footers — no refresh,
+      // no job; only a possibly-present id pays the exact check, which
+      // refreshes first: the ledger row may have been written through
+      // a streaming session clone
       !footerProvenAbsent(spark, ledgerTbl, "batch_id", batchId) && {
-        // same cross-session discipline as batchPresent (round-17
-        // ADVICE): the ledger row may have been written by a streaming
-        // foreachBatch session CLONE, whose append invalidates the
-        // clone's cache, not this session's — a stale file listing here
-        // reports the batch un-ledgered and the replay falls through to
-        // the slower fence checks and appends a duplicate ledger row.
         spark.catalog.refreshTable(ledgerTbl)
-        !spark.table(ledgerTbl)
-          .filter(col("batch_id") === batchId).isEmpty
+        !spark.table(ledgerTbl).filter(col("batch_id") === batchId).isEmpty
       }
 
   private[ops] def ledgerRecordIn(spark: SparkSession, ledgerTbl: String,
-      anchorTable: String, batchId: Long): Unit = {
-    val w = spark.range(1).select(lit(batchId).as("batch_id"))
-      .write.mode(SaveMode.Append)
-    if (spark.catalog.tableExists(ledgerTbl)) w.saveAsTable(ledgerTbl)
-    else w.option("path", s"${indexRootOf(spark, anchorTable)}/ledger")
-      .saveAsTable(ledgerTbl)
+      anchorTable: String, batchId: Long): Unit =
+    appendSide(spark, ledgerTbl, anchorTable, "ledger",
+      spark.range(1).select(lit(batchId).as("batch_id")))
+
+  /** The exactly-once fence shared by every `maintainBatch` — the
+    * order in the object doc. `certifying` is the table written LAST,
+    * so its stamp proves the whole batch landed. With `ledgered` the
+    * ledger is the fast path and is (back)filled; without it the stamp
+    * is the ledger and [[foldedUnder]] extends it across folds. `write`
+    * runs the batch, given `landed(table)` so it can skip any earlier
+    * table a crashed attempt already wrote; it must write the
+    * certifying table. Returns None when the batch had landed. */
+  private[ops] def maintainOnce[T](spark: SparkSession, verb: String, prefix: String,
+      certifying: String, ledgered: Boolean, batchId: Long)(
+      write: (String => Boolean) => T): Option[T] = {
+    require(batchId >= 0,
+      s"$verb batchId must be >= 0, got $batchId (ids < 0 are " +
+        "reserved for the base-build/ad-hoc stamp)")
+    val ledger = ledgerTable(prefix)
+    def record(): Unit = if (ledgered) ledgerRecordIn(spark, ledger, certifying, batchId)
+    if (ledgered && ledgerDoneIn(spark, ledger, batchId)) None
+    else if (batchPresent(spark, certifying, batchId) ||
+        (!ledgered && foldedUnder(spark, certifying, batchId))) {
+      record()
+      None
+    } else {
+      val out = write(t => batchPresent(spark, t, batchId))
+      record()
+      Some(out)
+    }
   }
 
-  // ------------------------------------------------------------------
-  // Bucket-preserving compaction — the shared physical rewrite
-  // ------------------------------------------------------------------
-
-  /** Bucket-preserving compaction of one bucketed table: rewrite all
-    * current files into exactly ONE file per bucket, same
-    * bucketBy/sortBy spec, then swap the catalog entry (write to
-    * `<table>_compact` at a sibling location, rename old aside,
-    * rename new in, drop old). The rewrite is key-agnostic — all
-    * three families compact through it; `minus` optionally filters
-    * rows whose `minusIdCol` matches the (broadcast, bounded) expired
-    * frame. The swap is metadata-only at the catalog layer; the old
-    * file set is deleted after the new table is registered.
-    *
-    * `sortCols` preserves a table's within-bucket sort spec across
-    * the rewrite (default: the bucket key alone). Round-16 catch: the
-    * lexical postings table is sorted (term, imp_rank) so the capped
-    * probe's `imp_rank <= C` filter prunes row groups by footer
-    * min/max — a compaction that re-sorted by term alone silently
-    * destroyed that layout (loose footer bounds ⇒ capped-probe bytes
-    * scale with df again) AND wedged every later append on
-    * "Specified bucketing does not match" (the sort spec is part of
-    * the table's bucketing metadata). */
-  private[ops] def compactTable(spark: SparkSession, table: String,
-      key: String, minus: Option[DataFrame] = None,
-      minusIdCol: String = "corpus_doc",
-      sortCols: Seq[String] = Nil): Unit = {
-    val sortSpec = if (sortCols.nonEmpty) sortCols else Seq(key)
-    // the last writer may have been ANOTHER session (a streaming
-    // foreachBatch runs in the query's session clone, whose appends
-    // don't invalidate this session's cached file listing) — without
-    // the refresh the rewrite silently drops every file this session
-    // hasn't seen. Caught live by the st20 StreamingSpec: the
-    // post-restart compact rebuilt docstats from the base build only,
-    // leaving n_docs=384 under postings' 500 docs — negative idf.
-    spark.catalog.refreshTable(table)
-    val catalog = spark.sessionState.catalog
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val oldLoc = catalog.getTableMetadata(ident).location.toString
-    val newLoc = oldLoc.stripSuffix("/") + s"_c${serial.incrementAndGet()}"
-    val tmpTable = s"${table}_compact"
-    // The writer emits one file per (task, bucket), so one file per
-    // bucket needs write tasks aligned 1:1 with bucket ids. The
-    // cheapest alignment is no shuffle at all: a BUCKETED scan of the
-    // source table already yields exactly one bucket per partition
-    // (all of that bucket's historical files), and the write lays
-    // each back down as a single file — a per-bucket local rewrite,
-    // the plan you'd want at 100 TB. Two planner knobs make it hold:
-    //   - autoBucketedScan OFF: by default DisableUnnecessaryBucketedScan
-    //     downgrades the scan to size-based chunks because no
-    //     operator "needs" the distribution (a user
-    //     repartition(Buckets, key) does NOT survive as that need —
-    //     EnsureRequirements elides it against the bucketed scan's
-    //     partitioning BEFORE DisableUnnecessaryBucketedScan runs,
-    //     a pass-ordering trap measured here: the elided-then-
-    //     downgraded plan wrote 4 chunk-tasks × ~7 buckets each);
-    //   - AQE OFF: its local-read rewrite would likewise re-chunk
-    //     the read (the write side only REQUIRES an ordering).
-    // Verified: task p reads bucket p and writes part-0000p_0000p —
-    // zero exchange, one file per bucket.
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val abs = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val absWas = spark.conf.get(abs, "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set(abs, "false")
-    try {
-      // Retention rides the same per-bucket local rewrite: the
-      // expired-id set is K-sized, so a BROADCAST anti-join filters
-      // each bucket's rows in place without disturbing the
-      // one-bucket-per-task read (a broadcast join streams its left
-      // side — no exchange, the write still lays down one file per
-      // bucket).
-      val source = minus match {
-        case Some(ex) =>
-          val expired = org.apache.spark.sql.functions
-            .broadcast(ex.select(col(ex.columns.head).as("__expired_id")))
-          val t = spark.table(table)
-          t.join(expired, t(minusIdCol) === col("__expired_id"), "left_anti")
-        case None => spark.table(table)
+  /** Refuse a rewrite that destroys batch stamps (fold, re-base,
+    * re-stamp) while any stamped batch in `stamped` is mid-commit
+    * (stamped but not ledgered): its replay fence would be gone and a
+    * checkpoint restart would double-append it. Indexes without a
+    * ledger never went through maintainBatch and are exempt. Both
+    * stamp sets come from footers when every file holds one stamp;
+    * otherwise from two exact distinct-collects. */
+  private[ops] def requireLedgered(spark: SparkSession, prefix: String,
+      stamped: String, verb: String): Unit = {
+    val lt = ledgerTable(prefix)
+    if (spark.catalog.tableExists(lt)) {
+      val unledgered = (stampSetFromFooters(spark, lt, "batch_id"),
+          stampSetFromFooters(spark, stamped, "ingest_batch")) match {
+        case (Some(ledgered), Some(stamps)) =>
+          stamps.filter(b => b >= 0 && !ledgered.contains(b)).toSeq
+        case _ =>
+          spark.catalog.refreshTable(lt)
+          spark.catalog.refreshTable(stamped)
+          val ledgered = spark.table(lt).select("batch_id").distinct()
+            .collect().map(_.getLong(0)).toSet
+          spark.table(stamped).select("ingest_batch").distinct()
+            .collect().map(_.getLong(0))
+            .filter(b => b >= 0 && !ledgered.contains(b)).toSeq
       }
-      source.write
-        // the TABLE's own bucket count (round 17 — bucket count is a
-        // build parameter): a constant here would silently re-bucket
-        // any index built wider than the default
-        .bucketBy(bucketsOf(spark, table), key)
-        .sortBy(sortSpec.head, sortSpec.tail: _*)
-        .option("path", newLoc)
-        .mode(SaveMode.Overwrite)
-        .saveAsTable(tmpTable)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set(abs, absWas)
+      require(unledgered.isEmpty,
+        s"$verb($prefix): batch(es) ${unledgered.mkString(",")} are " +
+          "mid-commit (stamped but not ledgered) — replay them through " +
+          "maintainBatch before any maintenance rewrite, or their replay " +
+          "fence is destroyed and a restart double-appends them")
     }
-    // Crash-safe swap (round-10 ADVICE): a bare DROP-then-RENAME has a
-    // window where NO table is registered while both file sets sit on
-    // disk. Instead rename the live table ASIDE first, then promote
-    // the compacted one — at every single-failure point either the
-    // original registration is intact, or a complete `_old`-named
-    // table remains recoverable next to the fully-written compacted
-    // table (external tables keep their location across RENAME). A
-    // failed promotion restores the original name before rethrowing.
-    val oldTable = s"${table}_old${serial.incrementAndGet()}"
-    spark.sql(s"ALTER TABLE $table RENAME TO $oldTable")
-    try spark.sql(s"ALTER TABLE $tmpTable RENAME TO $table")
-    catch {
-      case e: Throwable =>
-        try spark.sql(s"ALTER TABLE $oldTable RENAME TO $table")
-        catch { case _: Throwable => () }
-        throw e
-    }
-    spark.sql(s"DROP TABLE $oldTable")
-    deleteDir(oldLoc.stripPrefix("file:"))
-  }
-
-  /** The EXTERNAL-location rename swap shared by the stats re-base,
-    * reindex and generation-promotion paths: `write(tmpTable,
-    * newLocation)` lays the replacement down, then the live name
-    * swings over with crash-safe ordering ([[compactTable]]'s
-    * discipline — at every single-failure point either the original
-    * registration is intact or a complete aside-named table remains
-    * recoverable). Failure handling closes the retry wedge a bare
-    * swap leaves: on a failed promotion the ORIGINAL registration is
-    * restored, the temp table AND its files are removed (so a retry's
-    * saveAsTable cannot hit TableAlreadyExists), and a rollback
-    * failure is logged rather than silently swallowed. */
-  private[ops] def swapTable(spark: SparkSession, table: String, tag: String)(
-      write: (String, String) => Unit): Unit = {
-    val catalog = spark.sessionState.catalog
-    val oldLoc = catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .location.toString
-    val newLoc = oldLoc.stripSuffix("/") + s"_$tag${serial.incrementAndGet()}"
-    val tmpT = s"${table}_$tag"
-    write(tmpT, newLoc)
-    val oldT = s"${table}_old${serial.incrementAndGet()}"
-    try {
-      spark.sql(s"ALTER TABLE $table RENAME TO $oldT")
-      try spark.sql(s"ALTER TABLE $tmpT RENAME TO $table")
-      catch {
-        case e: Throwable =>
-          try spark.sql(s"ALTER TABLE $oldT RENAME TO $table")
-          catch {
-            case r: Throwable => System.err.println(
-              s"[indexcore] ROLLBACK FAILED for $table (recover manually from " +
-                s"$oldT at $oldLoc): ${r.getMessage}")
-          }
-          throw e
-      }
-    } catch {
-      case e: Throwable =>
-        try {
-          spark.sql(s"DROP TABLE IF EXISTS $tmpT")
-          deleteDir(newLoc.stripPrefix("file:"))
-        } catch { case _: Throwable => () }
-        throw e
-    }
-    spark.sql(s"DROP TABLE $oldT")
-    deleteDir(oldLoc.stripPrefix("file:"))
   }
 
   // ------------------------------------------------------------------
-  // Segment merge log — crash-safe size-tiered folds (VERDICT item 2)
+  // Segment merge log — crash-safe size-tiered folds
   // ------------------------------------------------------------------
 
   /** Merge outputs are stamped from a RESERVED range (≤ this value,
-    * descending): streaming/ad-hoc batches are ≥ 0, the base build is
-    * [[BandIndex.BaseBatch]] (-1), so a reserved stamp can never
-    * collide with a real batch — and an UNCOMMITTED merge output
-    * (crash before the log append) is invisible by default, which is
-    * the whole crash-safety argument. */
+    * descending): real batches are ≥ 0 and the base build is
+    * [[BaseBatch]], so a reserved stamp never collides with a real
+    * batch — and an UNCOMMITTED merge output (crash before the log
+    * append) is invisible by default. */
   val MergeStampCeil: Long = -2L
 
   def mergeLogTable(prefix: String): String = s"${prefix}_mergelog"
 
   /** The committed merge history: `folded` = every stamp some fold
-    * consumed (its rows are dead); `outputs` = every stamp a
-    * committed fold produced (its rows are live unless later folded
-    * themselves — cascaded tiers). Bounded by merge history and
-    * cleared on every full rewrite, so both sets stay tiny. */
+    * consumed (its rows are dead); `outputs` = every stamp a committed
+    * fold produced (live unless later folded — cascaded tiers).
+    * Cleared on every full re-stamping rewrite, so both stay tiny. */
   final case class MergeLog(folded: Set[Long], outputs: Set[Long]) {
     def nextStamp: Long =
       math.min(MergeStampCeil, outputs.minOption.getOrElse(MergeStampCeil + 1) - 1)
   }
 
-  /** Memo of decoded merge logs, keyed by the log table's LIVE file
-    * listing (path + length, sorted). The log is tiny but round 17's
-    * job profile showed each read costing ~0.14 s of driver work
-    * (refresh + plan + collect), ×8 per tx27 cycle — while the log
-    * only changes when a fold commits or a rewrite clears it, both of
-    * which change the file listing the key is built from. A
-    * session-clone's commit also appends a file, so the cross-session
-    * staleness hazard refreshTable guards is covered BY the key: any
-    * writer, any session, new key ⇒ fresh read. Parquet write paths
-    * never reuse file names (UUID parts), so a drop-and-recreate
-    * cannot collide with a stale entry. */
+  /** Decoded merge logs keyed by the log table's LIVE file listing:
+    * the log only changes when a fold commits or a rewrite clears it,
+    * both of which change the listing — from any session, so the key
+    * also covers the cross-session staleness a refresh guards. */
   private val mergeLogMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), (Seq[(String, Long)], MergeLog)]
 
@@ -699,9 +788,6 @@ object IndexCore {
     val t = mergeLogTable(prefix)
     if (!spark.catalog.tableExists(t)) MergeLog(Set.empty, Set.empty)
     else {
-      // sizes from the walk's own attributes (round-18 ADVICE: the
-      // old java.io.File.length() silently returns 0 on any non-local
-      // filesystem, reducing the key to paths only)
       val key = tableFilesSized(spark, t)
       mergeLogMemo.get((spark, t)) match {
         case Some((k, log)) if k == key => log
@@ -721,12 +807,11 @@ object IndexCore {
     *   - real stamps (≥ -1) are visible unless a committed fold
     *     consumed them;
     *   - reserved stamps (≤ -2) are visible only when a committed
-    *     fold PRODUCED them and no later fold consumed them — an
-    *     uncommitted output (crash window) or an orphaned attempt
-    *     stays invisible forever.
-    * All branches are literal comparisons/IN-lists on one long
-    * column — fully pushable, footer-prunable (append files hold a
-    * single stamp). */
+    *     fold PRODUCED them and no later fold consumed them.
+    * Literal comparisons and IN-lists on one long column — pushed and
+    * footer-pruned. Readers apply it even with an EMPTY log: a fold
+    * that crashed before its first commit leaves reserved-stamp rows
+    * on disk with no log table at all. */
   private[ops] def visibleUnder(log: MergeLog): Column = {
     val b = col("ingest_batch")
     val notFolded =
@@ -737,53 +822,100 @@ object IndexCore {
   }
 
   /** Append the commit rows for one fold — `folded` stamps consumed,
-    * `out` produced. ONE atomic job commit: the fold is invisible
-    * before this write and fully visible after it; there is no state
-    * in between. The storage location carries the log's own table
-    * name, so TABLE-SCOPED logs (the vector family folds its cells
-    * table under scope `cellsTable(prefix)` — its pqcells stamps are
-    * independent) never collide under one index root. */
+    * `out` produced — as ONE atomic job commit. The log is stored
+    * under its own table name, so table-scoped logs never collide
+    * under one index root. */
   private[ops] def commitFold(spark: SparkSession, prefix: String,
       anchorTable: String, folded: Seq[Long], out: Long): Unit = {
     import spark.implicits._
     val t = mergeLogTable(prefix)
-    val w = folded.map(f => (out, f)).toDF("out_stamp", "folded_stamp")
-      .coalesce(1).write.mode(SaveMode.Append)
-    if (spark.catalog.tableExists(t)) w.saveAsTable(t)
-    else w.option("path",
-      s"${indexRootOf(spark, anchorTable)}/$t").saveAsTable(t)
+    appendSide(spark, t, anchorTable, t,
+      folded.map(f => (out, f)).toDF("out_stamp", "folded_stamp").coalesce(1))
   }
 
-  /** Was `batchId` consumed by a committed fold under `scope`'s merge
-    * log? The replay fence for STAMP-IS-THE-LEDGER maintenance
-    * ([[VecIndex.maintainBatch]]): a fold re-stamps a batch's rows
-    * and GC deletes its files, so [[batchPresent]] alone would report
-    * a folded batch absent and a checkpoint replay would
-    * double-append it. The log row recording the fold IS the durable
-    * evidence the batch landed — storage-derived, survives restarts,
-    * cleared only by full rewrites that also clear the stamps. */
+  /** Was `batchId` consumed by a committed fold under `scope`'s log?
+    * A fold re-stamps a batch's rows and GC deletes its files, so for
+    * a stamp-is-the-ledger table the log row is the durable evidence
+    * the batch landed. */
   private[ops] def foldedUnder(spark: SparkSession, scope: String,
       batchId: Long): Boolean =
     spark.catalog.tableExists(mergeLogTable(scope)) &&
       readMergeLog(spark, scope).folded.contains(batchId)
 
-  /** Drop the merge log (table + files) after a FULL rewrite
-    * (compact/reindex/mergeReindex re-stamp every surviving row, so
-    * the stamps the log names no longer exist). */
+  /** Drop the merge log after a full re-stamping rewrite (the stamps
+    * it names no longer exist). Every session's memo entry goes too:
+    * a re-created log must never serve the old decode. */
   private[ops] def clearMergeLog(spark: SparkSession, prefix: String): Unit = {
     val t = mergeLogTable(prefix)
-    // evict every session's memo entry for the dropped log (round-18
-    // ADVICE): the stale entry was keyed to the dropped table's file
-    // listing, and a re-created log at the same name must never serve
-    // the old decode
     mergeLogMemo.filterInPlace((k, _) => k._2 != t)
-    if (spark.catalog.tableExists(t)) {
-      val loc = spark.sessionState.catalog
-        .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-        .location.toString
-      spark.sql(s"DROP TABLE $t")
-      deleteDir(loc.stripPrefix("file:"))
+    dropWithFiles(spark, t)
+  }
+
+  /** One fold in flight: the consumed stamps, the output stamp, and
+    * the consumed row count (exact, from footers). */
+  private[ops] final case class Fold(stamps: Seq[Long], out: Long, rows: Long)
+
+  /** SIZE-TIERED segment merge over `specs`' tables (the last one's
+    * footers measure segment size), logged under `scope`: fold ONLY
+    * the batch-stamped segments of at most `maxTierRows` rows into one
+    * segment under a fresh reserved stamp, leaving the base tier's
+    * files byte-untouched. One footer sweep per table feeds GC, the
+    * tier pick and the stamp pick. `rewrite(spec, input, fold)` writes
+    * the merged rows, given the folded rows re-stamped to `fold.out`;
+    * the commit is one merge-log append, and the inputs' files are
+    * GC'd after it (their rows are already invisible). Returns true
+    * when a fold ran (≥ 2 sub-tier segments). */
+  private[ops] def tieredMerge(spark: SparkSession, prefix: String, scope: String,
+      specs: Seq[TableSpec], maxTierRows: Long)(
+      rewrite: (TableSpec, DataFrame, Fold) => Unit): Boolean = {
+    val tables = specs.map(_.name(prefix))
+    tables.foreach(spark.catalog.refreshTable)
+    val log = readMergeLog(spark, scope)
+    // GC any prior fold's leftovers FIRST: a crashed attempt's orphan
+    // files must go before its stamp could be reused
+    val segs = tables.map { t =>
+      val all = fileSegments(spark, t)
+      val gone = gcDeadFilesOf(spark, t, log, all).toSet
+      all.filterNot(s => gone.contains(s._1))
     }
+    val sizes = segmentSizesOf(segs.last, log)
+    val stamps = sizes.collect {
+      case (stamp, (rows, _)) if stamp != BaseBatch && rows <= maxTierRows => stamp
+    }.toSeq.sorted
+    if (stamps.size < 2) false
+    else {
+      // fresh against both the log's outputs and any stamp physically
+      // present (belt-and-braces against a partial GC)
+      val usedMin = (segs.flatten.map(_._2) ++ log.outputs :+ (MergeStampCeil + 1)).min
+      val fold = Fold(stamps, math.min(log.nextStamp, usedMin - 1),
+        stamps.map(s => sizes(s)._1).sum)
+      specs.zip(tables).foreach { case (spec, t) =>
+        rewrite(spec, spark.table(t).filter(col("ingest_batch").isin(stamps: _*))
+          .withColumn("ingest_batch", lit(fold.out)), fold)
+      }
+      commitFold(spark, scope, tables.head, stamps, fold.out)
+      // under the just-committed log the dead set is exactly the
+      // folded stamps' files, already in hand from the sweep
+      val log2 = MergeLog(log.folded ++ stamps, log.outputs + fold.out)
+      tables.zip(segs).foreach { case (t, s) =>
+        gcDeadFilesOf(spark, t, log2, s.filter(x => stamps.contains(x._2)))
+      }
+      true
+    }
+  }
+
+  /** Fixture-cycle check around a tiered fold: the fold ran, left the
+    * base tier's files of `table` byte-untouched, and left exactly the
+    * base segment plus one merged segment. */
+  private[ops] def checkedFold(spark: SparkSession, tag: String, table: String,
+      scope: String)(fold: => Boolean): Unit = {
+    def baseFiles = fileSegments(spark, table)
+      .filter(f => f._2 == BaseBatch && f._3 == BaseBatch).map(f => (f._1, f._5)).toSet
+    val before = baseFiles
+    if (!fold) sys.error(s"$tag: sub-tier segments present but no fold ran")
+    if (baseFiles != before) sys.error(s"$tag: the fold touched the base tier's files")
+    val segs = segmentSizes(spark, table, readMergeLog(spark, scope))
+    if (segs.size != 2) sys.error(s"$tag: expected base + merged segment, got ${segs.keySet}")
   }
 
   // ------------------------------------------------------------------
@@ -791,11 +923,8 @@ object IndexCore {
   // ------------------------------------------------------------------
 
   /** Per-file (path, ingest_batch min, max, rows, bytes) from parquet
-    * FOOTERS only — O(files) metadata reads, no data I/O, which is
-    * what lets the tier picker and the fold GC run without scanning
-    * the corpus. Every append/fold file holds a single stamp
-    * (min == max); only a full-rewrite file (all rows re-stamped to
-    * BaseBatch) also satisfies min == max at -1. */
+    * FOOTERS only — no data I/O. Every append/fold file holds a
+    * single stamp (min == max). */
   private[ops] def fileSegments(spark: SparkSession,
       table: String): Seq[(String, Long, Long, Long, Long)] =
     segStats(spark, table, "ingest_batch").collect {
@@ -803,19 +932,14 @@ object IndexCore {
     }
 
   /** Visible segments and their sizes: stamp → (rows, bytes), folded
-    * and orphaned stamps excluded. Footer-derived — see
-    * [[fileSegments]]. Files whose stamp range spans several batches
-    * (possible only after external rewrites) are attributed to their
-    * min stamp; the fold picker additionally requires min == max
-    * before folding, so a spanning file can never be half-consumed. */
+    * and orphaned stamps excluded. */
   private[ops] def segmentSizes(spark: SparkSession, table: String,
       log: MergeLog): Map[Long, (Long, Long)] =
     segmentSizesOf(fileSegments(spark, table), log)
 
-  /** Pure form over a precomputed [[fileSegments]] listing — round
-    * 17: a fold was paying FOUR footer sweeps per cycle (gc, sizes,
-    * fresh-stamp pick, post-commit gc); the callers now take one
-    * sweep and share it. */
+  /** Pure form over a precomputed [[fileSegments]] listing. Files whose
+    * stamp range spans several batches are excluded, so a spanning
+    * file can never be half-consumed by a fold. */
   private[ops] def segmentSizesOf(segs: Seq[(String, Long, Long, Long, Long)],
       log: MergeLog): Map[Long, (Long, Long)] =
     segs
@@ -830,33 +954,26 @@ object IndexCore {
 
   /** Physically delete the files whose every row is DEAD under the
     * log — folded stamps and orphaned (uncommitted) merge outputs.
-    * Pure garbage collection: the rows were already invisible, so a
-    * crash mid-GC changes nothing observable; the next fold retries.
-    * Only single-stamp files are touched (min == max — a spanning
-    * file could hold live rows). */
+    * Pure GC: a crash mid-way changes nothing observable. */
   private[ops] def gcDeadFiles(spark: SparkSession, table: String,
       log: MergeLog): Int =
     gcDeadFilesOf(spark, table, log, fileSegments(spark, table)).size
 
-  /** [[gcDeadFiles]] over a precomputed listing; returns the deleted
-    * paths so the caller can subtract them from its shared
-    * [[fileSegments]] sweep instead of re-walking footers. */
+  /** [[gcDeadFiles]] over a precomputed listing; returns only the paths
+    * actually GONE, so a caller subtracting them from its sweep keeps
+    * a dead reserved-stamp file that survived a failed delete (reusing
+    * its stamp would make the crashed attempt's rows visible after the
+    * next commit). */
   private[ops] def gcDeadFilesOf(spark: SparkSession, table: String,
       log: MergeLog, segs: Seq[(String, Long, Long, Long, Long)]): Seq[String] = {
     val dead = segs.filter { case (_, mn, mx, _, _) =>
       mn == mx &&
         (log.folded.contains(mn) || (mn <= MergeStampCeil && !log.outputs.contains(mn)))
     }
-    // return only files that are actually GONE (round-18 ADVICE): the
-    // callers subtract this set from their shared footer sweep before
-    // computing the fresh-stamp pool, so a dead reserved-stamp file
-    // that survived a failed delete must stay in the listing — reusing
-    // its stamp would make the crashed attempt's orphan rows visible
-    // after the next commitFold
     val deleted = dead.filter { case (f, _, _, _, _) =>
       val p = java.nio.file.Paths.get(f)
       try { java.nio.file.Files.deleteIfExists(p); () }
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       !java.nio.file.Files.exists(p)
     }
     if (deleted.nonEmpty) spark.catalog.refreshTable(table)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, ha
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
+import IndexCore.BaseBatch
 
 /** Persisted form of the BM25 inverted index — [[VecIndex]]'s
   * lifecycle applied to the LEXICAL retrieval lane (round-15 VERDICT
@@ -96,8 +97,13 @@ object LexIndex {
     * follow whatever the build chose. */
   val Buckets = IndexCore.DefaultBuckets
 
-  def postingsTable(prefix: String): String = s"${prefix}_postings"
-  def docstatsTable(prefix: String): String = s"${prefix}_docstats"
+  private val Postings = IndexCore.TableSpec("postings", "term", Seq("term", "imp_rank"))
+  private val Docstats = IndexCore.TableSpec("docstats", "doc_id", Seq("doc_id"))
+  private val Fam = IndexCore.Family("graft_lex", "lex",
+    Seq("postings", "docstats", "stats", "dfcorr"))
+
+  def postingsTable(prefix: String): String = Postings.name(prefix)
+  def docstatsTable(prefix: String): String = Docstats.name(prefix)
   def statsTable(prefix: String): String = s"${prefix}_stats"
 
   import TextAnalysis.{tokensExpr, Bm25K1, Bm25B, Bm25TopK, Bm25Queries}
@@ -126,7 +132,7 @@ object LexIndex {
       buckets: Int = Buckets): Unit = {
     val base = docs.getOrElse(Tables.documents(spark, dir))
     writeBatch(spark, tokenized(base), path, prefix,
-      BandIndex.BaseBatch, firstWrite = true, buckets)
+      BaseBatch, firstWrite = true, buckets)
   }
 
   /** Impact order shared by the build, the rebuild and the oracle:
@@ -281,63 +287,34 @@ object LexIndex {
   // dl is functionally dependent on doc_id, so folding it into the
   // group key keeps the build a single shuffle (no corpus-sized
   // dl-join back): explode → groupBy(doc_id, term, dl) → count.
-  // Impact metadata (tx20, round 15): each posting carries its
-  // within-term IMPACT RANK and its term's df, both computed over
-  // THIS batch by the skew-safe [[withImpactMeta]]. On the fresh
-  // base build these are the global values; appends stamp
-  // batch-local ones, which go stale until a rebuild — the
-  // standard impact-ordered-index contract (Anh & Moffat): impact
-  // order refreshes at merge time. tx16's probe ignores both
-  // columns (exact df recomputed from matched postings, no cap);
-  // only tx20's capped probe reads them, and its catalog entry
-  // serves the fresh base build.
+  // Impact metadata: each posting carries its within-term IMPACT RANK
+  // and its term's df, both computed over THIS batch by the skew-safe
+  // [[withImpactMeta]]. On the base build these are the global values;
+  // appends stamp batch-local ones, which go stale until a rebuild —
+  // the standard impact-ordered-index contract (Anh & Moffat). tx16's
+  // probe ignores both columns; only the capped lanes read them.
+  // The Postings spec sorts (term, imp_rank): within a bucket each
+  // term's postings lie in an impact-ascending run, so the capped
+  // probe's `imp_rank <= C` pushed filter prunes the row groups beyond
+  // the cap for high-df terms — bytes ∝ terms × C, not df.
   private[ops] def writePostings(tok: DataFrame, path: String,
       prefix: String, batch: Long, firstWrite: Boolean,
-      buildBuckets: Int = Buckets): Unit = {
-    val postings = withImpactMeta(tok
+      buildBuckets: Int = Buckets): Unit =
+    IndexCore.writeTable(withImpactMeta(tok
       .select(col("doc_id"), col("dl"),
         org.apache.spark.sql.functions.explode_outer(col("tokens")).as("term"))
       .filter(col("term").isNotNull)
       .groupBy("term", "doc_id", "dl")
       .agg(count(lit(1)).as("tf")))
-      .withColumn("ingest_batch", lit(batch))
-    val b = if (firstWrite) buildBuckets
-      else IndexCore.bucketsOf(tok.sparkSession, postingsTable(prefix))
-    // sortBy (term, imp_rank): within a bucket each term's postings
-    // lie in an impact-ascending run, so at real scale the capped
-    // probe's `imp_rank <= C` pushed filter prunes the row groups
-    // beyond the cap for high-df terms — bytes ∝ terms × C, not df.
-    // BUCKET-ALIGNED write (round 18, guide §6/§2.2 — tieredMerge's
-    // discipline applied to every writer): a bucketed writer emits
-    // one file per (task, bucket), so an un-aligned write from
-    // shuffle.partitions tasks lays down tasks × b files PER
-    // APPEND — measured at 10× data on this box, the 32-core cycles
-    // ran ~2× SLOWER than 8-core purely from the file-count fallout
-    // (serial commit renames, footer reads, listings all ∝ files).
-    // One batch-sized hash exchange buys one file per bucket, a file
-    // count independent of cluster width — at 100 TB the difference
-    // between bounded segments and a small-files explosion.
-    val pw = postings.repartition(b, col("term")).write
-      .bucketBy(b, "term").sortBy("term", "imp_rank")
-      .mode(if (firstWrite) SaveMode.Overwrite else SaveMode.Append)
-    (if (firstWrite) pw.option("path", s"$path/postings") else pw)
-      .saveAsTable(postingsTable(prefix))
-  }
+      .withColumn("ingest_batch", lit(batch)),
+      Postings, prefix, if (firstWrite) Some((path, buildBuckets)) else None)
 
   private[ops] def writeDocstats(tok: DataFrame, path: String,
       prefix: String, batch: Long, firstWrite: Boolean,
-      buildBuckets: Int = Buckets): Unit = {
-    val docstats = tok.select(col("doc_id"), col("dl"))
-      .withColumn("ingest_batch", lit(batch))
-    val b = if (firstWrite) buildBuckets
-      else IndexCore.bucketsOf(tok.sparkSession, docstatsTable(prefix))
-    // bucket-aligned: one file per bucket per write (see writePostings)
-    val dw = docstats.repartition(b, col("doc_id")).write
-      .bucketBy(b, "doc_id").sortBy("doc_id")
-      .mode(if (firstWrite) SaveMode.Overwrite else SaveMode.Append)
-    (if (firstWrite) dw.option("path", s"$path/docstats") else dw)
-      .saveAsTable(docstatsTable(prefix))
-  }
+      buildBuckets: Int = Buckets): Unit =
+    IndexCore.writeTable(
+      tok.select(col("doc_id"), col("dl")).withColumn("ingest_batch", lit(batch)),
+      Docstats, prefix, if (firstWrite) Some((path, buildBuckets)) else None)
 
   // ONE row of global state per batch — aggregated from THIS
   // batch's docstats frame, not a stamp-filtered table read-back:
@@ -362,12 +339,12 @@ object LexIndex {
     * are doc-local, so batch postings ≡ the full build's postings for
     * those docs), append under a fresh stamp. Batch-proportional —
     * the existing index is never read, let alone rewritten. Ad-hoc
-    * appends default to the [[BandIndex.BaseBatch]] stamp (round 16 —
+    * appends default to the [[IndexCore.BaseBatch]] stamp (round 16 —
     * VecIndex's convention): streaming batch ids are ≥ 0, so an
     * ad-hoc append can never false-skip a [[maintainBatch]] replay
     * check. */
   def append(spark: SparkSession, dir: String, newDocs: DataFrame,
-      prefix: String, batch: Long = BandIndex.BaseBatch): Unit = {
+      prefix: String, batch: Long = BaseBatch): Unit = {
     writeBatch(spark, tokenized(newDocs), path = "", prefix = prefix,
       batch = batch, firstWrite = false)
   }
@@ -388,7 +365,7 @@ object LexIndex {
     * batches are gone and only the ledger can fence their replay.
     * (The per-table stamp checks remain valid for the window they
     * guard: a crash-interrupted batch is replayed BEFORE any later
-    * maintenance — [[requireLedgered]] enforces that ordering
+    * maintenance — [[IndexCore.requireLedgered]] enforces that ordering
     * loudly.) A replayed micro-batch whose checkpoint commit marker
     * was lost is a whole-batch no-op returning false. No
     * self-fencing probe is needed (BandIndex's extra mechanism):
@@ -400,72 +377,19 @@ object LexIndex {
     * which is exactly what StreamingSpec's checkpoint-restart test
     * drives. */
   def maintainBatch(spark: SparkSession, dir: String, prefix: String,
-      newDocs: DataFrame, batchId: Long): Boolean = {
-    require(batchId >= 0,
-      s"maintainBatch batchId must be >= 0, got $batchId (ids < 0 are " +
-        "reserved for the base-build/ad-hoc stamp)")
-    if (IndexCore.ledgerDoneIn(spark, IndexCore.ledgerTable(prefix), batchId))
-      false
-    else if (IndexCore.batchPresent(spark, statsTable(prefix), batchId)) {
-      // fully landed, crash took the ledger row — backfill it so the
-      // fence survives the next stats re-base (BandIndex's pattern)
-      IndexCore.ledgerRecordIn(spark, IndexCore.ledgerTable(prefix),
-        postingsTable(prefix), batchId)
-      false
-    } else {
+      newDocs: DataFrame, batchId: Long): Boolean =
+    IndexCore.maintainOnce(spark, "maintainBatch", prefix, statsTable(prefix),
+        ledgered = true, batchId) { landed =>
       // pinned for the same reason as writeBatch: the three writers
       // (plus the impact rank's boundary sampler) would otherwise
       // re-tokenize the batch once each
       val tok = tokenized(newDocs).localCheckpoint()
-      if (!IndexCore.batchPresent(spark, postingsTable(prefix), batchId))
+      if (!landed(postingsTable(prefix)))
         writePostings(tok, path = "", prefix, batchId, firstWrite = false)
-      if (!IndexCore.batchPresent(spark, docstatsTable(prefix), batchId))
+      if (!landed(docstatsTable(prefix)))
         writeDocstats(tok, path = "", prefix, batchId, firstWrite = false)
       writeStats(tok, path = "", prefix, batchId, firstWrite = false)
-      IndexCore.ledgerRecordIn(spark, IndexCore.ledgerTable(prefix),
-        postingsTable(prefix), batchId)
-      true
-    }
-  }
-
-  /** Maintenance rewrites destroy per-table batch stamps (stats
-    * re-base, postings re-stamp), so they must not run while a
-    * streaming batch is mid-crash-window: every non-Base stamp in
-    * the index must be ledgered first. Indexes that never went
-    * through [[maintainBatch]] (no ledger table) are exempt — their
-    * ad-hoc appends carry no exactly-once contract. */
-  private def requireLedgered(spark: SparkSession, prefix: String,
-      verb: String): Unit = {
-    val lt = IndexCore.ledgerTable(prefix)
-    if (spark.catalog.tableExists(lt)) {
-      // footer fast path (round 18, VERDICT item 1): both sets come
-      // from the segment-stats manifest — ledger files hold one
-      // batch_id each, docstats files one stamp each, so set
-      // membership is exact from file min/max; any spanning or
-      // stats-less file falls back to the two exact collects below
-      val unledgered = (
-        IndexCore.stampSetFromFooters(spark, lt, "batch_id"),
-        IndexCore.stampSetFromFooters(spark, docstatsTable(prefix), "ingest_batch")
-      ) match {
-        case (Some(ledgered), Some(stamps)) =>
-          stamps.filter(b => b >= 0 && !ledgered.contains(b)).toSeq
-        case _ =>
-          spark.catalog.refreshTable(lt)
-          spark.catalog.refreshTable(docstatsTable(prefix))
-          val ledgered = spark.table(lt).select("batch_id").distinct()
-            .collect().map(_.getLong(0)).toSet
-          spark.table(docstatsTable(prefix))
-            .select("ingest_batch").distinct()
-            .collect().map(_.getLong(0))
-            .filter(b => b >= 0 && !ledgered.contains(b)).toSeq
-      }
-      require(unledgered.isEmpty,
-        s"$verb($prefix): batch(es) ${unledgered.mkString(",")} are " +
-          "mid-commit (stamped but not ledgered) — replay them through " +
-          "maintainBatch before any maintenance rewrite, or their " +
-          "replay fence is destroyed and a restart double-counts them")
-    }
-  }
+    }.isDefined
 
   /** Current tombstones as (retired_id, dl), or None. dl was recorded
     * at retire time ([[retire]]), so the probe's stats correction is
@@ -517,8 +441,8 @@ object LexIndex {
       corpus: Option[DataFrame] = None): Unit = {
     val ids = broadcast(docIds
       .select(col(docIds.columns.head).cast("long").as("rid")))
-    // cross-session-writer safety (the compactTable lesson): the norms
-    // lookup must see every appended file, not this session's cache
+    // cross-session-writer safety: the norms lookup must see every
+    // appended file, not this session's cache
     spark.catalog.refreshTable(docstatsTable(prefix))
     val norms = spark.table(docstatsTable(prefix))
     var expired = norms.join(ids, norms("doc_id") === col("rid"))
@@ -536,19 +460,11 @@ object LexIndex {
         .select(col("doc_id").as("retired_id"),
           org.apache.spark.sql.functions.explode_outer(col("tokens")).as("term"))
         .distinct()
-      val t = dfcorrTable(prefix)
-      val w = pairs.coalesce(1).write.mode(SaveMode.Append)
-      if (spark.catalog.tableExists(t)) w.saveAsTable(t)
-      else w.option("path",
-        s"${IndexCore.indexRootOf(spark, postingsTable(prefix))}/dfcorr")
-        .saveAsTable(t)
+      IndexCore.appendSide(spark, dfcorrTable(prefix), postingsTable(prefix),
+        "dfcorr", pairs.coalesce(1))
     }
-    val t = IndexCore.tombstonesTable(prefix)
-    val w = exp.coalesce(1).write.mode(SaveMode.Append)
-    if (spark.catalog.tableExists(t)) w.saveAsTable(t)
-    else w.option("path",
-      s"${IndexCore.indexRootOf(spark, postingsTable(prefix))}/tombstones")
-      .saveAsTable(t)
+    IndexCore.appendSide(spark, IndexCore.tombstonesTable(prefix), postingsTable(prefix),
+      "tombstones", exp.coalesce(1))
   }
 
   def dfcorrTable(prefix: String): String = s"${prefix}_dfcorr"
@@ -582,16 +498,6 @@ object LexIndex {
       .groupBy("term").agg(count(lit(1)).as("corr")))
   }
 
-  private def clearDfCorr(spark: SparkSession, prefix: String): Unit = {
-    val t = dfcorrTable(prefix)
-    if (spark.catalog.tableExists(t)) {
-      val loc = spark.sessionState.catalog
-        .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-        .location.toString
-      spark.sql(s"DROP TABLE $t")
-      IndexCore.deleteDir(loc.stripPrefix("file:"))
-    }
-  }
 
   // ------------------------------------------------------------------
   // Needs-reindex fence (round-17 ADVICE): compact() physically purges
@@ -634,14 +540,14 @@ object LexIndex {
     * tombstones. Probe decisions are unchanged — the masks were
     * already hiding exactly the purged rows. */
   def compact(spark: SparkSession, prefix: String): Unit = {
-    requireLedgered(spark, prefix, "compact")
+    IndexCore.requireLedgered(spark, prefix, docstatsTable(prefix), "compact")
     val tomb = tombstones(spark, prefix).map(_.select("retired_id"))
     val purging = tomb.exists(ts => !ts.isEmpty)
     // A purge without a metadata refresh leaves stored imp_rank with
     // holes and df overcounting, with the side tables that could
     // correct them cleared below — fence the capped lanes FIRST
-    // (round-17 ADVICE: marker before purge, so no crash point leaves
-    // the silent-overcount state), cleared by reindexImpact /
+    // (marker before purge, so no crash point leaves the
+    // silent-overcount state), cleared by reindexImpact /
     // mergeReindex.
     if (purging) setNeedsReindex(spark, prefix)
     // physically drop folded segments' dead files before the raw
@@ -649,40 +555,53 @@ object LexIndex {
     // disk, and resurrected fold inputs would double-count
     IndexCore.gcDeadFiles(spark, postingsTable(prefix),
       IndexCore.readMergeLog(spark, prefix))
-    // sortCols: preserve the (term, imp_rank) layout the capped
-    // probe's footer pruning reads — see compactTable's scaladoc
-    IndexCore.compactTable(spark, postingsTable(prefix), "term",
-      tomb, minusIdCol = "doc_id", sortCols = Seq("term", "imp_rank"))
-    IndexCore.compactTable(spark, docstatsTable(prefix), "doc_id",
-      tomb, minusIdCol = "doc_id")
-    val st = spark.table(docstatsTable(prefix))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .select(lit(BandIndex.BaseBatch).as("ingest_batch"),
-        col("n_docs"), col("sum_dl"))
-      .coalesce(1)
-    // Re-base via an EXTERNAL-location swap (compactTable's pattern).
-    // A bare saveAsTable(Overwrite) would silently re-create the
-    // table as MANAGED under the persistent spark-warehouse — files
-    // that outlive the JVM and collide with the next session's
-    // fresh-serial prefix (the exact failure the driver's full
-    // verify surfaced on tx18's second run).
-    swapTable(spark, statsTable(prefix), "compact") { (tmpT, newLoc) =>
-      st.write.option("path", newLoc).saveAsTable(tmpT)
-    }
-    IndexCore.clearTombstones(spark, prefix)
-    clearDfCorr(spark, prefix)
+    IndexCore.compactTable(spark, Postings, prefix, tomb, "doc_id")
+    IndexCore.compactTable(spark, Docstats, prefix, tomb, "doc_id")
+    rebaseStats(spark, prefix, "compact")
     // the merge log is KEPT: compactTable preserves row stamps, so
     // committed merge-output rows (reserved stamps) survive the
     // rewrite and still need the log to be visible — only the
     // re-stamping rewrites (reindexImpact / mergeReindex) clear it
   }
 
-  /** The EXTERNAL-location rename swap shared by the stats re-base
-    * and [[reindexImpact]] — one copy for all families since round 17
-    * ([[IndexCore.swapTable]]). */
-  private def swapTable(spark: SparkSession, table: String, tag: String)(
-      write: (String, String) => Unit): Unit =
-    IndexCore.swapTable(spark, table, tag)(write)
+  /** Re-base the stats table to ONE BaseBatch row recomputed from the
+    * surviving norms, then clear the side tables the purge made
+    * obsolete. The re-base is an EXTERNAL-location swap: a bare
+    * saveAsTable(Overwrite) would silently re-create the table as
+    * MANAGED under the persistent spark-warehouse — files that
+    * outlive the JVM and collide with the next session's prefix. */
+  private def rebaseStats(spark: SparkSession, prefix: String, tag: String): Unit = {
+    val st = spark.table(docstatsTable(prefix))
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+      .select(lit(BaseBatch).as("ingest_batch"), col("n_docs"), col("sum_dl"))
+      .coalesce(1)
+    IndexCore.swapTable(spark, statsTable(prefix), tag) { (tmpT, loc) =>
+      st.write.option("path", loc).saveAsTable(tmpT)
+    }
+    IndexCore.clearTombstones(spark, prefix)
+    IndexCore.dropWithFiles(spark, dfcorrTable(prefix))
+  }
+
+  /** Rewrite the postings with impact metadata recomputed over
+    * `resident` and every row re-stamped [[BaseBatch]], bucket-aligned
+    * (one file per bucket) through the external-location swap. */
+  private def restampPostings(spark: SparkSession, prefix: String, tag: String,
+      resident: DataFrame): Unit = {
+    val t = postingsTable(prefix)
+    val b = IndexCore.bucketsOf(spark, t)
+    val fresh = withImpactMeta(resident).withColumn("ingest_batch", lit(BaseBatch))
+    IndexCore.swapTable(spark, t, tag) { (tmpT, loc) =>
+      IndexCore.writeBucketed(fresh, Postings, tmpT, Some(loc), b)
+    }
+  }
+
+  /** After a re-stamping rewrite: the stamps the merge log names no
+    * longer exist, and the metadata the needs-reindex fence guarded
+    * is fresh again. */
+  private def restamped(spark: SparkSession, prefix: String): Unit = {
+    IndexCore.clearMergeLog(spark, prefix)
+    clearNeedsReindex(spark, prefix)
+  }
 
   /** Corpus stats as a 1-row frame (n_docs, sum_dl): the sum of the
     * batch-count-sized stats table, minus the tombstoned docs'
@@ -1044,30 +963,10 @@ object LexIndex {
     * every impact-ordered index runs (Anh & Moffat; Lucene's
     * forceMerge). */
   def reindexImpact(spark: SparkSession, prefix: String): Unit = {
-    requireLedgered(spark, prefix, "reindexImpact")
-    val t = postingsTable(prefix)
-    val b = IndexCore.bucketsOf(spark, t)
-    val fresh = withImpactMeta(
+    IndexCore.requireLedgered(spark, prefix, docstatsTable(prefix), "reindexImpact")
+    restampPostings(spark, prefix, "reindex",
       residentPostings(spark, prefix).select("term", "doc_id", "tf", "dl"))
-      .withColumn("ingest_batch", lit(BandIndex.BaseBatch))
-    swapTable(spark, t, "reindex") { (tmpT, newLoc) =>
-      // repartition 1:1 with the bucket function (HashPartitioning on
-      // term == bucketBy's id expression) so each task owns exactly
-      // one bucket and the rewrite folds to ONE FILE PER BUCKET — a
-      // bare bucketed save writes tasks x buckets files (round-16
-      // review; the sf0.001 spec only passed via AQE's single-task
-      // coalesce). Bucket-grain write parallelism is this layout's
-      // unit, same as compactTable's aligned scan.
-      fresh.repartition(b, col("term")).write
-        .bucketBy(b, "term").sortBy("term", "imp_rank")
-        .option("path", newLoc)
-        .saveAsTable(tmpT)
-    }
-    // every surviving row is re-stamped BaseBatch: the stamps the
-    // merge log names no longer exist, and the metadata the
-    // needs-reindex fence guarded is fresh again
-    IndexCore.clearMergeLog(spark, prefix)
-    clearNeedsReindex(spark, prefix)
+    restamped(spark, prefix)
   }
 
   /** tx21: the dq08→reindex maintenance cycle made observable —
@@ -1076,23 +975,12 @@ object LexIndex {
     * then the capped probe: the result must equal the GLOBAL-cap
     * oracle (tx20's SQL over the full corpus) — a divergence means
     * the rebuild failed to restore global impact order or df. */
-  def reindexCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(docs.filter(!isNewDoc)))
+  def reindexCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDoc)) { (c, docs) =>
+      c.phase("append") { append(spark, dir, docs.filter(isNewDoc), c.prefix) }
+      c.phase("reindex") { reindexImpact(spark, c.prefix) }
+      c.probe("probe")(impactProbe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      append(spark, dir, docs.filter(isNewDoc), prefix)
-    }
-    Phases.time(tag, "reindex") { reindexImpact(spark, prefix) }
-    val dec = Phases.time(tag, "probe") {
-      impactProbe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** st20 (round 16, VERDICT item 5): the lexical lane's streaming
     * maintenance cycle — [[VecIndex.maintainedCycle]]'s analog, so a
@@ -1107,40 +995,25 @@ object LexIndex {
     * entry shares tx15's oracle; StreamingSpec drives the same
     * maintenance through a real readStream foreachBatch with a
     * checkpoint restart and pins batch-equivalence. */
-  def maintainedCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(docs.filter(!isNewDoc)))
+  def maintainedCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDoc)) { (c, docs) =>
+      c.phase("append") {
+        if (!maintainBatch(spark, dir, c.prefix, docs.filter(isNewDoc), 0L))
+          sys.error("st20: fresh index claims batch 0 already maintained")
+        if (maintainBatch(spark, dir, c.prefix, docs.filter(isNewDoc), 0L))
+          sys.error("st20: replayed batch 0 was not stamp-skipped")
+      }
+      // the PERIODIC verb is plain compact: this cycle serves the EXACT
+      // probe, which ignores impact metadata, so the fused mergeReindex
+      // would add a corpus-sized metadata refresh per streaming cycle
+      // for metadata nothing here reads, coupling ingest cadence to
+      // corpus size. Deployments serving capped lanes schedule the
+      // fused pass on the drift gate (tx22) or the merge policy
+      // (tx24). Decisions are identical either way, so tx15's oracle
+      // is untouched.
+      c.phase("compact") { compact(spark, c.prefix) }
+      c.probe("probe")(probe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      if (!maintainBatch(spark, dir, prefix, docs.filter(isNewDoc), 0L))
-        sys.error("st20: fresh index claims batch 0 already maintained")
-      if (maintainBatch(spark, dir, prefix, docs.filter(isNewDoc), 0L))
-        sys.error("st20: replayed batch 0 was not stamp-skipped")
-    }
-    // round 18 (VERDICT r17 item 5 — st20 regressed 0.88× in r17):
-    // the PERIODIC verb is plain compact again. Round 17 switched it
-    // to the fused mergeReindex so "every serving lane" stayed fresh,
-    // but this cycle's served lane is the EXACT probe, which ignores
-    // impact metadata — the fused pass added a corpus-sized
-    // impact-metadata refresh (range shuffle + pinned rank
-    // materialization) per streaming cycle for metadata nothing in
-    // the cycle reads, coupling ingest cadence to corpus size (§1.2:
-    // don't compute what you throw away; the next rewrite re-derives
-    // it anyway). Deployments serving capped lanes schedule the fused
-    // pass on the drift gate (tx22) or the merge policy (tx24), not
-    // per cycle. Decisions are identical either way (the exact probe
-    // recomputes df from matched postings; StreamingSpec's st20
-    // protocol itself uses compact), so tx15's oracle is untouched.
-    Phases.time(tag, "compact") { compact(spark, prefix) }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** tx22 (round 16, VERDICT item 4): the impact-index maintenance
     * loop wired END TO END — the composition dq08 and tx21 each
@@ -1161,32 +1034,17 @@ object LexIndex {
     * Round16OpsSpec drives the FIRING path on a vocabulary-shifted
     * corpus and asserts the rebuild both runs and restores the
     * global-cap answer. */
-  def driftGatedCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val isNewDense = pmod(col("doc_id"), lit(4)) === lit(0)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(docs.filter(!isNewDense)))
+  def driftGatedCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDense)) { (c, docs) =>
+      c.phase("append") { append(spark, dir, docs.filter(isNewDense), c.prefix) }
+      val fire = c.phase("drift") { TextAnalysis.vocabDriftReindex(docs, isNewDense) }
+      // the loop's rebuild verb is the FUSED pass — one corpus write
+      // instead of compact-then-reindex's two, same logical result (no
+      // pending tombstones here, so mergeReindex ≡ reindexImpact +
+      // file fold)
+      if (fire) c.phase("reindex") { mergeReindex(spark, c.prefix) }
+      c.probe("probe")(impactProbe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      append(spark, dir, docs.filter(isNewDense), prefix)
-    }
-    val fire = Phases.time(tag, "drift") {
-      TextAnalysis.vocabDriftReindex(docs, isNewDense)
-    }
-    // round 17 (VERDICT item 4): the loop's rebuild verb is the FUSED
-    // pass — one corpus write instead of compact-then-reindex's two,
-    // measured 1.17×@sf0.1 / 1.62×@100× cheaper, same logical result
-    // (no pending tombstones here, so mergeReindex ≡ reindexImpact +
-    // file fold)
-    if (fire) Phases.time(tag, "reindex") { mergeReindex(spark, prefix) }
-    val dec = Phases.time(tag, "probe") {
-      impactProbe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** FUSED merge + impact refresh (tx24, round 16) — the maintenance
     * pass Lucene's segment merge actually is: compaction's physical
@@ -1203,39 +1061,16 @@ object LexIndex {
     * [[withImpactMeta]]'s; the write is the same bucketed
     * (term, imp_rank) layout via the external-location swap. */
   def mergeReindex(spark: SparkSession, prefix: String): Unit = {
-    requireLedgered(spark, prefix, "mergeReindex")
-    val t = postingsTable(prefix)
-    val b = IndexCore.bucketsOf(spark, t)
+    IndexCore.requireLedgered(spark, prefix, docstatsTable(prefix), "mergeReindex")
     val tomb = tombstones(spark, prefix).map(_.select("retired_id"))
     val residentAll = residentPostings(spark, prefix)
       .select("term", "doc_id", "tf", "dl")
-    val resident = tomb.fold(residentAll)(ts =>
+    restampPostings(spark, prefix, "merge", tomb.fold(residentAll)(ts =>
       residentAll.join(broadcast(ts),
-        residentAll("doc_id") === col("retired_id"), "left_anti"))
-    val fresh = withImpactMeta(resident)
-      .withColumn("ingest_batch", lit(BandIndex.BaseBatch))
-    swapTable(spark, t, "merge") { (tmpT, newLoc) =>
-      // bucket-aligned repartition: one task per bucket, one file per
-      // bucket — see reindexImpact's note
-      fresh.repartition(b, col("term")).write
-        .bucketBy(b, "term").sortBy("term", "imp_rank")
-        .option("path", newLoc)
-        .saveAsTable(tmpT)
-    }
-    IndexCore.compactTable(spark, docstatsTable(prefix), "doc_id",
-      tomb, minusIdCol = "doc_id")
-    val st = spark.table(docstatsTable(prefix))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .select(lit(BandIndex.BaseBatch).as("ingest_batch"),
-        col("n_docs"), col("sum_dl"))
-      .coalesce(1)
-    swapTable(spark, statsTable(prefix), "merge") { (tmpT, newLoc) =>
-      st.write.option("path", newLoc).saveAsTable(tmpT)
-    }
-    IndexCore.clearTombstones(spark, prefix)
-    clearDfCorr(spark, prefix)
-    IndexCore.clearMergeLog(spark, prefix)
-    clearNeedsReindex(spark, prefix)
+        residentAll("doc_id") === col("retired_id"), "left_anti")))
+    IndexCore.compactTable(spark, Docstats, prefix, tomb, "doc_id")
+    rebaseStats(spark, prefix, "merge")
+    restamped(spark, prefix)
   }
 
   /** SIZE-TIERED segment merge (round 17, VERDICT item 2) — the
@@ -1277,66 +1112,26 @@ object LexIndex {
     * Returns true when a fold ran (≥ 2 sub-tier segments existed). */
   def tieredMerge(spark: SparkSession, prefix: String,
       maxTierRows: Long = Long.MaxValue): Boolean = {
-    requireLedgered(spark, prefix, "tieredMerge")
-    val t = postingsTable(prefix)
-    spark.catalog.refreshTable(t)
-    val log = IndexCore.readMergeLog(spark, prefix)
-    // ONE footer sweep shared by GC, the tier pick and the
-    // fresh-stamp scan (round 17: the fold paid four sweeps)
-    val segs0 = IndexCore.fileSegments(spark, t)
-    // GC any prior fold's leftovers FIRST: a crashed attempt's orphan
-    // files must go before a stamp could be reused, and folded files
-    // this cleans keep the footer listing below honest
-    val gone = IndexCore.gcDeadFilesOf(spark, t, log, segs0).toSet
-    val segs = segs0.filterNot(s => gone.contains(s._1))
-    val sizes = IndexCore.segmentSizesOf(segs, log)
-    val fold = sizes.collect {
-      case (stamp, (rows, _))
-        if stamp != BandIndex.BaseBatch && rows <= maxTierRows => stamp
-    }.toSeq.sorted
-    if (fold.size < 2) false
-    else {
-      // the output stamp must be fresh against BOTH the log's outputs
-      // and any stamp physically present (a crashed attempt's rows
-      // were GC'd above, but belt-and-braces against partial GC)
-      val usedMin = (segs.map(_._2) ++
-        log.outputs ++ Seq(IndexCore.MergeStampCeil + 1)).min
-      val out = math.min(log.nextStamp, usedMin - 1)
-      val b = IndexCore.bucketsOf(spark, t)
-      // rank-form choice from MEASURED metadata (round 18): the fold's
-      // input rows are known EXACTLY from the manifest's footer counts
-      // — a bounded merged segment takes the single-exchange window
-      // rank; anything larger keeps the skew-safe two-phase form
-      val foldRows = fold.map(s => sizes(s)._1).sum
-      val mergedIn = spark.table(t)
-        .filter(col("ingest_batch").isin(fold: _*))
-        .select("term", "doc_id", "tf", "dl")
-      val merged = (if (foldRows <= WindowRankMaxRows)
-          withImpactMetaWindow(mergedIn)
-        else withImpactMeta(mergedIn))
-        .withColumn("ingest_batch", lit(out))
-      // bucket-aligned append: one task per bucket, one file for the
-      // merged segment per bucket (see reindexImpact's note)
-      merged.repartition(b, col("term")).write.mode(SaveMode.Append)
-        .bucketBy(b, "term").sortBy("term", "imp_rank")
-        .saveAsTable(t)
-      // the merged segment's stats row replaces its inputs' rows (the
-      // same visibility rule hides the folded ones after commit)
-      val st = spark.table(statsTable(prefix))
-        .filter(col("ingest_batch").isin(fold: _*))
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-        .select(lit(out).as("ingest_batch"), col("n_docs"), col("sum_dl"))
-        .coalesce(1)
-      st.write.mode(SaveMode.Append).saveAsTable(statsTable(prefix))
-      IndexCore.commitFold(spark, prefix, t, fold, out)
-      // post-commit GC: under the just-committed log the dead set is
-      // exactly the folded stamps' files — already in hand from the
-      // shared sweep, no re-read, no re-walk (the merged segment's
-      // fresh files are alive by construction)
-      IndexCore.gcDeadFilesOf(spark, t,
-        IndexCore.MergeLog(log.folded ++ fold, log.outputs + out),
-        segs.filter(s => fold.contains(s._2)))
-      true
+    IndexCore.requireLedgered(spark, prefix, docstatsTable(prefix), "tieredMerge")
+    IndexCore.tieredMerge(spark, prefix, prefix, Seq(Postings), maxTierRows) {
+      (spec, foldIn, fold) =>
+        // rank-form choice from MEASURED metadata: the fold's input rows
+        // are known EXACTLY from footer counts — a bounded merged
+        // segment takes the single-exchange window rank; anything
+        // larger keeps the skew-safe two-phase form
+        val mergedIn = foldIn.select("term", "doc_id", "tf", "dl")
+        val merged = if (fold.rows <= WindowRankMaxRows) withImpactMetaWindow(mergedIn)
+          else withImpactMeta(mergedIn)
+        IndexCore.writeTable(merged.withColumn("ingest_batch", lit(fold.out)),
+          spec, prefix, None)
+        // the merged segment's stats row replaces its inputs' rows (the
+        // same visibility rule hides the folded ones after commit)
+        spark.table(statsTable(prefix))
+          .filter(col("ingest_batch").isin(fold.stamps: _*))
+          .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+          .select(lit(fold.out).as("ingest_batch"), col("n_docs"), col("sum_dl"))
+          .coalesce(1)
+          .write.mode(SaveMode.Append).saveAsTable(statsTable(prefix))
     }
   }
 
@@ -1372,32 +1167,20 @@ object LexIndex {
     * global impact order/df all at once. Retiree choice is
     * oracle-replayable: the doc_id ranked first by tx20's global cap
     * (deterministic), retired via the tombstone path. */
-  def mergeCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val isNewDense = pmod(col("doc_id"), lit(4)) === lit(0)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(docs.filter(!isNewDense)))
+  def mergeCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDense)) { (c, docs) =>
+      c.phase("append") { append(spark, dir, docs.filter(isNewDense), c.prefix, batch = 1L) }
+      c.phase("retire") { retire(spark, c.prefix, victim(spark, dir, c.prefix)) }
+      c.phase("merge") { mergeReindex(spark, c.prefix) }
+      c.probe("probe")(impactProbe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      append(spark, dir, docs.filter(isNewDense), prefix, batch = 1L)
-    }
-    Phases.time(tag, "retire") {
-      // the top-ranked doc of the stale-but-exact segment merge —
-      // deterministic and SQL-replayable (rk=1, query 0)
-      val victim = segmentProbe(spark, dir, prefix)
-        .filter(col("query_id") === 0 && col("rk") === 1)
-        .select("doc_id")
-      retire(spark, prefix, victim)
-    }
-    Phases.time(tag, "merge") { mergeReindex(spark, prefix) }
-    val dec = Phases.time(tag, "probe") {
-      impactProbe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
+
+  /** The top-ranked doc of the stale-but-exact segment merge —
+    * deterministic and SQL-replayable (rk=1, query 0). */
+  private def victim(spark: SparkSession, dir: String, prefix: String): DataFrame =
+    segmentProbe(spark, dir, prefix)
+      .filter(col("query_id") === 0 && col("rk") === 1)
+      .select("doc_id")
 
   /** tx23 (round 16): [[segmentProbe]] made observable on the exact
     * fixture that exposes the naive stale probe — build on the
@@ -1406,25 +1189,13 @@ object LexIndex {
     * tx20's GLOBAL-cap SQL: hash-matching it proves the read-time
     * segment merge serves exactly what tx21's rebuild would — from
     * segments whose stored metadata is stale. */
-  def segmentCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val isNewDense = pmod(col("doc_id"), lit(4)) === lit(0)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(docs.filter(!isNewDense)))
-    }
-    Phases.time(tag, "append") {
+  def segmentCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDense)) { (c, docs) =>
       // explicit stamp: segmentProbe's df sum groups by ingest_batch,
       // so each segment must carry its own (see the scaladoc)
-      append(spark, dir, docs.filter(isNewDense), prefix, batch = 1L)
+      c.phase("append") { append(spark, dir, docs.filter(isNewDense), c.prefix, batch = 1L) }
+      c.probe("probe")(segmentProbe(spark, dir, c.prefix))
     }
-    val dec = Phases.time(tag, "probe") {
-      segmentProbe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** tx25 (round 17, VERDICT item 3): capped serving under PENDING
     * tombstones — [[mergeCycle]]'s exact fixture (two stale segments
@@ -1435,29 +1206,12 @@ object LexIndex {
     * storm no longer demotes the cheap lane. The retire carries the
     * outgoing docs' text, which is what records the df corrections
     * the masked lane subtracts. */
-  def maskedRetireCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val isNewDense = pmod(col("doc_id"), lit(4)) === lit(0)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(docs.filter(!isNewDense)))
+  def maskedRetireCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDense)) { (c, docs) =>
+      c.phase("append") { append(spark, dir, docs.filter(isNewDense), c.prefix, batch = 1L) }
+      c.phase("retire") { retire(spark, c.prefix, victim(spark, dir, c.prefix), Some(docs)) }
+      c.probe("probe")(segmentProbe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      append(spark, dir, docs.filter(isNewDense), prefix, batch = 1L)
-    }
-    Phases.time(tag, "retire") {
-      val victim = segmentProbe(spark, dir, prefix)
-        .filter(col("query_id") === 0 && col("rk") === 1)
-        .select("doc_id")
-      retire(spark, prefix, victim, Some(docs))
-    }
-    val dec = Phases.time(tag, "probe") {
-      segmentProbe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** tx26 (round 17, VERDICT item 2): the size-tiered merge made
     * observable — base build plus three small appends (the file/
@@ -1467,36 +1221,19 @@ object LexIndex {
     * probe. The final answer must equal the global cap over the full
     * corpus (the fold is a layout event, not a semantic one), so the
     * entry shares tx20's oracle. */
-  def tieredCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val isNewDense = pmod(col("doc_id"), lit(4)) === lit(0)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(docs.filter(!isNewDense)))
-    }
-    Phases.time(tag, "append") {
+  def tieredCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDense)) { (c, docs) =>
       // pmod(id,12) ∈ {0,4,8} partitions the dense quarter into 3
       // slices, each under its own stamp — three sub-tier segments
-      Seq(0, 4, 8).foreach { r =>
-        append(spark, dir, docs.filter(pmod(col("doc_id"), lit(12)) === lit(r)),
-          prefix, batch = r.toLong)
+      c.phase("append") {
+        Seq(0, 4, 8).foreach(r => append(spark, dir, denseSlice(docs, r), c.prefix, batch = r.toLong))
       }
+      c.phase("merge") {
+        IndexCore.checkedFold(spark, tag, postingsTable(c.prefix), c.prefix)(
+          tieredMerge(spark, c.prefix))
+      }
+      c.probe("probe")(segmentProbe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "merge") {
-      if (!tieredMerge(spark, prefix))
-        sys.error("tx26: three sub-tier segments present but no fold ran")
-      val segs = IndexCore.segmentSizes(spark, postingsTable(prefix),
-        IndexCore.readMergeLog(spark, prefix))
-      if (segs.size != 2)
-        sys.error(s"tx26: expected base + merged segment, got ${segs.keySet}")
-    }
-    val dec = Phases.time(tag, "probe") {
-      segmentProbe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** tx27 (round 17, VERDICT item 8): the lexical AUTO-MAINTENANCE
     * policy — dd20's in-cycle automation for this family. Three
@@ -1507,99 +1244,53 @@ object LexIndex {
     * again). Serving is the segment probe; the final content is the
     * full corpus under the global cap, so the entry shares tx20's
     * oracle. */
-  def autoMaintainCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag,
-        Some(docs.filter(pmod(col("doc_id"), lit(4)) =!= lit(0))))
-    }
-    Phases.time(tag, "append") {
-      var fires = 0
-      val bound = 2 // base + one merged/fresh segment
-      Seq(0, 4, 8).foreach { r =>
-        val (appended, fired) = maintainBatchAuto(spark, dir, prefix,
-          docs.filter(pmod(col("doc_id"), lit(12)) === lit(r)),
-          batchId = r.toLong, maxSegments = bound)
-        if (!appended) sys.error(s"tx27: fresh batch $r claims already maintained")
-        if (fired) fires += 1
-        val segs = IndexCore.segmentSizes(spark, postingsTable(prefix),
-          IndexCore.readMergeLog(spark, prefix)).size
-        if (segs > bound + 1)
-          sys.error(s"tx27: policy failed to bound segments: $segs > ${bound + 1}")
+  def autoMaintainCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDense)) { (c, docs) =>
+      c.phase("append") {
+        var fires = 0
+        val bound = 2 // base + one merged/fresh segment
+        Seq(0, 4, 8).foreach { r =>
+          val (appended, fired) = maintainBatchAuto(spark, dir, c.prefix,
+            denseSlice(docs, r), batchId = r.toLong, maxSegments = bound)
+          if (!appended) sys.error(s"tx27: fresh batch $r claims already maintained")
+          if (fired) fires += 1
+          val segs = IndexCore.segmentSizes(spark, postingsTable(c.prefix),
+            IndexCore.readMergeLog(spark, c.prefix)).size
+          if (segs > bound + 1)
+            sys.error(s"tx27: policy failed to bound segments: $segs > ${bound + 1}")
+        }
+        if (fires == 0)
+          sys.error("tx27: fixture too small — the auto-maintenance policy never fired")
       }
-      if (fires == 0)
-        sys.error("tx27: fixture too small — the auto-maintenance policy never fired")
+      c.probe("probe")(segmentProbe(spark, dir, c.prefix))
     }
-    val dec = Phases.time(tag, "probe") {
-      segmentProbe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** Drop the registered tables (files are external; the temp-dir
     * lifecycle owns them). */
-  def drop(spark: SparkSession, prefix: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${postingsTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${docstatsTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${IndexCore.tombstonesTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${IndexCore.ledgerTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${dfcorrTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${IndexCore.mergeLogTable(prefix)}")
-  }
+  def drop(spark: SparkSession, prefix: String): Unit = Fam.drop(spark, prefix)
 
-  // Idempotent persist registry — same shape and rationale as
-  // VecIndex.ensurePersisted: the index is a durable artifact, the
-  // bench's repeated sweeps re-time the PROBE (the production read
-  // path), temp dirs ride BandIndex's shutdown-hook cleanup.
-  private val persistedFor =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-  private val persistLock = new Object
-  private val serial = new java.util.concurrent.atomic.AtomicLong(0)
-
+  /** The tx16/tx20 catalog entries' index: built once per (session,
+    * dir, tag) and reused — the index is a durable artifact, the
+    * bench's repeated sweeps re-time the PROBE (the production read
+    * path). */
   def ensurePersisted(spark: SparkSession, dir: String,
-      tag: String = "tx16"): String = {
-    val key = (spark, dir, tag)
-    persistedFor.get(key).getOrElse(persistLock.synchronized {
-      persistedFor.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      persistedFor.getOrElseUpdate(key, {
-        val prefix = s"graft_lex_${tag}_${Integer.toHexString(dir.hashCode)}" +
-          s"_s${serial.incrementAndGet()}"
-        val path = IndexCore.newTempDir(s"lex$tag")
-        persist(spark, dir, path, prefix)
-        prefix
-      })
-    })
-  }
+      tag: String = "tx16"): String =
+    IndexCore.ensurePersisted(spark, dir, Fam, tag, tag)((path, p) =>
+      persist(spark, dir, path, p))
 
   // ------------------------------------------------------------------
-  // Fresh lifecycle cycles (tx17/tx18/tx19) — honest bench timing: a
-  // fresh index per invocation, per-phase wall times in tools.Phases,
-  // the final probe materialized INSIDE the cycle (the sim15–17
-  // template).
+  // Fresh lifecycle cycles (tx17–tx27, st20)
   // ------------------------------------------------------------------
 
-  private val lastCycle =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), (String, String)]
-
-  private def freshIndex(spark: SparkSession, dir: String, tag: String,
-      docs: Option[DataFrame]): (String, String) = {
-    val key = (spark, dir, tag)
-    persistLock.synchronized {
-      lastCycle.remove(key).foreach { case (oldPrefix, oldPath) =>
-        drop(spark, oldPrefix)
-        IndexCore.retireTempDir(oldPath)
-      }
-      lastCycle.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    }
-    val prefix = s"graft_lex_${tag}_${Integer.toHexString(dir.hashCode)}" +
-      s"_s${serial.incrementAndGet()}"
-    val path = IndexCore.newTempDir(s"lex$tag")
-    persist(spark, dir, path, prefix, docs)
-    (prefix, path)
+  /** A fixture cycle on a FRESH index built from the documents
+    * matching `resident` (all of them when None); `body` gets the
+    * cycle and the full documents frame. */
+  private def cycle(spark: SparkSession, dir: String, tag: String,
+      resident: Option[org.apache.spark.sql.Column])(
+      body: (IndexCore.Cycle, DataFrame) => DataFrame): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+    IndexCore.cycle(spark, dir, tag, Fam)((path, p) =>
+      persist(spark, dir, path, p, resident.map(docs.filter)))(c => body(c, docs))
   }
 
   /** Deterministic new-document predicate for the lifecycle fixtures:
@@ -1609,53 +1300,42 @@ object LexIndex {
   private def isNewDoc: org.apache.spark.sql.Column =
     pmod(hash(col("doc_id")), lit(4)) === lit(0)
 
+  /** The dense-id quarter (`doc_id % 4 = 0`) — dq08's
+    * oracle-expressible batch designation. */
+  private def isNewDense: org.apache.spark.sql.Column =
+    pmod(col("doc_id"), lit(4)) === lit(0)
+
+  /** Dense slice `r` ∈ {0, 4, 8} of the dense quarter. */
+  private def denseSlice(docs: DataFrame, r: Int): DataFrame =
+    docs.filter(pmod(col("doc_id"), lit(12)) === lit(r))
+
   /** tx17: fresh index on 3/4 of the corpus → append the remaining
     * 1/4 → probe. tf/dl are doc-local, so the union of the two
     * builds' postings equals the full build's — a divergence from
     * tx15's oracle means append broke the layout or the stats. */
-  def appendCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(docs.filter(!isNewDoc)))
+  def appendCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDoc)) { (c, docs) =>
+      c.phase("append") { append(spark, dir, docs.filter(isNewDoc), c.prefix) }
+      c.probe("probe")(probe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      append(spark, dir, docs.filter(isNewDoc), prefix)
-    }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** tx18: tx17's cycle with the append split into 3 disjoint
     * day-slices (the file-growth regime) and a compaction before the
     * probe — same oracle, plus Round15OpsSpec's file-count
     * assertion. */
-  def compactCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val docs = Tables.documents(spark, dir)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(docs.filter(!isNewDoc)))
-    }
-    Phases.time(tag, "append") {
-      // pmod(h,12) ∈ {0,4,8} partitions pmod(h,4)=0 into 3 slices
-      Seq(0, 4, 8).foreach { r =>
-        append(spark, dir,
-          docs.filter(pmod(hash(col("doc_id")), lit(12)) === lit(r)),
-          prefix, batch = r.toLong)
+  def compactCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, Some(!isNewDoc)) { (c, docs) =>
+      c.phase("append") {
+        // pmod(h,12) ∈ {0,4,8} partitions pmod(h,4)=0 into 3 slices
+        Seq(0, 4, 8).foreach { r =>
+          append(spark, dir,
+            docs.filter(pmod(hash(col("doc_id")), lit(12)) === lit(r)),
+            c.prefix, batch = r.toLong)
+        }
       }
+      c.phase("compact") { compact(spark, c.prefix) }
+      c.probe("probe")(probe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "compact") { compact(spark, prefix) }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** tx19: retention made OBSERVABLE by construction — probe the full
     * index (phase 0), retire exactly the distinct documents phase 0
@@ -1663,27 +1343,17 @@ object LexIndex {
     * shape), re-probe (phase 1): ranks, df, idf AND length
     * normalization must all re-settle over the surviving corpus. The
     * oracle replays phase 1 with `doc_id NOT IN (phase-0 docs)`. */
-  def retentionCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, None)
+  def retentionCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    cycle(spark, dir, tag, None) { (c, _) =>
+      val dec0 = c.probe("probe")(probe(spark, dir, c.prefix))
+      c.phase("retire") { retire(spark, c.prefix, dec0.select(col("doc_id")).distinct()) }
+      val dec1 = c.probe("reprobe")(probe(spark, dir, c.prefix))
+      dec0.select(lit(0).as("phase"), col("query_id"), col("rk"),
+          col("doc_id"), col("bm25"), col("n_terms"))
+        .unionByName(dec1.select(lit(1).as("phase"), col("query_id"),
+          col("rk"), col("doc_id"), col("bm25"), col("n_terms")))
+        .orderBy("phase", "query_id", "rk")
     }
-    val dec0 = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    val expired = dec0.select(col("doc_id")).distinct()
-    Phases.time(tag, "retire") { retire(spark, prefix, expired) }
-    val dec1 = Phases.time(tag, "reprobe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec0.select(lit(0).as("phase"), col("query_id"), col("rk"),
-        col("doc_id"), col("bm25"), col("n_terms"))
-      .unionByName(dec1.select(lit(1).as("phase"), col("query_id"),
-        col("rk"), col("doc_id"), col("bm25"), col("n_terms")))
-      .orderBy("phase", "query_id", "rk")
-  }
 
   // ------------------------------------------------------------------
   // Catalog entries + oracles

@@ -2,10 +2,11 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, expr, round, row_number}
+import org.apache.spark.sql.functions.{broadcast, col, expr, hash, lit, pmod, round, row_number}
 
 import graft.Tables
 import graft.functions.VectorExprs
+import IndexCore.BaseBatch
 
 /** Persisted form of the IVF vector index — [[BandIndex]]'s design
   * applied to the ANN family (the 100 TB serving layout for
@@ -66,10 +67,13 @@ object VecIndex {
     * actual count from the catalog ([[IndexCore.bucketsOf]]). */
   val Buckets = IndexCore.DefaultBuckets
 
-  def cellsTable(prefix: String): String = s"${prefix}_cells"
-  // pre-round-11 companion ledger (superseded by the in-row batch
-  // stamp); still dropped on cleanup so old runs leave nothing behind
-  def ledgerTable(prefix: String): String = s"${prefix}_ledger"
+  private val Cells = IndexCore.TableSpec("cells", "cluster", Seq("cluster"))
+  private val PqCells = IndexCore.TableSpec("pqcells", "cluster", Seq("cluster"))
+  private val Mat = IndexCore.TableSpec("mat", "vec_id", Seq("vec_id"))
+  private val Fam = IndexCore.Family("graft_vec", "vec",
+    Seq("cells", "mat", "pqcells", "codebook", "cells_mergelog"))
+
+  def cellsTable(prefix: String): String = Cells.name(prefix)
 
   /** Coarse centroids — sim04's convention: the first
     * [[Similarity.IvfCentroids]] vectors, a deterministic K-sized
@@ -79,11 +83,11 @@ object VecIndex {
       .filter(col("vec_id") < Similarity.IvfCentroids)
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
 
-  /** IVF cell assignment for an arbitrary (vec_id, embedding) frame:
+  /** IVF cell assignment for an arbitrary (vec_id, embedding, …) frame:
     * one frame × broadcast centroids scoring pass, argmax cell per
-    * vector. Shared by the full build and the append path — a new
-    * batch pays batch-proportional assignment work, never the
-    * corpus's. */
+    * vector, emitted as (cluster, <the frame's columns>). Shared by the
+    * builds and the append path — a new batch pays batch-proportional
+    * assignment work, never the corpus's. */
   private def assignCells(spark: SparkSession, dir: String,
       emb: DataFrame): DataFrame =
     emb.crossJoin(broadcast(centroids(spark, dir)))
@@ -92,7 +96,7 @@ object VecIndex {
         Window.partitionBy("vec_id")
           .orderBy(col("cos_c").desc, col("cent_id").asc)))
       .filter(col("crn") === 1)
-      .select(col("cent_id").as("cluster"), col("vec_id"), col("embedding"))
+      .select(col("cent_id").as("cluster") +: emb.columns.toSeq.map(col): _*)
 
   /** Build and persist the IVF assignment: one corpus × broadcast
     * centroids scoring pass, argmax cell per vector, written bucketed
@@ -102,20 +106,11 @@ object VecIndex {
   def persist(spark: SparkSession, dir: String, path: String,
       prefix: String, emb: Option[DataFrame] = None,
       buckets: Int = Buckets): Unit = {
-    import org.apache.spark.sql.functions.lit
     VectorExprs.register(spark)
     val e = emb.getOrElse(
       Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-    assignCells(spark, dir, e)
-      .withColumn("ingest_batch", lit(BandIndex.BaseBatch))
-      // bucket-aligned build: one file per bucket (round 18 — see
-      // LexIndex.writePostings; file count independent of cluster width)
-      .repartition(buckets, col("cluster"))
-      .write
-      .bucketBy(buckets, "cluster").sortBy("cluster")
-      .option("path", s"$path/cells")
-      .mode(SaveMode.Overwrite)
-      .saveAsTable(cellsTable(prefix))
+    IndexCore.writeTable(assignCells(spark, dir, e).withColumn("ingest_batch", lit(BaseBatch)),
+      Cells, prefix, Some((path, buckets)))
   }
 
   /** ANN serving path against the persisted index: the query batch
@@ -265,24 +260,10 @@ object VecIndex {
     * covering-index storage/write tradeoff made explicit. */
   def persistCovering(spark: SparkSession, dir: String, path: String,
       prefix: String, buckets: Int = Buckets): Unit = {
-    import org.apache.spark.sql.functions.lit
     VectorExprs.register(spark)
     val e = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
-    e.crossJoin(broadcast(centroids(spark, dir)))
-      .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("cos_c").desc, col("cent_id").asc)))
-      .filter(col("crn") === 1)
-      .select(col("cent_id").as("cluster"), col("vec_id"), col("label"),
-        col("embedding"))
-      .withColumn("ingest_batch", lit(BandIndex.BaseBatch))
-      .repartition(buckets, col("cluster")) // bucket-aligned (round 18)
-      .write
-      .bucketBy(buckets, "cluster").sortBy("cluster")
-      .option("path", s"$path/cells")
-      .mode(SaveMode.Overwrite)
-      .saveAsTable(cellsTable(prefix))
+    IndexCore.writeTable(assignCells(spark, dir, e).withColumn("ingest_batch", lit(BaseBatch)),
+      Cells, prefix, Some((path, buckets)))
   }
 
   /** [[filteredProbe]] served from a COVERING index
@@ -499,199 +480,138 @@ object VecIndex {
   }
 
   // ------------------------------------------------------------------
-  // Day-N lifecycle — append / compact / retire / exactly-once
+  // Day-N lifecycle — append / compact / retire / exactly-once, one
+  // implementation over a cell TableSpec: the raw-vector cells and the
+  // PQ code cells differ only in how a batch is encoded ([[cellRows]])
   // ------------------------------------------------------------------
 
-  /** Append a NEW embedding batch to the persisted index: assign the
-    * batch to cells (batch × broadcast centroids — the existing corpus
-    * is never re-assigned or rewritten) and insert into the bucketed
-    * cell table. bucketBy hashes the new file set into the same
-    * bucket ids as the original write, so the probe's
-    * one-scan/pushed-bounds plan property survives (VecIndexSpec).
-    * Unlike [[BandIndex.append]] there is a single table write and
-    * the batch never reads the table it mutates, so no materialize
-    * pin is needed. Rows are batch-stamped ([[BandIndex.BaseBatch]]
-    * for ad-hoc appends), which is what lets [[maintainBatch]] make
-    * the append its own ledger. */
-  def append(spark: SparkSession, dir: String, newVecs: DataFrame,
-      prefix: String, batchId: Long = BandIndex.BaseBatch): Unit = {
-    import org.apache.spark.sql.functions.lit
+  /** The cell rows for a (vec_id, embedding) batch: the IVF assignment,
+    * plus — for the code-cell table — the PQ codes against the
+    * generation's PERSISTED codebook (never a retrained one: ADC
+    * distances are only meaningful within one codebook). */
+  private def cellRows(spark: SparkSession, dir: String, prefix: String,
+      spec: IndexCore.TableSpec, e: DataFrame): DataFrame =
+    if (spec == PqCells) pqRows(spark, dir, e, spark.table(codebookTable(prefix)))
+    else assignCells(spark, dir, e)
+
+  /** Append a NEW embedding batch to `spec`'s cell table: encode the
+    * batch only ([[cellRows]] — the corpus is never re-assigned or
+    * re-encoded) and insert it batch-stamped into the bucketed table.
+    * bucketBy is stable under append, so the probes' plan properties
+    * survive (VecIndexSpec re-asserts them). A single table write
+    * that never reads the table it mutates — no materialize pin. */
+  private def appendCells(spark: SparkSession, dir: String, spec: IndexCore.TableSpec,
+      newVecs: DataFrame, prefix: String, batchId: Long): Unit = {
     VectorExprs.register(spark)
-    val b = IndexCore.bucketsOf(spark, cellsTable(prefix))
-    assignCells(spark, dir, newVecs.select("vec_id", "embedding"))
-      .withColumn("ingest_batch", lit(batchId))
-      .repartition(b, col("cluster")) // bucket-aligned append (round 18)
-      .write.mode(SaveMode.Append)
-      .bucketBy(b, "cluster")
-      .sortBy("cluster")
-      .saveAsTable(cellsTable(prefix))
+    IndexCore.writeTable(
+      cellRows(spark, dir, prefix, spec, newVecs.select("vec_id", "embedding"))
+        .withColumn("ingest_batch", lit(batchId)), spec, prefix, None)
   }
 
-  /** Compact the cell table to one file per bucket —
-    * [[IndexCore.compactTable]]'s zero-exchange per-bucket local
-    * rewrite, key-agnostic by construction. Probe decisions and the
-    * plan property are unchanged; the per-bucket merge reads ONE run
-    * instead of one per historical append. */
-  def compact(spark: SparkSession, prefix: String): Unit = {
-    val tomb = IndexCore.tombstoneFrame(spark, prefix)
-    IndexCore.compactTable(spark, cellsTable(prefix), "cluster",
-      tomb, minusIdCol = "vec_id")
-    // the tombstone set is per-PREFIX: clear it only when no sibling
-    // table still carries masked rows (a prefix that persists both
-    // raw cells and code cells purges on whichever compaction runs
-    // LAST)
-    if (!spark.catalog.tableExists(pqCellsTable(prefix)))
+  /** Compact `spec`'s cell table to one file per bucket
+    * ([[IndexCore.compactTable]]), purging pending tombstones. The
+    * tombstone set is per-PREFIX: it is cleared only when the sibling
+    * cell table does not exist, since that table may still carry
+    * masked rows. */
+  private def compactCells(spark: SparkSession, prefix: String,
+      spec: IndexCore.TableSpec, sibling: IndexCore.TableSpec): Unit = {
+    IndexCore.compactTable(spark, spec, prefix,
+      IndexCore.tombstoneFrame(spark, prefix), "vec_id")
+    if (!spark.catalog.tableExists(sibling.name(prefix)))
       IndexCore.clearTombstones(spark, prefix)
   }
+
+  /** Exactly-once append, SINGLE-DURABLE-COMMIT form: the batch's cell
+    * rows carry `batchId` as their stamp and a parquet append is one
+    * atomic job commit, so the append IS its own ledger entry — there
+    * is no append→record window ([[IndexCore.maintainOnce]] without a
+    * ledger). The replay fence is the stamp, extended by the merge log
+    * ([[IndexCore.foldedUnder]]): a tiered fold re-stamps a batch's
+    * rows and GC deletes its files. A replayed micro-batch whose
+    * commit marker was lost is a whole-batch no-op returning false. */
+  private def maintainCells(spark: SparkSession, dir: String, prefix: String,
+      spec: IndexCore.TableSpec, newVecs: DataFrame, batchId: Long,
+      verb: String): Boolean =
+    IndexCore.maintainOnce(spark, verb, prefix, spec.name(prefix),
+      ledgered = false, batchId)(_ => appendCells(spark, dir, spec, newVecs, prefix, batchId))
+      .isDefined
+
+  /** Append a NEW embedding batch to the persisted index (ad-hoc
+    * appends stamp [[BaseBatch]]; see [[appendCells]]). */
+  def append(spark: SparkSession, dir: String, newVecs: DataFrame,
+      prefix: String, batchId: Long = BaseBatch): Unit =
+    appendCells(spark, dir, Cells, newVecs, prefix, batchId)
+
+  /** Compact the cell table to one file per bucket — probe decisions
+    * and the plan property are unchanged; the per-bucket merge reads
+    * ONE run instead of one per historical append. */
+  def compact(spark: SparkSession, prefix: String): Unit =
+    compactCells(spark, prefix, Cells, PqCells)
 
   /** RETENTION — remove a (bounded, broadcastable) set of vec_ids
     * from the index in place: the compaction rewrite with a broadcast
     * anti-join on `vec_id`. Post-retire probes behave as if the
-    * retired vectors were never indexed — a query whose top-k held a
-    * retired vector falls back to the next-best surviving member of
-    * its probed cells. */
+    * retired vectors were never indexed. */
   def retire(spark: SparkSession, prefix: String,
       expired: DataFrame): Unit =
-    IndexCore.compactTable(spark, cellsTable(prefix), "cluster",
-      Some(expired), minusIdCol = "vec_id")
+    IndexCore.compactTable(spark, Cells, prefix, Some(expired), "vec_id")
 
-  /** O(retired)-cost retention (round 12; VERDICT r11 item 3):
-    * [[retire]] pays a corpus-linear rewrite per delete batch; this
-    * variant appends the expired vec_ids to the index's tiny
-    * tombstone table instead. [[probe]] masks them immediately
-    * (broadcast anti-join, partitioning preserved); the next
-    * [[compact]] physically purges them and clears the set. sim20's
-    * three-phase oracle pins mask, purge, and their equality to an
-    * eager retire. */
+  /** O(retired)-cost retention: append the expired vec_ids to the
+    * index's tombstone table. [[probe]] masks them immediately; the
+    * next [[compact]] physically purges them and clears the set.
+    * sim20's three-phase oracle pins mask, purge, and their equality
+    * to an eager retire. */
   def retireTombstone(spark: SparkSession, prefix: String,
       expired: DataFrame): Unit =
     IndexCore.recordTombstones(spark, prefix, cellsTable(prefix), expired)
 
-  /** Exactly-once append, SINGLE-DURABLE-COMMIT form (round 11;
-    * [[BandIndex.maintainBatch]]'s ANN analog, simplified by the
-    * single-table layout): the batch's cell rows carry `batchId` as
-    * their [[append]] stamp, and a Spark parquet append is one atomic
-    * job commit — so the append IS its own ledger entry, and there is
-    * NO append→record window at all (the design the round-10 ADVICE
-    * sketched; the two-table band index needs the self-fencing probe
-    * on top, this index does not). Replay guard =
-    * [[IndexCore.batchPresent]] on the cell table: storage-derived
-    * (holds across JVM restarts), footer-cheap (each append's files
-    * carry a single stamp in their column stats). A replayed
-    * micro-batch whose checkpoint commit marker was lost is a
-    * whole-batch no-op returning false; crash-before-commit replays
-    * cleanly (no files became visible). The pre-round-11 companion
-    * ledger table is gone — nothing to desynchronize. */
+  /** Exactly-once append of a streaming batch (see [[maintainCells]]). */
   def maintainBatch(spark: SparkSession, dir: String, prefix: String,
-      newVecs: DataFrame, batchId: Long): Boolean = {
-    // Same id-domain guard as BandIndex.maintainBatch (round-11
-    // ADVICE): -1 is the base/ad-hoc stamp, so a batch with that id
-    // would false-skip against any index that has ever been appended
-    // to ad hoc.
-    require(batchId >= 0,
-      s"maintainBatch batchId must be >= 0, got $batchId (ids < 0 are " +
-        "reserved for the base-build/ad-hoc stamp)")
-    // Replay fence = the stamp itself, EXTENDED by the merge log
-    // (round 17): a tiered fold re-stamps the batch's rows and GC
-    // deletes its files, so the stamp probe alone would report a
-    // folded batch absent and a checkpoint replay would double-append
-    // — the fold's own commit row is the durable evidence instead.
-    if (IndexCore.batchPresent(spark, cellsTable(prefix), batchId) ||
-        IndexCore.foldedUnder(spark, cellsTable(prefix), batchId)) false
-    else {
-      append(spark, dir, newVecs, prefix, batchId)
-      true
-    }
-  }
+      newVecs: DataFrame, batchId: Long): Boolean =
+    maintainCells(spark, dir, prefix, Cells, newVecs, batchId, "maintainBatch")
 
-  /** SIZE-TIERED segment merge for the vector cells table (round 17
-    * — the THIRD family through [[IndexCore]]'s merge log): fold only
-    * the batch-stamped segments at or below `maxTierRows` into one
-    * merged segment, base files byte-untouched, one atomic log
-    * append, dead files GC'd after. The log is scoped to the CELLS
-    * table (pqcells stamps are independent — a shared prefix must
-    * not have one family's fold kill the other's stamps), and the
-    * fold is purely a layout event: cell rows are row-local
-    * (cluster, vec_id, …), so probe answers are defined unchanged.
-    * The stamp-is-the-ledger replay fence survives because
-    * [[maintainBatch]] also consults the log ([[IndexCore.foldedUnder]])
-    * — the one genuinely new invariant this family adds, spec-driven
-    * through a replay-after-fold. Returns true when a fold ran. */
+  /** SIZE-TIERED segment merge for the cell table
+    * ([[IndexCore.tieredMerge]]): fold only the batch-stamped segments
+    * at or below `maxTierRows` into one merged segment, base files
+    * byte-untouched. The log is scoped to the CELLS table (code-cell
+    * stamps are independent — a shared prefix must not have one
+    * table's fold kill the other's stamps), and the fold is purely a
+    * layout event: cell rows are row-local, so probe answers are
+    * defined unchanged. Returns true when a fold ran. */
   def tieredMerge(spark: SparkSession, prefix: String,
-      maxTierRows: Long = Long.MaxValue): Boolean = {
-    val t = cellsTable(prefix)
-    spark.catalog.refreshTable(t)
-    val log = IndexCore.readMergeLog(spark, t)
-    // ONE footer sweep shared by GC, the tier pick and the
-    // fresh-stamp scan (round 17: the fold paid four sweeps)
-    val segs0 = IndexCore.fileSegments(spark, t)
-    val gone = IndexCore.gcDeadFilesOf(spark, t, log, segs0).toSet
-    val segs = segs0.filterNot(s => gone.contains(s._1))
-    val sizes = IndexCore.segmentSizesOf(segs, log)
-    val fold = sizes.collect {
-      case (stamp, (rows, _))
-        if stamp != BandIndex.BaseBatch && rows <= maxTierRows => stamp
-    }.toSeq.sorted
-    if (fold.size < 2) false
-    else {
-      val usedMin = (segs.map(_._2) ++
-        log.outputs ++ Seq(IndexCore.MergeStampCeil + 1)).min
-      val out = math.min(log.nextStamp, usedMin - 1)
-      import org.apache.spark.sql.functions.lit
-      val b = IndexCore.bucketsOf(spark, t)
-      spark.table(t).filter(col("ingest_batch").isin(fold: _*))
-        .withColumn("ingest_batch", lit(out))
-        .repartition(b, col("cluster"))
-        .write.mode(SaveMode.Append)
-        .bucketBy(b, "cluster").sortBy("cluster")
-        .saveAsTable(t)
-      IndexCore.commitFold(spark, t, t, fold, out)
-      // post-commit GC: the dead set under the just-committed log is
-      // exactly the folded stamps' files, already in hand from the
-      // shared sweep — no log re-read, no footer re-walk
-      IndexCore.gcDeadFilesOf(spark, t,
-        IndexCore.MergeLog(log.folded ++ fold, log.outputs + out),
-        segs.filter(s => fold.contains(s._2)))
-      true
-    }
-  }
+      maxTierRows: Long = Long.MaxValue): Boolean =
+    IndexCore.tieredMerge(spark, prefix, cellsTable(prefix), Seq(Cells), maxTierRows)(
+      (spec, merged, _) => IndexCore.writeTable(merged, spec, prefix, None))
 
   // ------------------------------------------------------------------
-  // Fresh lifecycle cycles (sim15/sim16/sim17/st10) — honest bench
-  // timing: a fresh index per invocation, per-phase wall times
-  // stamped into graft.tools.Phases (round-10 VERDICT item 3), and
-  // the final probe materialized INSIDE the cycle so the stamped
-  // phases sum to the entry's bench number.
+  // Fresh lifecycle cycles (sim15/sim16/sim17/st10, sim19/sim20/st13)
   // ------------------------------------------------------------------
-
-  private val lastCycle =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), (String, String)]
-
-  private def freshIndex(spark: SparkSession, dir: String, tag: String,
-      emb: Option[DataFrame]): (String, String) = {
-    val key = (spark, dir, tag)
-    persistLock.synchronized {
-      lastCycle.remove(key).foreach { case (oldPrefix, oldPath) =>
-        drop(spark, oldPrefix)
-        IndexCore.retireTempDir(oldPath)
-      }
-      lastCycle.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    }
-    val prefix = s"graft_vec_${tag}_${Integer.toHexString(dir.hashCode)}" +
-      s"_s${serial.incrementAndGet()}"
-    val path = IndexCore.newTempDir(s"vec$tag")
-    persist(spark, dir, path, prefix, emb)
-    (prefix, path)
-  }
 
   /** Deterministic new-vector predicate for the lifecycle fixtures:
     * ~1/4 of the corpus arrives as the "new" batch, the rest is the
     * day-0 index. Hash-based so both oracle scales get non-trivial
     * slices; the FINAL index always equals the full corpus, so these
     * cycles share sim04's oracle. */
-  private def isNewVec: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{hash, lit, pmod}
+  private def isNewVec: org.apache.spark.sql.Column =
     pmod(hash(col("vec_id")), lit(4)) === lit(0)
+
+  /** Day-slice `r` ∈ {0, 4, 8}: pmod(h, 12) partitions the new
+    * quarter into 3 disjoint slices. */
+  private def slice(e: DataFrame, r: Int): DataFrame =
+    e.filter(pmod(hash(col("vec_id")), lit(12)) === lit(r))
+
+  /** A fixture cycle on a FRESH index built from the corpus minus the
+    * arriving quarter (the whole corpus when `full`), as raw cells or
+    * (`pq`) as a PQ generation. `body` gets the cycle and the full
+    * (vec_id, embedding) frame. */
+  private def quarterCycle(spark: SparkSession, dir: String, tag: String,
+      pq: Boolean, full: Boolean)(
+      body: (IndexCore.Cycle, DataFrame) => DataFrame): DataFrame = {
+    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+    val emb = if (full) None else Some(e.filter(!isNewVec))
+    IndexCore.cycle(spark, dir, tag, Fam)((path, p) =>
+      if (pq) pqPersist(spark, dir, path, p, emb) else persist(spark, dir, path, p, emb))(
+      c => body(c, e))
   }
 
   /** sim15: fresh index on 3/4 of the corpus → append the remaining
@@ -700,103 +620,54 @@ object VecIndex {
     * assignment passes equals the full build), so the entry shares
     * sim04's oracle: a divergence means append broke the layout or
     * the assignment. */
-  def appendCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(e.filter(!isNewVec)))
+  def appendCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    quarterCycle(spark, dir, tag, pq = false, full = false) { (c, e) =>
+      c.phase("append") { append(spark, dir, e.filter(isNewVec), c.prefix) }
+      c.probe("probe")(probe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") { append(spark, dir, e.filter(isNewVec), prefix) }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** sim16: sim15's cycle with the append split into 3 disjoint
     * day-slices (the file-growth regime) and a compaction before the
     * probe — same oracle, plus VecIndexSpec's file-count assertion. */
-  def compactCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.{hash, lit, pmod}
-    val key = (spark, dir, tag)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(e.filter(!isNewVec)))
+  def compactCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    quarterCycle(spark, dir, tag, pq = false, full = false) { (c, e) =>
+      c.phase("append") { Seq(0, 4, 8).foreach(r => append(spark, dir, slice(e, r), c.prefix)) }
+      c.phase("compact") { compact(spark, c.prefix) }
+      c.probe("probe")(probe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      // pmod(h,12) ∈ {0,4,8} partitions pmod(h,4)=0 into 3 slices
-      Seq(0, 4, 8).foreach { r =>
-        append(spark, dir,
-          e.filter(pmod(hash(col("vec_id")), lit(12)) === lit(r)), prefix)
-      }
-    }
-    Phases.time(tag, "compact") { compact(spark, prefix) }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
-  /** sim30 (round 17): sim16's growth regime maintained by the
-    * BOUNDED fold instead of the corpus-sized rewrite — the new
-    * quarter lands in 3 micro-batches through [[maintainBatch]]
-    * (each under its own stamp), [[tieredMerge]] folds them into one
-    * merged segment (base files byte-untouched, post-fold segment
-    * count asserted in-cycle), a REPLAY of a folded batch is asserted
-    * a no-op (the merge-log fence — the invariant this family adds),
-    * and the probe serves through the visibility filter. The final
-    * index equals the full corpus, so the entry shares sim04's
-    * oracle. */
-  def tieredCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.{hash, lit, pmod}
-    val key = (spark, dir, tag)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(e.filter(!isNewVec)))
-    }
-    Phases.time(tag, "append") {
-      Seq(0, 4, 8).foreach { r =>
-        if (!maintainBatch(spark, dir, prefix,
-            e.filter(pmod(hash(col("vec_id")), lit(12)) === lit(r)),
-            batchId = r.toLong))
-          sys.error(s"$tag: fresh batch $r claims already maintained")
+  /** sim30: sim16's growth regime maintained by the BOUNDED fold
+    * instead of the corpus-sized rewrite — the new quarter lands in 3
+    * micro-batches through [[maintainBatch]] (each under its own
+    * stamp), [[tieredMerge]] folds them into one merged segment (base
+    * files byte-untouched, post-fold segment count asserted
+    * in-cycle), a REPLAY of a folded batch is asserted a no-op (the
+    * merge-log fence), and the probe serves through the visibility
+    * filter. The final index equals the full corpus, so the entry
+    * shares sim04's oracle. */
+  def tieredCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    quarterCycle(spark, dir, tag, pq = false, full = false) { (c, e) =>
+      c.phase("append") {
+        Seq(0, 4, 8).foreach { r =>
+          if (!maintainBatch(spark, dir, c.prefix, slice(e, r), batchId = r.toLong))
+            sys.error(s"$tag: fresh batch $r claims already maintained")
+        }
       }
+      c.phase("merge") {
+        IndexCore.checkedFold(spark, tag, cellsTable(c.prefix), cellsTable(c.prefix))(
+          tieredMerge(spark, c.prefix))
+        // the merge-log replay fence: a folded batch's replay must be a
+        // no-op even though its stamp's files are GC'd
+        if (maintainBatch(spark, dir, c.prefix, slice(e, 0), batchId = 0L))
+          sys.error(s"$tag: a folded batch replayed as new — the " +
+            "merge-log fence failed and the index double-appended")
+      }
+      c.probe("probe")(probe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "merge") {
-      val t = cellsTable(prefix)
-      val baseBefore = IndexCore.fileSegments(spark, t)
-        .filter(f => f._2 == BandIndex.BaseBatch && f._3 == BandIndex.BaseBatch)
-        .map(f => (f._1, f._5)).toSet
-      if (!tieredMerge(spark, prefix))
-        sys.error(s"$tag: sub-tier segments present but no fold ran")
-      val baseAfter = IndexCore.fileSegments(spark, t)
-        .filter(f => f._2 == BandIndex.BaseBatch && f._3 == BandIndex.BaseBatch)
-        .map(f => (f._1, f._5)).toSet
-      if (baseAfter != baseBefore)
-        sys.error(s"$tag: the fold touched the base tier's files")
-      val segs = IndexCore.segmentSizes(spark, t,
-        IndexCore.readMergeLog(spark, t))
-      if (segs.size != 2)
-        sys.error(s"$tag: expected base + merged segment, got ${segs.keySet}")
-      // the merge-log replay fence: a folded batch's replay must be a
-      // no-op even though its stamp's files are GC'd
-      if (maintainBatch(spark, dir, prefix,
-          e.filter(pmod(hash(col("vec_id")), lit(12)) === lit(0)),
-          batchId = 0L))
-        sys.error(s"$tag: a folded batch replayed as new — the " +
-          "merge-log fence failed and the index double-appended")
-    }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
+
+  private def phaseRows(dec: DataFrame, n: Int): DataFrame =
+    dec.select(lit(n).as("phase"), col("query_id"), col("neighbor_id"),
+      col("cluster"), col("cosine"))
 
   /** sim17: retention made OBSERVABLE by construction — probe the
     * full index (phase 0), retire exactly the distinct neighbors
@@ -805,28 +676,15 @@ object VecIndex {
     * entire top-k must be re-filled from surviving cell members. The
     * oracle replays phase 1 with the corpus filtered by the same
     * NOT IN (phase-0 neighbors) predicate. */
-  def retentionCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.lit
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, None)
+  def retentionCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    quarterCycle(spark, dir, tag, pq = false, full = true) { (c, _) =>
+      val dec0 = c.probe("probe")(probe(spark, dir, c.prefix))
+      val expired = dec0.select(col("neighbor_id").as("vec_id")).distinct()
+      c.phase("retire") { retire(spark, c.prefix, expired) }
+      val dec1 = c.probe("reprobe")(probe(spark, dir, c.prefix))
+      phaseRows(dec0, 0).unionByName(phaseRows(dec1, 1))
+        .orderBy("phase", "query_id", "neighbor_id")
     }
-    val dec0 = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    val expired = dec0.select(col("neighbor_id").as("vec_id")).distinct()
-    Phases.time(tag, "retire") { retire(spark, prefix, expired) }
-    val dec1 = Phases.time(tag, "reprobe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec0.select(lit(0).as("phase"), col("query_id"), col("neighbor_id"),
-        col("cluster"), col("cosine"))
-      .unionByName(dec1.select(lit(1).as("phase"), col("query_id"),
-        col("neighbor_id"), col("cluster"), col("cosine")))
-      .orderBy("phase", "query_id", "neighbor_id")
-  }
 
   /** st10: sim15's cycle driven through the batch-stamp-guarded
     * [[maintainBatch]], with the batch REPLAYED in between — the
@@ -836,25 +694,16 @@ object VecIndex {
     * for THIS aggregate's output, so the real gate is the skip
     * assertion plus StreamingSpec's restart test). Final probe equals
     * sim04, same oracle. */
-  def maintainedCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, Some(e.filter(!isNewVec)))
+  def maintainedCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    quarterCycle(spark, dir, tag, pq = false, full = false) { (c, e) =>
+      c.phase("append") {
+        if (!maintainBatch(spark, dir, c.prefix, e.filter(isNewVec), 0L))
+          sys.error("st10: fresh index claims batch 0 already maintained")
+        if (maintainBatch(spark, dir, c.prefix, e.filter(isNewVec), 0L))
+          sys.error("st10: replayed batch 0 was not stamp-skipped")
+      }
+      c.probe("probe")(probe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      if (!maintainBatch(spark, dir, prefix, e.filter(isNewVec), 0L))
-        sys.error("st10: fresh index claims batch 0 already maintained")
-      if (maintainBatch(spark, dir, prefix, e.filter(isNewVec), 0L))
-        sys.error("st10: replayed batch 0 was not stamp-skipped")
-    }
-    val dec = Phases.time(tag, "probe") {
-      probe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   // ------------------------------------------------------------------
   // IVF-PQ serving index (sim18) — the layout you actually ship at
@@ -910,24 +759,21 @@ object VecIndex {
   def pqPersist(spark: SparkSession, dir: String, path: String,
       prefix: String, emb: Option[DataFrame] = None,
       buckets: Int = Buckets): Unit = {
-    import org.apache.spark.sql.functions.lit
     VectorExprs.register(spark)
     val cb = Similarity.pqTrainedCodebook(spark, dir).localCheckpoint()
     cb.write.option("path", s"$path/codebook")
       .mode(SaveMode.Overwrite).saveAsTable(codebookTable(prefix))
     val e = emb.getOrElse(
       Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-    assignCells(spark, dir, e)
-      .select("cluster", "vec_id")
-      .join(pqEncode(e, cb), "vec_id")
-      .withColumn("ingest_batch", lit(BandIndex.BaseBatch))
-      .repartition(buckets, col("cluster")) // bucket-aligned (round 18)
-      .write
-      .bucketBy(buckets, "cluster").sortBy("cluster")
-      .option("path", s"$path/pqcells")
-      .mode(SaveMode.Overwrite)
-      .saveAsTable(pqCellsTable(prefix))
+    IndexCore.writeTable(pqRows(spark, dir, e, cb).withColumn("ingest_batch", lit(BaseBatch)),
+      PqCells, prefix, Some((path, buckets)))
   }
+
+  /** Code-cell rows (cluster, vec_id, c0..cM-1) for a (vec_id,
+    * embedding) frame against codebook `cb`. */
+  private def pqRows(spark: SparkSession, dir: String, e: DataFrame,
+      cb: DataFrame): DataFrame =
+    assignCells(spark, dir, e).select("cluster", "vec_id").join(pqEncode(e, cb), "vec_id")
 
   /** ADC serving against the persisted code cells: the query batch
     * resolves its probe cells (bounded frame × broadcast centroids),
@@ -1081,75 +927,31 @@ object VecIndex {
   // ------------------------------------------------------------------
 
   /** Append a NEW embedding batch to the persisted PQ serving index:
-    * encode against the generation's PERSISTED codebook (batch ×
-    * broadcast M·K — the corpus is never re-encoded), assign IVF
-    * cells (batch × broadcast centroids), insert batch-stamped into
-    * the bucketed code-cell table. bucketBy is stable under append,
-    * so the probe's code-cells-only read-path property survives
-    * (VecIndexSpec re-asserts it post-append). Single table write,
-    * nothing read-then-mutated — no materialize pin needed. */
+    * encoded against the generation's PERSISTED codebook, assigned to
+    * IVF cells, inserted batch-stamped into the bucketed code-cell
+    * table ([[appendCells]]). */
   def pqAppend(spark: SparkSession, dir: String, newVecs: DataFrame,
-      prefix: String, batchId: Long = BandIndex.BaseBatch): Unit = {
-    import org.apache.spark.sql.functions.lit
-    VectorExprs.register(spark)
-    val cb = spark.table(codebookTable(prefix))
-    val e = newVecs.select("vec_id", "embedding")
-    assignCells(spark, dir, e)
-      .select("cluster", "vec_id")
-      .join(pqEncode(e, cb), "vec_id")
-      .withColumn("ingest_batch", lit(batchId))
-      .repartition(IndexCore.bucketsOf(spark, pqCellsTable(prefix)),
-        col("cluster")) // bucket-aligned append (round 18)
-      .write.mode(SaveMode.Append)
-      .bucketBy(IndexCore.bucketsOf(spark, pqCellsTable(prefix)), "cluster")
-      .sortBy("cluster")
-      .saveAsTable(pqCellsTable(prefix))
-  }
+      prefix: String, batchId: Long = BaseBatch): Unit =
+    appendCells(spark, dir, PqCells, newVecs, prefix, batchId)
 
-  /** Compact the code-cell table to one file per bucket —
-    * [[IndexCore.compactTable]]'s zero-exchange per-bucket local
-    * rewrite (key-agnostic). Decisions and the read-path property are
-    * unchanged; the per-bucket merge reads ONE run instead of one per
-    * historical append. The codebook table (M·K rows) never needs
-    * compaction. */
-  def pqCompact(spark: SparkSession, prefix: String): Unit = {
-    val tomb = IndexCore.tombstoneFrame(spark, prefix)
-    IndexCore.compactTable(spark, pqCellsTable(prefix), "cluster",
-      tomb, minusIdCol = "vec_id")
-    if (!spark.catalog.tableExists(cellsTable(prefix)))
-      IndexCore.clearTombstones(spark, prefix)
-  }
+  /** Compact the code-cell table to one file per bucket (the codebook
+    * table, M·K rows, never needs compaction). */
+  def pqCompact(spark: SparkSession, prefix: String): Unit =
+    compactCells(spark, prefix, PqCells, Cells)
 
   /** GENERATION PROMOTION — the codebook-drift remedy's final step
-    * (round 12; the codebook-generation contract above): atomically
-    * swap serving from `prefix`'s tables to `newPrefix`'s freshly
-    * built generation (retrained codebook + re-encoded code cells),
-    * under the serving prefix's names. The rename-aside discipline is
-    * [[IndexCore.compactTable]]'s: at every single-failure point
-    * either the original registration is intact or a complete
-    * aside-named table remains recoverable next to the fully-written
-    * new one; a failed promotion restores the original name before
-    * rethrowing. Old-generation files stay on disk under their
-    * original path (external tables keep locations across RENAME);
-    * the caller's temp-dir lifecycle owns them. The codebook swaps
-    * WITH the cells — serving never sees a codebook from one
-    * generation against codes from another. */
+    * (the codebook-generation contract above): atomically swap serving
+    * from `prefix`'s tables to `newPrefix`'s freshly built generation
+    * (retrained codebook + re-encoded code cells), under the serving
+    * prefix's names, through [[IndexCore.renameSwap]]'s crash-safe
+    * rename-aside discipline. Old-generation files stay on disk under
+    * their original path; the caller's temp-dir lifecycle owns them.
+    * The codebook swaps WITH the cells — serving never sees a
+    * codebook from one generation against codes from another. */
   def pqSwapGeneration(spark: SparkSession, prefix: String,
       newPrefix: String): Unit =
-    Seq(pqCellsTable _, codebookTable _).foreach { f =>
-      val live = f(prefix)
-      val incoming = f(newPrefix)
-      val aside = s"${live}_old${serial.incrementAndGet()}"
-      spark.sql(s"ALTER TABLE $live RENAME TO $aside")
-      try spark.sql(s"ALTER TABLE $incoming RENAME TO $live")
-      catch {
-        case e: Throwable =>
-          try spark.sql(s"ALTER TABLE $aside RENAME TO $live")
-          catch { case _: Throwable => () }
-          throw e
-      }
-      spark.sql(s"DROP TABLE $aside")
-    }
+    Seq(pqCellsTable _, codebookTable _).foreach(f =>
+      IndexCore.renameSwap(spark, f(prefix), f(newPrefix)))
 
   /** O(retired) retention for the SERVING index — [[retireTombstone]]
     * anchored at the code-cell table (a PQ-only generation has no raw
@@ -1161,49 +963,17 @@ object VecIndex {
 
   /** RETENTION for the serving index — remove a bounded vec_id set
     * from the code cells in place (broadcast anti-join inside the
-    * per-bucket rewrite). Post-retire probes behave as if the vectors
-    * were never encoded; the codebook is untouched (codewords carry
+    * per-bucket rewrite); the codebook is untouched (codewords carry
     * no per-vector data). */
   def pqRetire(spark: SparkSession, prefix: String,
       expired: DataFrame): Unit =
-    IndexCore.compactTable(spark, pqCellsTable(prefix), "cluster",
-      Some(expired), minusIdCol = "vec_id")
+    IndexCore.compactTable(spark, PqCells, prefix, Some(expired), "vec_id")
 
   /** Exactly-once append for the serving index — the same
-    * single-durable-commit design as [[maintainBatch]]: the batch
-    * stamp on the appended code-cell rows IS the ledger (one atomic
-    * job commit, no append→record window), and the replay guard is
-    * [[IndexCore.batchPresent]] on the code-cell table —
-    * storage-derived, footer-cheap. A replayed micro-batch whose
-    * checkpoint commit marker was lost is a whole-batch no-op. */
+    * single-durable-commit design as [[maintainBatch]]. */
   def pqMaintainBatch(spark: SparkSession, dir: String, prefix: String,
-      newVecs: DataFrame, batchId: Long): Boolean = {
-    require(batchId >= 0,
-      s"pqMaintainBatch batchId must be >= 0, got $batchId (ids < 0 are " +
-        "reserved for the base-build/ad-hoc stamp)")
-    if (IndexCore.batchPresent(spark, pqCellsTable(prefix), batchId)) false
-    else {
-      pqAppend(spark, dir, newVecs, prefix, batchId)
-      true
-    }
-  }
-
-  private def freshPqIndex(spark: SparkSession, dir: String, tag: String,
-      emb: Option[DataFrame]): (String, String) = {
-    val key = (spark, dir, tag)
-    persistLock.synchronized {
-      lastCycle.remove(key).foreach { case (oldPrefix, oldPath) =>
-        drop(spark, oldPrefix)
-        IndexCore.retireTempDir(oldPath)
-      }
-      lastCycle.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    }
-    val prefix = s"graft_vec_${tag}_${Integer.toHexString(dir.hashCode)}" +
-      s"_s${serial.incrementAndGet()}"
-    val path = IndexCore.newTempDir(s"vec$tag")
-    pqPersist(spark, dir, path, prefix, emb)
-    (prefix, path)
-  }
+      newVecs: DataFrame, batchId: Long): Boolean =
+    maintainCells(spark, dir, prefix, PqCells, newVecs, batchId, "pqMaintainBatch")
 
   /** sim19: the serving index's full maintenance cycle on a FRESH
     * generation — build on 3/4 of the corpus (codebook trained on the
@@ -1216,27 +986,12 @@ object VecIndex {
     * shares sim18's composed end-to-end oracle: a divergence means
     * append re-encoded, broke the bucket layout, or drifted from the
     * generation codebook. */
-  def pqLifecycleCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.{hash, lit, pmod}
-    val key = (spark, dir, tag)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshPqIndex(spark, dir, tag, Some(e.filter(!isNewVec)))
+  def pqLifecycleCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    quarterCycle(spark, dir, tag, pq = true, full = false) { (c, e) =>
+      c.phase("append") { Seq(0, 4, 8).foreach(r => pqAppend(spark, dir, slice(e, r), c.prefix)) }
+      c.phase("compact") { pqCompact(spark, c.prefix) }
+      c.probe("probe")(pqProbe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      Seq(0, 4, 8).foreach { r =>
-        pqAppend(spark, dir,
-          e.filter(pmod(hash(col("vec_id")), lit(12)) === lit(r)), prefix)
-      }
-    }
-    Phases.time(tag, "compact") { pqCompact(spark, prefix) }
-    val dec = Phases.time(tag, "probe") {
-      pqProbe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** sim20: sim17's retention made BOUNDED-COST — probe the full
     * index (phase 0), TOMBSTONE exactly the neighbors phase 0
@@ -1246,28 +1001,18 @@ object VecIndex {
     * and to sim17's eager-retire phase 1, so the oracle is sim17's
     * with phase 1 emitted twice. */
   def tombstoneRetentionCycle(spark: SparkSession, dir: String,
-      tag: String): DataFrame = {
-    import graft.tools.Phases
-    import org.apache.spark.sql.functions.lit
-    val key = (spark, dir, tag)
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshIndex(spark, dir, tag, None)
+      tag: String): DataFrame =
+    quarterCycle(spark, dir, tag, pq = false, full = true) { (c, _) =>
+      def phaseProbe(n: Int): DataFrame = phaseRows(probe(spark, dir, c.prefix), n)
+      val dec0 = c.probe("probe")(phaseProbe(0))
+      val expired = dec0.select(col("neighbor_id").as("vec_id")).distinct()
+      c.phase("retire") { retireTombstone(spark, c.prefix, expired) }
+      val dec1 = c.probe("reprobe")(phaseProbe(1))
+      c.phase("purge") { compact(spark, c.prefix) }
+      val dec2 = c.probe("probe2")(phaseProbe(2))
+      dec0.unionByName(dec1).unionByName(dec2)
+        .orderBy("phase", "query_id", "neighbor_id")
     }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    def phaseProbe(n: Int): DataFrame =
-      probe(spark, dir, prefix)
-        .select(lit(n).as("phase"), col("query_id"), col("neighbor_id"),
-          col("cluster"), col("cosine"))
-        .localCheckpoint()
-    val dec0 = Phases.time(tag, "probe") { phaseProbe(0) }
-    val expired = dec0.select(col("neighbor_id").as("vec_id")).distinct()
-    Phases.time(tag, "retire") { retireTombstone(spark, prefix, expired) }
-    val dec1 = Phases.time(tag, "reprobe") { phaseProbe(1) }
-    Phases.time(tag, "purge") { compact(spark, prefix) }
-    val dec2 = Phases.time(tag, "probe2") { phaseProbe(2) }
-    dec0.unionByName(dec1).unionByName(dec2)
-      .orderBy("phase", "query_id", "neighbor_id")
-  }
 
   /** st13: sim19's append driven through the batch-stamp-guarded
     * [[pqMaintainBatch]], with the batch REPLAYED in between — the
@@ -1276,25 +1021,16 @@ object VecIndex {
     * here); the final serve equals sim18's full build, same composed
     * oracle. StreamingSpec drives the same maintenance through a real
     * readStream foreachBatch with a checkpoint restart. */
-  def pqMaintainedCycle(spark: SparkSession, dir: String, tag: String): DataFrame = {
-    import graft.tools.Phases
-    val key = (spark, dir, tag)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val (prefix, path) = Phases.time(tag, "persist") {
-      freshPqIndex(spark, dir, tag, Some(e.filter(!isNewVec)))
+  def pqMaintainedCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
+    quarterCycle(spark, dir, tag, pq = true, full = false) { (c, e) =>
+      c.phase("append") {
+        if (!pqMaintainBatch(spark, dir, c.prefix, e.filter(isNewVec), 0L))
+          sys.error("st13: fresh index claims batch 0 already maintained")
+        if (pqMaintainBatch(spark, dir, c.prefix, e.filter(isNewVec), 0L))
+          sys.error("st13: replayed batch 0 was not stamp-skipped")
+      }
+      c.probe("probe")(pqProbe(spark, dir, c.prefix))
     }
-    Phases.time(tag, "append") {
-      if (!pqMaintainBatch(spark, dir, prefix, e.filter(isNewVec), 0L))
-        sys.error("st13: fresh index claims batch 0 already maintained")
-      if (pqMaintainBatch(spark, dir, prefix, e.filter(isNewVec), 0L))
-        sys.error("st13: replayed batch 0 was not stamp-skipped")
-    }
-    val dec = Phases.time(tag, "probe") {
-      pqProbe(spark, dir, prefix).localCheckpoint()
-    }
-    persistLock.synchronized { lastCycle(key) = (prefix, path) }
-    dec
-  }
 
   /** Streaming-legal cell-occupancy DRIFT MONITOR (st14 — dq07's
     * form at the place a drift monitor actually runs: the ingest
@@ -1376,26 +1112,13 @@ object VecIndex {
       (klTotal > lit(Similarity.KlRetrainThreshold)).as("retrain"))
   }
 
-  /** Idempotent build registry for the sim18 catalog entry — same
-    * shape and rationale as [[ensurePersisted]]: the IVF-PQ index is
-    * a durable artifact; the bench re-times the PROBE. */
-  private val pqPersistedFor =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-
+  /** Build-once registry for the sim18 catalog entry — same rationale
+    * as [[ensurePersisted]]: the IVF-PQ index is a durable artifact;
+    * the bench re-times the PROBE. */
   def ensurePqPersisted(spark: SparkSession, dir: String,
-      tag: String = "sim18"): String = {
-    val key = (spark, dir, tag)
-    pqPersistedFor.get(key).getOrElse(persistLock.synchronized {
-      pqPersistedFor.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      pqPersistedFor.getOrElseUpdate(key, {
-        val prefix = s"graft_vec_${tag}_${Integer.toHexString(dir.hashCode)}" +
-          s"_s${serial.incrementAndGet()}"
-        val path = IndexCore.newTempDir(s"vec$tag")
-        pqPersist(spark, dir, path, prefix)
-        prefix
-      })
-    })
-  }
+      tag: String = "sim18"): String =
+    IndexCore.ensurePersisted(spark, dir, Fam, s"pq-$tag", tag)((path, p) =>
+      pqPersist(spark, dir, path, p))
 
   // ------------------------------------------------------------------
   // Matryoshka persisted-prefix layout (sim28; round-15 VERDICT
@@ -1418,23 +1141,15 @@ object VecIndex {
   // shares sim27's oracle row for row.
   // ------------------------------------------------------------------
 
-  def matTable(prefix: String): String = s"${prefix}_mat"
+  def matTable(prefix: String): String = Mat.name(prefix)
 
   def persistMat(spark: SparkSession, dir: String, path: String,
-      prefix: String, buckets: Int = Buckets): Unit = {
-    import org.apache.spark.sql.functions.lit
-    Tables.embeddings(spark, dir)
+      prefix: String, buckets: Int = Buckets): Unit =
+    IndexCore.writeTable(Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         expr(s"slice(embedding, 1, ${Similarity.MatryoshkaPrefix})").as("pfx"),
         col("embedding"))
-      .withColumn("ingest_batch", lit(BandIndex.BaseBatch))
-      .repartition(buckets, col("vec_id")) // bucket-aligned (round 18)
-      .write
-      .bucketBy(buckets, "vec_id").sortBy("vec_id")
-      .option("path", s"$path/mat")
-      .mode(SaveMode.Overwrite)
-      .saveAsTable(matTable(prefix))
-  }
+      .withColumn("ingest_batch", lit(BaseBatch)), Mat, prefix, Some((path, buckets)))
 
   /** Matryoshka serving against the persisted-prefix layout: the
     * candidate pass scans ONLY (vec_id, pfx) — Round15OpsSpec pins
@@ -1478,70 +1193,27 @@ object VecIndex {
   }
 
   def ensureMatPersisted(spark: SparkSession, dir: String,
-      tag: String = "sim28"): String = {
-    val key = (spark, dir, s"mat-$tag")
-    persistedFor.get(key).getOrElse(persistLock.synchronized {
-      persistedFor.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      persistedFor.getOrElseUpdate(key, {
-        val prefix = s"graft_vec_${tag}_${Integer.toHexString(dir.hashCode)}" +
-          s"_s${serial.incrementAndGet()}"
-        val path = IndexCore.newTempDir(s"vec$tag")
-        persistMat(spark, dir, path, prefix)
-        prefix
-      })
-    })
-  }
+      tag: String = "sim28"): String =
+    IndexCore.ensurePersisted(spark, dir, Fam, s"mat-$tag", tag)((path, p) =>
+      persistMat(spark, dir, path, p))
 
   /** Drop the registered tables (files under the index path are
     * external; the temp-dir lifecycle owns them). */
-  def drop(spark: SparkSession, prefix: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${cellsTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${matTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${ledgerTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${pqCellsTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${codebookTable(prefix)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${IndexCore.tombstonesTable(prefix)}")
-  }
+  def drop(spark: SparkSession, prefix: String): Unit = Fam.drop(spark, prefix)
 
-  // Idempotent persist registry — same shape and rationale as
-  // BandIndex.ensurePersisted: the index is a durable artifact, the
-  // bench's repeated sweeps re-time the PROBE (the production read
-  // path), and the temp dirs ride BandIndex's shutdown-hook cleanup.
-  private val persistedFor =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-  private val persistLock = new Object
-  private val serial = new java.util.concurrent.atomic.AtomicLong(0)
-
+  /** The sim14 catalog entry's index: built once per (session, dir,
+    * tag) and reused — the index is a durable artifact, the bench's
+    * repeated sweeps re-time the PROBE (the production read path). */
   def ensurePersisted(spark: SparkSession, dir: String,
-      tag: String = "sim14"): String = {
-    val key = (spark, dir, tag)
-    persistedFor.get(key).getOrElse(persistLock.synchronized {
-      persistedFor.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      persistedFor.getOrElseUpdate(key, {
-        val prefix = s"graft_vec_${tag}_${Integer.toHexString(dir.hashCode)}" +
-          s"_s${serial.incrementAndGet()}"
-        val path = IndexCore.newTempDir(s"vec$tag")
-        persist(spark, dir, path, prefix)
-        prefix
-      })
-    })
-  }
+      tag: String = "sim14"): String =
+    IndexCore.ensurePersisted(spark, dir, Fam, tag, tag)((path, p) =>
+      persist(spark, dir, path, p))
 
   /** [[ensurePersisted]] for the COVERING layout ([[persistCovering]])
     * — its own registry key so the base and covering indexes coexist
     * in one session (they are different durable artifacts). */
   def ensureCoveringPersisted(spark: SparkSession, dir: String,
-      tag: String = "sim23"): String = {
-    val key = (spark, dir, s"covering-$tag")
-    persistedFor.get(key).getOrElse(persistLock.synchronized {
-      persistedFor.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      persistedFor.getOrElseUpdate(key, {
-        val prefix = s"graft_vec_${tag}_${Integer.toHexString(dir.hashCode)}" +
-          s"_s${serial.incrementAndGet()}"
-        val path = IndexCore.newTempDir(s"vec$tag")
-        persistCovering(spark, dir, path, prefix)
-        prefix
-      })
-    })
-  }
+      tag: String = "sim23"): String =
+    IndexCore.ensurePersisted(spark, dir, Fam, s"covering-$tag", tag)((path, p) =>
+      persistCovering(spark, dir, path, p))
 }

@@ -10,7 +10,11 @@ import graft.SparkSpec
   * tables while being served from the `_segstats` cache, and the
   * cache must be pure optimization — deleting or corrupting it can
   * never change an answer, only cost footer re-reads. Exact result
-  * parity of the catalog entries stays the DuckDB oracle's job.
+  * parity of the catalog entries stays the DuckDB oracle's job. The
+  * fault cases of the shared lifecycle ([[IndexCore]]) — an unreadable
+  * footer, a rewrite over an earlier JVM's leftover directories, a
+  * crashed manifest writer's temp file — must leave the index
+  * exactly-once and serving.
   */
 class Round18OpsSpec extends SparkSpec {
 
@@ -159,6 +163,7 @@ class Round18OpsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val offenders = java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
+    val delivered = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       private def scan(p: SparkPlan): Unit = {
         val expanded = p match {
@@ -179,20 +184,30 @@ class Round18OpsSpec extends SparkSpec {
       }
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
+          durationNs: Long): Unit = {
         try scan(qe.executedPlan) catch { case _: Throwable => () }
+        delivered.incrementAndGet(); ()
+      }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
+          exception: Exception): Unit = { delivered.incrementAndGet(); () }
     }
     spark.listenerManager.register(listener)
     try {
       LexIndex.autoMaintainCycle(spark, sf, "r18winlex").count()
       BandIndex.tieredCycle(spark, sf, "r18winband").count()
-      // listener events are delivered asynchronously; give the bus a
-      // moment to drain before reading the offender set
-      Thread.sleep(3000)
+      // listener events are delivered asynchronously: read the offender
+      // set only once the count of delivered plans has stopped growing
+      // (stable across a 2 s window, 120 s at most)
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      var seen = -1L
+      while (delivered.get() != seen && System.nanoTime() < deadline) {
+        seen = delivered.get()
+        Thread.sleep(2000)
+      }
     } finally spark.listenerManager.unregister(listener)
+    assert(delivered.get() > 0,
+      "the listener saw no executed plan — the gate would pass vacuously")
     assert(offenders.isEmpty,
       s"maintenance cycles executed unpartitioned windows: $offenders")
   }
@@ -213,5 +228,95 @@ class Round18OpsSpec extends SparkSpec {
         !s.exists(_ >= 0L)),
       s"post-fold stamps: $stamps (want base -1 + one reserved output)")
     LexIndex.drop(spark, prefix)
+  }
+
+  /** Lexical index on 3/4 of the corpus plus the dense quarter
+    * appended as batch `batch`, at `path`. */
+  private def lexAt(path: String, prefix: String, batch: Long): Unit = {
+    val docs = graft.Tables.documents(spark, sf)
+    LexIndex.persist(spark, sf, path, prefix, Some(docs.filter(!denseQuarter)))
+    LexIndex.append(spark, sf, docs.filter(denseQuarter), prefix, batch = batch)
+  }
+
+  private def location(table: String): java.nio.file.Path =
+    java.nio.file.Paths.get(spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
+      .location)
+
+  test("a failed footer read is 'maybe present', never 'proven absent'") {
+    val prefix = s"graft_ic_footer_${System.nanoTime()}"
+    val path = IndexCore.newTempDir("icfooter")
+    try {
+      lexAt(path, prefix, 5L)
+      val t = LexIndex.docstatsTable(prefix)
+      val opener = IndexCore.openFooter
+      IndexCore.openFooter = (_, _) => throw new java.io.IOException("injected unreadable footer")
+      try {
+        assert(!IndexCore.footerProvenAbsent(spark, t, "ingest_batch", 5L),
+          "an unreadable footer proved landed batch 5 absent")
+        assert(IndexCore.stampSetFromFooters(spark, t, "ingest_batch").isEmpty,
+          "a stamp set was derived from unreadable footers")
+        assert(IndexCore.batchPresent(spark, t, 5L),
+          "landed batch 5 reported absent — a replay would double-append it")
+      } finally IndexCore.openFooter = opener
+      // failed reads were neither memoized nor persisted: once the
+      // footers read again, the footer answer is exact
+      assert(IndexCore.stampSetFromFooters(spark, t, "ingest_batch").contains(Set(-1L, 5L)))
+    } finally {
+      LexIndex.drop(spark, prefix)
+      IndexCore.retireTempDir(path)
+    }
+  }
+
+  test("rewrite locations skip an earlier JVM's leftover directories") {
+    // Serials restart in every JVM, so a rewrite location named by the
+    // serial alone can be a directory an earlier JVM left live at the
+    // same index path. Simulate that JVM: compact an index, drop its
+    // registrations (its rewrite directories stay on disk), rebuild at
+    // the same path and rewind the serial to replay the same names.
+    val path = IndexCore.newTempDir("icswap")
+    val p1 = s"graft_ic_swap1_${System.nanoTime()}"
+    val p2 = s"graft_ic_swap2_${System.nanoTime()}"
+    lexAt(path, p1, 1L)
+    val s0 = IndexCore.serial.get()
+    LexIndex.compact(spark, p1)
+    val s1 = IndexCore.serial.get()
+    val leftovers = Seq(LexIndex.postingsTable(p1), LexIndex.docstatsTable(p1),
+      LexIndex.statsTable(p1)).map(location)
+    LexIndex.drop(spark, p1)
+    try {
+      lexAt(path, p2, 1L)
+      IndexCore.serial.set(s0)
+      LexIndex.compact(spark, p2)
+      val live = Seq(LexIndex.postingsTable(p2), LexIndex.docstatsTable(p2),
+        LexIndex.statsTable(p2)).map(location)
+      assert(live.forall(l => !leftovers.contains(l)),
+        s"a rewrite reused a leftover directory: $live vs $leftovers")
+      assert(leftovers.forall(l => java.nio.file.Files.list(l).count() > 0),
+        "the earlier JVM's directories were clobbered")
+      assert(LexIndex.probe(spark, sf, p2).count() > 0, "compacted index does not serve")
+    } finally {
+      IndexCore.serial.updateAndGet(n => math.max(n, s1))
+      LexIndex.drop(spark, p2)
+      IndexCore.retireTempDir(path)
+    }
+  }
+
+  test("a manifest write sweeps temp files a crashed writer left behind") {
+    val prefix = s"graft_ic_tmp_${System.nanoTime()}"
+    val path = IndexCore.newTempDir("ictmp")
+    try {
+      lexAt(path, prefix, 1L)
+      val t = LexIndex.postingsTable(prefix)
+      val orphan = location(t).resolve("_segstats_ingest_batch.json.tmp987654")
+      java.nio.file.Files.write(orphan, "{\"files\":[".getBytes("UTF-8"))
+      assert(IndexCore.stampSetFromFooters(spark, t, "ingest_batch").contains(Set(-1L, 1L)))
+      assert(java.nio.file.Files.exists(location(t).resolve("_segstats_ingest_batch.json")),
+        "the manifest was not written")
+      assert(!java.nio.file.Files.exists(orphan), "the orphan temp file survived a manifest write")
+    } finally {
+      LexIndex.drop(spark, prefix)
+      IndexCore.retireTempDir(path)
+    }
   }
 }
