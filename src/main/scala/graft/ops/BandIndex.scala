@@ -127,9 +127,11 @@ object BandIndex {
       expired: DataFrame): Unit =
     IndexCore.recordTombstones(spark, prefix, bandsTable(prefix), expired)
 
-  /** The persisted corpus frames as every probe reads them: merge-log
-    * visibility applied (folded rows still on disk must not serve
-    * beside their merged copy), optionally excluding one batch's rows
+  /** The persisted corpus frames as every probe reads them, batch or
+    * stream ([[graft.streaming.Streams!.nearDupDedupStream]] takes
+    * `excludeBatch = None`): merge-log visibility applied (folded rows
+    * still on disk must not serve beside their merged copy),
+    * optionally excluding one batch's rows
     * ([[maintainBatch]]'s replay fence), and tombstoned docs masked by
     * the broadcast anti-join. Every filter is a pushed comparison on
     * one long column above a bucketed scan, so the no-corpus-exchange
@@ -140,7 +142,7 @@ object BandIndex {
     * external writer that omitted the column) would silently vanish
     * from the probe corpus. Unstamped rows are by definition not the
     * in-flight batch, so they are KEPT: `batch != N OR batch IS NULL`. */
-  private def corpusFrames(spark: SparkSession, prefix: String,
+  def corpusFrames(spark: SparkSession, prefix: String,
       excludeBatch: Option[Long]): (DataFrame, DataFrame) = {
     val tomb = IndexCore.tombstoneFrame(spark, prefix)
     val log = IndexCore.readMergeLog(spark, prefix)

@@ -327,16 +327,6 @@ object Similarity {
 
   private def twoLevelScored(e: DataFrame): DataFrame = twoLevelParts(e)._3
 
-  /** LSH ANN with a probe-count knob: every vector lands in ONE
-    * sign-bit bucket; a query probes its own bucket plus the buckets
-    * reached by flipping its `probes - 1` lowest-margin bits
-    * (smallest |pdot| — the classic multi-probe perturbation order:
-    * the hyperplanes the query sits closest to are where its true
-    * neighbors most likely fell on the other side). Targets live in
-    * exactly one bucket and probe buckets are distinct, so no
-    * candidate dedup exchange is needed; candidate cost scales
-    * linearly in `probes` while the corpus-side plan (one projection
-    * pass + one bucket aggregate) is shared and unchanged. */
   /** Flat-IVF ANN (sim04's body), parameterized on query count and k
     * for the widened recall instruments; defaults reproduce the sim04
     * catalog plan byte for byte. */
@@ -636,6 +626,16 @@ object Similarity {
       .orderBy("query_id", "neighbor_id")
   }
 
+  /** LSH ANN with a probe-count knob: every vector lands in ONE
+    * sign-bit bucket; a query probes its own bucket plus the buckets
+    * reached by flipping its `probes - 1` lowest-margin bits
+    * (smallest |pdot| — the classic multi-probe perturbation order:
+    * the hyperplanes the query sits closest to are where its true
+    * neighbors most likely fell on the other side). Targets live in
+    * exactly one bucket and probe buckets are distinct, so no
+    * candidate dedup exchange is needed; candidate cost scales
+    * linearly in `probes` while the corpus-side plan (one projection
+    * pass + one bucket aggregate) is shared and unchanged. */
   private[graft] def lshAnn(s: SparkSession, d: String, probes: Int,
       nQ: Long = KnnQueries, k: Int = LshK): DataFrame = {
     VectorExprs.register(s)

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, expr, hash, lit, pmod, round, row_number}
+import org.apache.spark.sql.functions.{broadcast, col, collect_list, date_format, explode, expr, hash, lit, pmod, round, row_number, struct, window}
 
 import graft.Tables
 import graft.functions.VectorExprs
@@ -84,18 +84,13 @@ object VecIndex {
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
 
   /** IVF cell assignment for an arbitrary (vec_id, embedding, …) frame:
-    * one frame × broadcast centroids scoring pass, argmax cell per
-    * vector, emitted as (cluster, <the frame's columns>). Shared by the
-    * builds and the append path — a new batch pays batch-proportional
-    * assignment work, never the corpus's. */
+    * each vector's nearest centroid ([[nearestCells]] rank 1), emitted
+    * as (cluster, <the frame's columns>). Shared by the builds and the
+    * append path — a new batch pays batch-proportional assignment work,
+    * never the corpus's. */
   private def assignCells(spark: SparkSession, dir: String,
       emb: DataFrame): DataFrame =
-    emb.crossJoin(broadcast(centroids(spark, dir)))
-      .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("cos_c").desc, col("cent_id").asc)))
-      .filter(col("crn") === 1)
+    nearestCells(spark, dir, emb, "vec_id", "embedding")(_ === 1)
       .select(col("cent_id").as("cluster") +: emb.columns.toSeq.map(col): _*)
 
   /** Build and persist the IVF assignment: one corpus × broadcast
@@ -113,151 +108,235 @@ object VecIndex {
       Cells, prefix, Some((path, buckets)))
   }
 
-  /** ANN serving path against the persisted index: the query batch
-    * (bounded, `vec_id < KnnQueries`) scores itself against the
-    * broadcast centroids for its [[Similarity.IvfNProbe]] probe
-    * cells, joins the cell table (query side broadcasts — the corpus
-    * never moves), exact-cosine re-ranks within the probed cells,
-    * top-[[Similarity.LshK]] per query. Output = sim04's, column for
-    * column. */
-  /** The cell table as the probe reads it: tombstoned vec_ids
-    * ([[retireTombstone]]) masked by a broadcast anti-join — the
-    * streamed side keeps its bucketed partitioning, so the plan
-    * property is untouched. */
+  // ------------------------------------------------------------------
+  // Serving. Every IVF/PQ lane, batch and stream, is one dataflow:
+  //   probe cells (each query's IvfNProbe nearest centroids)
+  //   → candidates (masked cells ⋈ probes on cluster, the query itself
+  //     excluded, the lane's label rule)
+  //   → score (exact cosine, or ADC distance over the PQ codes)
+  //   → per-query top-k (batch: a row_number window; stream: the
+  //     K-bounded topk_struct aggregate per 10-minute arrival window).
+  // Batch lanes broadcast the bounded probe side, so the corpus side is
+  // one bucketed cell scan that never moves. Stream lanes use only
+  // streaming-legal constructs: a stateless HOF cell ranking,
+  // stream-static joins, and one windowed aggregate holding K rows per
+  // query. Both read the index through the same masked frame, so a
+  // stream answers what the batch answers.
+  // ------------------------------------------------------------------
+
+  /** The cell table as every lane reads it: merge-log visibility
+    * ([[tieredMerge]]; folded rows still on disk must not serve beside
+    * their merged copy, and the filter applies even with no log,
+    * because a fold that crashed before its first commit leaves
+    * reserved-stamp rows behind), then the tombstone mask. */
   private def cellFrame(spark: SparkSession, prefix: String): DataFrame = {
-    // Merge-log visibility (round 17 — [[tieredMerge]]): the log is
-    // TABLE-scoped (cells and pqcells stamps are independent), and
-    // absent a log the frame is untouched. Same single-choke-point
-    // rule as the band/lexical read paths: folded input rows still on
-    // disk (commit → GC crash window) must not serve alongside their
-    // merged copy.
     val scope = cellsTable(prefix)
-    // the filter applies even with an EMPTY log: a fold that crashed
-    // before its first commit leaves reserved-stamp rows on disk with
-    // no log table at all — they must stay invisible
-    val base = spark.table(scope)
-      .filter(IndexCore.visibleUnder(IndexCore.readMergeLog(spark, scope)))
-    IndexCore.tombstoneFrame(spark, prefix).fold(base)(ts =>
-      base.join(ts, base("vec_id") === ts("retired_id"), "left_anti"))
+    masked(spark, prefix, spark.table(scope)
+      .filter(IndexCore.visibleUnder(IndexCore.readMergeLog(spark, scope))))
   }
 
-  /** The fixed catalog workload as a (vec_id, embedding[, label])
-    * frame — the catalog instance of the query-frame serving APIs
-    * (round 17, VERDICT r16 item 6: a serving tier takes its workload
-    * as DATA, not as a compile-time constant; LexIndex.probe got its
-    * frame overload in round 16, these are the vector lanes').
-    * The `vec_id <` bound stays pushed to the parquet scan. */
+  /** The code-cell table as every PQ lane reads it, under the same
+    * tombstone mask as [[cellFrame]]: one id space per prefix, so a
+    * retired vec_id leaves both read paths until the next compaction
+    * purges it. */
+  private def pqCellFrame(spark: SparkSession, prefix: String): DataFrame =
+    masked(spark, prefix, spark.table(pqCellsTable(prefix)))
+
+  /** `base` without the tombstoned vec_ids ([[retireTombstone]]), by a
+    * broadcast anti-join: the scan keeps its bucketed partitioning. */
+  private def masked(spark: SparkSession, prefix: String,
+      base: DataFrame): DataFrame =
+    IndexCore.tombstoneFrame(spark, prefix).fold(base)(ts =>
+      base.join(ts, base("vec_id") === ts("retired_id"), "left_anti"))
+
+  /** The catalog's fixed query batch as a (vec_id, embedding[, label])
+    * frame, with the `vec_id <` bound pushed to the parquet scan. */
   private def fixedQueries(spark: SparkSession, dir: String,
-      withLabel: Boolean = false): DataFrame = {
+      withLabel: Boolean): DataFrame = {
     val base = Tables.embeddings(spark, dir)
       .filter(col("vec_id") < Similarity.KnnQueries)
     if (withLabel) base.select("vec_id", "embedding", "label")
     else base.select("vec_id", "embedding")
   }
 
-  def probe(spark: SparkSession, dir: String, prefix: String): DataFrame =
-    probe(spark, dir, prefix, fixedQueries(spark, dir))
+  /** A lane's label rule: none; the neighbor's label from the
+    * column-pruned (vec_id, label) dimension (sim22, st16); or the
+    * label colocated in a covering cell row (sim23, st17). Mismatches
+    * drop before scoring, so the filter also cuts the scoring work. */
+  private sealed trait Labels
+  private case object Unlabeled extends Labels
+  private case object DimLabels extends Labels
+  private case object CellLabels extends Labels
 
-  /** [[probe]] over a (vec_id, embedding) query FRAME — any bounded
-    * serving batch; the probe-cell selection and candidate join keep
-    * the broadcast-query / corpus-never-moves plan (VecIndexSpec
-    * asserts it on the frame arity too). */
-  def probe(spark: SparkSession, dir: String, prefix: String,
-      queries: DataFrame): DataFrame = {
-    VectorExprs.register(spark)
-    val probes = queries.crossJoin(broadcast(centroids(spark, dir)))
-      .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
+  /** The query's label as the candidates see it (labelled lanes). */
+  private def qlabel(labels: Labels): Seq[Column] =
+    if (labels == Unlabeled) Nil else Seq(col("label").as("qlabel"))
+
+  /** A lane's ranking: score column `name`, nearer first (`desc` for a
+    * similarity), `k` neighbors kept, emitted rounded to 6 dp as
+    * `out`. */
+  private final case class Score(name: String, out: String, desc: Boolean, k: Int)
+  private val Cosine = Score("cos", "cosine", desc = true, Similarity.LshK)
+  private val Adc = Score("adc", "adc_dist", desc = false, Similarity.KnnK)
+
+  private def cosineScore: Column = expr("cosine_sim(qe, embedding)")
+  private def adcScore: Column =
+    (0 until Similarity.PqM).map(m => col(s"qd$m")).reduce(_ + _)
+
+  /** Centroids ranked for each row of `q` by cosine to its `emb` column
+    * (ties to the lower cent_id), batch form: `q` × broadcast
+    * centroids and a row_number window per `id`; `keep` picks the
+    * ranks. */
+  private def nearestCells(spark: SparkSession, dir: String, q: DataFrame,
+      id: String, emb: String)(keep: Column => Column): DataFrame =
+    q.crossJoin(broadcast(centroids(spark, dir)))
+      .withColumn("cos_c", expr(s"cosine_sim($emb, ce)"))
       .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("cos_c").desc, col("cent_id").asc)))
-      .filter(col("crn") <= Similarity.IvfNProbe)
-      .select(col("vec_id").as("query_id"), col("cent_id").as("cluster"),
-        col("embedding").as("qe"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cellFrame(spark, prefix)
-      .join(broadcast(probes), Seq("cluster"))
+        Window.partitionBy(id).orderBy(col("cos_c").desc, col("cent_id").asc)))
+      .filter(keep(col("crn")))
+
+  /** Batch probe cells: each query's [[Similarity.IvfNProbe]] nearest
+    * centroids, projected to `cols` and broadcast. */
+  private def probeCells(spark: SparkSession, dir: String, q: DataFrame,
+      id: String, emb: String, cols: Seq[Column]): DataFrame =
+    broadcast(nearestCells(spark, dir, q, id, emb)(_ <= Similarity.IvfNProbe)
+      .select(cols: _*))
+
+  /** Centroid ids nearest-first for a row's `embedding`, streaming
+    * form: one stateless HOF projection over the [[centroidArray]]
+    * row (a window cannot run over unbounded input). */
+  private val rankedCentroids: String =
+    """transform(
+      |  array_sort(transform(cents,
+      |    c -> struct(-cosine_sim(embedding, c.ce) AS nc, c.cent_id AS cent_id))),
+      |  s -> s.cent_id)""".stripMargin
+
+  /** The centroid set as one broadcastable `cents` array row. */
+  private def centroidArray(spark: SparkSession, dir: String): DataFrame =
+    centroids(spark, dir)
+      .agg(collect_list(struct(col("cent_id"), col("ce"))).as("cents"))
+
+  /** Stream probe cells: one (query_id, ts, qe[, qlabel], cluster) row
+    * per query and probed cell. */
+  private def streamProbeCells(spark: SparkSession, dir: String,
+      queries: DataFrame, labels: Labels): DataFrame =
+    queries.crossJoin(broadcast(centroidArray(spark, dir)))
+      .select(Seq(col("query_id"), col("ts"), col("embedding").as("qe")) ++
+        qlabel(labels) :+
+        explode(expr(s"slice($rankedCentroids, 1, ${Similarity.IvfNProbe})"))
+          .as("cluster"): _*)
+
+  /** Candidates: `cells` ⋈ `probes` on cluster, the query itself
+    * excluded, then the lane's label rule. */
+  private def candidates(spark: SparkSession, dir: String, cells: DataFrame,
+      probes: DataFrame, labels: Labels): DataFrame = {
+    val cand = cells.join(probes, Seq("cluster"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .withColumn("cos", expr("cosine_sim(qe, embedding)"))
+    labels match {
+      case Unlabeled => cand
+      case DimLabels => cand
+        .join(Tables.embeddings(spark, dir)
+          .select(col("vec_id"), col("label").as("nlabel")), Seq("vec_id"))
+        .filter(col("nlabel") === col("qlabel"))
+      case CellLabels => cand.filter(col("label") === col("qlabel"))
+    }
+  }
+
+  /** Batch top-k: score every candidate (`value` as `s.name`), rank per
+    * query by (score, neighbor_id asc) in a row_number window, keep
+    * `s.k`. Output (query_id, neighbor_id, cluster, `s.out`). */
+  private def batchTopK(cand: DataFrame, s: Score, value: Column): DataFrame = {
+    val v = col(s.name)
+    val w = Window.partitionBy("query_id")
+      .orderBy(if (s.desc) v.desc else v.asc, col("neighbor_id").asc)
+    cand.withColumnRenamed("vec_id", "neighbor_id")
+      .withColumn(s.name, value)
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= Similarity.LshK)
+      .filter(col("rn") <= s.k)
       .select(col("query_id"), col("neighbor_id"), col("cluster"),
-        round(col("cos"), 6).as("cosine"))
+        round(v, 6).as(s.out))
       .orderBy("query_id", "neighbor_id")
   }
 
-  /** FILTERED ANN against the persisted index (sim22): each query
-    * wants top-k among corpus vectors sharing its OWN label — the
-    * metadata-predicated search every production vector store serves
-    * (category-scoped retrieval, tenant isolation, language-filtered
-    * RAG). POST-FILTER composition: probe cells as [[probe]], then
-    * drop label-mismatched candidates BEFORE the cosine re-rank and
-    * the top-k window, so the filter also cuts the scoring work. The
-    * label rides in from a column-pruned dimension scan (vec_id,
-    * label — the embedding column, the heavy one, is never read) and
-    * joins the bounded probed-candidate set.
-    *
-    * ROUND 14 (VERDICT r13 item 5): this dim-join form is the
-    * BACK-COMPAT/ORACLE lane. The serving DEFAULT is the covering
-    * layout ([[filteredServing]] → [[coveringFilteredProbe]]) — at
-    * 100 TB nobody pays to build and store both layouts, and the
-    * covering row wins the serving economics (see
-    * [[persistCovering]] for the write-amplification cost it pays).
-    * This lane stays because it reads the BASE cell schema shared
-    * with the whole lifecycle family (sim14–17, st09/st10, the
-    * tombstone and maintenance cycles): an installation already
-    * maintaining the base index can serve filtered queries without a
-    * second build, and the sim22 oracle grades this exact dataflow.
-    * Post-filter IVF can under-fill k for rare labels (the probed
-    * cells may hold < k matching vectors) — inherent to the
-    * composition and mirrored exactly by the oracle. */
+  /** Stream top-k: [[batchTopK]]'s ranking as one aggregation per
+    * (arrival window, query) over the K-bounded
+    * [[graft.functions.TopKStructs]] state — K rows per query, never
+    * cell-proportional. topk_struct keeps the smallest structs, so a
+    * similarity leads negated and a distance as it is. Output
+    * (window_start, query_id, neighbor_id, cluster, `s.out`). */
+  private def streamTopK(cand: DataFrame, s: Score, value: Column): DataFrame = {
+    val v = col(s.name)
+    cand.withColumn(s.name, value)
+      .select(col("query_id"), col("ts"),
+        struct(if (s.desc) (-v).as("nc") else v, col("vec_id").as("neighbor_id"),
+          col("cluster"), round(v, 6).as(s.out)).as("s"))
+      .groupBy(arrivalWindow, col("query_id"))
+      .agg(expr(s"topk_struct(s, ${s.k})").as("top"))
+      .select(windowStart, col("query_id"), explode(col("top")).as("t"))
+      .select(col("window_start"), col("query_id"),
+        col("t.neighbor_id").as("neighbor_id"), col("t.cluster").as("cluster"),
+        col(s"t.${s.out}").as(s.out))
+  }
+
+  /** The 10-minute arrival window every vector stream emits behind
+    * (st05's convention), and its formatted start. */
+  private def arrivalWindow: Column = window(col("ts"), "10 minutes")
+  private def windowStart: Column =
+    date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start")
+
+  private def cosineProbe(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame, labels: Labels): DataFrame = {
+    VectorExprs.register(spark)
+    val probes = probeCells(spark, dir, queries, "vec_id", "embedding",
+      Seq(col("vec_id").as("query_id"), col("cent_id").as("cluster"),
+        col("embedding").as("qe")) ++ qlabel(labels))
+    batchTopK(candidates(spark, dir, cellFrame(spark, prefix), probes, labels),
+      Cosine, cosineScore)
+  }
+
+  private def cosineTopK(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame, labels: Labels): DataFrame = {
+    VectorExprs.register(spark)
+    streamTopK(candidates(spark, dir, cellFrame(spark, prefix),
+      streamProbeCells(spark, dir, queries, labels), labels), Cosine, cosineScore)
+  }
+
+  /** ANN serving against the persisted index (sim14, sim04's decisions
+    * column for column): each query's [[Similarity.IvfNProbe]] nearest
+    * cells, an exact-cosine re-rank of their members, top-
+    * [[Similarity.LshK]] per query. The catalog form serves the fixed
+    * query batch; the other takes any bounded (vec_id, embedding)
+    * `queries` frame. */
+  def probe(spark: SparkSession, dir: String, prefix: String): DataFrame =
+    probe(spark, dir, prefix, fixedQueries(spark, dir, withLabel = false))
+
+  def probe(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame): DataFrame =
+    cosineProbe(spark, dir, prefix, queries, Unlabeled)
+
+  /** Filtered ANN (sim22): [[probe]] restricted to neighbors that share
+    * the query's label, read from the column-pruned (vec_id, label)
+    * dimension over the base cells. This lane serves an installation
+    * that maintains only the base index; [[filteredServing]] is the
+    * default. Post-filter IVF can return fewer than k neighbors for a
+    * rare label, and the oracle mirrors that. `queries` carries
+    * (vec_id, embedding, label). */
   def filteredProbe(spark: SparkSession, dir: String, prefix: String): DataFrame =
     filteredProbe(spark, dir, prefix, fixedQueries(spark, dir, withLabel = true))
 
-  /** [[filteredProbe]] over a (vec_id, embedding, label) query FRAME. */
   def filteredProbe(spark: SparkSession, dir: String, prefix: String,
-      queries: DataFrame): DataFrame = {
-    VectorExprs.register(spark)
-    val labels = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label").as("nlabel"))
-    val probes = queries.crossJoin(broadcast(centroids(spark, dir)))
-      .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("cos_c").desc, col("cent_id").asc)))
-      .filter(col("crn") <= Similarity.IvfNProbe)
-      .select(col("vec_id").as("query_id"), col("cent_id").as("cluster"),
-        col("embedding").as("qe"), col("label").as("qlabel"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cellFrame(spark, prefix)
-      .join(broadcast(probes), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(labels, Seq("vec_id"))
-      .filter(col("nlabel") === col("qlabel"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .withColumn("cos", expr("cosine_sim(qe, embedding)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= Similarity.LshK)
-      .select(col("query_id"), col("neighbor_id"), col("cluster"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
-  }
+      queries: DataFrame): DataFrame =
+    cosineProbe(spark, dir, prefix, queries, DimLabels)
 
-  /** COVERING-INDEX build for the filtered-ANN serving path (sim23;
-    * round-12 VERDICT item 3): [[persist]]'s cell table with the
-    * filter label COLOCATED in the cell row — (cluster, vec_id,
-    * label, embedding, ingest_batch). One narrow extra column at
-    * build time buys the serving path out of [[filteredProbe]]'s
-    * (vec_id, label) dimension join: at 100 TB that join is one
-    * extra corpus-cardinality exchange-free-but-still-IO probe-time
-    * scan PER QUERY BATCH, and the covering row makes the label a
-    * pushable cell-scan column instead. The base cell schema stays
-    * untouched — the whole lifecycle family (sim14–17, st09/st10,
-    * tombstones, compaction) shares it; this is a second, serving-
-    * specialized layout of the same assignment, the classic
-    * covering-index storage/write tradeoff made explicit. */
+  /** COVERING-INDEX build for the filtered-ANN serving path (sim23):
+    * [[persist]]'s cell table with the filter label colocated in the
+    * cell row — (cluster, vec_id, label, embedding, ingest_batch). One
+    * narrow extra column at build time turns [[filteredProbe]]'s
+    * per-batch (vec_id, label) dimension scan into a pushable cell-scan
+    * column. The base cell schema stays untouched — the whole
+    * lifecycle family shares it; this is a second, serving-specialized
+    * layout of the same assignment, the classic covering-index
+    * storage/write tradeoff made explicit. */
   def persistCovering(spark: SparkSession, dir: String, path: String,
       prefix: String, buckets: Int = Buckets): Unit = {
     VectorExprs.register(spark)
@@ -266,217 +345,98 @@ object VecIndex {
       Cells, prefix, Some((path, buckets)))
   }
 
-  /** [[filteredProbe]] served from a COVERING index
-    * ([[persistCovering]]): the label predicate reads the cell row
-    * itself — the probe plan holds exactly one corpus-sized scan
-    * (the bucketed cells) and two bounded raw-embeddings scans
-    * (query batch, centroids), both with their `vec_id <` bound
-    * pushed. Decisions are DEFINED identical to [[filteredProbe]]'s
-    * (same assignment, same predicate, same ranking), so sim23
-    * shares sim22's oracle; VecIndexSpec asserts both the
-    * row-identity and the no-dim-join plan property. */
-  /** DEFAULT filtered-ANN serving entry point (round 14, VERDICT r13
-    * item 5): builds/reuses the COVERING index and serves from it.
-    * sim22 (dim-join over the base cells) and sim23 (covering)
-    * coexisted as equal citizens through round 13; at 100 TB nobody
-    * pays to build and store both, so the covering layout is now the
-    * declared default — it won the serving economics three decades
-    * deep (1000×: 2.3× wall vs the dim-join's 5.0×; stream 1.5× vs
-    * 3.7× — SCALE_NOTES). The cost it pays is at WRITE time: the
-    * covering build duplicates the (cluster, vec_id, embedding,
-    * batch) row set with the label colocated — ~a full second copy
-    * of the cell bytes if both layouts are kept, or a one-label-
-    * column widening (~2% of the embedding-dominated row) if it is
-    * the only one. [[filteredProbe]] remains the back-compat/oracle
-    * lane for installations that only maintain the base index. */
+  /** The default filtered-ANN serving lane (sim23): builds or reuses
+    * the covering index and serves it through [[coveringFilteredProbe]].
+    * The covering row pays at write time (a label column, or a second
+    * copy of the cell bytes if both layouts are kept) and saves the
+    * dimension join on every query batch (SCALE_NOTES: 2.3× wall vs
+    * the dimension join's 5.0× at 1000×). */
   def filteredServing(spark: SparkSession, dir: String): DataFrame =
     coveringFilteredProbe(spark, dir, ensureCoveringPersisted(spark, dir))
 
+  /** [[filteredProbe]] served from a covering index
+    * ([[persistCovering]]): the label predicate reads the cell row, so
+    * the plan holds one corpus-sized scan (the bucketed cells) and two
+    * bounded embeddings scans (queries, centroids). Decisions equal
+    * [[filteredProbe]]'s, so sim23 shares sim22's oracle. */
   def coveringFilteredProbe(spark: SparkSession, dir: String,
       prefix: String): DataFrame =
     coveringFilteredProbe(spark, dir, prefix,
       fixedQueries(spark, dir, withLabel = true))
 
-  /** [[coveringFilteredProbe]] over a (vec_id, embedding, label)
-    * query FRAME. */
   def coveringFilteredProbe(spark: SparkSession, dir: String,
-      prefix: String, queries: DataFrame): DataFrame = {
+      prefix: String, queries: DataFrame): DataFrame =
+    cosineProbe(spark, dir, prefix, queries, CellLabels)
+
+  /** ADC serving against the persisted code cells (sim18): each query's
+    * probe cells, then its per-(query, subspace, code) distance table
+    * (bounded queries × broadcast codebook) joined on the code columns
+    * — M broadcast-hash lookups, no per-candidate vector arithmetic,
+    * and no raw corpus vector read. Top-[[Similarity.KnnK]] per query
+    * by (adc asc, neighbor_id asc), sim07's order. */
+  def pqProbe(spark: SparkSession, dir: String, prefix: String): DataFrame =
+    pqProbe(spark, dir, prefix, fixedQueries(spark, dir, withLabel = false))
+
+  def pqProbe(spark: SparkSession, dir: String, prefix: String,
+      qf: DataFrame): DataFrame = {
     VectorExprs.register(spark)
-    val probes = queries.crossJoin(broadcast(centroids(spark, dir)))
-      .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id")
-          .orderBy(col("cos_c").desc, col("cent_id").asc)))
-      .filter(col("crn") <= Similarity.IvfNProbe)
-      .select(col("vec_id").as("query_id"), col("cent_id").as("cluster"),
-        col("embedding").as("qe"), col("label").as("qlabel"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cellFrame(spark, prefix)
-      .join(broadcast(probes), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .filter(col("label") === col("qlabel"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .withColumn("cos", expr("cosine_sim(qe, embedding)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= Similarity.LshK)
-      .select(col("query_id"), col("neighbor_id"), col("cluster"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+    val cb = spark.table(codebookTable(prefix))
+    val queries = qf
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val probes = probeCells(spark, dir, queries, "query_id", "qe",
+      Seq(col("query_id"), col("cent_id").as("cluster")))
+    val luts = (0 until Similarity.PqM).map { m =>
+      broadcast(queries.crossJoin(broadcast(cb))
+        .select(col("query_id").as(s"q$m"), col("code").as(s"qc$m"),
+          expr(s"sq_dist(${subSlice("qe", m)}, ${subSlice("cw", m)})").as(s"qd$m")))
+    }
+    val cand = candidates(spark, dir, pqCellFrame(spark, prefix), probes, Unlabeled)
+    batchTopK(luts.zipWithIndex.foldLeft(cand) { case (df, (lut, m)) =>
+      df.join(lut, col("query_id") === col(s"q$m") && col(s"c$m") === col(s"qc$m"))
+    }, Adc, adcScore)
   }
 
-  /** Streaming-safe ANN top-k core — the dataflow shared by the
-    * batch catalog entry `st09_stream_ann_probe` (Streams.scala) and
-    * the real readStream form StreamingSpec drives. `queries`
-    * (query_id, embedding, ts) may be an unbounded streaming frame,
-    * so every construct is streaming-legal:
-    *
-    *   - per-query probe-cell selection is ONE stateless projection:
-    *     the K-sized centroid set rides in as a broadcast 1-row
-    *     array, and higher-order functions (transform → array_sort →
-    *     slice) rank it per query — no window function, no separate
-    *     stateful aggregation;
-    *   - candidates come from a stream-static inner join against the
-    *     persisted cell table (the corpus never moves);
-    *   - the per-query top-k is ONE windowed aggregation over the
-    *     bounded [[graft.functions.TopKStructs]] state (K rows per
-    *     key, never cell-proportional — `collect_list`+sort would
-    *     accumulate every candidate in state, the streaming
-    *     scale-killer this aggregate exists to avoid), with the
-    *     (negated-cosine, neighbor_id) struct prefix encoding
-    *     sim04's (cos DESC, id ASC) order.
-    *
-    * Output: one row per (arrival window, query, ranked neighbor) —
-    * sim04's decision columns behind a window_start, the st05
-    * convention. */
-  /** [[annTopK]] with sim22's label predicate — the streaming form of
-    * filtered ANN serving. `queries` carries (query_id, embedding,
-    * label, ts); candidates join the static column-pruned label dim
-    * (a stream-static join, like the cell table itself) and
-    * label-mismatched rows drop BEFORE the cosine and the K-bounded
-    * top-k state, so the filter cuts both scoring work and state
-    * pressure. Every construct stays streaming-legal: the label dim
-    * is a batch frame, the probe-cell selection is the stateless HOF
-    * projection, and the per-query state is still K rows. */
-  def filteredAnnTopK(spark: SparkSession, dir: String, queries: DataFrame,
-      cells: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{collect_list, date_format, explode, struct, window}
-    VectorExprs.register(spark)
-    val centArr = centroids(spark, dir)
-      .agg(collect_list(struct(col("cent_id"), col("ce"))).as("cents"))
-    val labels = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label").as("nlabel"))
-    val probes = queries
-      .crossJoin(broadcast(centArr))
-      .select(col("query_id"), col("ts"), col("embedding").as("qe"),
-        col("label").as("qlabel"),
-        explode(expr(
-          s"""slice(
-             |  transform(
-             |    array_sort(transform(cents,
-             |      c -> struct(-cosine_sim(embedding, c.ce) AS nc,
-             |                  c.cent_id AS cent_id))),
-             |    s -> s.cent_id),
-             |  1, ${Similarity.IvfNProbe})""".stripMargin)).as("cluster"))
-    val cand = cells.join(probes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(labels, Seq("vec_id"))
-      .filter(col("nlabel") === col("qlabel"))
-      .withColumn("cos", expr("cosine_sim(qe, embedding)"))
-    cand
-      .select(col("query_id"), col("ts"),
-        struct((-col("cos")).as("nc"), col("vec_id").as("neighbor_id"),
-          col("cluster"), round(col("cos"), 6).as("cosine")).as("s"))
-      .groupBy(window(col("ts"), "10 minutes"), col("query_id"))
-      .agg(expr(s"topk_struct(s, ${Similarity.LshK})").as("top"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("query_id"), explode(col("top")).as("t"))
-      .select(col("window_start"), col("query_id"),
-        col("t.neighbor_id").as("neighbor_id"),
-        col("t.cluster").as("cluster"),
-        col("t.cosine").as("cosine"))
-  }
+  /** Streaming form of [[probe]] (st09; also the vector lane of the
+    * st18/st19 hybrid): `queries` (query_id, embedding, ts) may be
+    * unbounded. Output: [[probe]]'s columns behind a window_start, one
+    * row per (arrival window, query, ranked neighbor). */
+  def annTopK(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame): DataFrame =
+    cosineTopK(spark, dir, prefix, queries, Unlabeled)
 
-  /** [[filteredAnnTopK]] served from COVERING cells
-    * ([[persistCovering]]): the label predicate reads the cell row —
-    * the stream-static label dim join is gone, so each candidate row
-    * costs one stream-static join (the cells) instead of two. The
-    * 100 TB argument is sim23's, applied to the serving stream: at a
-    * large corpus the (vec_id, label) dim is a second
-    * corpus-cardinality input on every micro-batch. Decisions are
-    * DEFINED identical to [[filteredAnnTopK]]'s over the same
-    * corpus, so st17 shares st16's oracle. */
+  /** Streaming form of [[filteredProbe]] (st16): `queries` adds
+    * `label`; the label dimension is a stream-static join applied
+    * before the cosine and the top-k state. */
+  def filteredAnnTopK(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame): DataFrame =
+    cosineTopK(spark, dir, prefix, queries, DimLabels)
+
+  /** Streaming form of [[coveringFilteredProbe]] (st17): the label
+    * predicate reads the covering cell row, so each candidate costs one
+    * stream-static join instead of two. */
   def coveringFilteredAnnTopK(spark: SparkSession, dir: String,
-      queries: DataFrame, cells: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{collect_list, date_format, explode, struct, window}
-    VectorExprs.register(spark)
-    val centArr = centroids(spark, dir)
-      .agg(collect_list(struct(col("cent_id"), col("ce"))).as("cents"))
-    val probes = queries
-      .crossJoin(broadcast(centArr))
-      .select(col("query_id"), col("ts"), col("embedding").as("qe"),
-        col("label").as("qlabel"),
-        explode(expr(
-          s"""slice(
-             |  transform(
-             |    array_sort(transform(cents,
-             |      c -> struct(-cosine_sim(embedding, c.ce) AS nc,
-             |                  c.cent_id AS cent_id))),
-             |    s -> s.cent_id),
-             |  1, ${Similarity.IvfNProbe})""".stripMargin)).as("cluster"))
-    val cand = cells.join(probes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .filter(col("label") === col("qlabel"))
-      .withColumn("cos", expr("cosine_sim(qe, embedding)"))
-    cand
-      .select(col("query_id"), col("ts"),
-        struct((-col("cos")).as("nc"), col("vec_id").as("neighbor_id"),
-          col("cluster"), round(col("cos"), 6).as("cosine")).as("s"))
-      .groupBy(window(col("ts"), "10 minutes"), col("query_id"))
-      .agg(expr(s"topk_struct(s, ${Similarity.LshK})").as("top"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("query_id"), explode(col("top")).as("t"))
-      .select(col("window_start"), col("query_id"),
-        col("t.neighbor_id").as("neighbor_id"),
-        col("t.cluster").as("cluster"),
-        col("t.cosine").as("cosine"))
-  }
+      prefix: String, queries: DataFrame): DataFrame =
+    cosineTopK(spark, dir, prefix, queries, CellLabels)
 
-  def annTopK(spark: SparkSession, dir: String, queries: DataFrame,
-      cells: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{collect_list, date_format, explode, struct, window}
+  /** Streaming form of [[pqProbe]] (st12). The batch distance table
+    * cannot stream: it derives from the stream, and joining it back to
+    * the stream-derived candidates would be a stream-stream join. Each
+    * candidate instead joins the broadcast static codebook once per
+    * subspace and pays the M `sq_dist`s itself — more arithmetic per
+    * candidate, but stateless and bounded by the probed cells. */
+  def pqAnnTopK(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame): DataFrame = {
     VectorExprs.register(spark)
-    val centArr = centroids(spark, dir)
-      .agg(collect_list(struct(col("cent_id"), col("ce"))).as("cents"))
-    val probes = queries
-      .crossJoin(broadcast(centArr))
-      .select(col("query_id"), col("ts"), col("embedding").as("qe"),
-        explode(expr(
-          s"""slice(
-             |  transform(
-             |    array_sort(transform(cents,
-             |      c -> struct(-cosine_sim(embedding, c.ce) AS nc,
-             |                  c.cent_id AS cent_id))),
-             |    s -> s.cent_id),
-             |  1, ${Similarity.IvfNProbe})""".stripMargin)).as("cluster"))
-    val cand = cells.join(probes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", expr("cosine_sim(qe, embedding)"))
-    cand
-      .select(col("query_id"), col("ts"),
-        struct((-col("cos")).as("nc"), col("vec_id").as("neighbor_id"),
-          col("cluster"), round(col("cos"), 6).as("cosine")).as("s"))
-      .groupBy(window(col("ts"), "10 minutes"), col("query_id"))
-      .agg(expr(s"topk_struct(s, ${Similarity.LshK})").as("top"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("query_id"), explode(col("top")).as("t"))
-      .select(col("window_start"), col("query_id"),
-        col("t.neighbor_id").as("neighbor_id"),
-        col("t.cluster").as("cluster"),
-        col("t.cosine").as("cosine"))
+    val cb = spark.table(codebookTable(prefix))
+    val cand = candidates(spark, dir, pqCellFrame(spark, prefix),
+      streamProbeCells(spark, dir, queries, Unlabeled), Unlabeled)
+    streamTopK((0 until Similarity.PqM).foldLeft(cand) { (df, m) =>
+      df.join(broadcast(cb.select(col("code").as(s"k$m"), col("cw").as(s"cw$m"))),
+          col(s"c$m") === col(s"k$m"))
+        .withColumn(s"qd$m",
+          expr(s"sq_dist(${subSlice("qe", m)}, ${subSlice(s"cw$m", m)})"))
+        .drop(s"k$m", s"cw$m")
+    }, Adc, adcScore)
   }
 
   // ------------------------------------------------------------------
@@ -775,134 +735,6 @@ object VecIndex {
       cb: DataFrame): DataFrame =
     assignCells(spark, dir, e).select("cluster", "vec_id").join(pqEncode(e, cb), "vec_id")
 
-  /** ADC serving against the persisted code cells: the query batch
-    * resolves its probe cells (bounded frame × broadcast centroids),
-    * builds its per-(query, m, code) distance LUT (bounded frame ×
-    * broadcast codebook — the classic ADC table), and joins the cell
-    * table; candidates are scored by LUT lookup — M broadcast-hash
-    * joins on the code columns, no per-candidate vector arithmetic
-    * and no corpus-side exchange. Top-[[Similarity.KnnK]] per query
-    * by (adc asc, neighbor_id asc), sim07's order. */
-  /** The code-cell table as the serving probe reads it — the same
-    * tombstone mask as [[cellFrame]] (one id space per index prefix:
-    * a retired vec_id vanishes from BOTH the raw-vector and the
-    * code-cell read paths until the next compaction purges it). */
-  private def pqCellFrame(spark: SparkSession, prefix: String): DataFrame = {
-    val base = spark.table(pqCellsTable(prefix))
-    IndexCore.tombstoneFrame(spark, prefix).fold(base)(ts =>
-      base.join(ts, base("vec_id") === ts("retired_id"), "left_anti"))
-  }
-
-  def pqProbe(spark: SparkSession, dir: String, prefix: String): DataFrame =
-    pqProbe(spark, dir, prefix, fixedQueries(spark, dir))
-
-  /** [[pqProbe]] over a (vec_id, embedding) query FRAME. */
-  def pqProbe(spark: SparkSession, dir: String, prefix: String,
-      qf: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.round
-    VectorExprs.register(spark)
-    val cb = spark.table(codebookTable(prefix))
-    val queries = qf
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val probes = queries.crossJoin(broadcast(centroids(spark, dir)))
-      .withColumn("cos_c", expr("cosine_sim(qe, ce)"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cos_c").desc, col("cent_id").asc)))
-      .filter(col("crn") <= Similarity.IvfNProbe)
-      .select(col("query_id"), col("cent_id").as("cluster"))
-    val qtabs = (0 until Similarity.PqM).map { m =>
-      queries.crossJoin(broadcast(cb))
-        .select(col("query_id").as(s"q$m"), col("code").as(s"qc$m"),
-          expr(s"sq_dist(${subSlice("qe", m)}, ${subSlice("cw", m)})").as(s"qd$m"))
-    }
-    val cand = pqCellFrame(spark, prefix)
-      .join(broadcast(probes), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val joined = (1 until Similarity.PqM).foldLeft(
-      cand.join(broadcast(qtabs(0)),
-        col("query_id") === col("q0") && col("c0") === col("qc0"))) { (df, m) =>
-      df.join(broadcast(qtabs(m)),
-        col("query_id") === col(s"q$m") && col(s"c$m") === col(s"qc$m"))
-    }
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("neighbor_id").asc)
-    joined
-      .withColumn("adc",
-        (0 until Similarity.PqM).map(m => col(s"qd$m")).reduce(_ + _))
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= Similarity.KnnK)
-      .select(col("query_id"), col("neighbor_id"), col("cluster"),
-        round(col("adc"), 6).as("adc_dist"))
-      .orderBy("query_id", "neighbor_id")
-  }
-
-  /** Streaming-safe IVF-PQ ADC top-k core — sim18's serving dataflow
-    * in streaming-legal constructs (st12; the PQ analog of
-    * [[annTopK]]). `queries` (query_id, embedding, ts) may be
-    * unbounded, so every construct is streaming-legal:
-    *
-    *   - probe-cell selection is [[annTopK]]'s stateless HOF ranking
-    *     (broadcast centroid array → transform → array_sort → slice);
-    *   - ADC scoring CANNOT use the batch path's per-query LUT frame:
-    *     the LUT is stream-derived, and joining it back to the
-    *     (also stream-derived) candidates would be a stream-stream
-    *     join — illegal without watermark range bounds. Instead each
-    *     candidate joins the broadcast (STATIC) codebook M times on
-    *     its code columns and pays the M fused `sq_dist` directly —
-    *     more FLOPs per candidate than LUT reuse, but stateless,
-    *     stream-static, and bounded by the probed cells;
-    *   - the per-query top-k is the K-bounded [[graft.functions.TopKStructs]]
-    *     aggregate; ADC is a DISTANCE, so the natural (adc,
-    *     neighbor_id) struct order IS the wanted order — no negation
-    *     trick.
-    *
-    * Output: one row per (arrival window, query, ranked neighbor) —
-    * sim18's decision columns behind a window_start, the st05/st09
-    * convention. */
-  def pqAnnTopK(spark: SparkSession, dir: String, queries: DataFrame,
-      cells: DataFrame, cb: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{collect_list, date_format, explode, round, struct, window}
-    VectorExprs.register(spark)
-    val centArr = centroids(spark, dir)
-      .agg(collect_list(struct(col("cent_id"), col("ce"))).as("cents"))
-    val probes = queries
-      .crossJoin(broadcast(centArr))
-      .select(col("query_id"), col("ts"), col("embedding").as("qe"),
-        explode(expr(
-          s"""slice(
-             |  transform(
-             |    array_sort(transform(cents,
-             |      c -> struct(-cosine_sim(embedding, c.ce) AS nc,
-             |                  c.cent_id AS cent_id))),
-             |    s -> s.cent_id),
-             |  1, ${Similarity.IvfNProbe})""".stripMargin)).as("cluster"))
-    val cand = cells.join(probes, Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val scored = (0 until Similarity.PqM).foldLeft(cand) { (df, m) =>
-      df.join(broadcast(cb.select(col("code").as(s"k$m"), col("cw").as(s"cw$m"))),
-          col(s"c$m") === col(s"k$m"))
-        .withColumn(s"qd$m",
-          expr(s"sq_dist(${subSlice("qe", m)}, ${subSlice(s"cw$m", m)})"))
-        .drop(s"k$m", s"cw$m")
-    }
-    scored
-      .withColumn("adc",
-        (0 until Similarity.PqM).map(m => col(s"qd$m")).reduce(_ + _))
-      .select(col("query_id"), col("ts"),
-        struct(col("adc"), col("vec_id").as("neighbor_id"),
-          col("cluster"), round(col("adc"), 6).as("adc_dist")).as("s"))
-      .groupBy(window(col("ts"), "10 minutes"), col("query_id"))
-      .agg(expr(s"topk_struct(s, ${Similarity.KnnK})").as("top"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-        col("query_id"), explode(col("top")).as("t"))
-      .select(col("window_start"), col("query_id"),
-        col("t.neighbor_id").as("neighbor_id"),
-        col("t.cluster").as("cluster"),
-        col("t.adc_dist").as("adc_dist"))
-  }
 
   // ------------------------------------------------------------------
   // IVF-PQ day-N lifecycle (round 12; VERDICT r11 item 2) — the same
@@ -1039,8 +871,8 @@ object VecIndex {
     * stateful aggregation:
     *
     *   - cell assignment is the stateless HOF argmax over the
-    *     broadcast centroid array ([[annTopK]]'s probe-selection
-    *     pattern, sliced to 1);
+    *     broadcast centroid array (element 1 of the streaming lanes'
+    *     [[rankedCentroids]]);
     *   - the reference occupancy p (the indexed corpus's smoothed
     *     cell distribution) rides in as a broadcast STATIC 1-row
     *     array BEFORE the aggregation — joining it after the agg
@@ -1058,7 +890,7 @@ object VecIndex {
     * kl_total, retrain). */
   def streamingCellDrift(spark: SparkSession, dir: String,
       batch: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{collect_list, count, date_format, first, lit, pmod, struct, sum, when, window, log => ln}
+    import org.apache.spark.sql.functions.{count, first, sum, when, log => ln}
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     VectorExprs.register(spark)
     val k = Similarity.IvfCentroids
@@ -1077,27 +909,18 @@ object VecIndex {
            |         map_from_entries(transform(occ, o -> struct(o.cluster, o.cnt))),
            |         CAST(c AS BIGINT)), 0) + 1 AS DOUBLE)
            |  / (CAST(n_old AS DOUBLE) + $k))""".stripMargin).as("ps"))
-    val centArr = centroids(spark, dir)
-      .agg(collect_list(struct(col("cent_id"), col("ce"))).as("cents"))
     val assigned = batch
-      .crossJoin(broadcast(centArr))
+      .crossJoin(broadcast(centroidArray(spark, dir)))
       .crossJoin(broadcast(pArr))
       .select(col("ts"), col("ps"),
-        expr(
-          s"""element_at(
-             |  transform(
-             |    array_sort(transform(cents,
-             |      c -> struct(-cosine_sim(embedding, c.ce) AS nc,
-             |                  c.cent_id AS cent_id))),
-             |    s -> s.cent_id),
-             |  1)""".stripMargin).as("cluster"))
+        expr(s"element_at($rankedCentroids, 1)").as("cluster"))
     val aggs =
       count(lit(1)).as("n_new") +:
         first(col("ps")).as("ps") +:
         (0 until k).map(c =>
           sum(when(col("cluster") === c, 1L).otherwise(0L)).as(s"n$c"))
     val counts = assigned
-      .groupBy(window(col("ts"), "10 minutes"))
+      .groupBy(arrivalWindow)
       .agg(aggs.head, aggs.tail: _*)
     def q(c: Int) = (col(s"n$c") + lit(1L)).cast(DoubleType) /
       (col("n_new").cast(DoubleType) + lit(k.toDouble))
@@ -1105,9 +928,7 @@ object VecIndex {
       val p = expr(s"element_at(ps, ${c + 1})")
       round(q(c) * ln(q(c) / p), 6).cast(DecimalType(18, 6))
     }.reduce(_ + _).cast(DoubleType)
-    counts.select(
-      date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-      col("n_new"),
+    counts.select(windowStart, col("n_new"),
       klTotal.as("kl_total"),
       (klTotal > lit(Similarity.KlRetrainThreshold)).as("retrain"))
   }
@@ -1158,7 +979,7 @@ object VecIndex {
     * bucketed table (both sides bucketed by vec_id: no shuffle on
     * the corpus side). Decisions are DEFINED identical to sim27's. */
   def matProbe(spark: SparkSession, dir: String, prefix: String): DataFrame =
-    matProbe(spark, dir, prefix, fixedQueries(spark, dir))
+    matProbe(spark, dir, prefix, fixedQueries(spark, dir, withLabel = false))
 
   /** [[matProbe]] over a (vec_id, embedding) query FRAME. */
   def matProbe(spark: SparkSession, dir: String, prefix: String,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -438,34 +438,31 @@ object Streams {
       docs.withWatermark("ts", delay), corpusBands, corpusSigs)
 
   /** ANN serving as a stream (st09's real readStream form): arriving
-    * query vectors probe the persisted IVF cell table; per-query
+    * query vectors probe the persisted IVF index `prefix`; per-query
     * top-k emits within the arrival window through the K-bounded
     * `topk_struct` aggregate. Same state story as
     * [[nearDupDedupStream]] — the watermark frees each window's
     * K-row-per-query state; see [[graft.ops.VecIndex!.annTopK]]. */
-  def annProbeStream(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queries: DataFrame, cells: DataFrame,
-      delay: String = "30 minutes"): DataFrame =
-    graft.ops.VecIndex.annTopK(spark, dir,
-      queries.withWatermark("ts", delay), cells)
+  def annProbeStream(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame, delay: String = "30 minutes"): DataFrame =
+    graft.ops.VecIndex.annTopK(spark, dir, prefix,
+      queries.withWatermark("ts", delay))
 
   /** st16's real-stream form: [[graft.ops.VecIndex.filteredAnnTopK]]
     * behind a watermark — metadata-predicated ANN serving, the
     * stream-static label dim join inside. */
-  def filteredAnnProbeStream(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queries: DataFrame, cells: DataFrame,
-      delay: String = "30 minutes"): DataFrame =
-    graft.ops.VecIndex.filteredAnnTopK(spark, dir,
-      queries.withWatermark("ts", delay), cells)
+  def filteredAnnProbeStream(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame, delay: String = "30 minutes"): DataFrame =
+    graft.ops.VecIndex.filteredAnnTopK(spark, dir, prefix,
+      queries.withWatermark("ts", delay))
 
   /** st17's real-stream form: [[graft.ops.VecIndex.coveringFilteredAnnTopK]]
     * behind a watermark — the covering-index serving stream, label
     * read from the cell row (no stream-static dim join). */
-  def coveringAnnProbeStream(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queries: DataFrame, cells: DataFrame,
-      delay: String = "30 minutes"): DataFrame =
-    graft.ops.VecIndex.coveringFilteredAnnTopK(spark, dir,
-      queries.withWatermark("ts", delay), cells)
+  def coveringAnnProbeStream(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame, delay: String = "30 minutes"): DataFrame =
+    graft.ops.VecIndex.coveringFilteredAnnTopK(spark, dir, prefix,
+      queries.withWatermark("ts", delay))
 
   /** st18's per-micro-batch core: hybrid text+vector serving over an
     * arrivals frame (query_id, embedding, ts). The lexical lane is
@@ -495,9 +492,8 @@ object Streams {
       .select(col("query_id").cast("bigint").as("query_id"),
         col("doc_id").as("item_id"), col("rk").as("ra"))
       .join(broadcast(arrivals.select("query_id").distinct()), Seq("query_id"))
-    val prefix = graft.ops.VecIndex.ensurePersisted(s, d)
-    val vr = graft.ops.VecIndex.annTopK(s, d, arrivals,
-        s.table(graft.ops.VecIndex.cellsTable(prefix)))
+    val vr = graft.ops.VecIndex.annTopK(s, d,
+        graft.ops.VecIndex.ensurePersisted(s, d), arrivals)
       .withColumn("rb", row_number().over(
         Window.partitionBy("query_id")
           .orderBy(col("cosine").desc, col("neighbor_id").asc)))
@@ -533,12 +529,12 @@ object Streams {
       graft.ops.LexIndex.probe(s, d, graft.ops.LexIndex.ensurePersisted(s, d)))
 
   /** st12's real-stream form: [[graft.ops.VecIndex.pqAnnTopK]] behind
-    * a watermark — ADC serving from the persisted IVF-PQ code cells. */
-  def pqServeStream(spark: org.apache.spark.sql.SparkSession, dir: String,
-      queries: DataFrame, cells: DataFrame, cb: DataFrame,
-      delay: String = "30 minutes"): DataFrame =
-    graft.ops.VecIndex.pqAnnTopK(spark, dir,
-      queries.withWatermark("ts", delay), cells, cb)
+    * a watermark — ADC serving from the persisted IVF-PQ index
+    * `prefix`. */
+  def pqServeStream(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame, delay: String = "30 minutes"): DataFrame =
+    graft.ops.VecIndex.pqAnnTopK(spark, dir, prefix,
+      queries.withWatermark("ts", delay))
 
   // ------------------------------------------------------------------
   // Custom streaming state: trip segmentation
@@ -625,6 +621,20 @@ object Streams {
   // Batch windowed-agg catalog entries (oracle-checked)
   // ------------------------------------------------------------------
 
+  /** The batch analogs' synthetic, deterministic arrival time:
+    * epoch-aligned base + `id` seconds. */
+  private def arrivalTs(id: String): Column =
+    expr(s"timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, $id)").as("ts")
+
+  /** The vector streams' arrival frame (st09, st12, st16–st19): the
+    * fixed query batch as (query_id, embedding[, label], ts). */
+  private[graft] def arrivalQueries(s: SparkSession, d: String,
+      withLabel: Boolean): DataFrame =
+    Tables.embeddings(s, d)
+      .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
+      .select(Seq(col("vec_id").as("query_id"), col("embedding")) ++
+        (if (withLabel) Seq(col("label")) else Nil) :+ arrivalTs("vec_id"): _*)
+
   val queries: Map[String, Q] = Map(
     // Tumbling event-time window (epoch-aligned, matches date_trunc)
     "st01_tumbling_window" -> ((s, d) =>
@@ -685,8 +695,7 @@ object Streams {
       graft.functions.VectorExprs.register(s)
       val batch = Tables.documents(s, d)
         .filter(col("source") === graft.ops.Dedup.IncBatchSrc)
-        .select(col("doc_id"), col("text"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, doc_id)").as("ts"))
+        .select(col("doc_id"), col("text"), arrivalTs("doc_id"))
       val (cb, cs) = graft.ops.Dedup.corpusIndex(s, d)
       graft.ops.Dedup.nearDupDecisions(batch, cb, cs).orderBy("batch_doc")
     }),
@@ -707,12 +716,9 @@ object Streams {
       val prefix = graft.ops.BandIndex.ensurePersisted(s, d)
       val batch = Tables.documents(s, d)
         .filter(col("source") === graft.ops.Dedup.IncBatchSrc)
-        .select(col("doc_id"), col("text"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, doc_id)").as("ts"))
-      graft.ops.Dedup.nearDupDecisions(batch,
-        s.table(graft.ops.BandIndex.bandsTable(prefix)),
-        s.table(graft.ops.BandIndex.sigsTable(prefix)))
-        .orderBy("batch_doc")
+        .select(col("doc_id"), col("text"), arrivalTs("doc_id"))
+      val (bands, sigs) = graft.ops.BandIndex.corpusFrames(s, prefix, None)
+      graft.ops.Dedup.nearDupDecisions(batch, bands, sigs).orderBy("batch_doc")
     }),
 
     // The streaming ingest-maintenance LOOP's batch analog
@@ -762,17 +768,9 @@ object Streams {
     // never cell-proportional). Batch analog of the shared core;
     // StreamingSpec drives the same dataflow through a real
     // readStream. Decisions = sim04's behind a window_start.
-    "st09_stream_ann_probe" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
-      val queries = graft.Tables.embeddings(s, d)
-        .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
-        .select(col("vec_id").as("query_id"), col("embedding"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
-      val prefix = graft.ops.VecIndex.ensurePersisted(s, d)
-      graft.ops.VecIndex.annTopK(s, d, queries, s.table(
-          graft.ops.VecIndex.cellsTable(prefix)))
-        .orderBy("query_id", "neighbor_id")
-    }),
+    "st09_stream_ann_probe" -> ((s, d) =>
+      graft.ops.VecIndex.annTopK(s, d, graft.ops.VecIndex.ensurePersisted(s, d),
+        arrivalQueries(s, d, withLabel = false)).orderBy("query_id", "neighbor_id")),
 
     // STREAMING MAINTENANCE for the vector index (round-11; VERDICT
     // r10 item 6) — st08's exactly-once discipline composed with
@@ -795,18 +793,9 @@ object Streams {
     // stream-stream join — see VecIndex.pqAnnTopK); per-query top-k
     // through topk_struct, where ADC's natural ascending order needs
     // no negation. Decisions = sim18's behind a window_start.
-    "st12_stream_pq_serving" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
-      val queries = graft.Tables.embeddings(s, d)
-        .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
-        .select(col("vec_id").as("query_id"), col("embedding"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
-      val prefix = graft.ops.VecIndex.ensurePqPersisted(s, d)
-      graft.ops.VecIndex.pqAnnTopK(s, d, queries,
-          s.table(graft.ops.VecIndex.pqCellsTable(prefix)),
-          s.table(graft.ops.VecIndex.codebookTable(prefix)))
-        .orderBy("query_id", "neighbor_id")
-    }),
+    "st12_stream_pq_serving" -> ((s, d) =>
+      graft.ops.VecIndex.pqAnnTopK(s, d, graft.ops.VecIndex.ensurePqPersisted(s, d),
+        arrivalQueries(s, d, withLabel = false)).orderBy("query_id", "neighbor_id")),
 
     // STREAMING MAINTENANCE for the PQ SERVING index (round 12 —
     // st10's discipline one level up): a fresh generation on 3/4 of
@@ -830,11 +819,9 @@ object Streams {
     // same fixed decimal-exact fold as dq07's. Batch analog of the
     // shared core; StreamingSpec drives a real readStream.
     "st14_stream_drift" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr, lit, pmod}
       val batch = graft.Tables.embeddings(s, d)
         .filter(pmod(col("vec_id"), lit(4)) === lit(0))
-        .select(col("vec_id"), col("embedding"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
+        .select(col("vec_id"), col("embedding"), arrivalTs("vec_id"))
       graft.ops.VecIndex.streamingCellDrift(s, d, batch)
         .orderBy("window_start")
     }),
@@ -845,17 +832,9 @@ object Streams {
     // the column-pruned label dim, BEFORE the cosine and the
     // K-bounded top-k state. Decisions = sim22's behind a
     // window_start; StreamingSpec drives a real readStream.
-    "st16_stream_filtered_ann" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
-      val queries = graft.Tables.embeddings(s, d)
-        .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
-        .select(col("vec_id").as("query_id"), col("embedding"), col("label"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
-      val prefix = graft.ops.VecIndex.ensurePersisted(s, d)
-      graft.ops.VecIndex.filteredAnnTopK(s, d, queries,
-          s.table(graft.ops.VecIndex.cellsTable(prefix)))
-        .orderBy("query_id", "neighbor_id")
-    }),
+    "st16_stream_filtered_ann" -> ((s, d) =>
+      graft.ops.VecIndex.filteredAnnTopK(s, d, graft.ops.VecIndex.ensurePersisted(s, d),
+        arrivalQueries(s, d, withLabel = true)).orderBy("query_id", "neighbor_id")),
 
     // STREAMING COVERING-INDEX ANN (round 13, st17): st16's serving
     // stream against the COVERING cells (sim23's layout) — the label
@@ -863,17 +842,10 @@ object Streams {
     // stream-static dim join is gone. Decisions = st16's (same
     // assignment, same predicate, same ranking), so the oracle is
     // shared; StreamingSpec drives a real readStream.
-    "st17_stream_covering_ann" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
-      val queries = graft.Tables.embeddings(s, d)
-        .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
-        .select(col("vec_id").as("query_id"), col("embedding"), col("label"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
-      val prefix = graft.ops.VecIndex.ensureCoveringPersisted(s, d)
-      graft.ops.VecIndex.coveringFilteredAnnTopK(s, d, queries,
-          s.table(graft.ops.VecIndex.cellsTable(prefix)))
-        .orderBy("query_id", "neighbor_id")
-    }),
+    "st17_stream_covering_ann" -> ((s, d) =>
+      graft.ops.VecIndex.coveringFilteredAnnTopK(s, d,
+        graft.ops.VecIndex.ensureCoveringPersisted(s, d),
+        arrivalQueries(s, d, withLabel = true)).orderBy("query_id", "neighbor_id")),
 
     // STREAMING HYBRID SEARCH (round 14, st18): sim26's text+vector
     // serving as an ingest stream — arriving query vectors probe the
@@ -889,14 +861,9 @@ object Streams {
     // probe's decisions are sim04's — st09/st10's established
     // equivalence — and the lexical lane IS tx15's output), so the
     // oracle is shared.
-    "st18_stream_hybrid_search" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
-      val arrivals = graft.Tables.embeddings(s, d)
-        .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
-        .select(col("vec_id").as("query_id"), col("embedding"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
-      hybridServeCore(s, d, arrivals).orderBy("query_id", "rk")
-    }),
+    "st18_stream_hybrid_search" -> ((s, d) =>
+      hybridServeCore(s, d, arrivalQueries(s, d, withLabel = false))
+        .orderBy("query_id", "rk")),
 
     // FULLY-SERVED STREAMING HYBRID (round 15, st19): st18 with the
     // lexical lane moved from the session memo onto the PERSISTED
@@ -904,14 +871,9 @@ object Streams {
     // (sim29's streaming twin). Decisions DEFINED identical to
     // sim26/st18, shared oracle; StreamingSpec drives the served
     // core through the same two-micro-batch readStream protocol.
-    "st19_stream_hybrid_served" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
-      val arrivals = graft.Tables.embeddings(s, d)
-        .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
-        .select(col("vec_id").as("query_id"), col("embedding"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
-      hybridServedCore(s, d, arrivals).orderBy("query_id", "rk")
-    }),
+    "st19_stream_hybrid_served" -> ((s, d) =>
+      hybridServedCore(s, d, arrivalQueries(s, d, withLabel = false))
+        .orderBy("query_id", "rk")),
 
     // STREAMING LEXICAL MAINTENANCE (round 16, st20): the lexical
     // lane's st10 — the vector lane has had foreachBatch index
@@ -940,11 +902,9 @@ object Streams {
     // per micro-batch through a real readStream + foreachBatch and
     // requires row-identical verdicts.
     "st15_stream_admission" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{col, expr}
       val arrivals = graft.Tables.documents(s, d)
         .filter(col("source") === graft.ops.Dedup.IncBatchSrc)
-        .select(col("doc_id"), col("lang"), col("text"),
-          expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, doc_id)").as("ts"))
+        .select(col("doc_id"), col("lang"), col("text"), arrivalTs("doc_id"))
       graft.ops.Pipeline.admissionCore(s, d, arrivals).orderBy("batch_doc")
     })
   )

@@ -12,6 +12,9 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   * band probe — live on the PROBE functions. This builds each
   * family's fixture state (persist → append → fold / retire) at the
   * given scale and explains the probe frame BEFORE any checkpoint.
+  * The vector block explains every vector serving lane: the four batch
+  * probes and the four streaming cores, the latter over the catalog's
+  * static arrival frame.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 \
   *          tools/run.sh graft.tools.PlanServe > plans.txt
@@ -27,6 +30,7 @@ object PlanServe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.ops.{BandIndex, IndexCore, LexIndex, VecIndex}
+    import graft.streaming.Streams
     import graft.Tables
 
     val docs = Tables.documents(spark, dir)
@@ -73,7 +77,11 @@ object PlanServe {
     }
 
     // ---- vector: persisted cells, three stamped appends, tiered
-    // fold → probe under the visibility predicate (sim30 lane)
+    // fold, one tombstone → every serving lane: the four batch probes,
+    // then the four streaming cores over the catalog's static arrival
+    // frame (st09/st12/st16/st17). Streams and batch read the same
+    // masked frame, so each stream plan shows the batch plan's
+    // visibility filter and tombstone anti-join.
     {
       val prefix = VecIndex.ensurePersisted(spark, dir)
       val emb = Tables.embeddings(spark, dir)
@@ -83,8 +91,35 @@ object PlanServe {
             .select("vec_id", "embedding"), batchId = 100 + b)
       }
       VecIndex.tieredMerge(spark, prefix)
-      println("========== serve:VecIndex.probe (sim30 lane: cell-pruned probe under the merge-log visibility predicate) ==========")
-      VecIndex.probe(spark, dir, prefix).explain("formatted")
+      val covering = VecIndex.ensureCoveringPersisted(spark, dir)
+      val pq = VecIndex.ensurePqPersisted(spark, dir)
+      val retired = emb.filter(col("vec_id") === 1L).select("vec_id")
+      VecIndex.retireTombstone(spark, prefix, retired)
+      VecIndex.retireTombstone(spark, covering, retired)
+      VecIndex.pqRetireTombstone(spark, pq, retired)
+      val arrivals = Streams.arrivalQueries(spark, dir, withLabel = false)
+      val labelled = Streams.arrivalQueries(spark, dir, withLabel = true)
+      Seq(
+        "VecIndex.probe (sim14/sim30 lane: cell-pruned probe under the merge-log visibility predicate)" ->
+          VecIndex.probe(spark, dir, prefix),
+        "VecIndex.filteredProbe (sim22 lane: label dimension join)" ->
+          VecIndex.filteredProbe(spark, dir, prefix),
+        "VecIndex.coveringFilteredProbe (sim23 lane: label from the covering cell row)" ->
+          VecIndex.coveringFilteredProbe(spark, dir, covering),
+        "VecIndex.pqProbe (sim18 lane: ADC through the per-query distance table)" ->
+          VecIndex.pqProbe(spark, dir, pq),
+        "VecIndex.annTopK (st09 stream core)" ->
+          VecIndex.annTopK(spark, dir, prefix, arrivals),
+        "VecIndex.filteredAnnTopK (st16 stream core)" ->
+          VecIndex.filteredAnnTopK(spark, dir, prefix, labelled),
+        "VecIndex.coveringFilteredAnnTopK (st17 stream core)" ->
+          VecIndex.coveringFilteredAnnTopK(spark, dir, covering, labelled),
+        "VecIndex.pqAnnTopK (st12 stream core: ADC through the static codebook join)" ->
+          VecIndex.pqAnnTopK(spark, dir, pq, arrivals)
+      ).foreach { case (lane, df) =>
+        println(s"========== serve:$lane ==========")
+        df.explain("formatted")
+      }
     }
 
     spark.stop()

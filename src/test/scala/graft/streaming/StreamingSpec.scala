@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 
 /** Drives the Structured Streaming GTFS variant end to end: bronze
@@ -435,6 +437,44 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Streams `arrivals` (even `key`s, then odd ones, one file per
+    * micro-batch) and then two far-future `sentinel` rows through
+    * `serve` into a memory sink, and returns the rows emitted for the
+    * real arrivals, window_start dropped, sorted by their first two
+    * columns. The first sentinel moves the watermark past every real
+    * 10-minute window; the second's micro-batch emits those windows. */
+  private def servedRows(name: String, arrivals: DataFrame, key: String,
+      sentinel: (Long, String) => DataFrame)(
+      serve: DataFrame => DataFrame): Seq[Seq[Any]] = {
+    import org.apache.spark.sql.functions.col
+    val srcDir = Files.createTempDirectory(s"graft-$name").toString
+    def put(sub: String, df: DataFrame): Unit = {
+      df.coalesce(1).write.parquet(s"$srcDir/$sub")
+      val t = mtimeClock.addAndGet(2000)
+      Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
+        if (Files.isRegularFile(p))
+          Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(t))
+      }
+    }
+    put("part_a", arrivals.filter(col(key) % 2 === 0))
+    put("part_b", arrivals.filter(col(key) % 2 =!= 0))
+    put("part_y", sentinel(999999998L, "2024-06-01"))
+    put("part_z", sentinel(999999999L, "2024-06-02"))
+    val stream = spark.readStream.schema(arrivals.schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$srcDir/part_*")
+    val q = serve(stream)
+      .writeStream.format("memory").queryName(name).outputMode("append")
+      .start()
+    try {
+      q.processAllAvailable()
+      val out = spark.table(name).drop("window_start")
+      val Seq(first, second) = out.columns.take(2).toSeq
+      out.filter(col(first) < 999999998L).orderBy(first, second)
+        .collect().map(_.toSeq).toSeq
+    } finally q.stop()
+  }
+
   test("streaming near-dup probe of the PERSISTED bucketed index matches st05 (st06)") {
     // The full 100 TB ingest shape: a doc stream probes the ON-DISK
     // bucketed corpus index (ops/BandIndex) through a real readStream
@@ -479,9 +519,8 @@ class StreamingSpec extends SparkSpec {
       .schema(spark.read.parquet(s"$srcDir/part_a").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/part_*")
-    val q = Streams.nearDupDedupStream(stream,
-      spark.table(graft.ops.BandIndex.bandsTable(prefix)),
-      spark.table(graft.ops.BandIndex.sigsTable(prefix)))
+    val (bands, sigs) = graft.ops.BandIndex.corpusFrames(spark, prefix, None)
+    val q = Streams.nearDupDedupStream(stream, bands, sigs)
       .writeStream.format("memory").queryName("st06_out").outputMode("append")
       .start()
     try {
@@ -493,6 +532,25 @@ class StreamingSpec extends SparkSpec {
       assert(streamed.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq,
         "streamed persisted-index decisions diverge from st05 batch table")
     } finally q.stop()
+    // one more input: a tombstoned corpus doc that was some batch doc's
+    // dup_of stops being one in the stream exactly as in BandIndex.probe
+    import spark.implicits._
+    val BI = graft.ops.BandIndex
+    val retiredIdx = BI.ensurePersisted(spark, sf, "st06_retired")
+    val dupOf = BI.probe(spark, sf, retiredIdx).filter(col("dup_of").isNotNull)
+      .select("dup_of").distinct().collect().map(_.getAs[Number](0).longValue).sorted
+    assert(dupOf.nonEmpty, "no batch doc has a near-duplicate to retire")
+    BI.retireTombstone(spark, retiredIdx, Seq(dupOf.head).toDF("doc_id"))
+    val masked = BI.probe(spark, sf, retiredIdx).collect().map(_.toSeq).toSeq
+    assert(!masked.exists(r => r(1) != null && r(1).asInstanceOf[Number].longValue == dupOf.head),
+      "the batch probe still resolves to the tombstoned doc")
+    def sentinel(id: Long, day: String): DataFrame =
+      spark.sql(s"SELECT CAST($id AS BIGINT) AS doc_id, 'zz' AS text, " +
+        s"timestamp'$day 00:00:00' AS ts")
+    val (maskedBands, maskedSigs) = BI.corpusFrames(spark, retiredIdx, None)
+    val retiredStream = servedRows("st06_retired_out", docs, "doc_id", sentinel)(
+      Streams.nearDupDedupStream(_, maskedBands, maskedSigs))
+    assert(retiredStream === masked, "the st06 stream diverges from BandIndex.probe after a tombstone")
   }
 
   test("streaming filtered ANN equals the batch metadata-predicated top-k (st16)") {
@@ -534,8 +592,7 @@ class StreamingSpec extends SparkSpec {
       .schema(spark.read.parquet(s"$srcDir/part_a").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/part_*")
-    val q = Streams.filteredAnnProbeStream(spark, sf, stream,
-        spark.table(graft.ops.VecIndex.cellsTable(prefix)))
+    val q = Streams.filteredAnnProbeStream(spark, sf, prefix, stream)
       .writeStream.format("memory").queryName("st16_out").outputMode("append")
       .start()
     try {
@@ -594,8 +651,7 @@ class StreamingSpec extends SparkSpec {
       .schema(spark.read.parquet(s"$srcDir/part_a").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/part_*")
-    val q = Streams.coveringAnnProbeStream(spark, sf, stream,
-        spark.table(graft.ops.VecIndex.cellsTable(prefix)))
+    val q = Streams.coveringAnnProbeStream(spark, sf, prefix, stream)
       .writeStream.format("memory").queryName("st17_out").outputMode("append")
       .start()
     try {
@@ -868,6 +924,38 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** The tombstone input of the st09/st12 parity tests: retires every
+    * third distinct neighbor that the clean batch probe of `prefix`
+    * returns, then requires the stream over `prefix` to equal the
+    * masked batch probe and to serve none of the retired vec_ids. */
+  private def retiredVectorsParity(sf: String, name: String, prefix: String,
+      batch: String => DataFrame, retire: (String, DataFrame) => Unit,
+      stream: (String, DataFrame) => DataFrame): Unit = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def neighbors(rows: Seq[Seq[Any]]): Set[Long] =
+      rows.map(_(1).asInstanceOf[Number].longValue).toSet
+    val gone = neighbors(batch(prefix).collect().map(_.toSeq).toSeq).filter(_ % 3 == 0)
+    assert(gone.nonEmpty, "the clean probe returned no neighbor to retire")
+    retire(prefix, gone.toSeq.toDF("vec_id"))
+    val masked = batch(prefix).collect().map(_.toSeq).toSeq
+    assert(masked.nonEmpty && (neighbors(masked) & gone).isEmpty,
+      s"the $name batch probe serves a tombstoned vector")
+    val arrivals = graft.Tables.embeddings(spark, sf)
+      .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
+      .select(col("vec_id").as("query_id"), col("embedding"),
+        expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
+    def sentinel(id: Long, day: String): DataFrame =
+      graft.Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
+        .select(lit(id).as("query_id"), col("embedding"),
+          expr(s"timestamp'$day 00:00:00'").as("ts"))
+    val streamed = servedRows(s"${name}_retired_out", arrivals, "query_id", sentinel)(
+      stream(prefix, _))
+    assert((neighbors(streamed) & gone).isEmpty,
+      s"the $name stream serves a tombstoned vector")
+    assert(streamed === masked, s"the $name stream diverges from its batch probe")
+  }
+
   test("streaming ANN probe of the persisted vector index equals the batch top-k (st09)") {
     // ANN serving as a stream: query vectors arrive over multiple
     // micro-batches, select probe cells via broadcast centroids in a
@@ -911,8 +999,7 @@ class StreamingSpec extends SparkSpec {
       .schema(spark.read.parquet(s"$srcDir/part_a").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/part_*")
-    val q = Streams.annProbeStream(spark, sf, stream,
-        spark.table(graft.ops.VecIndex.cellsTable(prefix)))
+    val q = Streams.annProbeStream(spark, sf, prefix, stream)
       .writeStream.format("memory").queryName("st09_out").outputMode("append")
       .start()
     try {
@@ -924,6 +1011,11 @@ class StreamingSpec extends SparkSpec {
       assert(streamed.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq,
         "streamed ANN top-k diverges from the batch analog")
     } finally q.stop()
+    // one more input: vectors tombstoned on a persisted index leave the
+    // stream exactly as they leave the batch probe
+    retiredVectorsParity(sf, "st09", graft.ops.VecIndex.ensurePersisted(spark, sf, "st09_retired"),
+      graft.ops.VecIndex.probe(spark, sf, _), graft.ops.VecIndex.retireTombstone(spark, _, _),
+      Streams.annProbeStream(spark, sf, _, _))
   }
 
   test("streaming PQ serving from the code-cell index equals the batch ADC top-k (st12)") {
@@ -967,9 +1059,7 @@ class StreamingSpec extends SparkSpec {
       .schema(spark.read.parquet(s"$srcDir/part_a").schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/part_*")
-    val q = Streams.pqServeStream(spark, sf, stream,
-        spark.table(graft.ops.VecIndex.pqCellsTable(prefix)),
-        spark.table(graft.ops.VecIndex.codebookTable(prefix)))
+    val q = Streams.pqServeStream(spark, sf, prefix, stream)
       .writeStream.format("memory").queryName("st12_out").outputMode("append")
       .start()
     try {
@@ -981,6 +1071,10 @@ class StreamingSpec extends SparkSpec {
       assert(streamed.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq,
         "streamed PQ ADC top-k diverges from the batch analog")
     } finally q.stop()
+    // one more input: the same after a tombstone on a PQ index
+    retiredVectorsParity(sf, "st12", graft.ops.VecIndex.ensurePqPersisted(spark, sf, "st12_retired"),
+      graft.ops.VecIndex.pqProbe(spark, sf, _), graft.ops.VecIndex.pqRetireTombstone(spark, _, _),
+      Streams.pqServeStream(spark, sf, _, _))
   }
 
   test("streaming drift monitor equals the batch KL decision per window (st14)") {
