@@ -28,10 +28,22 @@ import org.apache.spark.sql.types._
   *     the dual-lane instruments can set both knobs explicitly);
   *   - UTC session timezone (zone-less `Time` strings);
   *   - nanosecond-parquet timestamps read as long and normalized, so
-  *     the engine is deterministic across Parquet timestamp units.
+  *     the engine is deterministic across Parquet timestamp units;
+  *   - the `file:` scheme served by [[ForkFreeLocalFileSystem]]
+  *     (`fs.file.impl`) and [[ForkFreeLocalFs]]
+  *     (`fs.AbstractFileSystem.file.impl`): without libhadoop the stock
+  *     local file system starts a `chmod` process per created file and
+  *     four `readlink` processes per `FileContext` rename, about 120
+  *     per `goldRefresh` micro-batch (SCALE_NOTES "Fork-free local file
+  *     I/O"). `fs.file.impl.disable.cache=true` goes with them: Hadoop's
+  *     `FileSystem` cache is keyed by scheme and user, not conf, so a
+  *     stock instance cached before `pin` would otherwise win. Files,
+  *     `.crc` sidecars and permission bits are the stock ones.
   *
-  * These are runtime-mutable SQL confs, safe to set even though the
-  * driver harness owns the SparkSession.
+  * These are runtime-mutable session confs, safe to set even though the
+  * caller owns the SparkSession; Spark copies them into every
+  * Hadoop conf the session builds for reads, writes, streaming
+  * checkpoints and state stores.
   */
 object Tables {
 
@@ -53,6 +65,9 @@ object Tables {
     // depending on version-specific nanos support.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+    spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * BPE training): each eager `localCheckpoint` pins an RDD in block
   * storage, and once the NEXT checkpoint materializes, the previous
   * one is unreachable — a deep loop would otherwise accumulate one
-  * dead frame per round (measured as GC-pressure drift in PrDeep's
-  * first protocol).
+  * dead frame per round (measured as GC-pressure drift; SCALE_NOTES
+  * "Round-8: PageRank depth — the checkpoint cadence measured").
   *
   * The released RDD is identified FROM THE CHECKPOINTED FRAME'S OWN
   * PLAN (the LogicalRDD the checkpoint returns), never by diffing the

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 import graft.Tables
 
@@ -197,7 +198,7 @@ object DataQuality {
     // schema; the scan then carries it explicitly.
     val schema = listed.view
       .map(f => try Some(spark.read.parquet(f).schema)
-      catch { case _: Throwable => None })
+      catch { case NonFatal(_) => None })
       .collectFirst { case Some(s) => s }
       .getOrElse(throw new IllegalArgumentException(
         s"salvageScanParquet: no readable parquet file under $path"))
@@ -221,7 +222,7 @@ object DataQuality {
     val corrupt = candidates.toSeq
       .filter { f =>
         try { spark.read.parquet(f).count(); false }
-        catch { case _: Throwable => true }
+        catch { case NonFatal(_) => true }
       }
       .sorted
     SalvageResult(rows, corrupt)

@@ -439,7 +439,7 @@ object Joins {
       // localCheckpoint: the hot frame is referenced FOUR times in the
       // split-join plan (marker join onto each side × hot/cold branch)
       // and exchange reuse does not fire across those subtrees
-      // (verified with tools/ReuseCheck: 0 ReusedExchange, 8
+      // (SCALE_NOTES "Skew join: AQE vs salting": 0 ReusedExchange, 8
       // ObjectHashAggregate = 4 sketch passes). Materializing the
       // ≤ HeavyK-row candidate frame once caps detection at ONE scan
       // of the fact — the cost a 100 TB run actually pays. Memoized

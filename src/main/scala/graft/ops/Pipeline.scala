@@ -261,7 +261,8 @@ object Pipeline {
     * (eval holdout, quality floor, language contradiction), then the
     * contamination check against the full-corpus eval shingle set,
     * then the persisted-index near-dup probe ([[Dedup.nearDupDecisions]]
-    * over [[BandIndex]]'s bucketed tables) for gate survivors only —
+    * over index `prefix`'s masked frames, [[BandIndex.corpusFrames]],
+    * as [[BandIndex.probe]] reads them) for gate survivors only —
     * the production ordering, where the cheap stateless/broadcast
     * checks run first and cut index-probe volume. One verdict row per
     * arrival: 'eval' | 'quality' | 'langid' | 'contaminated' | 'dup'
@@ -274,10 +275,9 @@ object Pipeline {
     * per-doc witness max needs only that doc's candidate rows, all in
     * the doc's own micro-batch. StreamingSpec proves the per-batch
     * form row-identical to this whole-feed core. */
-  private[graft] def admissionCore(s: SparkSession, d: String,
+  private[graft] def admissionCore(s: SparkSession, d: String, prefix: String,
       arrivals: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(s)
-    val prefix = BandIndex.ensurePersisted(s, d)
     val scored = TextAnalysis.LangStopwords.foldLeft(
       arrivals.withColumn("tokens", expr(tokensExpr))) {
       case (df, (lang, words)) =>
@@ -337,10 +337,10 @@ object Pipeline {
         col("doc_id").as("batch_doc"), col("gate").as("verdict"),
         lit(null).cast("bigint").as("dup_of"),
         lit(null).cast("double").as("est_jaccard"))
+    val (bands, sigs) = BandIndex.corpusFrames(s, prefix, None)
     val probe = Dedup.nearDupDecisions(
       gated.filter(col("gate").isNull).select(col("doc_id"), col("text"), col("ts")),
-      s.table(BandIndex.bandsTable(prefix)),
-      s.table(BandIndex.sigsTable(prefix)))
+      bands, sigs)
       .select(col("window_start"), col("batch_doc"),
         when(col("dup_of").isNotNull, "dup").otherwise("admit").as("verdict"),
         col("dup_of"), col("est_jaccard"))

@@ -1474,7 +1474,7 @@ object Similarity {
     // dataflow itself is oracle-mirrored (assignment rank, decimal-
     // exact means, empty-cell retention), so the gate hashes the
     // TRAINING, not just the search. Recall lift vs the seed
-    // quantizer is measured by tools/IvfTrainProbe (SCALE_NOTES).
+    // quantizer: SCALE_NOTES "Round-12: trained coarse quantizer".
     "sim21_trained_ivf" -> ((s, d) => {
       VectorExprs.register(s)
       val e = Tables.embeddings(s, d)

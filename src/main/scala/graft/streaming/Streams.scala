@@ -905,7 +905,8 @@ object Streams {
       val arrivals = graft.Tables.documents(s, d)
         .filter(col("source") === graft.ops.Dedup.IncBatchSrc)
         .select(col("doc_id"), col("lang"), col("text"), arrivalTs("doc_id"))
-      graft.ops.Pipeline.admissionCore(s, d, arrivals).orderBy("batch_doc")
+      graft.ops.Pipeline.admissionCore(s, d, graft.ops.BandIndex.ensurePersisted(s, d), arrivals)
+        .orderBy("batch_doc")
     })
   )
 

@@ -786,30 +786,58 @@ class StreamingSpec extends SparkSpec {
     docs.filter(col("doc_id") % 2 =!= 0).coalesce(1).write.parquet(s"$srcDir/part_b")
     stamp("part_b")
 
-    val streamed = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Any])]
-    var batches = 0
-    val stream = spark.readStream
-      .schema(spark.read.parquet(s"$srcDir/part_a").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$srcDir/part_*")
-    val q = stream.writeStream
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val rows = graft.ops.Pipeline.admissionCore(spark, sf, df.localCheckpoint())
-          .collect()
-        streamed.synchronized {
-          batches += 1
-          streamed ++= rows.map(r => (r.getLong(1), r.toSeq))
+    // the verdict rows of one stream over the two parts, against index prefix
+    def streamedVerdicts(prefix: String): Seq[Seq[Any]] = {
+      val streamed = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Any])]
+      var batches = 0
+      val stream = spark.readStream
+        .schema(spark.read.parquet(s"$srcDir/part_a").schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$srcDir/part_*")
+      val q = stream.writeStream
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+          val rows = graft.ops.Pipeline.admissionCore(spark, sf, prefix, df.localCheckpoint())
+            .collect()
+          streamed.synchronized {
+            batches += 1
+            streamed ++= rows.map(r => (r.getLong(1), r.toSeq))
+          }
+          ()
         }
-        ()
-      }
-      .start()
+        .start()
+      try {
+        q.processAllAvailable()
+        assert(batches == 2, s"expected exactly 2 micro-batches, got $batches")
+        streamed.sortBy(_._1).map(_._2).toSeq
+      } finally q.stop()
+    }
+    val BI = graft.ops.BandIndex
+    assert(streamedVerdicts(BI.ensurePersisted(spark, sf)) == batch.map(_.toSeq).toSeq,
+      "per-micro-batch admission verdicts diverge from the batch core")
+
+    // one more input: a tombstoned corpus doc that was some admitted
+    // batch doc's dup_of stops being one, exactly as in BandIndex.probe
+    import spark.implicits._
+    val retiredIdx = BI.ensurePersisted(spark, sf, "st15_retired")
     try {
-      q.processAllAvailable()
-      assert(batches == 2, s"expected exactly 2 micro-batches, got $batches")
-      val got = streamed.sortBy(_._1).map(_._2).toSeq
-      assert(got == batch.map(_.toSeq).toSeq,
-        "per-micro-batch admission verdicts diverge from the batch core")
-    } finally q.stop()
+      val dupOf = batch.filter(_.getString(2) == "dup").map(_.getAs[Number](3).longValue)
+        .distinct.sorted
+      assert(dupOf.nonEmpty, "no admitted batch doc has a near-duplicate to retire")
+      BI.retireTombstone(spark, retiredIdx, Seq(dupOf.head).toDF("doc_id"))
+      val masked = BI.probe(spark, sf, retiredIdx)
+        .select("batch_doc", "dup_of", "est_jaccard").collect()
+        .map(r => r.getAs[Number](0).longValue -> r.toSeq.tail).toMap
+      val retired = streamedVerdicts(retiredIdx)
+      assert(!retired.exists(r => r(3) != null && r(3).asInstanceOf[Number].longValue == dupOf.head),
+        s"the stream still resolves a batch doc to tombstoned doc ${dupOf.head}")
+      val probed = retired.filter(r => r(2) == "dup" || r(2) == "admit")
+      assert(probed.exists(_(2) == "dup"), "no probed doc kept a near-duplicate")
+      probed.foreach { r =>
+        val id = r(1).asInstanceOf[Number].longValue
+        assert(masked.get(id).forall(_ == r.drop(3)) && (r(2) == "admit" || masked.contains(id)),
+          s"admission of doc $id diverges from BandIndex.probe after a tombstone: $r vs ${masked.get(id)}")
+      }
+    } finally BI.drop(spark, retiredIdx)
   }
 
   test("streaming hybrid search equals the batch core per micro-batch (st18)") {
