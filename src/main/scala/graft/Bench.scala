@@ -519,7 +519,7 @@ object Bench {
     // degraded-host trigger compares the GRADED phases instead, so a
     // bandwidth wobble on dd17's 8 s of fixture writes can neither
     // trip the guard nor hide a real probe/compact regression.
-    val phases = graft.tools.Phases.json()
+    val phases = graft.Phases.json()
     val priorPhases = prior.map(extractPhases).getOrElse(Map.empty)
     val gradedRatio = gradedCommonRatio(results, priorQueries,
       extractPhases(s"""{"phases":$phases}"""), priorPhases)

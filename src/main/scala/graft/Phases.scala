@@ -1,4 +1,4 @@
-package graft.tools
+package graft
 
 /** Per-phase wall-time registry for the maintenance-cycle catalog
   * entries (round-10 VERDICT item 3): dd16/dd17/dd18/st07/st08 and

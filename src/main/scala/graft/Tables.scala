@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * semantics the engine relies on (SURVEY.md §7.5):
   *
   *   - ANSI OFF by default (round-11 claw-back of the round-10
-  *     ANSI-on flip): tools/LaneSweep measured ANSI-on at a uniform
+  *     ANSI-on flip): an ABBA lane sweep measured ANSI-on at a uniform
   *     **+9.2% warm** across the 69-query headline on a
   *     healthy-calibrated host (ABBA lane order, min-per-lane;
   *     SCALE_NOTES "Round-11: the ANSI lane tax") — the round-10

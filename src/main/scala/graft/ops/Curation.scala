@@ -686,33 +686,10 @@ object Curation {
     // the choice exactly.
     "ds11_contrastive_pairs" -> ((s, d) => {
       graft.functions.VectorExprs.register(s)
-      val e = Tables.embeddings(s, d)
-        .groupBy("embedding").agg(min(col("vec_id")).as("vec_id"))
-        .select("vec_id", "embedding")
-      // HASH-SAMPLED centroid pool (round 14, r13 ADVICE): the old
-      // `vec_id < ncells` rule shrank on dup-heavy corpora (canonical
-      // ids are sparse, so the sub-ncells pool under-fills and cells
-      // grow past √n). Rank-based selection would need a GLOBAL
-      // row_number over the canonical corpus — a single-partition
-      // pass at 100 TB — so instead each canonical row self-selects
-      // with probability ncells/n via the portable hash: expected
-      // pool size is exactly ncells regardless of id density, fully
-      // distributed, and the oracle replays the same md5 arithmetic.
-      // The min-id row is always included so a tiny fixture can
-      // never draw an empty pool.
-      val nc = e.agg(
-        ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("ncells"),
-        count(lit(1)).as("n"), min(col("vec_id")).as("mid"))
-      val cents = e.crossJoin(broadcast(nc))
-        .filter(expr(s"${Portable.phashExpr("concat('ct|', CAST(vec_id AS STRING))")} % n")
-          < col("ncells") || col("vec_id") === col("mid"))
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assigned = e.crossJoin(broadcast(cents))
-        .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id")
-            .orderBy(col("cos_c").desc, col("cent_id").asc)))
-        .filter(col("crn") === 1)
+      val e = Similarity.canonicalEmbeddings(s, d)
+      // the hash-sampled ~√n-cell pool dd14 assigns against
+      val assigned = VecIndex.nearestCells(e, "vec_id", "embedding",
+          Similarity.hashSampledCentroids(e))(_ === 1)
         .select(col("vec_id"), col("cent_id").as("cluster"), col("cos_c"))
       // per-anchor candidate CAP (see [[Ds11CandCap]]): candidates are
       // the cell's top-C members by quantizer residual — |cell|·C

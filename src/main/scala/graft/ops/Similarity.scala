@@ -327,85 +327,117 @@ object Similarity {
 
   private def twoLevelScored(e: DataFrame): DataFrame = twoLevelParts(e)._3
 
-  /** Flat-IVF ANN (sim04's body), parameterized on query count and k
-    * for the widened recall instruments; defaults reproduce the sim04
-    * catalog plan byte for byte. */
-  private[graft] def ivfAnn(s: SparkSession, d: String,
-      nQ: Long = KnnQueries, k: Int = LshK): DataFrame = {
-    VectorExprs.register(s)
-    val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-    val cents = e.filter(col("vec_id") < IvfCentroids)
+  /** The corpus deduplicated to one (vec_id, embedding) row per
+    * distinct vector, its min vec_id: exact duplicates are dd01's job,
+    * and a copy-set of size m would otherwise multiply its cells' pair
+    * work by m² (dd06, dd08, ds11). */
+  private[ops] def canonicalEmbeddings(s: SparkSession, d: String): DataFrame =
+    Tables.embeddings(s, d).select("vec_id", "embedding")
+      .groupBy("embedding").agg(min(col("vec_id")).as("vec_id"))
+      .select("vec_id", "embedding")
+
+  /** A ~⌈√n⌉-row (cent_id, ce) centroid pool HASH-SAMPLED from `e`
+    * (vec_id, embedding) (dd14, ds11; round 14, r13 ADVICE). The old
+    * `vec_id < ncells` rule shrank on dup-heavy corpora: canonical ids
+    * are sparse, so the pool under-fills and cells grow past √n.
+    * Rank-based selection would need a GLOBAL row_number — a
+    * single-partition pass at 100 TB — so each row self-selects with
+    * probability ncells/n via the portable hash: the expected pool is
+    * ncells regardless of id density, fully distributed, no collect,
+    * and the oracle replays the same md5 arithmetic. The min-id row is
+    * always included, so a tiny fixture never draws an empty pool. */
+  private[ops] def hashSampledCentroids(e: DataFrame): DataFrame = {
+    val nc = e.agg(
+      ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("ncells"),
+      count(lit(1)).as("n"), min(col("vec_id")).as("mid"))
+    e.crossJoin(broadcast(nc))
+      .filter(expr(s"${Portable.phashExpr("concat('ct|', CAST(vec_id AS STRING))")} % n")
+        < col("ncells") || col("vec_id") === col("mid"))
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-    val scored = e.crossJoin(broadcast(cents))
-      .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-      .withColumn("crn", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("cos_c").desc, col("cent_id").asc)))
-    val assigned = scored.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cent_id").as("cluster"), col("embedding"))
-    val probes = scored.filter(col("vec_id") < nQ && col("crn") <= IvfNProbe)
-      .select(col("vec_id").as("query_id"), col("cent_id").as("cluster"),
-        col("embedding").as("qe"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    assigned.join(broadcast(probes), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .withColumn("cos", expr("cosine_sim(qe, embedding)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cluster"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
   }
 
+  /** Near-duplicate pairs within shared cells (dd06, dd08, dd14):
+    * `assigned` (vec_id, `keys`…) self-joined on every key with
+    * a.vec_id < b.vec_id, deduplicated while the pairs carry only
+    * 8-byte ids (a multi-assigned pair sharing two cells pairs once;
+    * vector payloads never hash), then one re-join to `e` (vec_id,
+    * embedding) scores them. Pairs at cosine ≥ [[DupThreshold]]
+    * survive as (vec_a, vec_b, cos). */
+  private def cellPairs(assigned: DataFrame, keys: Seq[String], e: DataFrame): DataFrame =
+    assigned.as("a").join(assigned.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
+      .distinct()
+      .join(e.toDF("vec_a", "ea"), "vec_a")
+      .join(e.toDF("vec_b", "eb"), "vec_b")
+      .withColumn("cos", expr("cosine_sim(ea, eb)"))
+      .filter(col("cos") >= DupThreshold)
+
+  /** dd06/dd08's output: [[cellPairs]] rounded and ordered. */
+  private def dupPairs(assigned: DataFrame, keys: Seq[String], e: DataFrame): DataFrame =
+    cellPairs(assigned, keys, e)
+      .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cosine"))
+      .orderBy("vec_a", "vec_b")
+
+  /** Flat-IVF ANN (sim04's body): [[VecIndex.probe]]'s kernel over the
+    * in-session seed-centroid assignment, parameterized on query count
+    * and k for the hybrid instrument; defaults are the catalog's. */
+  private[graft] def ivfAnn(s: SparkSession, d: String,
+      nQ: Long = KnnQueries, k: Int = LshK): DataFrame =
+    VecIndex.transientProbe(s, d, Tables.embeddings(s, d).select("vec_id", "embedding"),
+      VecIndex.centroids(s, d), nQ, k)
+
   /** Brute-force cosine top-k (sim01's body), parameterized on query
-    * count and k so the recall instruments (tools/OpqProbe, round-14
-    * power-up) can run the SAME kernel over ≥100 queries at k=10
-    * instead of the catalog's 5×5. Defaults reproduce the sim01
-    * catalog plan byte for byte. */
+    * count and k so OpqSpec's recall check can run the SAME kernel
+    * over ≥100 queries at k=10 instead of the catalog's 5×5: the
+    * broadcast query batch against every other vector, then
+    * [[VecIndex.batchTopK]]. */
   private[graft] def bruteKnn(s: SparkSession, d: String,
       nQ: Long = KnnQueries, k: Int = KnnK): DataFrame = {
     VectorExprs.register(s)
-    val e = Tables.embeddings(s, d)
-    val q = e.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val t = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("te"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    t.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", expr("cosine_sim(qe, te)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+    val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+    VecIndex.batchTopK(e.join(broadcast(queryBatch(e, nQ)), col("vec_id") =!= col("query_id")),
+      VecIndex.Cosine.copy(k = k), VecIndex.cosineScore, Nil)
   }
 
-  /** sim25's fusion, parameterized for the recall instrument: RRF of
-    * the IVF lane and the multi-probe LSH lane, each asked for k
-    * candidates, fused top-k returned. Catalog defaults reproduce
-    * sim25's plan. */
-  private[graft] def rrfFused(s: SparkSession, d: String,
-      nQ: Long = KnnQueries, k: Int = FusionTopK,
-      laneK: Int = LshK): DataFrame = {
-    def ranked(lane: DataFrame, out: String): DataFrame = lane
-      .withColumn(out, row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .select(col("query_id"), col("neighbor_id"), col(out))
-    val a = ranked(ivfAnn(s, d, nQ, laneK), "ra")
-    val b = ranked(lshAnn(s, d, LshMultiProbes, nQ, laneK), "rb")
-    val fused = a.join(b, Seq("query_id", "neighbor_id"), "full_outer")
+  /** The first `nQ` vectors of `e` as the (query_id, qe) query batch. */
+  private def queryBatch(e: DataFrame, nQ: Long): DataFrame =
+    e.filter(col("vec_id") < nQ)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+
+  /** A cosine lane's (query_id, neighbor_id, cosine) output ranked per
+    * query as `out` by (cosine desc, neighbor_id asc) — the rounded
+    * output, so both engines rank identical keys. */
+  private def laneRank(lane: DataFrame, out: String): DataFrame = lane
+    .withColumn(out, row_number().over(
+      Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id").asc)))
+    .select(col("query_id"), col("neighbor_id"), col(out))
+
+  /** Reciprocal-rank fusion of two ranked lanes (query_id, `item`, ra)
+    * and (query_id, `item`, rb): Σ 1/(RrfK + rank) over the lanes that
+    * surfaced the item (a full outer join), top-`k` per query by (rrf
+    * desc, item asc), as (query_id, rk, `item`, ra, rb, rrf). */
+  private def rrf(a: DataFrame, b: DataFrame, item: String, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("rrf").desc, col(item).asc)
+    a.join(b, Seq("query_id", item), "full_outer")
       .withColumn("rrf", expr(
         s"""coalesce(CAST(1 AS DOUBLE) / CAST($RrfK + ra AS DOUBLE), 0.0)
            | + coalesce(CAST(1 AS DOUBLE) / CAST($RrfK + rb AS DOUBLE), 0.0)"""
           .stripMargin))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("rrf").desc, col("neighbor_id").asc)
-    fused.withColumn("rk", row_number().over(w))
+      .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk").cast("int").as("rk"),
-        col("neighbor_id"), col("ra").cast("int").as("ra"),
+        col(item), col("ra").cast("int").as("ra"),
         col("rb").cast("int").as("rb"), round(col("rrf"), 6).as("rrf"))
       .orderBy("query_id", "rk")
   }
+
+  /** sim25's fusion: RRF of the IVF lane and the multi-probe LSH
+    * lane. */
+  private def rrfFused(s: SparkSession, d: String): DataFrame =
+    rrf(laneRank(ivfAnn(s, d), "ra"),
+      laneRank(lshAnn(s, d, LshMultiProbes), "rb"), "neighbor_id", FusionTopK)
 
   // ------------------------------------------------------------------
   // Hybrid-relevance instrument kernels (round 15, VERDICT item 2):
@@ -418,8 +450,8 @@ object Similarity {
   // (Jaccard) rank and the exact cosine rank, missing-overlap
   // contribution zero, RRF's own convention — and each lane plus the
   // fusion is graded recall@k against it at statistical power
-  // (tools/HybridProbe: 128 q × k=10, binomial CIs; the OpqProbe
-  // pattern). HybridFusionSpec pins fused ≥ best-single-lane − CI.
+  // (HybridProbe.measure: 128 q × k=10, binomial CIs).
+  // HybridFusionSpec pins fused ≥ best-single-lane − CI.
   // ------------------------------------------------------------------
 
   /** Lexical lane: BM25 "more-like-this" — tx15's scoring kernel with
@@ -482,8 +514,7 @@ object Similarity {
     VectorExprs.register(s)
     // exact cosine rank over the full corpus
     val e = Tables.embeddings(s, d)
-    val q = e.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+    val q = queryBatch(e, nQ)
     val wv = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("item_id").asc)
     val vecRank = e.select(col("vec_id").as("item_id"), col("embedding").as("te"))
@@ -528,102 +559,23 @@ object Similarity {
     * lane (each asked for laneK), fused top-k. The catalog's
     * sim26/st18 run the same decisions over the fixed workload. */
   private[graft] def hybridFused(s: SparkSession, d: String,
-      nQ: Long, k: Int, laneK: Int): DataFrame = {
-    val a = bm25MoreLikeThis(s, d, nQ, laneK)
-    val b = ivfAnn(s, d, nQ, laneK)
-      .withColumn("rb", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .select(col("query_id"), col("neighbor_id").as("item_id"), col("rb"))
-    val fused = a.join(b, Seq("query_id", "item_id"), "full_outer")
-      .withColumn("rrf", expr(
-        s"""coalesce(CAST(1 AS DOUBLE) / CAST($RrfK + ra AS DOUBLE), 0.0)
-           | + coalesce(CAST(1 AS DOUBLE) / CAST($RrfK + rb AS DOUBLE), 0.0)"""
-          .stripMargin))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("rrf").desc, col("item_id").asc)
-    fused.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      nQ: Long, k: Int, laneK: Int): DataFrame =
+    rrf(bm25MoreLikeThis(s, d, nQ, laneK).drop("bm25"),
+      laneRank(ivfAnn(s, d, nQ, laneK), "rb").withColumnRenamed("neighbor_id", "item_id"),
+      "item_id", k)
       .select("query_id", "item_id")
-  }
 
-  /** SCORE-NORMALIZED CombSUM fusion (round 17, VERDICT r16 item 7 —
-    * the third graded fusion alternative): instead of RRF's
-    * rank-reciprocal blend, normalize each lane's raw score PER QUERY
-    * (z-score or min-max over that query's laneK candidates) and sum.
-    * The hypothesis it tests: this corpus punishes RRF's missing-lane
-    * zero (two pinned negatives — OPQ, lane depth), and a
-    * score-calibrated blend where a missing lane contributes a
-    * NEUTRAL value (z-score 0 = "average candidate") might recover
-    * what rank fusion loses. Graded by tools/HybridProbe at power
-    * against the same blended ground truth; promote-or-pin decided by
-    * the measurement, not assumed. `norm` ∈ {"z", "minmax"}. */
-  private[graft] def hybridFusedScored(s: SparkSession, d: String,
-      nQ: Long, k: Int, laneK: Int, norm: String): DataFrame = {
-    def normalized(df: DataFrame, scoreCol: String, out: String): DataFrame =
-      norm match {
-        case "z" =>
-          val st = df.groupBy("query_id").agg(
-            avg(col(scoreCol)).as("mu"), stddev_samp(col(scoreCol)).as("sd"))
-          df.join(broadcast(st), Seq("query_id"))
-            .withColumn(out, when(col("sd") > 0,
-              (col(scoreCol) - col("mu")) / col("sd")).otherwise(lit(0.0)))
-            .drop("mu", "sd")
-        case "minmax" =>
-          val st = df.groupBy("query_id").agg(
-            min(col(scoreCol)).as("mn"), max(col(scoreCol)).as("mx"))
-          df.join(broadcast(st), Seq("query_id"))
-            .withColumn(out, when(col("mx") > col("mn"),
-              (col(scoreCol) - col("mn")) / (col("mx") - col("mn")))
-              .otherwise(lit(0.0)))
-            .drop("mn", "mx")
-        case other => sys.error(s"unknown normalization: $other")
-      }
-    val a = normalized(bm25MoreLikeThis(s, d, nQ, laneK), "bm25", "na")
-      .select("query_id", "item_id", "na")
-    val b = normalized(
-      ivfAnn(s, d, nQ, laneK)
-        .select(col("query_id"), col("neighbor_id").as("item_id"), col("cosine")),
-      "cosine", "nb")
-      .select("query_id", "item_id", "nb")
-    val fused = a.join(b, Seq("query_id", "item_id"), "full_outer")
-      .withColumn("comb",
-        coalesce(col("na"), lit(0.0)) + coalesce(col("nb"), lit(0.0)))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("comb").desc, col("item_id").asc)
-    fused.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select("query_id", "item_id")
-  }
-
-  /** sim27's body, parameterized on query count / k / candidate
-    * budget so tools/OpqProbe can measure the matryoshka lane at
-    * statistical power (the bruteKnn precedent). Defaults reproduce
-    * the catalog plan byte for byte. */
-  private[graft] def matryoshkaAnn(s: SparkSession, d: String,
-      nQ: Long = KnnQueries, k: Int = KnnK,
-      cand: Int = MatryoshkaCand): DataFrame = {
+  /** sim27's body: [[VecIndex.prefixFunnel]] over the raw embeddings —
+    * the prefix is sliced in-session rather than read as its own
+    * column (sim28). */
+  private def matryoshkaAnn(s: SparkSession, d: String): DataFrame = {
     VectorExprs.register(s)
     val e = Tables.embeddings(s, d)
-    val q = e.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val t = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("te"))
-    val wp = Window.partitionBy("query_id")
-      .orderBy(col("pcos").desc, col("neighbor_id").asc)
-    val cands = t.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("pcos", expr(
-        s"cosine_sim(slice(qe, 1, $MatryoshkaPrefix), slice(te, 1, $MatryoshkaPrefix))"))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= cand)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cands.withColumn("cos", expr("cosine_sim(qe, te)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("pcos"), 6).as("prefix_cosine"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+    VecIndex.prefixFunnel(
+      e.select(col("vec_id").as("neighbor_id"),
+        expr(s"slice(embedding, 1, $MatryoshkaPrefix)").as("pfx")),
+      e.select(col("vec_id").as("neighbor_id"), col("embedding").as("te")),
+      e.filter(col("vec_id") < KnnQueries).select("vec_id", "embedding"))
   }
 
   /** LSH ANN with a probe-count knob: every vector lands in ONE
@@ -635,9 +587,10 @@ object Similarity {
     * exactly one bucket and probe buckets are distinct, so no
     * candidate dedup exchange is needed; candidate cost scales
     * linearly in `probes` while the corpus-side plan (one projection
-    * pass + one bucket aggregate) is shared and unchanged. */
-  private[graft] def lshAnn(s: SparkSession, d: String, probes: Int,
-      nQ: Long = KnnQueries, k: Int = LshK): DataFrame = {
+    * pass + one bucket aggregate) is shared and unchanged. The bucket
+    * is the cell of [[VecIndex.candidates]] and the exact re-rank is
+    * [[VecIndex.batchTopK]]. */
+  private[graft] def lshAnn(s: SparkSession, d: String, probes: Int): DataFrame = {
     VectorExprs.register(s)
     val e = Tables.embeddings(s, d)
     val planesDf = s.sql(planesRelation("array(", ")"))
@@ -651,47 +604,37 @@ object Similarity {
     val buckets = proj
       .withColumn("bit",
         expr("CASE WHEN pdot > 0.0 THEN shiftleft(CAST(1 AS BIGINT), p) ELSE CAST(0 AS BIGINT) END"))
-      .groupBy("vec_id").agg(sum(col("bit")).as("bucket"))
-    val eb = e.join(buckets, "vec_id")
-    val q = eb.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("bucket").as("pbucket"))
+      .groupBy("vec_id").agg(sum(col("bit")).as("cluster"))
+    val eb = e.select("vec_id", "embedding").join(buckets, "vec_id")
+    val q = eb.filter(col("vec_id") < KnnQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cluster"))
     val probeFrame =
       if (probes <= 1) q
       else {
-        val flips = proj.filter(col("vec_id") < nQ)
+        val flips = proj.filter(col("vec_id") < KnnQueries)
           .withColumn("frn", row_number().over(
             Window.partitionBy("vec_id").orderBy(abs(col("pdot")).asc, col("p").asc)))
           .filter(col("frn") <= probes - 1)
           .select(col("vec_id").as("query_id"), col("p"))
         q.unionByName(q.join(flips, "query_id")
           .select(col("query_id"), col("qe"),
-            expr("pbucket ^ shiftleft(CAST(1 AS BIGINT), p)").as("pbucket")))
+            expr("cluster ^ shiftleft(CAST(1 AS BIGINT), p)").as("cluster")))
       }
-    val t = eb.select(col("vec_id").as("neighbor_id"), col("embedding").as("te"),
-      col("bucket"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    t.join(broadcast(probeFrame), col("bucket") === col("pbucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", expr("cosine_sim(qe, te)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("bucket"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+    VecIndex.batchTopK(
+      VecIndex.candidates(s, d, eb, broadcast(probeFrame), VecIndex.Unlabeled),
+      VecIndex.Cosine, VecIndex.cosineScore, Seq(col("cluster").as("bucket")))
   }
 
   /** Two-level IVF ANN with an L1 probe-count knob: `l1probes = 1`
     * is sim06's plan verbatim (queries probe their own L1 cell's
     * [[IvfNProbe]] nearest sub-cells); `l1probes > 1` scores the
     * (tiny) query set against ALL L1 centroids, takes the `l1probes`
-    * nearest cells, and probes each cell's [[IvfNProbe]] nearest
-    * sub-cells — recovering exactly the recall the hierarchical
-    * L1 boundary gives up (the trade sim06's scaladoc states). The
-    * corpus-side assignment is shared and unchanged; candidate cost
-    * scales linearly in `l1probes`. */
-  private[graft] def ivf2Ann(s: SparkSession, d: String, l1probes: Int,
-      nQ: Long = KnnQueries, k: Int = LshK): DataFrame = {
+    * nearest cells ([[VecIndex.nearestCells]]), and probes each
+    * cell's [[IvfNProbe]] nearest sub-cells — recovering exactly the
+    * recall the hierarchical L1 boundary gives up (the trade sim06's
+    * scaladoc states). The corpus-side assignment is shared and
+    * unchanged; candidate cost scales linearly in `l1probes`. */
+  private def ivf2Ann(s: SparkSession, d: String, l1probes: Int): DataFrame = {
     VectorExprs.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val (l1cents, l2cents, scored) = twoLevelParts(e)
@@ -699,17 +642,14 @@ object Similarity {
       .select(col("vec_id"), col("g"), col("sub"), col("embedding"))
     val probes =
       if (l1probes <= 1)
-        scored.filter(col("vec_id") < nQ && col("srn") <= IvfNProbe)
+        scored.filter(col("vec_id") < KnnQueries && col("srn") <= IvfNProbe)
           .select(col("vec_id").as("query_id"), col("g"), col("sub"),
             col("embedding").as("qe"))
       else {
-        val qcells = e.filter(col("vec_id") < nQ)
-          .crossJoin(broadcast(l1cents))
-          .withColumn("cos_g", expr("cosine_sim(embedding, g_ce)"))
-          .withColumn("grn", row_number().over(
-            Window.partitionBy("vec_id").orderBy(col("cos_g").desc, col("g").asc)))
-          .filter(col("grn") <= l1probes)
-          .select(col("vec_id").as("query_id"), col("g"), col("embedding").as("qe"))
+        val qcells = VecIndex.nearestCells(e.filter(col("vec_id") < KnnQueries),
+            "vec_id", "embedding", l1cents.toDF("cent_id", "ce"))(_ <= l1probes)
+          .select(col("vec_id").as("query_id"), col("cent_id").as("g"),
+            col("embedding").as("qe"))
         qcells.join(broadcast(l2cents), Seq("g"))
           .withColumn("cos_s", expr("cosine_sim(qe, s_ce)"))
           .withColumn("srn", row_number().over(
@@ -717,16 +657,32 @@ object Similarity {
           .filter(col("srn") <= IvfNProbe)
           .select(col("query_id"), col("g"), col("sub"), col("qe"))
       }
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    assigned.join(broadcast(probes), Seq("g", "sub"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumnRenamed("vec_id", "neighbor_id")
-      .withColumn("cos", expr("cosine_sim(qe, embedding)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("g").as("l1_cell"),
-        col("sub").as("l2_cell"), round(col("cos"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+    VecIndex.batchTopK(assigned.join(broadcast(probes), Seq("g", "sub"))
+        .filter(col("vec_id") =!= col("query_id")),
+      VecIndex.Cosine, VecIndex.cosineScore,
+      Seq(col("g").as("l1_cell"), col("sub").as("l2_cell")))
+  }
+
+  /** Per-query sim01 ground-truth hits of each (name, lane) on the
+    * query spine, a missing query counting 0 (sim12, sim13; sim11's
+    * shape). Both sides are workload-bounded (|queries| × k), so the
+    * ground truth and every per-query aggregate broadcast. */
+  private def laneHits(s: SparkSession, d: String,
+      lanes: (String, DataFrame)*): DataFrame = {
+    val bf = queries("sim01_knn")(s, d).select("query_id", "neighbor_id")
+      .withColumn("hit", lit(1L))
+    val spine = Tables.embeddings(s, d)
+      .filter(col("vec_id") < KnnQueries)
+      .select(col("vec_id").as("query_id"))
+    lanes.foldLeft(spine) { case (df, (out, lane)) =>
+      df.join(broadcast(lane.select("query_id", "neighbor_id")
+          .join(broadcast(bf), Seq("query_id", "neighbor_id"), "left")
+          .groupBy("query_id")
+          .agg(sum(coalesce(col("hit"), lit(0L))).cast("long").as(out))),
+        Seq("query_id"), "left")
+    }.select(col("query_id") +:
+        lanes.map { case (out, _) => coalesce(col(out), lit(0L)).as(out) }: _*)
+      .orderBy("query_id")
   }
 
   /** Planes as a UNION ALL relation, in the given array-literal
@@ -788,30 +744,12 @@ object Similarity {
     // canonical pair × the exact-dup groups.
     "dd06_cosine_dup" -> ((s, d) => {
       VectorExprs.register(s)
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        .groupBy("embedding").agg(min(col("vec_id")).as("vec_id"))
-        .select("vec_id", "embedding")
+      val e = canonicalEmbeddings(s, d)
       val nc = e.agg(ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("ncells"))
       val cents = e.crossJoin(broadcast(nc)).filter(col("vec_id") < col("ncells"))
         .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assigned = e.crossJoin(broadcast(cents))
-        .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("cos_c").desc, col("cent_id").asc)))
-        .filter(col("crn") <= DupNProbe)
-        .select(col("vec_id"), col("cent_id").as("cluster"))
-      // candidates carry only 8-byte ids; embeddings re-join AFTER the
-      // distinct so the pair dedup never hashes vector payloads
-      val cand = assigned.as("a").join(assigned.as("b"),
-          col("a.cluster") === col("b.cluster") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-        .distinct()
-      cand.join(e.toDF("vec_a", "ea"), "vec_a")
-        .join(e.toDF("vec_b", "eb"), "vec_b")
-        .withColumn("cos", expr("cosine_sim(ea, eb)"))
-        .filter(col("cos") >= DupThreshold)
-        .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cosine"))
-        .orderBy("vec_a", "vec_b")
+      dupPairs(VecIndex.nearestCells(e, "vec_id", "embedding", cents)(_ <= DupNProbe)
+        .select(col("vec_id"), col("cent_id").as("cluster")), Seq("cluster"), e)
     }),
 
     // Two-level (hierarchical) IVF ANN — the next rung above sim04's
@@ -845,23 +783,9 @@ object Similarity {
     // than hidden.
     "dd08_cosine_dup2" -> ((s, d) => {
       VectorExprs.register(s)
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-        .groupBy("embedding").agg(min(col("vec_id")).as("vec_id"))
-        .select("vec_id", "embedding")
-      val assigned = twoLevelScored(e)
-        .filter(col("srn") <= DupNProbe)
-        .select(col("vec_id"), col("g"), col("sub"))
-      val cand = assigned.as("a").join(assigned.as("b"),
-          col("a.g") === col("b.g") && col("a.sub") === col("b.sub") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-        .distinct()
-      cand.join(e.toDF("vec_a", "ea"), "vec_a")
-        .join(e.toDF("vec_b", "eb"), "vec_b")
-        .withColumn("cos", expr("cosine_sim(ea, eb)"))
-        .filter(col("cos") >= DupThreshold)
-        .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cosine"))
-        .orderBy("vec_a", "vec_b")
+      val e = canonicalEmbeddings(s, d)
+      dupPairs(twoLevelScored(e).filter(col("srn") <= DupNProbe)
+        .select(col("vec_id"), col("g"), col("sub")), Seq("g", "sub"), e)
     }),
 
     // SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -886,34 +810,10 @@ object Similarity {
       val all = Tables.embeddings(s, d).select("vec_id", "embedding")
       val canon = all.groupBy("embedding").agg(min(col("vec_id")).as("rep"))
       val reps = canon.select(col("rep").as("vec_id"), col("embedding"))
-      // hash-sampled centroid pool (round 14, r13 ADVICE — shared
-      // rationale with ds11): canonical ids are sparse on dup-heavy
-      // corpora, so `vec_id < ncells` under-fills the pool and cells
-      // grow past √n; self-selection at rate ncells/n keeps the
-      // expected pool at ncells independent of id density, with no
-      // global window and no collect. Min-id fallback guarantees a
-      // non-empty pool on tiny fixtures.
-      val nc = reps.agg(
-        ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("ncells"),
-        count(lit(1)).as("n"), min(col("vec_id")).as("mid"))
-      val cents = reps.crossJoin(broadcast(nc))
-        .filter(expr(s"${Portable.phashExpr("concat('ct|', CAST(vec_id AS STRING))")} % n")
-          < col("ncells") || col("vec_id") === col("mid"))
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assigned = reps.crossJoin(broadcast(cents))
-        .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("cos_c").desc, col("cent_id").asc)))
-        .filter(col("crn") === 1)
-        .select(col("vec_id"), col("cent_id").as("cluster"))
-      val dropped = assigned.as("a").join(assigned.as("b"),
-          col("a.cluster") === col("b.cluster") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"))
-        .join(reps.toDF("va", "ea"), "va")
-        .join(reps.toDF("vb", "eb"), "vb")
-        .withColumn("cos", expr("cosine_sim(ea, eb)"))
-        .filter(col("cos") >= DupThreshold)
-        .groupBy(col("vb").as("vec_id")).agg(min(col("va")).as("sem_dup_of"))
+      val assigned = VecIndex.assignCells(reps, hashSampledCentroids(reps))
+        .select("vec_id", "cluster")
+      val dropped = cellPairs(assigned, Seq("cluster"), reps)
+        .groupBy(col("vec_b").as("vec_id")).agg(min(col("vec_a")).as("sem_dup_of"))
       all.join(canon, "embedding")
         .join(assigned.toDF("rep", "cluster"), "rep")
         .join(dropped.toDF("rep", "sem_dup_of"), Seq("rep"), "left")
@@ -978,8 +878,9 @@ object Similarity {
     // ([[opqPermutation]]) before the subspace split, then the SAME
     // trained-codebook encode+ADC machinery. The permutation training
     // dataflow is oracle-replayed (sim21's discipline); recall lift
-    // vs identity-layout sim07 is measured by tools/OpqProbe
-    // (SCALE_NOTES). ADC output columns match sim07's.
+    // vs identity-layout sim07: SCALE_NOTES "Round-14: recall
+    // instruments at statistical power". ADC output columns match
+    // sim07's.
     "sim24_opq_adc" -> ((s, d) =>
       pqAdcOver(s, opqPermuted(s, d), trained = true)),
 
@@ -1078,19 +979,8 @@ object Similarity {
     "ds12_diverse_topk" -> ((s, d) => {
       VectorExprs.register(s)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < IvfCentroids)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assigned = e.crossJoin(broadcast(cents))
-        .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id")
-            .orderBy(col("cos_c").desc, col("cent_id").asc)))
-        .filter(col("crn") === 1)
-        .select(col("vec_id"), col("cent_id").as("cluster"), col("embedding"))
-      val q = e.filter(col("vec_id") < KnnQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val scored = assigned
-        .join(broadcast(q), col("vec_id") =!= col("query_id"))
+      val scored = VecIndex.assignCells(e, VecIndex.centroids(s, d))
+        .join(broadcast(queryBatch(e, KnnQueries)), col("vec_id") =!= col("query_id"))
         .withColumn("cos", expr("cosine_sim(qe, embedding)"))
       val wq = Window.partitionBy("query_id", "cluster")
         .orderBy(col("cos").desc, col("vec_id").asc)
@@ -1120,10 +1010,8 @@ object Similarity {
     "sim08_range_search" -> ((s, d) => {
       VectorExprs.register(s)
       val e = Tables.embeddings(s, d)
-      val q = e.filter(col("vec_id") < KnnQueries)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
       e.select(col("vec_id").as("neighbor_id"), col("embedding").as("te"))
-        .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+        .join(broadcast(queryBatch(e, KnnQueries)), col("neighbor_id") =!= col("query_id"))
         .withColumn("cos", expr("cosine_sim(qe, te)"))
         .filter(col("cos") >= RangeTau)
         .select(col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cosine"))
@@ -1266,27 +1154,9 @@ object Similarity {
     // relations, so the comparison itself is oracle-hash-checked. At
     // 100 TB this runs on a sampled query set next to sim11 — the
     // retrain/no-retrain decision signal for the index build.
-    "sim12_pq_train_eval" -> ((s, d) => {
-      val bf = queries("sim01_knn")(s, d).select("query_id", "neighbor_id")
-      // workload-bounded frames (|queries| × k) — broadcast both the
-      // ground truth and the per-query aggregates (see sim11)
-      def hits(pq: DataFrame, out: String): DataFrame = pq
-        .select("query_id", "neighbor_id")
-        .join(broadcast(bf.withColumn("hit", lit(1L))),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("long").as(out))
-      val spine = Tables.embeddings(s, d)
-        .filter(col("vec_id") < KnnQueries)
-        .select(col("vec_id").as("query_id"))
-      spine
-        .join(broadcast(hits(pqAdc(s, d, trained = false), "n_hit_seed")), Seq("query_id"), "left")
-        .join(broadcast(hits(pqAdc(s, d, trained = true), "n_hit_trained")), Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hit_seed"), lit(0L)).as("n_hit_seed"),
-          coalesce(col("n_hit_trained"), lit(0L)).as("n_hit_trained"))
-        .orderBy("query_id")
-    }),
+    "sim12_pq_train_eval" -> ((s, d) =>
+      laneHits(s, d, "n_hit_seed" -> pqAdc(s, d, trained = false),
+        "n_hit_trained" -> pqAdc(s, d, trained = true))),
 
     // Does multi-probe pay? — the sim11-shaped evaluation for the
     // round-7 probe knobs: per query, ground-truth hits of the LSH
@@ -1297,31 +1167,11 @@ object Similarity {
     // checked. At 100 TB this runs on a sampled query set next to
     // sim11 — the probe-count tuning signal: probe cost scales
     // linearly, and this table says what recall each step buys.
-    "sim13_multiprobe_recall" -> ((s, d) => {
-      val bf = queries("sim01_knn")(s, d).select("query_id", "neighbor_id")
-      // workload-bounded frames (|queries| × k) — broadcast both the
-      // ground truth and the per-query aggregates (see sim11)
-      def hits(df: DataFrame, out: String): DataFrame = df
-        .select("query_id", "neighbor_id")
-        .join(broadcast(bf.withColumn("hit", lit(1L))),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(sum(coalesce(col("hit"), lit(0L))).cast("long").as(out))
-      val spine = Tables.embeddings(s, d)
-        .filter(col("vec_id") < KnnQueries)
-        .select(col("vec_id").as("query_id"))
-      spine
-        .join(broadcast(hits(lshAnn(s, d, 1), "lsh_hits_p1")), Seq("query_id"), "left")
-        .join(broadcast(hits(lshAnn(s, d, LshMultiProbes), "lsh_hits_mp")), Seq("query_id"), "left")
-        .join(broadcast(hits(ivf2Ann(s, d, 1), "ivf2_hits_p1")), Seq("query_id"), "left")
-        .join(broadcast(hits(ivf2Ann(s, d, Ivf2L1Probes), "ivf2_hits_mp")), Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("lsh_hits_p1"), lit(0L)).as("lsh_hits_p1"),
-          coalesce(col("lsh_hits_mp"), lit(0L)).as("lsh_hits_mp"),
-          coalesce(col("ivf2_hits_p1"), lit(0L)).as("ivf2_hits_p1"),
-          coalesce(col("ivf2_hits_mp"), lit(0L)).as("ivf2_hits_mp"))
-        .orderBy("query_id")
-    }),
+    "sim13_multiprobe_recall" -> ((s, d) =>
+      laneHits(s, d, "lsh_hits_p1" -> lshAnn(s, d, 1),
+        "lsh_hits_mp" -> lshAnn(s, d, LshMultiProbes),
+        "ivf2_hits_p1" -> ivf2Ann(s, d, 1),
+        "ivf2_hits_mp" -> ivf2Ann(s, d, Ivf2L1Probes))),
 
     // sim04's decisions served from the PERSISTED IVF cell table
     // (ops/VecIndex): the corpus × centroids assignment pass — the
@@ -1430,15 +1280,8 @@ object Similarity {
       import org.apache.spark.sql.functions.{log => ln, pmod, sum, when}
       import org.apache.spark.sql.types.{DecimalType, DoubleType}
       VectorExprs.register(s)
-      val e = Tables.embeddings(s, d).select("vec_id", "embedding")
-      val cents = e.filter(col("vec_id") < IvfCentroids)
-        .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
-      val assigned = e.crossJoin(broadcast(cents))
-        .withColumn("cos_c", expr("cosine_sim(embedding, ce)"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("cos_c").desc, col("cent_id").asc)))
-        .filter(col("crn") === 1)
-        .select(col("vec_id"), col("cent_id").as("cluster"))
+      val assigned = VecIndex.assignCells(
+        Tables.embeddings(s, d).select("vec_id", "embedding"), VecIndex.centroids(s, d))
       // the batch boundary: a dense-id modulo (oracle-expressible —
       // the hash split the lifecycle fixtures use has no DuckDB
       // mirror; vec_ids are dense so the quarter is the same size)
@@ -1475,48 +1318,11 @@ object Similarity {
     // exact means, empty-cell retention), so the gate hashes the
     // TRAINING, not just the search. Recall lift vs the seed
     // quantizer: SCALE_NOTES "Round-12: trained coarse quantizer".
-    "sim21_trained_ivf" -> ((s, d) => {
-      VectorExprs.register(s)
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      val cents = ivfTrainedCentroids(s, d)
-      val scored = e.crossJoin(broadcast(cents))
-        .withColumn("cos_c", expr("cosine_sim(emb, ce)"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("cos_c").desc, col("cent_id").asc)))
-      val assigned = scored.filter(col("crn") === 1)
-        .select(col("vec_id"), col("cent_id").as("cluster"), col("emb"))
-      val probes = scored.filter(col("vec_id") < KnnQueries && col("crn") <= IvfNProbe)
-        .select(col("vec_id").as("query_id"), col("cent_id").as("cluster"),
-          col("emb").as("qe"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id").asc)
-      assigned.join(broadcast(probes), Seq("cluster"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumnRenamed("vec_id", "neighbor_id")
-        .withColumn("cos", expr("cosine_sim(qe, emb)"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= LshK)
-        .select(col("query_id"), col("neighbor_id"), col("cluster"),
-          round(col("cos"), 6).as("cosine"))
-        .orderBy("query_id", "neighbor_id")
-    })
+    "sim21_trained_ivf" -> ((s, d) =>
+      VecIndex.transientProbe(s, d, Tables.embeddings(s, d).select("vec_id", "embedding"),
+        ivfTrainedCentroids(s, d), KnnQueries, LshK))
   )
 
-  /** Per-subspace Lloyd-trained PQ codebook: [[PqTrainIters]]
-    * deterministic iterations from the first-[[PqK]] seed. Returns
-    * one row per code with the full-[[Dims]] `array<double>`
-    * codeword (subspace codewords concatenated in m order), the
-    * layout [[pqAdc]] slices. Assignment ranks by (sq_dist, code) —
-    * a total order, no engine-left ties; update is the decimal-exact
-    * per-dim mean (Tables.dsum scale 8, the sim03 convention); a
-    * codeword that attracts no vectors RETAINS its previous value
-    * (the standard empty-cluster rule, and the deterministic one).
-    * Scale: each iteration is one broadcast-join scan (n·M·K fused
-    * codegen distances) + one posexplode aggregate of n·SubDims rows
-    * — the same shapes sim04/sim03 already run; the codebook frame
-    * itself is M·K rows, always broadcast-size. */
   /** Lloyd-trained coarse quantizer (round 12, VERDICT r11 item 5):
     * the IVF centroid set trained with the SAME bounded-iteration
     * discipline the PQ codebooks get, instead of the first-K seed
@@ -1534,23 +1340,17 @@ object Similarity {
     * trained lane is itself oracle-mirrored end to end (sim21Sql). */
   private[graft] def ivfTrainedCentroids(s: SparkSession, d: String): DataFrame = {
     VectorExprs.register(s)
-    val e2 = Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    var cents = e2.filter(col("vec_id") < IvfCentroids)
-      .select(col("vec_id").as("cent_id"), col("emb").as("ce"))
+    val e = Tables.embeddings(s, d).select("vec_id", "embedding")
+    var cents = e.filter(col("vec_id") < IvfCentroids)
+      .select(col("vec_id").as("cent_id"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("ce"))
       .localCheckpoint()
     (1 to IvfTrainIters).foreach { _ =>
-      val assigned = e2.crossJoin(broadcast(cents))
-        .withColumn("cos_c", expr("cosine_sim(emb, ce)"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("cos_c").desc, col("cent_id").asc)))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cent_id"))
-      val means = assigned.join(e2, "vec_id")
-        .select(col("cent_id"), posexplode(col("emb")).as(Seq("pos", "v")))
+      val means = VecIndex.assignCells(e, cents)
+        .select(col("cluster").as("cent_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy("cent_id", "pos")
-        .agg((Tables.dsum(col("v"), 8) / count(lit(1)).cast("double")).as("mean"))
+        .agg((Tables.dsum(col("v").cast("double"), 8) / count(lit(1)).cast("double"))
+          .as("mean"))
       val grouped = means.groupBy("cent_id")
         .agg(expr("transform(array_sort(collect_list(struct(pos, mean))), t -> t.mean)")
           .as("ce_new"))
@@ -1561,25 +1361,9 @@ object Similarity {
     cents
   }
 
-  /** OPQ-lite rotation for the PQ path (sim24; round-12 VERDICT item
-    * 6): the OPQ paper's *eigenvalue-allocation* initialization,
-    * computed on raw per-dimension variances — dimensions ranked by
-    * variance descending and dealt to the [[PqM]] subspaces in a
-    * snake draft, so every subspace receives an equal share of the
-    * high-variance dims instead of whatever contiguous slice the raw
-    * layout happened to put there. A PERMUTATION is an orthonormal
-    * rotation this engine can replay in the DuckDB oracle move for
-    * move (variance moments → rank → slot arithmetic), which a full
-    * eigenbasis cannot (it needs an iterative eigensolver — a
-    * driver/BLAS job, not a dataflow; sim09 already publishes the
-    * full covariance for a driver-side OPQ if one is ever wanted).
-    * Per-dim variances use the sim10 moment convention
-    * (decimal-exact sums, bit-identical across engines), so the
-    * rank order — and therefore the permutation — is deterministic
-    * and oracle-shared. Returns (newpos, orig), both 0-based. */
   /** Per-dimension corpus variances as a Dims-row frame (dim 0-based,
     * var) — the sim10 decimal moment convention, shared by the
-    * permutation build and tools/OpqProbe's balance diagnostic. */
+    * permutation build and OpqSpec's balance check. */
   private[graft] def dimVarianceFrame(s: SparkSession, d: String): DataFrame = {
     VectorExprs.register(s)
     Tables.embeddings(s, d)
@@ -1598,6 +1382,22 @@ object Similarity {
     dimVarianceFrame(s, d).collect()
       .map(r => (r.getInt(0), r.getDouble(1))).toSeq
 
+  /** OPQ-lite rotation for the PQ path (sim24; round-12 VERDICT item
+    * 6): the OPQ paper's *eigenvalue-allocation* initialization,
+    * computed on raw per-dimension variances — dimensions ranked by
+    * variance descending and dealt to the [[PqM]] subspaces in a
+    * snake draft, so every subspace receives an equal share of the
+    * high-variance dims instead of whatever contiguous slice the raw
+    * layout happened to put there. A PERMUTATION is an orthonormal
+    * rotation this engine can replay in the DuckDB oracle move for
+    * move (variance moments → rank → slot arithmetic), which a full
+    * eigenbasis cannot (it needs an iterative eigensolver — a
+    * driver/BLAS job, not a dataflow; sim09 already publishes the
+    * full covariance for a driver-side OPQ if one is ever wanted).
+    * Per-dim variances use the sim10 moment convention
+    * (decimal-exact sums, bit-identical across engines), so the
+    * rank order — and therefore the permutation — is deterministic
+    * and oracle-shared. Returns (newpos, orig), both 0-based. */
   private[graft] def opqPermutation(s: SparkSession, d: String): DataFrame = {
     // 64 rows: the unpartitioned window is Dims-bounded, never corpus
     val cycle = 2 * PqM
@@ -1631,6 +1431,19 @@ object Similarity {
         expr("transform(p, i -> CAST(fe[i] AS DOUBLE))").as("embedding"))
   }
 
+  /** Per-subspace Lloyd-trained PQ codebook: [[PqTrainIters]]
+    * deterministic iterations from the first-[[PqK]] seed. Returns
+    * one row per code with the full-[[Dims]] `array<double>`
+    * codeword (subspace codewords concatenated in m order), the
+    * layout [[pqAdc]] slices. Assignment ranks by (sq_dist, code) —
+    * a total order, no engine-left ties; update is the decimal-exact
+    * per-dim mean (Tables.dsum scale 8, the sim03 convention); a
+    * codeword that attracts no vectors RETAINS its previous value
+    * (the standard empty-cluster rule, and the deterministic one).
+    * Scale: each iteration is one broadcast-join scan (n·M·K fused
+    * codegen distances) + one posexplode aggregate of n·SubDims rows
+    * — the same shapes sim04/sim03 already run; the codebook frame
+    * itself is M·K rows, always broadcast-size. */
   private[graft] def pqTrainedCodebook(s: SparkSession, d: String): DataFrame =
     pqTrainedCodebookOver(s,
       Tables.embeddings(s, d).select("vec_id", "embedding"))
@@ -1698,45 +1511,17 @@ object Similarity {
   private[graft] def pqAdcOver(s: SparkSession, e: DataFrame,
       trained: Boolean, nQ: Long = KnnQueries, k: Int = KnnK): DataFrame = {
     VectorExprs.register(s)
+    // broadcast hint inside pqEncode/adcTopK: the trained codebook
+    // arrives from an aggregation whose size estimate is unknown to
+    // the planner — without it the K-row frame plans as a BNLJ build
     val cb =
       if (trained) pqTrainedCodebookOver(s, e)
       else e.filter(col("vec_id") < PqK)
         .select(col("vec_id").as("code"), col("embedding").as("cw"))
-    def sub(c: String, m: Int) = s"slice($c, ${m * PqSubDims + 1}, $PqSubDims)"
-    val scored = (0 until PqM).foldLeft(e.crossJoin(broadcast(cb))) { (df, m) =>
-      df.withColumn(s"d$m", expr(s"sq_dist(${sub("embedding", m)}, ${sub("cw", m)})"))
-    }
-    val aggCols = (0 until PqM).map(m =>
-      min(struct(col(s"d$m").as("d"), col("code").as("code"))).as(s"b$m"))
-    val codes = scored.groupBy("vec_id")
-      .agg(aggCols.head, aggCols.tail: _*)
-      .select(col("vec_id") +:
-        (0 until PqM).map(m => col(s"b$m.code").as(s"c$m")): _*)
-    val q = e.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val qtabs = (0 until PqM).map { m =>
-      // broadcast hint: the trained codebook arrives from an
-      // aggregation whose size estimate is unknown to the planner —
-      // without the hint the K-row frame plans as a BNLJ build side
-      q.crossJoin(broadcast(cb))
-        .select(col("query_id").as(s"q$m"), col("code").as(s"qc$m"),
-          expr(s"sq_dist(${sub("qe", m)}, ${sub("cw", m)})").as(s"qd$m"))
-    }
-    val joined = (1 until PqM).foldLeft(
-      codes.join(broadcast(qtabs(0)), col("c0") === col("qc0"))
-        .withColumnRenamed("q0", "query_id")) { (df, m) =>
-      df.join(broadcast(qtabs(m)),
-        col("query_id") === col(s"q$m") && col(s"c$m") === col(s"qc$m"))
-    }
-    val w = Window.partitionBy("query_id").orderBy(col("adc").asc, col("vec_id").asc)
-    joined
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", expr("qd0 + qd1 + qd2 + qd3"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("adc"), 6).as("adc_dist"))
-      .orderBy("query_id", "neighbor_id")
+    val q = queryBatch(e, nQ)
+    VecIndex.adcTopK(VecIndex.pqEncode(e, cb).crossJoin(broadcast(q.select("query_id")))
+        .filter(col("vec_id") =!= col("query_id")),
+      q, cb, k, Nil)
   }
 
   /** Round-4 explode formulation of sim09, kept as the parity
@@ -1798,8 +1583,6 @@ object Similarity {
       .limit(MahalTopK)
   }
 
-  /** sim01/sim04 oracle texts, extracted so sim11's evaluation
-    * oracle nests the exact relations it grades. */
   /** Parameterized LSH-ANN oracle — mirrors [[lshAnn]] step for step
     * (projection pass, sign-bit buckets, lowest-|pdot| bit flips,
     * within-bucket exact re-rank). */
@@ -2273,29 +2056,11 @@ object Similarity {
     * hash-checks cannot diverge). `bmRanked` carries tx15's output
     * shape (query_id, rk, doc_id, …); `vecLane` carries the IVF
     * decision shape (query_id, neighbor_id, cluster, cosine). */
-  private def fuseHybridLanes(bmRanked: DataFrame, vecLane: DataFrame): DataFrame = {
-    val bm = bmRanked
-      .select(col("query_id").cast("bigint").as("query_id"),
-        col("doc_id").as("item_id"), col("rk").as("ra"))
-    val vr = vecLane
-      .withColumn("rb", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .select(col("query_id"), col("neighbor_id").as("item_id"), col("rb"))
-    val fused = bm.join(vr, Seq("query_id", "item_id"), "full_outer")
-      .withColumn("rrf", expr(
-        s"""coalesce(CAST(1 AS DOUBLE) / CAST($RrfK + ra AS DOUBLE), 0.0)
-           | + coalesce(CAST(1 AS DOUBLE) / CAST($RrfK + rb AS DOUBLE), 0.0)"""
-          .stripMargin))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("rrf").desc, col("item_id").asc)
-    fused.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= FusionTopK)
-      .select(col("query_id"), col("rk").cast("int").as("rk"),
-        col("item_id"), col("ra").cast("int").as("ra"),
-        col("rb").cast("int").as("rb"), round(col("rrf"), 6).as("rrf"))
-      .orderBy("query_id", "rk")
-  }
+  private def fuseHybridLanes(bmRanked: DataFrame, vecLane: DataFrame): DataFrame =
+    rrf(bmRanked.select(col("query_id").cast("bigint").as("query_id"),
+        col("doc_id").as("item_id"), col("rk").as("ra")),
+      laneRank(vecLane, "rb").withColumnRenamed("neighbor_id", "item_id"),
+      "item_id", FusionTopK)
 
   /** sim26's hybrid-fusion oracle — shared verbatim by sim29 (the
     * doubly-persisted serving lane makes identical decisions). */

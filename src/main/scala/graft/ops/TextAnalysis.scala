@@ -675,8 +675,7 @@ object TextAnalysis {
     * corpus. */
   /** The initial distinct-word table: (w, freq, repr) with repr the
     * per-character delimiter-split representation. PURE PLAN — callers
-    * checkpoint (tx13 via [[bpeTrainWords]]; tools/BpeDeep rolls its
-    * own cadence). */
+    * checkpoint (tx13 via [[bpeTrainWords]]). */
   private[graft] def bpeWords0(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(explode_outer(expr(s"regexp_extract_all(lower(text), '$BpePattern', 0)")).as("w"))
@@ -703,8 +702,8 @@ object TextAnalysis {
     * fold. NOTE the returned plan embeds `words` TWICE (under the
     * argmax and under the fold), so chaining k un-checkpointed rounds
     * grows the plan tree 2^k-fold — callers checkpoint on a short
-    * cadence (tools/BpeDeep measured it: cadence 2 ≈ cadence 1 within
-    * noise, cadence 4 already ~35% slower — the opposite regime from
+    * cadence (SCALE_NOTES "Round-9: deep BPE training": cadence 2 ≈
+    * cadence 1 within noise, cadence 4 already ~35% slower — the opposite regime from
     * PageRank's linear chains, where cadence ~10 wins). tx13 uses
     * cadence 1. */
   private[graft] def bpeMergeRound(words: DataFrame): DataFrame = {
@@ -712,7 +711,7 @@ object TextAnalysis {
     // Saturation guard: when no adjacent pair remains (every word
     // fully merged — reachable on small vocabularies at production
     // merge depths), the argmax frame is EMPTY and a bare crossJoin
-    // would ANNIHILATE the word table (tools/BpeDeep caught this
+    // would ANNIHILATE the word table (deep training caught this
     // around merge ~125/256 on the 61-word synthetic corpus: vocab
     // read 0). The cnt=-1 sentinel of empty symbols can never beat a
     // real pair and never matches a symbol (bpeSyms filters '' out),
@@ -782,8 +781,8 @@ object TextAnalysis {
   /** tx13/tx14's trainer: [[BpeMerges]] sequential greedy rounds,
     * checkpoint-rolled every round with superseded-checkpoint release
     * ([[Ckpt.roll]]); deeper cadences buy nothing here because each
-    * un-checkpointed round DOUBLES the plan tree (measured in
-    * tools/BpeDeep — see [[bpeMergeRound]]). */
+    * un-checkpointed round DOUBLES the plan tree (SCALE_NOTES
+    * "Round-9: deep BPE training" — see [[bpeMergeRound]]). */
   private def bpeTrainedWords(s: SparkSession, d: String): DataFrame =
     bpeTrainWords(s, d, BpeMerges)
 

@@ -77,34 +77,37 @@ object VecIndex {
 
   /** Coarse centroids — sim04's convention: the first
     * [[Similarity.IvfCentroids]] vectors, a deterministic K-sized
-    * frame with its `vec_id < K` filter pushed to the parquet scan. */
-  private def centroids(spark: SparkSession, dir: String): DataFrame =
+    * (cent_id, ce) frame with its `vec_id < K` filter pushed to the
+    * parquet scan. */
+  private[ops] def centroids(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .filter(col("vec_id") < Similarity.IvfCentroids)
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
 
   /** IVF cell assignment for an arbitrary (vec_id, embedding, …) frame:
-    * each vector's nearest centroid ([[nearestCells]] rank 1), emitted
-    * as (cluster, <the frame's columns>). Shared by the builds and the
-    * append path — a new batch pays batch-proportional assignment work,
-    * never the corpus's. */
-  private def assignCells(spark: SparkSession, dir: String,
-      emb: DataFrame): DataFrame =
-    nearestCells(spark, dir, emb, "vec_id", "embedding")(_ === 1)
+    * each vector's nearest centroid of `cents` ([[nearestCells]] rank
+    * 1), emitted as (cluster, <the frame's columns>). Shared by the
+    * builds, the append path and the catalog's in-session assignments
+    * — a new batch pays batch-proportional assignment work, never the
+    * corpus's. */
+  private[ops] def assignCells(emb: DataFrame, cents: DataFrame): DataFrame =
+    nearestCells(emb, "vec_id", "embedding", cents)(_ === 1)
       .select(col("cent_id").as("cluster") +: emb.columns.toSeq.map(col): _*)
 
   /** Build and persist the IVF assignment: one corpus × broadcast
     * centroids scoring pass, argmax cell per vector, written bucketed
     * by cluster. This is the INDEX BUILD — paid once, not per probe.
     * `emb` restricts the indexed corpus (the lifecycle cycles build
-    * from a slice and grow to the full corpus via [[append]]). */
+    * from a slice and grow to the full corpus via [[append]]); its
+    * extra columns ride into the cell row ([[persistCovering]]). */
   def persist(spark: SparkSession, dir: String, path: String,
       prefix: String, emb: Option[DataFrame] = None,
       buckets: Int = Buckets): Unit = {
     VectorExprs.register(spark)
     val e = emb.getOrElse(
       Tables.embeddings(spark, dir).select("vec_id", "embedding"))
-    IndexCore.writeTable(assignCells(spark, dir, e).withColumn("ingest_batch", lit(BaseBatch)),
+    IndexCore.writeTable(
+      assignCells(e, centroids(spark, dir)).withColumn("ingest_batch", lit(BaseBatch)),
       Cells, prefix, Some((path, buckets)))
   }
 
@@ -121,7 +124,10 @@ object VecIndex {
   // streaming-legal constructs: a stateless HOF cell ranking,
   // stream-static joins, and one windowed aggregate holding K rows per
   // query. Both read the index through the same masked frame, so a
-  // stream answers what the batch answers.
+  // stream answers what the batch answers. The batch half is also the
+  // catalog's one ANN kernel: Similarity's in-session quantizers
+  // (sim04/sim21, the dedup and drift entries), LSH buckets, PQ encode
+  // and ADC, and the prefix funnel run through these functions.
   // ------------------------------------------------------------------
 
   /** The cell table as every lane reads it: merge-log visibility
@@ -163,8 +169,8 @@ object VecIndex {
     * column-pruned (vec_id, label) dimension (sim22, st16); or the
     * label colocated in a covering cell row (sim23, st17). Mismatches
     * drop before scoring, so the filter also cuts the scoring work. */
-  private sealed trait Labels
-  private case object Unlabeled extends Labels
+  private[ops] sealed trait Labels
+  private[ops] case object Unlabeled extends Labels
   private case object DimLabels extends Labels
   private case object CellLabels extends Labels
 
@@ -175,21 +181,24 @@ object VecIndex {
   /** A lane's ranking: score column `name`, nearer first (`desc` for a
     * similarity), `k` neighbors kept, emitted rounded to 6 dp as
     * `out`. */
-  private final case class Score(name: String, out: String, desc: Boolean, k: Int)
-  private val Cosine = Score("cos", "cosine", desc = true, Similarity.LshK)
+  private[ops] final case class Score(name: String, out: String, desc: Boolean, k: Int)
+  private[ops] val Cosine = Score("cos", "cosine", desc = true, Similarity.LshK)
   private val Adc = Score("adc", "adc_dist", desc = false, Similarity.KnnK)
 
-  private def cosineScore: Column = expr("cosine_sim(qe, embedding)")
+  private[ops] def cosineScore: Column = expr("cosine_sim(qe, embedding)")
   private def adcScore: Column =
     (0 until Similarity.PqM).map(m => col(s"qd$m")).reduce(_ + _)
 
-  /** Centroids ranked for each row of `q` by cosine to its `emb` column
-    * (ties to the lower cent_id), batch form: `q` × broadcast
-    * centroids and a row_number window per `id`; `keep` picks the
-    * ranks. */
-  private def nearestCells(spark: SparkSession, dir: String, q: DataFrame,
-      id: String, emb: String)(keep: Column => Column): DataFrame =
-    q.crossJoin(broadcast(centroids(spark, dir)))
+  /** Centroids ranked for each row of `q` by cosine between its `emb`
+    * column and `cents`' (cent_id, ce) (ties to the lower cent_id),
+    * batch form: `q` × broadcast centroids and a row_number window per
+    * `id`, carrying `cos_c` and the rank `crn`; `keep` picks the
+    * ranks. The engine's one nearest-centroid ranking: the index's
+    * assignment and probe cells, and every catalog quantizer (seed,
+    * trained, √n-sized or hash-sampled centroids). */
+  private[ops] def nearestCells(q: DataFrame, id: String, emb: String,
+      cents: DataFrame)(keep: Column => Column): DataFrame =
+    q.crossJoin(broadcast(cents))
       .withColumn("cos_c", expr(s"cosine_sim($emb, ce)"))
       .withColumn("crn", row_number().over(
         Window.partitionBy(id).orderBy(col("cos_c").desc, col("cent_id").asc)))
@@ -197,9 +206,9 @@ object VecIndex {
 
   /** Batch probe cells: each query's [[Similarity.IvfNProbe]] nearest
     * centroids, projected to `cols` and broadcast. */
-  private def probeCells(spark: SparkSession, dir: String, q: DataFrame,
-      id: String, emb: String, cols: Seq[Column]): DataFrame =
-    broadcast(nearestCells(spark, dir, q, id, emb)(_ <= Similarity.IvfNProbe)
+  private def probeCells(q: DataFrame, id: String, emb: String,
+      cents: DataFrame, cols: Seq[Column]): DataFrame =
+    broadcast(nearestCells(q, id, emb, cents)(_ <= Similarity.IvfNProbe)
       .select(cols: _*))
 
   /** Centroid ids nearest-first for a row's `embedding`, streaming
@@ -227,8 +236,10 @@ object VecIndex {
           .as("cluster"): _*)
 
   /** Candidates: `cells` ⋈ `probes` on cluster, the query itself
-    * excluded, then the lane's label rule. */
-  private def candidates(spark: SparkSession, dir: String, cells: DataFrame,
+    * excluded, then the lane's label rule. `cells` is any (cluster,
+    * vec_id, …) frame: the masked index tables, or an in-session
+    * assignment (a catalog quantizer's cells, LSH's sign buckets). */
+  private[ops] def candidates(spark: SparkSession, dir: String, cells: DataFrame,
       probes: DataFrame, labels: Labels): DataFrame = {
     val cand = cells.join(probes, Seq("cluster"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -244,8 +255,9 @@ object VecIndex {
 
   /** Batch top-k: score every candidate (`value` as `s.name`), rank per
     * query by (score, neighbor_id asc) in a row_number window, keep
-    * `s.k`. Output (query_id, neighbor_id, cluster, `s.out`). */
-  private def batchTopK(cand: DataFrame, s: Score, value: Column): DataFrame = {
+    * `s.k`. Output (query_id, neighbor_id, `cells`…, `s.out`). */
+  private[ops] def batchTopK(cand: DataFrame, s: Score, value: Column,
+      cells: Seq[Column]): DataFrame = {
     val v = col(s.name)
     val w = Window.partitionBy("query_id")
       .orderBy(if (s.desc) v.desc else v.asc, col("neighbor_id").asc)
@@ -253,8 +265,8 @@ object VecIndex {
       .withColumn(s.name, value)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= s.k)
-      .select(col("query_id"), col("neighbor_id"), col("cluster"),
-        round(v, 6).as(s.out))
+      .select((Seq(col("query_id"), col("neighbor_id")) ++ cells :+
+        round(v, 6).as(s.out)): _*)
       .orderBy("query_id", "neighbor_id")
   }
 
@@ -284,21 +296,39 @@ object VecIndex {
   private def windowStart: Column =
     date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start")
 
-  private def cosineProbe(spark: SparkSession, dir: String, prefix: String,
-      queries: DataFrame, labels: Labels): DataFrame = {
+  /** The cosine lanes over a cell frame: each (vec_id, embedding[,
+    * label]) query's probe cells against `cents`, candidates from
+    * `cells`, top-`k` by exact cosine. */
+  private def cosineProbe(spark: SparkSession, dir: String, cells: DataFrame,
+      cents: DataFrame, queries: DataFrame, labels: Labels, k: Int): DataFrame = {
     VectorExprs.register(spark)
-    val probes = probeCells(spark, dir, queries, "vec_id", "embedding",
+    val probes = probeCells(queries, "vec_id", "embedding", cents,
       Seq(col("vec_id").as("query_id"), col("cent_id").as("cluster"),
         col("embedding").as("qe")) ++ qlabel(labels))
-    batchTopK(candidates(spark, dir, cellFrame(spark, prefix), probes, labels),
-      Cosine, cosineScore)
+    batchTopK(candidates(spark, dir, cells, probes, labels),
+      Cosine.copy(k = k), cosineScore, Seq(col("cluster")))
   }
+
+  private def indexProbe(spark: SparkSession, dir: String, prefix: String,
+      queries: DataFrame, labels: Labels): DataFrame =
+    cosineProbe(spark, dir, cellFrame(spark, prefix), centroids(spark, dir),
+      queries, labels, Similarity.LshK)
 
   private def cosineTopK(spark: SparkSession, dir: String, prefix: String,
       queries: DataFrame, labels: Labels): DataFrame = {
     VectorExprs.register(spark)
     streamTopK(candidates(spark, dir, cellFrame(spark, prefix),
       streamProbeCells(spark, dir, queries, labels), labels), Cosine, cosineScore)
+  }
+
+  /** [[probe]]'s kernel over an IN-SESSION assignment (sim04, sim21):
+    * `e` (vec_id, embedding) assigned to its nearest of `cents`, the
+    * vectors below `nQ` as the query batch, top-`k` by cosine. */
+  private[ops] def transientProbe(spark: SparkSession, dir: String, e: DataFrame,
+      cents: DataFrame, nQ: Long, k: Int): DataFrame = {
+    VectorExprs.register(spark)
+    cosineProbe(spark, dir, assignCells(e, cents), cents,
+      e.filter(col("vec_id") < nQ), Unlabeled, k)
   }
 
   /** ANN serving against the persisted index (sim14, sim04's decisions
@@ -312,7 +342,7 @@ object VecIndex {
 
   def probe(spark: SparkSession, dir: String, prefix: String,
       queries: DataFrame): DataFrame =
-    cosineProbe(spark, dir, prefix, queries, Unlabeled)
+    indexProbe(spark, dir, prefix, queries, Unlabeled)
 
   /** Filtered ANN (sim22): [[probe]] restricted to neighbors that share
     * the query's label, read from the column-pruned (vec_id, label)
@@ -326,7 +356,7 @@ object VecIndex {
 
   def filteredProbe(spark: SparkSession, dir: String, prefix: String,
       queries: DataFrame): DataFrame =
-    cosineProbe(spark, dir, prefix, queries, DimLabels)
+    indexProbe(spark, dir, prefix, queries, DimLabels)
 
   /** COVERING-INDEX build for the filtered-ANN serving path (sim23):
     * [[persist]]'s cell table with the filter label colocated in the
@@ -338,12 +368,9 @@ object VecIndex {
     * layout of the same assignment, the classic covering-index
     * storage/write tradeoff made explicit. */
   def persistCovering(spark: SparkSession, dir: String, path: String,
-      prefix: String, buckets: Int = Buckets): Unit = {
-    VectorExprs.register(spark)
-    val e = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")
-    IndexCore.writeTable(assignCells(spark, dir, e).withColumn("ingest_batch", lit(BaseBatch)),
-      Cells, prefix, Some((path, buckets)))
-  }
+      prefix: String, buckets: Int = Buckets): Unit =
+    persist(spark, dir, path, prefix,
+      Some(Tables.embeddings(spark, dir).select("vec_id", "label", "embedding")), buckets)
 
   /** The default filtered-ANN serving lane (sim23): builds or reuses
     * the covering index and serves it through [[coveringFilteredProbe]].
@@ -366,7 +393,7 @@ object VecIndex {
 
   def coveringFilteredProbe(spark: SparkSession, dir: String,
       prefix: String, queries: DataFrame): DataFrame =
-    cosineProbe(spark, dir, prefix, queries, CellLabels)
+    indexProbe(spark, dir, prefix, queries, CellLabels)
 
   /** ADC serving against the persisted code cells (sim18): each query's
     * probe cells, then its per-(query, subspace, code) distance table
@@ -380,20 +407,31 @@ object VecIndex {
   def pqProbe(spark: SparkSession, dir: String, prefix: String,
       qf: DataFrame): DataFrame = {
     VectorExprs.register(spark)
-    val cb = spark.table(codebookTable(prefix))
     val queries = qf
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val probes = probeCells(spark, dir, queries, "query_id", "qe",
+    val probes = probeCells(queries, "query_id", "qe", centroids(spark, dir),
       Seq(col("query_id"), col("cent_id").as("cluster")))
+    adcTopK(candidates(spark, dir, pqCellFrame(spark, prefix), probes, Unlabeled),
+      queries, spark.table(codebookTable(prefix)), Similarity.KnnK, Seq(col("cluster")))
+  }
+
+  /** ADC top-k over candidates carrying (query_id, vec_id, c0..cM-1):
+    * per subspace, the bounded (query, code) distance table —
+    * `queries` (query_id, qe) × broadcast codebook `cb` — broadcast
+    * and joined on the code column, so a candidate's distance is M
+    * lookups summed in subspace order; then [[batchTopK]] by (adc asc,
+    * neighbor_id asc). Shared by [[pqProbe]] and the catalog's
+    * exhaustive ADC (sim07, sim24). */
+  private[ops] def adcTopK(cand: DataFrame, queries: DataFrame, cb: DataFrame,
+      k: Int, cells: Seq[Column]): DataFrame = {
     val luts = (0 until Similarity.PqM).map { m =>
       broadcast(queries.crossJoin(broadcast(cb))
         .select(col("query_id").as(s"q$m"), col("code").as(s"qc$m"),
           expr(s"sq_dist(${subSlice("qe", m)}, ${subSlice("cw", m)})").as(s"qd$m")))
     }
-    val cand = candidates(spark, dir, pqCellFrame(spark, prefix), probes, Unlabeled)
     batchTopK(luts.zipWithIndex.foldLeft(cand) { case (df, (lut, m)) =>
       df.join(lut, col("query_id") === col(s"q$m") && col(s"c$m") === col(s"qc$m"))
-    }, Adc, adcScore)
+    }, Adc.copy(k = k), adcScore, cells)
   }
 
   /** Streaming form of [[probe]] (st09; also the vector lane of the
@@ -452,7 +490,7 @@ object VecIndex {
   private def cellRows(spark: SparkSession, dir: String, prefix: String,
       spec: IndexCore.TableSpec, e: DataFrame): DataFrame =
     if (spec == PqCells) pqRows(spark, dir, e, spark.table(codebookTable(prefix)))
-    else assignCells(spark, dir, e)
+    else assignCells(e, centroids(spark, dir))
 
   /** Append a NEW embedding batch to `spec`'s cell table: encode the
     * batch only ([[cellRows]] — the corpus is never re-assigned or
@@ -691,9 +729,10 @@ object VecIndex {
   /** PQ-encode an arbitrary (vec_id, embedding) frame against a
     * codebook frame: frame × broadcast M·K codebook — M fused codegen
     * `sq_dist` argmins, one pass — returning (vec_id, c0..cM-1).
-    * Shared by the full build and the append path, so a new batch
-    * pays batch-proportional encoding work, never the corpus's. */
-  private def pqEncode(emb: DataFrame, cb: DataFrame): DataFrame = {
+    * Shared by the full build, the append path (a new batch pays
+    * batch-proportional encoding work, never the corpus's) and the
+    * catalog's exhaustive ADC (sim07, sim24). */
+  private[ops] def pqEncode(emb: DataFrame, cb: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{min, struct}
     val scored = (0 until Similarity.PqM).foldLeft(emb.crossJoin(broadcast(cb))) {
       (df, m) => df.withColumn(s"d$m",
@@ -733,7 +772,8 @@ object VecIndex {
     * embedding) frame against codebook `cb`. */
   private def pqRows(spark: SparkSession, dir: String, e: DataFrame,
       cb: DataFrame): DataFrame =
-    assignCells(spark, dir, e).select("cluster", "vec_id").join(pqEncode(e, cb), "vec_id")
+    assignCells(e, centroids(spark, dir)).select("cluster", "vec_id")
+      .join(pqEncode(e, cb), "vec_id")
 
 
   // ------------------------------------------------------------------
@@ -899,7 +939,7 @@ object VecIndex {
     val corpus = Tables.embeddings(spark, dir)
       .select("vec_id", "embedding")
       .filter(pmod(col("vec_id"), lit(4)) =!= lit(0))
-    val pArr = assignCells(spark, dir, corpus)
+    val pArr = assignCells(corpus, centroids(spark, dir))
       .groupBy("cluster").agg(count(lit(1)).as("cnt"))
       .agg(collect_list(struct(col("cluster"), col("cnt"))).as("occ"),
         sum(col("cnt")).as("n_old"))
@@ -986,31 +1026,35 @@ object VecIndex {
       qf: DataFrame): DataFrame = {
     VectorExprs.register(spark)
     val t = spark.table(matTable(prefix))
+    prefixFunnel(t.select(col("vec_id").as("neighbor_id"), col("pfx")),
+      t.select(col("vec_id").as("neighbor_id"), col("embedding").as("te")), qf)
+  }
+
+  /** The prefix-then-exact funnel (sim27, sim28): `pfx` (neighbor_id,
+    * pfx) scored against each query's [[Similarity.MatryoshkaPrefix]]
+    * -dim prefix, the [[Similarity.MatryoshkaCand]] best per query
+    * kept, then re-ranked by exact cosine against `full` (neighbor_id,
+    * te) joined back on the survivors: top-[[Similarity.KnnK]] as
+    * (query_id, neighbor_id, prefix_cosine, cosine). `qf` is the
+    * bounded (vec_id, embedding) query batch, broadcast. */
+  private[ops] def prefixFunnel(pfx: DataFrame, full: DataFrame,
+      qf: DataFrame): DataFrame = {
     val q = qf
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         expr(s"slice(embedding, 1, ${Similarity.MatryoshkaPrefix})").as("qp"))
     val wp = Window.partitionBy("query_id")
       .orderBy(col("pcos").desc, col("neighbor_id").asc)
-    val cands = t.select(col("vec_id").as("neighbor_id"), col("pfx"))
+    val cands = pfx
       .join(broadcast(q.select("query_id", "qp")),
         col("neighbor_id") =!= col("query_id"))
       .withColumn("pcos", expr("cosine_sim(qp, pfx)"))
       .withColumn("prn", row_number().over(wp))
       .filter(col("prn") <= Similarity.MatryoshkaCand)
       .select("query_id", "neighbor_id", "pcos")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cands
-      .join(t.select(col("vec_id").as("neighbor_id"), col("embedding").as("te")),
-        Seq("neighbor_id"))
-      .join(broadcast(q.select("query_id", "qe")), Seq("query_id"))
-      .withColumn("cos", expr("cosine_sim(qe, te)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= Similarity.KnnK)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("pcos"), 6).as("prefix_cosine"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy("query_id", "neighbor_id")
+    batchTopK(cands.join(full, Seq("neighbor_id"))
+        .join(broadcast(q.select("query_id", "qe")), Seq("query_id")),
+      Cosine.copy(k = Similarity.KnnK), expr("cosine_sim(qe, te)"),
+      Seq(round(col("pcos"), 6).as("prefix_cosine")))
   }
 
   def ensureMatPersisted(spark: SparkSession, dir: String,

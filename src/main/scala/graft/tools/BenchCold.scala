@@ -150,7 +150,7 @@ object BenchCold {
     // ratio (write phases excluded — the host-bandwidth antenna)
     // rides next to the raw common ratio for the same degraded-host
     // reading the warm guard does.
-    val phases = Phases.json()
+    val phases = graft.Phases.json()
     val priorPhases = prior.map(graft.Bench.extractPhases).getOrElse(Map.empty)
     val gradedRatio = graft.Bench.gradedCommonRatio(resMap, priorQueries,
       graft.Bench.extractPhases(s"""{"phases":$phases}"""), priorPhases)

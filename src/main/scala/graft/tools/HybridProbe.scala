@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Graded hybrid-relevance instrument (round 15, VERDICT item 2):
+/** Graded hybrid-relevance measurement (round 15, VERDICT item 2):
   * sim26/st18's "fusion helps" was inherited from sim25's
   * vector-vector experiment — this measures it CROSS-MODALITY, at
   * statistical power, against a blended ground truth.
@@ -19,112 +19,34 @@ import org.apache.spark.sql.functions._
   *     asked for k, recall@k = fraction of ground-truth pairs
   *     recovered, ± a simple 95% binomial interval (hits within a
   *     query correlate, so the interval is approximate — stated,
-  *     not hidden; OpqProbe's convention).
+  *     not hidden).
   *
-  * The claim this instrument exists to test: the fused lane's
-  * recall is not below the better single lane's beyond the CI —
-  * HybridFusionSpec pins exactly that, permanently, on the suite.
-  *
-  * Round 16 (VERDICT r15 item 7): the instrument also grades LANE
-  * DEPTH — round 15 showed the lexical lane collapsing to 0.036
-  * recall at sf0.1 because each lane contributed only k=10
-  * candidates regardless of corpus size, where the RRF literature
-  * fuses DEEP lists (k≈60–1000) into a short final ranking. The
-  * sweep runs laneK ∈ {k, 60, 100} at fixed final k, so the
-  * depth-vs-recall curve is measured, not assumed.
-  *
-  * Run: tools/run.sh graft.tools.HybridProbe [sfDir] [nQueries] [k]
+  * HybridFusionSpec pins the claim this exists to test: the fused
+  * lane's recall is not below the better single lane's beyond the CI.
+  * The lane-depth and score-normalized fusion sweeps are recorded in
+  * SCALE_NOTES ("Round-16: lane depth graded", "Round-17:
+  * score-normalized fusion graded").
   */
 object HybridProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val nQ = args.lift(1).map(_.toLong).getOrElse(128L)
-    val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Logs.muteReviewedWindowWarning()
-    graft.Tables.pin(spark)
 
-    def show(name: String, pc: (Double, Double)): Unit =
-      println(f"  $name%-34s ${pc._1}%6.3f ± ${pc._2}%5.3f")
-    // the blended ground truth depends only on the FINAL k — build it
-    // once for the whole depth sweep (it is the instrument's most
-    // expensive stage; rebuilding it per laneK tripled the wall)
-    val gt = graft.ops.Similarity.hybridGroundTruth(spark, sfDir, nQ, k).cache()
-    val gtN = gt.count()
-    Seq(k, 60, 100).distinct.foreach { laneK =>
-      val (lex, vec, fus, n) = measure(spark, sfDir, nQ, k, laneK,
-        prebuilt = Some((gt, gtN)))
-      println(f"hybrid recall@$k, laneK=$laneK over $sfDir — $nQ queries, " +
-        f"n=$n blended ground-truth pairs; ±95%% binomial (approximate: " +
-        "hits correlate within a query)")
-      show(s"BM25 more-like-this (lexical@$laneK)", lex)
-      show(s"IVF (vector lane @$laneK)", vec)
-      show(s"RRF fusion (deep lanes -> top-$k)", fus)
-      // round 17 (VERDICT item 7): the score-normalized CombSUM
-      // alternatives — the last untried fusion family after the OPQ
-      // and lane-depth negatives
-      val (z, mm) = measureScored(spark, sfDir, nQ, k, laneK, gt, gtN)
-      show(s"z-score CombSUM (deep -> top-$k)", z)
-      show(s"min-max CombSUM (deep -> top-$k)", mm)
-      val bestSingle = math.max(lex._1, vec._1)
-      println(f"  RRF    - best single lane: ${fus._1 - bestSingle}%+.3f (CI ${fus._2}%.3f)")
-      println(f"  zComb  - best single lane: ${z._1 - bestSingle}%+.3f (CI ${z._2}%.3f)")
-      println(f"  mmComb - best single lane: ${mm._1 - bestSingle}%+.3f (CI ${mm._2}%.3f)")
-    }
-    gt.unpersist()
-    spark.stop()
-  }
-
-  /** Shared measurement core (HybridFusionSpec runs the same code):
-    * returns ((recall, ci) lexical, (recall, ci) vector,
-    * (recall, ci) fused, n ground-truth pairs). Each lane is asked
-    * for `laneK` candidates; the lexical/vector recalls grade the
-    * deep lists themselves (capped at laneK), fusion re-ranks them
-    * to the final k the ground truth is built at. */
-  def measure(spark: SparkSession, sfDir: String, nQ: Long, k: Int,
-      laneK: Int = -1,
-      prebuilt: Option[(org.apache.spark.sql.DataFrame, Long)] = None)
+  /** Returns ((recall, ci) lexical, (recall, ci) vector, (recall, ci)
+    * fused, n ground-truth pairs), every lane asked for k. */
+  def measure(spark: SparkSession, sfDir: String, nQ: Long, k: Int)
       : ((Double, Double), (Double, Double), (Double, Double), Long) = {
     import graft.ops.Similarity
-    val lk = if (laneK > 0) laneK else k
-    val (gt, n) = prebuilt.getOrElse {
-      val g = Similarity.hybridGroundTruth(spark, sfDir, nQ, k).cache()
-      (g, g.count())
-    }
+    val gt = Similarity.hybridGroundTruth(spark, sfDir, nQ, k).cache()
+    val n = gt.count()
     def recall(lane: org.apache.spark.sql.DataFrame): (Double, Double) = {
       val hits = lane.join(gt, Seq("query_id", "item_id")).count()
       val p = hits.toDouble / n
       (p, 1.96 * math.sqrt(p * (1 - p) / n))
     }
-    val lex = recall(Similarity.bm25MoreLikeThis(spark, sfDir, nQ, lk)
+    val lex = recall(Similarity.bm25MoreLikeThis(spark, sfDir, nQ, k)
       .select("query_id", "item_id"))
-    val vec = recall(Similarity.ivfAnn(spark, sfDir, nQ, lk)
+    val vec = recall(Similarity.ivfAnn(spark, sfDir, nQ, k)
       .select(col("query_id"), col("neighbor_id").as("item_id")))
-    val fus = recall(Similarity.hybridFused(spark, sfDir, nQ, k, laneK = lk))
-    if (prebuilt.isEmpty) gt.unpersist()
+    val fus = recall(Similarity.hybridFused(spark, sfDir, nQ, k, laneK = k))
+    gt.unpersist()
     (lex, vec, fus, n)
-  }
-
-  /** Recall of the two score-normalized CombSUM fusion variants
-    * (round 17, VERDICT item 7) against the same prebuilt ground
-    * truth — shares [[measure]]'s recall/CI arithmetic. */
-  def measureScored(spark: SparkSession, sfDir: String, nQ: Long, k: Int,
-      laneK: Int, gt: org.apache.spark.sql.DataFrame, n: Long)
-      : ((Double, Double), (Double, Double)) = {
-    import graft.ops.Similarity
-    def recall(lane: org.apache.spark.sql.DataFrame): (Double, Double) = {
-      val hits = lane.join(gt, Seq("query_id", "item_id")).count()
-      val p = hits.toDouble / n
-      (p, 1.96 * math.sqrt(p * (1 - p) / n))
-    }
-    (recall(Similarity.hybridFusedScored(spark, sfDir, nQ, k, laneK, "z")),
-      recall(Similarity.hybridFusedScored(spark, sfDir, nQ, k, laneK, "minmax")))
   }
 }

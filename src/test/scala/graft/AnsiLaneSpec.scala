@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Dual-lane ANSI parity (round-8 item 5; default flipped to ANSI-on
   * in round 10, clawed BACK to pre-ANSI in round 11 after
-  * tools/LaneSweep measured the ANSI lane at a uniform +9.2% warm
+  * an ABBA lane sweep measured the ANSI lane at a uniform +9.2% warm
   * with zero result delta — SCALE_NOTES "Round-11: the ANSI lane
   * tax"). The engine's default lane is the reference's pre-ANSI
   * semantics (malformed-cast → null swept by dropna); this suite runs

@@ -75,7 +75,8 @@ class BpeSpec extends SparkSpec {
   }
 
   test("training past saturation is a no-op, never an annihilation") {
-    // BpeDeep caught this: once every word is fully merged the
+    // Deep training caught this (SCALE_NOTES "Round-9: deep BPE
+    // training"): once every word is fully merged the
     // pair-count frame is empty, and the old bare-crossJoin argmax
     // EMPTIED the word table (vocab read 0 after 256 merges on the
     // 61-word synthetic corpus). The sentinel guard makes a dry

@@ -9,8 +9,8 @@ import graft.SparkSpec
   * recall@k must not fall below the better single-modality lane's
   * beyond the binomial interval. Measured at statistical power
   * (128 queries × k=10 → n=1280 graded pairs) through the SAME
-  * measurement core tools/HybridProbe prints — the suite assertion
-  * and the SCALE_NOTES table cannot drift apart.
+  * measurement core the SCALE_NOTES hybrid tables were read from
+  * (`HybridProbe.measure`), so the two cannot drift apart.
   *
   * Observed at authoring (sf0.001): lexical 0.152±0.020, vector
   * 0.188±0.021, fused 0.212±0.022 — fused ABOVE the best single

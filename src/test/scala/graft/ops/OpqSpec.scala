@@ -63,10 +63,11 @@ class OpqSpec extends SparkSpec {
     // Round-14 adjudication of the r13 instrument reading (OPQ 0.080
     // vs trained 0.240 at 5 queries × k=5): at n=1280 the drop does
     // NOT replicate — sf0.01 reads 0.125±0.018 vs 0.133±0.019 and
-    // sf0.1 reads 0.066 vs 0.060 (tools/OpqProbe, SCALE_NOTES round
-    // 14). This pins the claim at statistical power: the permutation
-    // must never degrade serving recall beyond the interval noise of
-    // a ≥640-trial measurement on the synthetic corpus.
+    // sf0.1 reads 0.066 vs 0.060 (SCALE_NOTES "Round-14: recall
+    // instruments at statistical power"). This pins the claim at
+    // statistical power: the permutation must never degrade serving
+    // recall beyond the interval noise of a ≥640-trial measurement on
+    // the synthetic corpus.
     val nQ = 64L
     val k = 10
     val bf = Similarity.bruteKnn(spark, sf, nQ, k)

@@ -483,4 +483,31 @@ class VecIndexSpec extends SparkSpec {
           s"(corpus x$corpusRatio) — a cell-proportional exchange leaked into the plan")
     } finally VecIndex.drop(spark, big)
   }
+
+  test("catalog quantizers share the index's cells: sim04, ds12 and dq07 agree with the cell table") {
+    // sim04, ds12 and dq07 assign in-session through the same
+    // nearest-centroid kernel that builds the persisted cell table, so
+    // every cell they report must be the vector's persisted cell
+    val cells = spark.table(VecIndex.cellsTable(VecIndex.ensurePersisted(spark, sf)))
+      .select(col("vec_id"), col("cluster").as("cell"))
+    val cellOf = cells.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cellOf.nonEmpty, "persisted cell table is empty")
+    Seq("sim04_ivf_ann", "ds12_diverse_topk").foreach { name =>
+      val rows = Similarity.queries(name)(spark, sf)
+        .select("neighbor_id", "cluster").collect()
+      assert(rows.nonEmpty, s"$name returned no neighbors")
+      rows.foreach { r =>
+        assert(cellOf.get(r.getLong(0)).contains(r.getLong(1)),
+          s"$name puts neighbor ${r.getLong(0)} in cell ${r.getLong(1)}, " +
+            s"the index in ${cellOf.get(r.getLong(0))}")
+      }
+    }
+    val occupancy = cellOf.values.groupBy(identity).map { case (c, v) => c -> v.size.toLong }
+    val drift = Similarity.queries("dq07_cell_drift")(spark, sf)
+      .filter(col("cluster") >= 0)
+      .select(col("cluster"), (col("old_n") + col("new_n")).as("n")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(drift == occupancy,
+      s"dq07 per-cell counts $drift differ from the cell table's occupancy $occupancy")
+  }
 }
