@@ -17,7 +17,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * process per call (four per `FileContext` rename). A streaming
   * micro-batch commits a dozen files through both, so the stock class
   * spends most of a small batch's time waiting on child processes
-  * (SCALE_NOTES "Fork-free local file I/O"). [[Tables.pin]] installs
+  * (SCALE_NOTES "Fork-free local file I/O"). [[GraftExtensions]] installs
   * these classes for the `file:` scheme.
   *
   *   - `setPermission` of plain rwx bits goes through NIO; a sticky

@@ -6,8 +6,10 @@ import org.apache.spark.sql.types._
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
-  * Every query builder goes through [[pin]], which fixes the session
-  * semantics the engine relies on (SURVEY.md §7.5):
+  * Every query builder goes through [[pin]], which fixes the session's
+  * SQL semantics that the engine relies on (SURVEY.md §7.5). Functions
+  * and the local file system come from [[GraftExtensions]], which every
+  * session already carries.
   *
   *   - ANSI OFF by default (round-11 claw-back of the round-10
   *     ANSI-on flip): an ABBA lane sweep measured ANSI-on at a uniform
@@ -24,40 +26,22 @@ import org.apache.spark.sql.types._
   *     semantics (/root/reference/gtfstransformerSilver.py:36-41).
   *     `spark.graft.ansiLane=true` opts into checked ANSI semantics
   *     for user SQL that wants throw-on-overflow;
-  *     `spark.graft.preAnsiLane=true` restates the default (kept so
-  *     the dual-lane instruments can set both knobs explicitly);
   *   - UTC session timezone (zone-less `Time` strings);
   *   - nanosecond-parquet timestamps read as long and normalized, so
   *     the engine is deterministic across Parquet timestamp units;
-  *   - the `file:` scheme served by [[ForkFreeLocalFileSystem]]
-  *     (`fs.file.impl`) and [[ForkFreeLocalFs]]
-  *     (`fs.AbstractFileSystem.file.impl`): without libhadoop the stock
-  *     local file system starts a `chmod` process per created file and
-  *     four `readlink` processes per `FileContext` rename, about 120
-  *     per `goldRefresh` micro-batch (SCALE_NOTES "Fork-free local file
-  *     I/O"). `fs.file.impl.disable.cache=true` goes with them: Hadoop's
-  *     `FileSystem` cache is keyed by scheme and user, not conf, so a
-  *     stock instance cached before `pin` would otherwise win. Files,
-  *     `.crc` sidecars and permission bits are the stock ones.
+  *   - adaptive query execution on.
   *
   * These are runtime-mutable session confs, safe to set even though the
-  * caller owns the SparkSession; Spark copies them into every
-  * Hadoop conf the session builds for reads, writes, streaming
-  * checkpoints and state stores.
+  * caller owns the SparkSession.
   */
 object Tables {
 
   def pin(spark: SparkSession): Unit = {
     // ANSI is OFF by default (round-11 claw-back; see the scaladoc
     // above — the +9.2% measured lane tax bought nothing: results are
-    // lane-identical and the parity contract is pre-ANSI). The
-    // round-8/9 `spark.graft.ansiLane=true` opt-IN is back to being
-    // the checked-semantics lane; an explicit `preAnsiLane=true`
-    // overrides it (the opt-out always wins, and the dual-lane
-    // instruments set both knobs so lane control is unambiguous
-    // whatever the session default).
-    val ansiOn = spark.conf.getOption("spark.graft.ansiLane").contains("true") &&
-      !spark.conf.getOption("spark.graft.preAnsiLane").contains("true")
+    // lane-identical and the parity contract is pre-ANSI).
+    // `spark.graft.ansiLane=true` opts into the checked-semantics lane.
+    val ansiOn = spark.conf.getOption("spark.graft.ansiLane").contains("true")
     spark.conf.set("spark.sql.ansi.enabled", ansiOn.toString)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // events.parquet stores ts as TIMESTAMP(NANOS,...): read the raw
@@ -65,9 +49,6 @@ object Tables {
     // depending on version-specific nanos support.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
-    spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
-    spark.conf.set("fs.file.impl.disable.cache", "true")
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -664,9 +663,8 @@ case class HilbertIndex(left: Expression, right: Expression, bits: Int)
 
 object VectorExprs {
 
-  /** The three function descriptions, shared by the session-local
-    * [[register]] path and the [[graft.GraftExtensions]] injection
-    * path (`spark.sql.extensions`). */
+  /** The functions [[graft.GraftExtensions]] injects into every
+    * session, by SQL name. */
   def descriptions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_sim" -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
     "dot_product" -> (exprs => DotProduct(exprs(0), exprs(1))),
@@ -701,36 +699,4 @@ object VectorExprs {
       case other => throw new IllegalArgumentException(
         s"topk_struct k must be an integer literal, got $other")
     })))
-
-  /** Inject the functions through the `SparkSessionExtensions` hook —
-    * how a production library ships them (set
-    * `spark.sql.extensions=graft.GraftExtensions` and every session
-    * resolves them with no imperative register call). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    descriptions.foreach { case (name, builder) =>
-      ext.injectFunction((
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          getClass.getName, name),
-        builder))
-    }
-
-  // Once-per-session guard: register() is called from every catalog
-  // query builder (they can't assume extensions were installed), and
-  // re-running createOrReplaceTempFunction floods the log with
-  // "function ... replaced" warnings during a 167-query bench sweep.
-  // Weak keys so a stopped session doesn't pin its registry.
-  private val registered = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-
-  /** Register `cosine_sim` and `minhash_mix` in the session's
-    * function registry so query builders can use them via `expr`.
-    * Idempotent per session. */
-  def register(spark: SparkSession): Unit =
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) == null) {
-      descriptions.foreach { case (name, builder) =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name, builder, "scala_udf")
-      }
-    }
 }

@@ -264,7 +264,6 @@ object Analytics {
     // distinct key. The 1-row sketch frame joins in-plan via
     // broadcast crossJoin (no driver collect).
     "hh01_heavy_hitters" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       val e = Tables.events(s, d)
         .filter(col("user_id").isNotNull).select(col("user_id"))
       val sk = e.agg(expr("mg_sketch(CAST(user_id AS STRING))").as("sk"))

@@ -145,7 +145,7 @@ object Curation {
     * or a streaming frame (StreamingSpec runs it under
     * Trigger.AvailableNow and gets batch-identical survivors; sorts
     * are illegal on streams, which is why the ordering lives at the
-    * catalog boundary). Requires `token_stats` to be registered. */
+    * catalog boundary). */
   def qualityGate(docs: DataFrame): DataFrame =
     docs
       // explode(array(...)) is a MATERIALIZATION BARRIER: without it,
@@ -351,7 +351,6 @@ object Curation {
       // swap: the interpreted lambda ran TWICE per doc through the
       // uncached two-consumer scan and dominated the 100× cost;
       // measured 32.9 s → see SCALE_NOTES)
-      graft.functions.VectorExprs.register(s)
       val scored = Tables.documents(s, d)
         .withColumn("ts", expr(s"token_stats(${TextAnalysis.tokensExpr})"))
         .withColumn("score", expr(
@@ -495,7 +494,6 @@ object Curation {
     // transform (shared with the streaming path) and its
     // materialization barrier.
     "df01_quality_gate" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       qualityGate(Tables.documents(s, d)).orderBy("doc_id")
     }),
 
@@ -685,7 +683,6 @@ object Curation {
     // ASC) on the raw bit-identical cosine, so the oracle replays
     // the choice exactly.
     "ds11_contrastive_pairs" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       val e = Similarity.canonicalEmbeddings(s, d)
       // the hash-sampled ~√n-cell pool dd14 assigns against
       val assigned = VecIndex.nearestCells(e, "vec_id", "embedding",

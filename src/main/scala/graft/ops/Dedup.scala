@@ -206,7 +206,6 @@ object Dedup {
 
   private def buildSigArray(spark: SparkSession, dir: String,
       canonical: Boolean = false): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val docs0 = Tables.documents(spark, dir)
     val docs =
       if (canonical) docs0.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
@@ -238,7 +237,6 @@ object Dedup {
     * needed: the sig array is referenced k times, which stops
     * CollapseProject from inlining the md5 chain per column. */
   private[graft] def signDocs(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExprs.register(docs.sparkSession)
     docs
       .withColumn("tokens", expr(tokensExpr))
       .withColumn("shingles", expr(shinglesExpr))
@@ -455,7 +453,6 @@ object Dedup {
     // identical to the relational/oracle form, which emits no row for
     // a token-less doc.
     "dd04_simhash" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       Tables.documents(s, d)
         .withColumn("tokens", expr(tokensExpr))
         .select(col("doc_id"),

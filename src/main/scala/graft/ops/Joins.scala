@@ -432,7 +432,6 @@ object Joins {
     // fact, as with j13). Join hinted merge: at 100 TB the dim that
     // needs this is too big to broadcast.
     "j14_sketch_skew_join" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       val fact = Tables.events(s, d)
         .filter(col("user_id").isNotNull)
         .select(col("user_id").as("k"), col("event_id"), col("value"))

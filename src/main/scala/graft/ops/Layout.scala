@@ -175,7 +175,6 @@ object Layout {
     // step-adjacent on a full small grid, and the oracle recomputes
     // the fold level by level in DuckDB.
     "z02_hilbert_layout" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       val lim = 1L << ZBits
       val bounds = Tables.lineitem(s, d)
         .agg(max(col("l_partkey")).as("mx_p"), max(col("l_suppkey")).as("mx_s"))

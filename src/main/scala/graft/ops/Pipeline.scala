@@ -277,7 +277,6 @@ object Pipeline {
     * form row-identical to this whole-feed core. */
   private[graft] def admissionCore(s: SparkSession, d: String, prefix: String,
       arrivals: DataFrame): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val scored = TextAnalysis.LangStopwords.foldLeft(
       arrivals.withColumn("tokens", expr(tokensExpr))) {
       case (df, (lang, words)) =>

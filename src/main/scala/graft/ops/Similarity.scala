@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{Portable, VectorExprs}
+import graft.functions.Portable
 
 /** Similarity search over the `embeddings` table (`Array[Float]`
   * column) — the north-star ANN operators (BASELINE.json).
@@ -395,7 +395,6 @@ object Similarity {
     * [[VecIndex.batchTopK]]. */
   private[graft] def bruteKnn(s: SparkSession, d: String,
       nQ: Long = KnnQueries, k: Int = KnnK): DataFrame = {
-    VectorExprs.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     VecIndex.batchTopK(e.join(broadcast(queryBatch(e, nQ)), col("vec_id") =!= col("query_id")),
       VecIndex.Cosine.copy(k = k), VecIndex.cosineScore, Nil)
@@ -511,7 +510,6 @@ object Similarity {
   private[graft] def hybridGroundTruth(s: SparkSession, d: String,
       nQ: Long, k: Int): DataFrame = {
     import TextAnalysis.tokensExpr
-    VectorExprs.register(s)
     // exact cosine rank over the full corpus
     val e = Tables.embeddings(s, d)
     val q = queryBatch(e, nQ)
@@ -569,7 +567,6 @@ object Similarity {
     * the prefix is sliced in-session rather than read as its own
     * column (sim28). */
   private def matryoshkaAnn(s: SparkSession, d: String): DataFrame = {
-    VectorExprs.register(s)
     val e = Tables.embeddings(s, d)
     VecIndex.prefixFunnel(
       e.select(col("vec_id").as("neighbor_id"),
@@ -591,7 +588,6 @@ object Similarity {
     * is the cell of [[VecIndex.candidates]] and the exact re-rank is
     * [[VecIndex.batchTopK]]. */
   private[graft] def lshAnn(s: SparkSession, d: String, probes: Int): DataFrame = {
-    VectorExprs.register(s)
     val e = Tables.embeddings(s, d)
     val planesDf = s.sql(planesRelation("array(", ")"))
       .withColumn("plane", col("plane").cast("array<double>"))
@@ -635,7 +631,6 @@ object Similarity {
     * scaladoc states). The corpus-side assignment is shared and
     * unchanged; candidate cost scales linearly in `l1probes`. */
   private def ivf2Ann(s: SparkSession, d: String, l1probes: Int): DataFrame = {
-    VectorExprs.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val (l1cents, l2cents, scored) = twoLevelParts(e)
     val assigned = scored.filter(col("srn") === 1)
@@ -743,7 +738,6 @@ object Similarity {
     // work by m². Pairs among copies are recoverable from the
     // canonical pair × the exact-dup groups.
     "dd06_cosine_dup" -> ((s, d) => {
-      VectorExprs.register(s)
       val e = canonicalEmbeddings(s, d)
       val nc = e.agg(ceil(sqrt(count(lit(1)).cast("double"))).cast("long").as("ncells"))
       val cents = e.crossJoin(broadcast(nc)).filter(col("vec_id") < col("ncells"))
@@ -782,7 +776,6 @@ object Similarity {
     // the standard hierarchical-IVF recall/cost trade, stated rather
     // than hidden.
     "dd08_cosine_dup2" -> ((s, d) => {
-      VectorExprs.register(s)
       val e = canonicalEmbeddings(s, d)
       dupPairs(twoLevelScored(e).filter(col("srn") <= DupNProbe)
         .select(col("vec_id"), col("g"), col("sub")), Seq("g", "sub"), e)
@@ -806,7 +799,6 @@ object Similarity {
     // transitive closure is taken — SemDeDup's decision is cluster-
     // local by design (that locality is what bounds the work).
     "dd14_semantic_dedup" -> ((s, d) => {
-      VectorExprs.register(s)
       val all = Tables.embeddings(s, d).select("vec_id", "embedding")
       val canon = all.groupBy("embedding").agg(min(col("vec_id")).as("rep"))
       val reps = canon.select(col("rep").as("vec_id"), col("embedding"))
@@ -831,7 +823,6 @@ object Similarity {
     // summarized (sum/min/max — exact int math) so the compare stays
     // scalar-typed. One narrow pass, no shuffle until the ORDER BY.
     "sim05_norm_quant" -> ((s, d) => {
-      VectorExprs.register(s)
       Tables.embeddings(s, d)
         .withColumn("norm", sqrt(expr("dot_product(embedding, embedding)")))
         .withColumn("qscale",
@@ -977,7 +968,6 @@ object Similarity {
     // query. Used for diverse few-shot example selection and
     // dedup-aware eval-set construction.
     "ds12_diverse_topk" -> ((s, d) => {
-      VectorExprs.register(s)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
       val scored = VecIndex.assignCells(e, VecIndex.centroids(s, d))
         .join(broadcast(queryBatch(e, KnnQueries)), col("vec_id") =!= col("query_id"))
@@ -1008,7 +998,6 @@ object Similarity {
     // pairwise variant: probe cells whose centroid cosine can still
     // clear τ, then run this exact pass within.
     "sim08_range_search" -> ((s, d) => {
-      VectorExprs.register(s)
       val e = Tables.embeddings(s, d)
       e.select(col("vec_id").as("neighbor_id"), col("embedding").as("te"))
         .join(broadcast(queryBatch(e, KnnQueries)), col("neighbor_id") =!= col("query_id"))
@@ -1036,7 +1025,6 @@ object Similarity {
     // the textbook mergeable moment sketch, now without paying a
     // 2,080× generate into the scan.
     "sim09_covariance" -> ((s, d) => {
-      VectorExprs.register(s)
       val agg = Tables.embeddings(s, d)
         .agg(expr("moment_partials(embedding)").as("m"), count(lit(1)).as("n"))
       val sums = agg.select(posexplode(col("m.sx")).as(Seq("i", "sx")))
@@ -1077,7 +1065,6 @@ object Similarity {
     // embedding-space anomaly gate (corrupt vectors, wrong-model
     // embeddings, adversarial inputs).
     "sim10_mahalanobis" -> ((s, d) => {
-      VectorExprs.register(s)
       val emb = Tables.embeddings(s, d)
       val mom = emb
         .agg(expr("dim_moments(embedding)").as("m"), count(lit(1)).as("n"))
@@ -1279,7 +1266,6 @@ object Similarity {
     "dq07_cell_drift" -> ((s, d) => {
       import org.apache.spark.sql.functions.{log => ln, pmod, sum, when}
       import org.apache.spark.sql.types.{DecimalType, DoubleType}
-      VectorExprs.register(s)
       val assigned = VecIndex.assignCells(
         Tables.embeddings(s, d).select("vec_id", "embedding"), VecIndex.centroids(s, d))
       // the batch boundary: a dense-id modulo (oracle-expressible —
@@ -1339,7 +1325,6 @@ object Similarity {
     * oracle-parity lane for the index family (sim04/sim14); this
     * trained lane is itself oracle-mirrored end to end (sim21Sql). */
   private[graft] def ivfTrainedCentroids(s: SparkSession, d: String): DataFrame = {
-    VectorExprs.register(s)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     var cents = e.filter(col("vec_id") < IvfCentroids)
       .select(col("vec_id").as("cent_id"),
@@ -1365,7 +1350,6 @@ object Similarity {
     * var) — the sim10 decimal moment convention, shared by the
     * permutation build and OpqSpec's balance check. */
   private[graft] def dimVarianceFrame(s: SparkSession, d: String): DataFrame = {
-    VectorExprs.register(s)
     Tables.embeddings(s, d)
       .agg(expr("dim_moments(embedding)").as("m"), count(lit(1)).as("n"))
       .select(expr(
@@ -1453,7 +1437,6 @@ object Similarity {
     * OPQ path (sim24) trains over the permuted-space frame. */
   private[graft] def pqTrainedCodebookOver(s: SparkSession,
       e: DataFrame): DataFrame = {
-    VectorExprs.register(s)
     val subExpr = s"""transform(sequence(0, ${PqM - 1}), m -> struct(m AS m,
                      |  transform(slice(embedding, m * $PqSubDims + 1, $PqSubDims),
                      |    x -> CAST(x AS DOUBLE)) AS sv))""".stripMargin
@@ -1510,7 +1493,6 @@ object Similarity {
     * exactly OPQ's lever. */
   private[graft] def pqAdcOver(s: SparkSession, e: DataFrame,
       trained: Boolean, nQ: Long = KnnQueries, k: Int = KnnK): DataFrame = {
-    VectorExprs.register(s)
     // broadcast hint inside pqEncode/adcTopK: the trained codebook
     // arrives from an aggregation whose size estimate is unknown to
     // the planner — without it the K-row frame plans as a BNLJ build

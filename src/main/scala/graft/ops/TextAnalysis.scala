@@ -223,7 +223,6 @@ object TextAnalysis {
     // every field is exact-integer-identical to the HOF form, so the
     // oracle SQL is unchanged.
     "tx01_token_stats" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       Tables.documents(s, d)
         .withColumn("ts", expr(s"token_stats($tokensExpr)"))
         .select(
@@ -239,7 +238,6 @@ object TextAnalysis {
 
     // Quality scoring: stopword / short-token ratios → score
     "tx02_quality" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       Tables.documents(s, d)
         .withColumn("ts", expr(s"token_stats($tokensExpr)"))
         .withColumn("n", col("ts.n"))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, col, collect_list, date_format, explode, expr, hash, lit, pmod, round, row_number, struct, window}
 
 import graft.Tables
-import graft.functions.VectorExprs
 import IndexCore.BaseBatch
 
 /** Persisted form of the IVF vector index — [[BandIndex]]'s design
@@ -103,7 +102,6 @@ object VecIndex {
   def persist(spark: SparkSession, dir: String, path: String,
       prefix: String, emb: Option[DataFrame] = None,
       buckets: Int = Buckets): Unit = {
-    VectorExprs.register(spark)
     val e = emb.getOrElse(
       Tables.embeddings(spark, dir).select("vec_id", "embedding"))
     IndexCore.writeTable(
@@ -301,7 +299,6 @@ object VecIndex {
     * `cells`, top-`k` by exact cosine. */
   private def cosineProbe(spark: SparkSession, dir: String, cells: DataFrame,
       cents: DataFrame, queries: DataFrame, labels: Labels, k: Int): DataFrame = {
-    VectorExprs.register(spark)
     val probes = probeCells(queries, "vec_id", "embedding", cents,
       Seq(col("vec_id").as("query_id"), col("cent_id").as("cluster"),
         col("embedding").as("qe")) ++ qlabel(labels))
@@ -316,7 +313,6 @@ object VecIndex {
 
   private def cosineTopK(spark: SparkSession, dir: String, prefix: String,
       queries: DataFrame, labels: Labels): DataFrame = {
-    VectorExprs.register(spark)
     streamTopK(candidates(spark, dir, cellFrame(spark, prefix),
       streamProbeCells(spark, dir, queries, labels), labels), Cosine, cosineScore)
   }
@@ -326,7 +322,6 @@ object VecIndex {
     * vectors below `nQ` as the query batch, top-`k` by cosine. */
   private[ops] def transientProbe(spark: SparkSession, dir: String, e: DataFrame,
       cents: DataFrame, nQ: Long, k: Int): DataFrame = {
-    VectorExprs.register(spark)
     cosineProbe(spark, dir, assignCells(e, cents), cents,
       e.filter(col("vec_id") < nQ), Unlabeled, k)
   }
@@ -406,7 +401,6 @@ object VecIndex {
 
   def pqProbe(spark: SparkSession, dir: String, prefix: String,
       qf: DataFrame): DataFrame = {
-    VectorExprs.register(spark)
     val queries = qf
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val probes = probeCells(queries, "query_id", "qe", centroids(spark, dir),
@@ -464,7 +458,6 @@ object VecIndex {
     * candidate, but stateless and bounded by the probed cells. */
   def pqAnnTopK(spark: SparkSession, dir: String, prefix: String,
       queries: DataFrame): DataFrame = {
-    VectorExprs.register(spark)
     val cb = spark.table(codebookTable(prefix))
     val cand = candidates(spark, dir, pqCellFrame(spark, prefix),
       streamProbeCells(spark, dir, queries, Unlabeled), Unlabeled)
@@ -500,7 +493,6 @@ object VecIndex {
     * that never reads the table it mutates — no materialize pin. */
   private def appendCells(spark: SparkSession, dir: String, spec: IndexCore.TableSpec,
       newVecs: DataFrame, prefix: String, batchId: Long): Unit = {
-    VectorExprs.register(spark)
     IndexCore.writeTable(
       cellRows(spark, dir, prefix, spec, newVecs.select("vec_id", "embedding"))
         .withColumn("ingest_batch", lit(batchId)), spec, prefix, None)
@@ -758,7 +750,6 @@ object VecIndex {
   def pqPersist(spark: SparkSession, dir: String, path: String,
       prefix: String, emb: Option[DataFrame] = None,
       buckets: Int = Buckets): Unit = {
-    VectorExprs.register(spark)
     val cb = Similarity.pqTrainedCodebook(spark, dir).localCheckpoint()
     cb.write.option("path", s"$path/codebook")
       .mode(SaveMode.Overwrite).saveAsTable(codebookTable(prefix))
@@ -932,7 +923,6 @@ object VecIndex {
       batch: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{count, first, sum, when, log => ln}
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    VectorExprs.register(spark)
     val k = Similarity.IvfCentroids
     // reference occupancy from the indexed corpus (the non-quarter
     // slice — dq07's convention), as one broadcastable array row
@@ -1024,7 +1014,6 @@ object VecIndex {
   /** [[matProbe]] over a (vec_id, embedding) query FRAME. */
   def matProbe(spark: SparkSession, dir: String, prefix: String,
       qf: DataFrame): DataFrame = {
-    VectorExprs.register(spark)
     val t = spark.table(matTable(prefix))
     prefixFunnel(t.select(col("vec_id").as("neighbor_id"), col("pfx")),
       t.select(col("vec_id").as("neighbor_id"), col("embedding").as("te")), qf)

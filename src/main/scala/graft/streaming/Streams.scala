@@ -692,7 +692,6 @@ object Streams {
     // doc_id seconds), and each doc gets its near-dup verdict against
     // the standing corpus index within its 10-min arrival window.
     "st05_stream_neardup" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       val batch = Tables.documents(s, d)
         .filter(col("source") === graft.ops.Dedup.IncBatchSrc)
         .select(col("doc_id"), col("text"), arrivalTs("doc_id"))
@@ -712,7 +711,6 @@ object Streams {
     // drives the same core through a real readStream against the
     // persisted tables.
     "st06_stream_index_probe" -> ((s, d) => {
-      graft.functions.VectorExprs.register(s)
       val prefix = graft.ops.BandIndex.ensurePersisted(s, d)
       val batch = Tables.documents(s, d)
         .filter(col("source") === graft.ops.Dedup.IncBatchSrc)

@@ -1,11 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dual-lane ANSI parity probe: run every catalog query in the
-  * default lane (ANSI ON — Spark 4's default, adopted round 10) and
-  * in the pre-ANSI opt-out lane (spark.graft.preAnsiLane=true — the
-  * semantics the reference pipeline ran under), and report queries
+  * default pre-ANSI lane (the semantics the reference pipeline ran
+  * under) and in the checked lane (spark.graft.ansiLane=true), and
+  * report queries
   * that THROW or whose results differ. The engine's goal is an empty
   * report: malformed-input paths use try_* forms so both lanes agree
   * row-for-row (AnsiLaneSpec pins a sample of this in the suite;
@@ -17,19 +15,12 @@ object AnsiProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cpus.toInt)
     Logs.muteReviewedWindowWarning()
 
     def sweep(ansiOn: Boolean): Map[String, Either[String, Seq[String]]] = {
-      // both knobs, so lane control is explicit whatever the default
+      // set explicitly in both lanes, so neither inherits the other's
       spark.conf.set("spark.graft.ansiLane", ansiOn.toString)
-      spark.conf.set("spark.graft.preAnsiLane", (!ansiOn).toString)
       graft.Tables.pin(spark)
       // the memoized shared frames were built under the other lane's
       // confs — rebuild from scratch so the lane actually exercises

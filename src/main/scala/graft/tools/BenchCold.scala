@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query COLD benchmark: every catalog query timed from a cold
   * start (shared memo frames dropped, cached relations unpersisted,
   * a GC between queries), so the numbers attribute each operator's
@@ -24,15 +22,8 @@ object BenchCold {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cpus.toInt)
     Logs.muteReviewedWindowWarning()
-    graft.Tables.pin(spark)
 
     def coldReset(): Unit = {
       graft.ops.Relational.clearMemo(spark)

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.SparkSession
-
 import graft.gtfs.{GoldReport, SilverTransform}
 
 /** End-to-end GTFS pipeline demo — the Scala equivalent of the
@@ -21,15 +19,7 @@ object GtfsDemo {
     val date = args.lift(1).map(LocalDate.parse)
       .getOrElse(LocalDate.of(2026, 2, 23))
 
-    val spark = SparkSession.builder()
-      .master("local[*]")
-      .appName("gtfs-etl")
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(Runtime.getRuntime.availableProcessors())
 
     val raw = SilverTransform.readBronze(spark, bronzeDir)
     val silver = SilverTransform.transform(raw, date).cache()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev instrument (round 18): dump the EXECUTED physical plan of
   * every action a catalog entry runs — the evidence surface for
   * maintenance-path claims. The lifecycle entries return
@@ -21,15 +19,8 @@ object PlanExec {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = args.toSeq
     require(names.nonEmpty, "usage: PlanExec <catalog-query> [more]")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     Logs.muteReviewedWindowWarning()
-    graft.Tables.pin(spark)
 
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scans every catalog query's physical plan for repeated EXPENSIVE
   * expression markers — the fingerprint of the alias-inlining /
   * inferred-filter double-evaluation pathologies (SCALE_NOTES History
@@ -27,14 +25,7 @@ object PlanScan {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Tables.pin(spark)
+    val spark = graft.Session.local(4)
     // Effective plan text for counting: flat per-node verbose strings
     // of the plan tree (+ subqueries), with each DISTINCT cached
     // relation's build plan counted ONCE. treeString reprints a

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit, pmod}
 
 /** Dev tool (round 17): print the SERVING-path physical plans of the
@@ -22,13 +21,7 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
 object PlanServe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     import graft.ops.{BandIndex, IndexCore, LexIndex, VecIndex}
     import graft.streaming.Streams
     import graft.Tables

@@ -72,13 +72,7 @@ object Report {
     val day = if (args.length > 1) LocalDate.parse(args(1))
       else LocalDate.of(2026, 2, 23)
     val outDir = if (args.length > 2) args(2) else "/tmp/graft_report"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(8)
     val (p1, p2, p3) = render(spark, bronzeDir, day, outDir)
     println(s"WROTE $p1")
     println(s"WROTE $p2")

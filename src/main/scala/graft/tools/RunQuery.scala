@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev helper: run one catalog query by name and print its result.
   * With a 4th arg, also dump the result + oracle_sql.json in the
   * Verify layout so tools/check_verify.py can compare just this one.
@@ -13,13 +11,7 @@ object RunQuery {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val nShow = if (args.length > 2) args(2).toInt else 20
     val outDir = if (args.length > 3) Some(args(3)) else None
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     val df = graft.SparkEntry.queries(name)(spark, dir)
     println(s"ROWS=${df.count()}")
     df.show(nShow, truncate = false)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness: replicates the sf0.1 testdata REPL× (with
@@ -21,14 +20,7 @@ object ScaleStress {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Tables.pin(spark)
+    val spark = graft.Session.local(cpus)
 
     // --- replicate with offset keys so join fan-outs stay realistic ---
     def replicate(name: String, keyOffsets: Map[String, Long]): Unit = {

@@ -55,13 +55,7 @@ object ShuffleProbe {
     val batchDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val bigDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cpus.toInt)
     Logs.muteReviewedWindowWarning()
     // broadcast off: a broadcast corpus side would hide an exchange
     // as a collect-to-driver, which moves MORE corpus bytes, not

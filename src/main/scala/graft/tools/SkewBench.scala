@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the three skew-join remedies against each other on a
@@ -29,14 +28,8 @@ object SkewBench {
     val repl = args.headOption.map(_.toInt).getOrElse(10)
     val dir = s"/tmp/graft-scale-x$repl"
     val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(cpus)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     val HotKey = 0L
     def fact() = spark.read.parquet(s"$dir/lineitem.parquet")
@@ -97,7 +90,6 @@ object SkewBench {
     // is one extra scan of the fact; the join itself should match
     // salt_hot_only (the candidate set contains the hot key, and
     // false positives only add a few replicated right rows)
-    graft.functions.VectorExprs.register(spark)
     timed("salt_sketch") {
       val f = fact()
       // localCheckpoint caps detection at ONE fact scan (j14's note:

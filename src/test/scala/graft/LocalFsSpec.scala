@@ -11,12 +11,13 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{AbstractFileSystem, CreateFlag, FileContext, FileStatus, FileSystem,
   Path}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
 
 import graft.gtfs.SilverTransform
 import graft.streaming.Streams
 
-/** The local file system [[Tables.pin]] installs: same files, bits and
-  * statuses as Hadoop's stock one, and no child process per commit. */
+/** The local file system [[GraftExtensions]] installs: same files, bits
+  * and statuses as Hadoop's stock one, and no child process per commit. */
 class LocalFsSpec extends SparkSpec {
 
   private val LocalUri = new URI("file:///")
@@ -61,11 +62,27 @@ class LocalFsSpec extends SparkSpec {
     }
   }
 
-  test("pin installs the fork-free classes, even over a stock instance cached before it") {
-    val cached = FileSystem.get(LocalUri, spark.sparkContext.hadoopConfiguration)
-    assert(FileSystem.get(LocalUri, spark.sparkContext.hadoopConfiguration) eq cached)
-    assert(!cached.isInstanceOf[ForkFreeLocalFileSystem], "the context's own conf stays stock")
-    Tables.pin(spark)
+  /** The commands of the child processes the JVM starts while `body`
+    * runs, from a JFR `jdk.ProcessStart` recording. */
+  private def processStarts(body: => Unit): Seq[String] = {
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    try body finally recording.stop()
+    val jfr = TempDirs.create("graft-lfs-jfr").resolve("run.jfr")
+    recording.dump(jfr)
+    recording.close()
+    jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command")).toSeq
+  }
+
+  test("the session contract installs the fork-free classes over a cached stock instance") {
+    val cached = FileSystem.get(LocalUri, stockConf)
+    assert(FileSystem.get(LocalUri, stockConf) eq cached)
+    assert(!cached.isInstanceOf[ForkFreeLocalFileSystem], "a stock conf caches the stock class")
+    assert(FileSystem.get(LocalUri, spark.sparkContext.hadoopConfiguration).getClass ===
+      classOf[ForkFreeLocalFileSystem])
     val conf = sessionConf
     assert(FileSystem.get(LocalUri, conf).getClass === classOf[ForkFreeLocalFileSystem])
     assert(new Path("/tmp").getFileSystem(conf).getClass === classOf[ForkFreeLocalFileSystem])
@@ -74,8 +91,8 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("files and directories get the stock permission bits and .crc sidecars") {
-    val stockBase = Files.createTempDirectory("graft-lfs-stock")
-    val forkFreeBase = Files.createTempDirectory("graft-lfs-forkfree")
+    val stockBase = TempDirs.create("graft-lfs-stock")
+    val forkFreeBase = TempDirs.create("graft-lfs-forkfree")
     populate(stockConf, stockBase)
     populate(sessionConf, forkFreeBase)
     val stock = modes(stockBase)
@@ -85,7 +102,7 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("getFileLinkStatus of a file, a directory and a symlink equals the stock result") {
-    val base = Files.createTempDirectory("graft-lfs-link")
+    val base = TempDirs.create("graft-lfs-link")
     val file = Files.write(base.resolve("f"), "abc".getBytes(StandardCharsets.UTF_8))
     val dir = Files.createDirectory(base.resolve("d"))
     val link = Files.createSymbolicLink(base.resolve("l"), file)
@@ -106,8 +123,8 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("a goldRefresh micro-batch and saveSilver start no chmod or readlink process") {
-    val src = Files.createTempDirectory("graft-lfs-bronze")
-    val out = Files.createTempDirectory("graft-lfs-out").toString
+    val src = TempDirs.create("graft-lfs-bronze")
+    val out = TempDirs.create("graft-lfs-out").toString
     def rec(vehicle: String, lat: Double, time: String) =
       s"""{"Lines": "189", "VehicleNumber": "$vehicle", "Lat": $lat, "Lon": 21.0, "Time": "$time", "Brigade": "1"}"""
     Seq("08:00:00", "08:00:15").zipWithIndex.foreach { case (t, i) =>
@@ -115,10 +132,7 @@ class LocalFsSpec extends SparkSpec {
         s"""${rec("7000", 52.23, s"2026-02-23 $t")}]}"""
       Files.write(src.resolve(s"poll_$i.json"), body.getBytes(StandardCharsets.UTF_8))
     }
-    val recording = new jdk.jfr.Recording()
-    recording.enable("jdk.ProcessStart")
-    recording.start()
-    try {
+    val commands = processStarts {
       val clean = Streams.cleanStream(Streams.bronzeStream(spark, src.toString), "25 hours")
       val q = Streams.goldRefresh(clean, s"$out/gold", s"$out/ckpt", stateTtlSec = 25L * 3600L)
       try q.processAllAvailable() finally q.stop()
@@ -126,16 +140,35 @@ class LocalFsSpec extends SparkSpec {
       SilverTransform.saveSilver(SilverTransform.transform(
         SilverTransform.readBronze(spark, src.toString), LocalDate.parse("2026-02-23")),
         s"$out/silver")
-    } finally recording.stop()
-    val jfr = Files.createTempFile("graft-lfs", ".jfr")
-    recording.dump(jfr)
-    recording.close()
-    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
-      .filter(_.getEventType.getName == "jdk.ProcessStart")
-      .map(_.getString("command")).toSeq
+    }
     val forks = commands.filter(c => c.contains("chmod") || c.contains("readlink"))
     assert(forks.isEmpty,
       s"${forks.size} of ${commands.size} child processes are chmod/readlink: ${forks.take(3)}")
     assert(spark.read.parquet(s"$out/silver").count() > 0, "saveSilver wrote no rows")
+  }
+
+  test("a new root session's saveAsTable starts no chmod, its warehouse directory included") {
+    val master = spark.sparkContext.master
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    // a root session of its own, so its SharedState creates a new
+    // warehouse directory; it never calls Tables.pin
+    val warehouse = TempDirs.create("graft-lfs-wh").resolve("warehouse")
+    val commands = try processStarts {
+      SparkSession.builder().master(master)
+        .config("spark.sql.warehouse.dir", warehouse.toString).getOrCreate()
+        .range(3).write.saveAsTable("graft_lfs_contract")
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+    assert(Files.isDirectory(warehouse.resolve("graft_lfs_contract")), "saveAsTable wrote no table")
+    val chmods = commands.filter(_.contains("chmod"))
+    assert(chmods.isEmpty,
+      s"${chmods.size} of ${commands.size} child processes are chmod: ${chmods.take(3)}")
   }
 }

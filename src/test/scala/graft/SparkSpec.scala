@@ -3,19 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for specs — one per suite (lazy), local[4],
-  * pinned to the engine's session semantics (Tables.pin). */
+/** Shared session for specs — one per suite (lazy), the same
+  * [[Session.local]] recipe at 4 cores for every suite. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Tables.pin(s)
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4)
 }

@@ -14,7 +14,6 @@ import graft.SparkSpec
 class TopKAggSpec extends SparkSpec {
 
   test("topk_struct equals window top-k per group across partitions") {
-    VectorExprs.register(spark)
     import org.apache.spark.sql.expressions.Window
     // 8 groups x 500 rows, values hash-derived; repartition(16) forces
     // cross-partition merges of partial top-k buffers

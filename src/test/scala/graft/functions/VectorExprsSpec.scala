@@ -19,7 +19,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("cosine_sim equals the HOF fold bit-for-bit") {
-    VectorExprs.register(spark)
     val df = seeded(200, 64).toDF("id", "a")
       .withColumn("b", reverse(col("a"))) // a second deterministic vector
     val hof =
@@ -34,7 +33,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("cosine_sim codegen and interpreted paths agree") {
-    VectorExprs.register(spark)
     val df = seeded(100, 16).toDF("id", "a").withColumn("b", reverse(col("a")))
     val viaCodegen = df.select(col("id"), expr("cosine_sim(a, b)").as("c"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -63,7 +61,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("cosine_sim propagates nulls") {
-    VectorExprs.register(spark)
     val df = Seq((1L, Some(Array(1.0f, 2.0f)), None: Option[Array[Float]]))
       .toDF("id", "a", "b")
     val r = df.select(expr("cosine_sim(a, b)")).head()
@@ -71,7 +68,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("dot_product equals the HOF fold bit-for-bit, mixed float/double sides") {
-    VectorExprs.register(spark)
     val df = seeded(200, 64).toDF("id", "a")
       .withColumn("b", expr("CAST(reverse(a) AS ARRAY<DOUBLE>)"))
     val hof =
@@ -87,7 +83,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("dot_product propagates nulls and rejects non-numeric arrays") {
-    VectorExprs.register(spark)
     val df = Seq((1L, Some(Array(1.0f, 2.0f)), None: Option[Array[Float]]))
       .toDF("id", "a", "b")
     assert(df.select(expr("dot_product(a, b)")).head().isNullAt(0))
@@ -99,7 +94,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("cosine_sim and dot_product null on length mismatch, like the HOF form") {
-    VectorExprs.register(spark)
     val df = Seq((1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f)))
       .toDF("id", "a", "b")
     val hofDot =
@@ -119,7 +113,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("simhash_mix equals the relational bit-majority form, nulls on empty") {
-    VectorExprs.register(spark)
     val df = Seq(
       (1L, Seq(0x5L, 0x3L, 0x1L)),
       (2L, Seq(0xFFFFFFFFL)),
@@ -145,7 +138,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("minhash_mix equals the per-family HOF array_min and nulls on empty") {
-    VectorExprs.register(spark)
     val df = Seq(
       (1L, Seq(123456789L, 987654321L, 42L)),
       (2L, Seq(7L)),

@@ -5,11 +5,13 @@ import java.time.{ZoneOffset, ZonedDateTime}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Unit tests for the Bronze ingest (S1-S4) with an injected fake
   * transport — no network. */
 class IngestSpec extends AnyFunSuite {
 
-  private def tmpDir = Files.createTempDirectory("graft-ingest").toString
+  private def tmpDir = TempDirs.create("graft-ingest").toString
 
   private def ingest(responses: Iterator[FetchResult],
       sleeps: collection.mutable.Buffer[Long]): Ingest =

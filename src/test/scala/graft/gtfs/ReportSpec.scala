@@ -2,7 +2,7 @@ package graft.gtfs
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** S9 presentation artifacts (the last reference-visible outputs):
   * renders Figure_1 / Figure_2 / map.html from the day=23 fixture and
@@ -18,7 +18,7 @@ class ReportSpec extends SparkSpec {
 
   test("Report.render emits the three artifacts with table-exact content") {
     assume(available)
-    val out = Files.createTempDirectory("graft_report").toString
+    val out = TempDirs.create("graft_report").toString
     val (p1, p2, p3) = graft.tools.Report.render(spark, day23, D, out)
     Seq(p1, p2, p3).foreach { p =>
       assert(Files.exists(Paths.get(p)), s"missing artifact $p")

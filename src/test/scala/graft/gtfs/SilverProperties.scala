@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Prop}
 import org.scalacheck.Prop.forAll
 
-import graft.Tables
+import graft.Session
 
 /** Generative invariant checks (FIXTURES.md §test plan): arbitrary
   * bronze feeds — valid pings mixed with out-of-bbox coords, foreign
@@ -17,17 +17,7 @@ import graft.Tables
   */
 object SilverProperties extends Properties("SilverTransform") {
 
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    Tables.pin(s)
-    s
-  }
+  private lazy val spark = Session.local(4)
 
   private val D = LocalDate.of(2026, 2, 23)
 

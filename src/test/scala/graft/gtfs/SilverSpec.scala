@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, Row}
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Ports of the reference's Silver unit tests
   * (/root/reference/tests/test_silver.py) over hand-built Bronze
@@ -28,7 +28,7 @@ class SilverSpec extends SparkSpec {
     // read must not fail the batch, and the transform must sweep the
     // null envelope (explode of null → no rows) without losing the
     // healthy files
-    val dir = java.nio.file.Files.createTempDirectory("graft-corrupt").toString
+    val dir = TempDirs.create("graft-corrupt").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "good.json"),
       """{"result": [{"Lines": "189", "VehicleNumber": "8349", "Lat": 52.2, "Lon": 21.0, "Time": "2026-02-23 08:00:00"}]}"""
         .getBytes("UTF-8"))

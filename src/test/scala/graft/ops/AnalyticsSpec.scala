@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, SparkEntry, Tables}
+import graft.{SparkSpec, SparkEntry, Tables, TempDirs}
 
 /** Invariants for the round-4 continuation operators (behavioral
   * analytics, LM scoring, substring dedup, range search) — exact
@@ -193,7 +193,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("anomaly: degenerate groups (n=1, constant-valued) emit nothing instead of NaN/Inf z") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dq03-degenerate").toString
+    val dir = TempDirs.create("graft-dq03-degenerate").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     // "solo": one row (sd undefined); "flat": constant values (sd=0);
     // "real": a populated group with one obvious outlier
@@ -292,7 +292,6 @@ class AnalyticsSpec extends SparkSpec {
 
   test("hilbert index is a bijective, step-adjacent space-filling curve on a full grid") {
     import spark.implicits._
-    graft.functions.VectorExprs.register(spark)
     val n = 16 // the 16×16 low-coordinate block of the 2^ZBits grid
     val gridDf = (0 until n).flatMap(x => (0 until n).map(y => (x.toLong, y.toLong)))
       .toDF("x", "y")

@@ -1,11 +1,9 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** The 100 TB ingest-path proof for incremental dedup: the corpus
   * band index and signature table persisted as bucketed parquet, and
@@ -28,7 +26,7 @@ class BandIndexSpec extends SparkSpec {
     }
 
   test("persisted probe plans with no exchange above the corpus scans") {
-    val path = Files.createTempDirectory("graft-bandidx").toString
+    val path = TempDirs.create("graft-bandidx").toString
     // Force the SMJ path: broadcasting the (tiny, test-sized) batch
     // side would make the no-exchange property trivially true without
     // exercising the bucketed layout.

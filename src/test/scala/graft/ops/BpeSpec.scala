@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.collection.mutable
 
-import graft.{SparkSpec, SparkEntry, Tables}
+import graft.{SparkSpec, SparkEntry, Tables, TempDirs}
 
 /** tx13 is REAL byte-pair encoding: the dataflow's learned vocabulary
   * must equal a from-scratch reference implementation of classic BPE
@@ -82,7 +82,7 @@ class BpeSpec extends SparkSpec {
     // 61-word synthetic corpus). The sentinel guard makes a dry
     // round a no-op in both engines.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe-sat").toString
+    val dir = TempDirs.create("graft-bpe-sat").toString
     Seq((0L, "ab ab ba", "src0", 8L), (1L, "ab cc", "src0", 5L))
       .toDF("doc_id", "text", "source", "n_chars")
       .withColumn("lang", org.apache.spark.sql.functions.lit("en"))

@@ -1,10 +1,8 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Tables, TempDirs}
 
 /** Proves the 100 TB co-location story concretely: when both join
   * sides are bucketed on the join key, the sort-merge join runs with
@@ -15,7 +13,7 @@ import graft.{SparkSpec, Tables}
 class BucketingSpec extends SparkSpec {
 
   test("bucketed fact-fact join plans without a shuffle exchange") {
-    val warehouse = Files.createTempDirectory("graft-bucket").toString
+    val warehouse = TempDirs.create("graft-bucket").toString
     val sf = "/root/testdata/sf0.001"
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
     spark.conf.set("spark.sql.adaptive.enabled", "false") // stable plan text

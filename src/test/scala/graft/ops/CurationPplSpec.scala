@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, TempDirs}
 
 /** Mechanics invariants for cur07 (CCNet-style perplexity filter).
   * Exact numeric parity is the DuckDB oracle's job; these pin the
@@ -48,7 +48,7 @@ class CurationPplSpec extends SparkSpec {
     // and a whitespace-only doc stay in the output, score null, and
     // land in 'tail' deterministically.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cur07-empty").toString
+    val dir = TempDirs.create("graft-cur07-empty").toString
     Seq(
       (0L, "alpha beta alpha", "src0", 16L),
       (1L, "beta gamma", "src1", 10L),

@@ -84,7 +84,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("contrastive pairs: bands respected, ids distinct, choices are in-cell argmaxes") {
-    graft.functions.VectorExprs.register(spark)
     val rows = q("ds11_contrastive_pairs").collect()
     assert(rows.nonEmpty, "no anchors mined — vacuous fixture")
     val tau = Similarity.DupThreshold

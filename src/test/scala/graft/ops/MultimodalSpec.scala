@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 import graft.ops.Multimodal.{MediaRow, MediaFeat}
 
 /** Boundary behavior of the batched media decode (partitions smaller
@@ -77,7 +77,7 @@ class MultimodalSpec extends SparkSpec {
     // an empty doc would emit spurious chunk/frame rows where the
     // DuckDB oracle emits none
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty-doc").toString
+    val dir = TempDirs.create("graft-empty-doc").toString
     Seq(
       (0L, "", "en", "src0", 0L),
       (1L, "some payload bytes here", "en", "src0", 23L))

@@ -226,7 +226,6 @@ class OpsSpec extends SparkSpec {
     assert(dup.filter(col("cosine") < Similarity.DupThreshold).count() === 0)
     // every reported pair's cosine matches an independent brute-force
     // computation (the blocking may MISS pairs, but never distorts one)
-    graft.functions.VectorExprs.register(spark)
     val e = graft.Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
     val bf = dup
       .join(e.toDF("vec_a", "ea"), "vec_a").join(e.toDF("vec_b", "eb"), "vec_b")

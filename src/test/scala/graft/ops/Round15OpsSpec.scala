@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, TempDirs}
 
 /** Invariants for the round-15 additions: the persisted BM25 postings
   * index family (tx16–tx19) and the ds12 quota-window plan pin the
@@ -322,7 +322,7 @@ class Round15OpsSpec extends SparkSpec {
   test("dq08: fires on a vocabulary-shifted batch, stays quiet on a stable one") {
     import org.apache.spark.sql.functions.{col, concat_ws, lit, when}
     def corpus(newText: org.apache.spark.sql.Column): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-dq08").toString
+      val dir = TempDirs.create("graft-dq08").toString
       spark.range(400)
         .select(col("id").as("doc_id"),
           when(org.apache.spark.sql.functions.pmod(col("id"), lit(4)) === 0, newText)

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, TempDirs}
 
 /** Invariants for the round-16 additions (VERDICT r15 items 1, 3, 4,
   * 5, 6 + the ADVICE fixes): the skew-safe impact ranking, the
@@ -192,7 +192,7 @@ class Round16OpsSpec extends SparkSpec {
 
   test("tx22: quiet corpus skips the rebuild; drifted corpus fires it and restores the global cap") {
     def corpus(newText: org.apache.spark.sql.Column): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-tx22").toString
+      val dir = TempDirs.create("graft-tx22").toString
       spark.range(400)
         .select(col("id").as("doc_id"),
           when(pmod(col("id"), lit(4)) === 0, newText)

@@ -217,7 +217,6 @@ class Round4OpsSpec extends SparkSpec {
   }
 
   test("sim07: Lloyd training is shape-preserving and never increases quantization distortion") {
-    graft.functions.VectorExprs.register(spark)
     import org.apache.spark.sql.functions.{broadcast, expr => e}
     val emb = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     val seed = emb.filter(col("vec_id") < Similarity.PqK)
@@ -250,7 +249,6 @@ class Round4OpsSpec extends SparkSpec {
   }
 
   test("token_stats matches every HOF counter exactly across the corpus") {
-    graft.functions.VectorExprs.register(spark)
     val stops = TextAnalysis.inList(TextAnalysis.LangStopwords.flatMap(_._2))
     val cmp = Tables.documents(spark, sf)
       .withColumn("tokens", expr(TextAnalysis.tokensExpr))
@@ -265,7 +263,6 @@ class Round4OpsSpec extends SparkSpec {
   }
 
   test("sq_dist matches the HOF fold bit-for-bit and nulls on length mismatch") {
-    graft.functions.VectorExprs.register(spark)
     val e = Tables.embeddings(spark, sf).limit(50)
       .select(col("embedding").as("a"),
         expr("reverse(embedding)").as("b"))

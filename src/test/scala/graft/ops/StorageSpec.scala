@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, Tables, TempDirs}
 
 /** Storage-layer evidence: format round-trips (the engine can land on
   * any of Spark's columnar/text sinks without semantic drift) and
@@ -18,7 +18,7 @@ class StorageSpec extends SparkSpec {
 
   test("corrupt-file policy: default read fails loudly, salvage recovers rows and names the file") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-corrupt").toString
+    val dir = TempDirs.create("graft-corrupt").toString
     // three good single-file parts + one truncated file + one
     // valid-but-EMPTY file (must NOT be reported corrupt)
     val base = graft.Tables.documents(spark, sf).select("doc_id", "source")
@@ -55,7 +55,7 @@ class StorageSpec extends SparkSpec {
 
     // 3. a clean directory reports NOTHING corrupt — "no loss" is
     //    assertable, not assumed
-    val cleanDir = java.nio.file.Files.createTempDirectory("graft-clean").toString
+    val cleanDir = TempDirs.create("graft-clean").toString
     base.limit(10).write.parquet(s"$cleanDir/d")
     val clean = DataQuality.salvageScanParquet(spark, s"$cleanDir/d")
     assert(clean.corruptFiles.isEmpty && clean.rows.count() == 10)
@@ -66,7 +66,7 @@ class StorageSpec extends SparkSpec {
       .withColumn("ts_s", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
       .withColumn("date_s", col("date").cast("string"))
       .drop("ts", "date") // text formats carry timestamps as strings
-    val dir = Files.createTempDirectory("graft-formats").toString
+    val dir = TempDirs.create("graft-formats").toString
     val canon = base.collect().map(_.toString).sorted.toSeq
     Seq("parquet", "orc", "json", "csv").foreach { fmt =>
       val path = s"$dir/$fmt"
@@ -85,7 +85,7 @@ class StorageSpec extends SparkSpec {
 
   test("layout evolution: old 5-field and new 6-field bronze in one read, silver contract preserved") {
     import java.nio.charset.StandardCharsets
-    val dir = Files.createTempDirectory("graft-evolve").toString
+    val dir = TempDirs.create("graft-evolve").toString
     // old layout: the reference's 5 declared fields
     Files.write(java.nio.file.Paths.get(dir, "old.json"),
       """{"result": [{"Lines": "102", "VehicleNumber": "1000", "Lat": 52.2, "Lon": 21.0, "Time": "2026-02-23 12:00:00"}]}"""
@@ -109,7 +109,7 @@ class StorageSpec extends SparkSpec {
 
     // parquet leg: a silver sink written across the layout change
     // reads back as one table under mergeSchema
-    val sink = Files.createTempDirectory("graft-evolve-sink").toString
+    val sink = TempDirs.create("graft-evolve-sink").toString
     val old5 = silver.filter(col("VehicleNumber") === "1000").drop("Brigade")
     val new6 = silver.filter(col("VehicleNumber") === "7000")
     old5.write.mode("append").parquet(sink)
@@ -122,7 +122,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("date-partitioned layout is read with partition pruning, not a full scan") {
-    val dir = Files.createTempDirectory("graft-prune").toString
+    val dir = TempDirs.create("graft-prune").toString
     val ev = Tables.events(spark, sf)
       .withColumn("date", to_date(col("ts")))
     ev.write.partitionBy("date").mode("overwrite").parquet(dir)

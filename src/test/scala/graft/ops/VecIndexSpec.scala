@@ -1,12 +1,10 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** The 100 TB ANN-serving proof: the IVF assignment persists as a
   * cluster-bucketed cell table, and the probe's read path contains no
@@ -83,7 +81,7 @@ class VecIndexSpec extends SparkSpec {
   private def isNew = pmod(hash(col("vec_id")), lit(4)) === lit(0)
 
   test("append: a sliced build plus append equals the full build; plan and layout survive") {
-    val path = Files.createTempDirectory("graft-vecidx-specapp").toString
+    val path = TempDirs.create("graft-vecidx-specapp").toString
     val prefix = s"graft_vec_specapp_${System.nanoTime()}"
     try {
       VecIndex.persist(spark, sf, path, prefix, Some(emb(sf).filter(!isNew)))
@@ -100,7 +98,7 @@ class VecIndexSpec extends SparkSpec {
   }
 
   test("compact: one file per bucket; decisions and plan property survive") {
-    val path = Files.createTempDirectory("graft-vecidx-speccomp").toString
+    val path = TempDirs.create("graft-vecidx-speccomp").toString
     val prefix = s"graft_vec_speccomp_${System.nanoTime()}"
     try {
       VecIndex.persist(spark, sf, path, prefix, Some(emb(sf).filter(!isNew)))
@@ -125,8 +123,8 @@ class VecIndexSpec extends SparkSpec {
   }
 
   test("retire: retired vectors vanish; the index equals one that never held them") {
-    val path = Files.createTempDirectory("graft-vecidx-specret").toString
-    val path2 = Files.createTempDirectory("graft-vecidx-specref").toString
+    val path = TempDirs.create("graft-vecidx-specret").toString
+    val path2 = TempDirs.create("graft-vecidx-specref").toString
     val prefix = s"graft_vec_specret_${System.nanoTime()}"
     val refPrefix = s"graft_vec_specref_${System.nanoTime()}"
     try {
@@ -305,8 +303,8 @@ class VecIndexSpec extends SparkSpec {
     // must serve decisions identical to sim18's full build — i.e.
     // appends encoded against the PERSISTED generation codebook,
     // never a retrained one (the codebook-generation contract).
-    val path = Files.createTempDirectory("graft-vecidx-specpq").toString
-    val path2 = Files.createTempDirectory("graft-vecidx-specpqref").toString
+    val path = TempDirs.create("graft-vecidx-specpq").toString
+    val path2 = TempDirs.create("graft-vecidx-specpqref").toString
     val prefix = s"graft_vec_specpq_${System.nanoTime()}"
     val refPrefix = s"graft_vec_specpqref_${System.nanoTime()}"
     try {
@@ -358,8 +356,8 @@ class VecIndexSpec extends SparkSpec {
     // tombstone write must leave the code-cell files untouched, the
     // masked ADC serve must equal an eager pqRetire immediately, and
     // the next pqCompact must purge the rows and clear the set.
-    val path = Files.createTempDirectory("graft-vecidx-pqtomb").toString
-    val path2 = Files.createTempDirectory("graft-vecidx-pqtombeager").toString
+    val path = TempDirs.create("graft-vecidx-pqtomb").toString
+    val path2 = TempDirs.create("graft-vecidx-pqtombeager").toString
     val prefix = s"graft_vec_pqtomb_${System.nanoTime()}"
     val refPrefix = s"graft_vec_pqtombeager_${System.nanoTime()}"
     try {
@@ -406,8 +404,8 @@ class VecIndexSpec extends SparkSpec {
     // which the ORIGINAL serving prefix must serve exactly sim18's
     // full-build decisions, with the generation's codebook and cells
     // swapped together (never mixed across generations).
-    val path0 = Files.createTempDirectory("graft-vecidx-gen0").toString
-    val path1 = Files.createTempDirectory("graft-vecidx-gen1").toString
+    val path0 = TempDirs.create("graft-vecidx-gen0").toString
+    val path1 = TempDirs.create("graft-vecidx-gen1").toString
     val serving = s"graft_vec_gen0_${System.nanoTime()}"
     val gen1 = s"graft_vec_gen1_${System.nanoTime()}"
     try {
@@ -458,7 +456,7 @@ class VecIndexSpec extends SparkSpec {
     // embeddings per copy — decisions are not under test here, bytes
     // are; queries and centroids stay the raw bounded frames).
     val small = VecIndex.ensurePersisted(spark, sf, "shufsmall")
-    val bigPath = Files.createTempDirectory("graft-vecidx-shufbig").toString
+    val bigPath = TempDirs.create("graft-vecidx-shufbig").toString
     val big = s"graft_vec_shufbig_${System.nanoTime()}"
     val e10 = (0 until 10).map(i =>
         emb(sf).select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),

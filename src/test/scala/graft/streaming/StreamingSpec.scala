@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 
-import graft.SparkSpec
+import graft.{SparkSpec, TempDirs}
 
 /** Drives the Structured Streaming GTFS variant end to end: bronze
   * JSON files appear in a directory, `readStream` picks them up, the
@@ -34,12 +34,11 @@ class StreamingSpec extends SparkSpec {
     s"""{"Lines": "$lines", "VehicleNumber": "$vehicle", "Lat": $lat, "Lon": $lon, "Time": "$time", "Brigade": "1"}"""
 
   test("the LLM quality gate composes with Structured Streaming: streamed survivors equal batch") {
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val batchDocs = graft.Tables.documents(spark, sf)
     // stage the corpus as a streaming source directory (two files →
     // at least two micro-batches under maxFilesPerTrigger = 1)
-    val srcDir = Files.createTempDirectory("graft-stream-docs").toString
+    val srcDir = TempDirs.create("graft-stream-docs").toString
     batchDocs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$srcDir/part_a")
     batchDocs.filter(org.apache.spark.sql.functions.col("doc_id") % 2 =!= 0)
@@ -65,7 +64,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val sf = "/root/testdata/sf0.001"
     val events = graft.Tables.events(spark, sf)
-    val srcDir = Files.createTempDirectory("graft-stream-ev").toString
+    val srcDir = TempDirs.create("graft-stream-ev").toString
     events.filter(col("event_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$srcDir/part_a")
     events.filter(col("event_id") % 2 =!= 0)
@@ -94,7 +93,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val sf = "/root/testdata/sf0.001"
     val events = graft.Tables.events(spark, sf)
-    val srcDir = Files.createTempDirectory("graft-tws-ev").toString
+    val srcDir = TempDirs.create("graft-tws-ev").toString
     events.filter(col("event_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$srcDir/part_a")
     events.filter(col("event_id") % 2 =!= 0)
@@ -131,7 +130,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming silver dedups across micro-batches and filters bbox") {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = TempDirs.create("graft-stream").toString
     // file 1: two good records (one duplicated), one Kraków outlier
     writeBronze(dir, "b1.json",
       rec("102", "1000", 52.2, 21.0, "2026-02-23 12:00:00"),
@@ -157,7 +156,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("flatMapGroupsWithState segments trips across micro-batches") {
-    val dir = Files.createTempDirectory("graft-trips").toString
+    val dir = TempDirs.create("graft-trips").toString
     // batch 1: two pings 10 min apart (same trip)
     writeBronze(dir, "b1.json",
       rec("189", "8349", 52.2, 21.0, "2026-02-23 08:00:00"),
@@ -186,9 +185,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("gold refresh counts segments that span micro-batch boundaries") {
-    val dir = Files.createTempDirectory("graft-gold-src").toString
-    val out = Files.createTempDirectory("graft-gold-out").toString
-    val ckpt = Files.createTempDirectory("graft-gold-ckpt").toString
+    val dir = TempDirs.create("graft-gold-src").toString
+    val out = TempDirs.create("graft-gold-out").toString
+    val ckpt = TempDirs.create("graft-gold-ckpt").toString
     writeBronze(dir, "b1.json",
       rec("189", "8349", 52.2, 21.0, "2026-02-23 08:00:00"),
       rec("189", "8349", 52.21, 21.01, "2026-02-23 08:10:00"))
@@ -220,7 +219,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("trip state times out via watermark: last trip of the day is emitted") {
-    val dir = Files.createTempDirectory("graft-trips-ttl").toString
+    val dir = TempDirs.create("graft-trips-ttl").toString
     writeBronze(dir, "b1.json",
       rec("189", "8349", 52.2, 21.0, "2026-02-23 08:00:00"),
       rec("189", "8349", 52.21, 21.01, "2026-02-23 08:10:00"))
@@ -249,7 +248,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("enriched state TTL: vehicle returning after expiry restarts at first-ping semantics") {
-    val dir = Files.createTempDirectory("graft-enr-ttl").toString
+    val dir = TempDirs.create("graft-enr-ttl").toString
     writeBronze(dir, "b1.json",
       rec("189", "8349", 52.2, 21.0, "2026-02-23 08:00:00"),
       rec("189", "8349", 52.21, 21.01, "2026-02-23 08:10:00"))
@@ -293,7 +292,7 @@ class StreamingSpec extends SparkSpec {
     // on how pings pack into micro-batches (timeout batches race with
     // data arrival, so a timeout-only TTL changes answers with pacing
     // — found by review; pinned here for three packings)
-    val dir = Files.createTempDirectory("graft-ttlgap").toString
+    val dir = TempDirs.create("graft-ttlgap").toString
     // vehicle 1000: gap spans batches, with a duplicates-only batch in
     // between (the op is invoked, drops everything, and must still
     // re-arm its reaper timeout)
@@ -339,8 +338,8 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream interval join attributes purchases to in-window clicks") {
     import org.apache.spark.sql.types._
-    val cdir = Files.createTempDirectory("graft-clicks").toString
-    val pdir = Files.createTempDirectory("graft-purch").toString
+    val cdir = TempDirs.create("graft-clicks").toString
+    val pdir = TempDirs.create("graft-purch").toString
     def writeJson(dir: String, name: String, lines: String*): Unit = {
       val p = Paths.get(dir, name)
       Files.write(p, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
@@ -384,14 +383,13 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming near-dup dedup matches the batch decision table (st05)") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val batch = graft.SparkEntry.queries("st05_stream_neardup")(spark, sf).collect()
     val docs = graft.Tables.documents(spark, sf)
       .filter(col("source") === graft.ops.Dedup.IncBatchSrc)
       .select(col("doc_id"), col("text"),
         expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, doc_id)").as("ts"))
-    val srcDir = Files.createTempDirectory("graft-st05").toString
+    val srcDir = TempDirs.create("graft-st05").toString
     // one file per group, strictly increasing mtimes → deterministic
     // micro-batch order under maxFilesPerTrigger = 1
     def stamp(sub: String): Unit = {
@@ -447,7 +445,7 @@ class StreamingSpec extends SparkSpec {
       sentinel: (Long, String) => DataFrame)(
       serve: DataFrame => DataFrame): Seq[Seq[Any]] = {
     import org.apache.spark.sql.functions.col
-    val srcDir = Files.createTempDirectory(s"graft-$name").toString
+    val srcDir = TempDirs.create(s"graft-$name").toString
     def put(sub: String, df: DataFrame): Unit = {
       df.coalesce(1).write.parquet(s"$srcDir/$sub")
       val t = mtimeClock.addAndGet(2000)
@@ -482,7 +480,6 @@ class StreamingSpec extends SparkSpec {
     // derived frames; this is their composition. Decisions must equal
     // the batch st05 table row-for-row.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val batch = graft.SparkEntry.queries("st05_stream_neardup")(spark, sf).collect()
     // and the st06 catalog entry itself agrees with st05
@@ -494,7 +491,7 @@ class StreamingSpec extends SparkSpec {
       .filter(col("source") === graft.ops.Dedup.IncBatchSrc)
       .select(col("doc_id"), col("text"),
         expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, doc_id)").as("ts"))
-    val srcDir = Files.createTempDirectory("graft-st06").toString
+    val srcDir = TempDirs.create("graft-st06").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -559,12 +556,11 @@ class StreamingSpec extends SparkSpec {
     // cosine and the K-bounded top-k state. Must equal the batch
     // analog row for row.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val batch = graft.SparkEntry.queries("st16_stream_filtered_ann")(spark, sf).collect()
     assert(batch.nonEmpty, "batch analog returned no rows")
     val prefix = graft.ops.VecIndex.ensurePersisted(spark, sf)
-    val srcDir = Files.createTempDirectory("graft-st16").toString
+    val srcDir = TempDirs.create("graft-st16").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -613,7 +609,6 @@ class StreamingSpec extends SparkSpec {
     // shared-oracle claim), and the streaming plan must hold no
     // unbounded embeddings scan beyond the cells.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val st16 = graft.SparkEntry.queries("st16_stream_filtered_ann")(spark, sf).collect()
     val batch = graft.SparkEntry.queries("st17_stream_covering_ann")(spark, sf).collect()
@@ -621,7 +616,7 @@ class StreamingSpec extends SparkSpec {
     assert(batch.map(_.toSeq).toSeq === st16.map(_.toSeq).toSeq,
       "covering-cells decisions diverge from the dim-join form")
     val prefix = graft.ops.VecIndex.ensureCoveringPersisted(spark, sf)
-    val srcDir = Files.createTempDirectory("graft-st17").toString
+    val srcDir = TempDirs.create("graft-st17").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -679,7 +674,6 @@ class StreamingSpec extends SparkSpec {
     // which can only happen if batch 0's append landed before
     // batch 1's probe.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val Off = graft.ops.BandIndex.DayOffset
     val batchRows = graft.SparkEntry.queries("st07_stream_index_maintain")(spark, sf)
@@ -697,10 +691,10 @@ class StreamingSpec extends SparkSpec {
     }
 
     // a private fresh index for the stream side
-    val path = Files.createTempDirectory("graft-st07spec").toString
+    val path = TempDirs.create("graft-st07spec").toString
     val prefix = s"graft_st07spec_${System.nanoTime()}"
     graft.ops.BandIndex.persist(spark, sf, path, prefix)
-    val srcDir = Files.createTempDirectory("graft-st07src").toString
+    val srcDir = TempDirs.create("graft-st07src").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -761,7 +755,6 @@ class StreamingSpec extends SparkSpec {
     // verdict needs only its own rows, so the per-micro-batch form
     // must equal the whole-feed batch entry row for row.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val batch = graft.SparkEntry.queries("st15_stream_admission")(spark, sf).collect()
     // the fixture must exercise every verdict, or the composition is vacuous
@@ -773,7 +766,7 @@ class StreamingSpec extends SparkSpec {
       .filter(col("source") === graft.ops.Dedup.IncBatchSrc)
       .select(col("doc_id"), col("lang"), col("text"),
         expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, doc_id)").as("ts"))
-    val srcDir = Files.createTempDirectory("graft-st15src").toString
+    val srcDir = TempDirs.create("graft-st15src").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -848,7 +841,6 @@ class StreamingSpec extends SparkSpec {
     // per-micro-batch form must equal the whole-workload batch entry
     // row for row.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val batch = graft.SparkEntry.queries("st18_stream_hybrid_search")(spark, sf).collect()
     assert(batch.nonEmpty, "batch analog returned no rows")
@@ -861,7 +853,7 @@ class StreamingSpec extends SparkSpec {
       .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
       .select(col("vec_id").as("query_id"), col("embedding"),
         expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
-    val srcDir = Files.createTempDirectory("graft-st18").toString
+    val srcDir = TempDirs.create("graft-st18").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -904,7 +896,6 @@ class StreamingSpec extends SparkSpec {
     // identical to st18's batch entry, and the served core must
     // reproduce them per micro-batch through a real readStream.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val st18 = graft.SparkEntry.queries("st18_stream_hybrid_search")(spark, sf).collect()
     val st19 = graft.SparkEntry.queries("st19_stream_hybrid_served")(spark, sf).collect()
@@ -915,7 +906,7 @@ class StreamingSpec extends SparkSpec {
       .filter(col("vec_id") < graft.ops.Similarity.KnnQueries)
       .select(col("vec_id").as("query_id"), col("embedding"),
         expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
-    val srcDir = Files.createTempDirectory("graft-st19").toString
+    val srcDir = TempDirs.create("graft-st19").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -991,12 +982,11 @@ class StreamingSpec extends SparkSpec {
     // table, and emit per-query top-k through the K-bounded
     // topk_struct aggregate. Must equal the batch analog row for row.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val batch = graft.SparkEntry.queries("st09_stream_ann_probe")(spark, sf).collect()
     assert(batch.nonEmpty, "batch analog returned no rows")
     val prefix = graft.ops.VecIndex.ensurePersisted(spark, sf)
-    val srcDir = Files.createTempDirectory("graft-st09").toString
+    val srcDir = TempDirs.create("graft-st09").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -1054,12 +1044,11 @@ class StreamingSpec extends SparkSpec {
     // multi-micro-batch arrival, watermark close, and append-mode
     // emit, row-identical to the batch analog.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val batch = graft.SparkEntry.queries("st12_stream_pq_serving")(spark, sf).collect()
     assert(batch.nonEmpty, "batch analog returned no rows")
     val prefix = graft.ops.VecIndex.ensurePqPersisted(spark, sf)
-    val srcDir = Files.createTempDirectory("graft-st12").toString
+    val srcDir = TempDirs.create("graft-st12").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -1114,14 +1103,13 @@ class StreamingSpec extends SparkSpec {
     // decision for a window REVISES as the window fills, and the
     // final table is the converged decision set).
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val batch = graft.SparkEntry.queries("st14_stream_drift")(spark, sf).collect()
     val newVecs = graft.Tables.embeddings(spark, sf)
       .filter(pmod(col("vec_id"), lit(4)) === lit(0))
       .select(col("vec_id"), col("embedding"),
         expr("timestamp'2024-01-01 00:00:00' + make_dt_interval(0, 0, 0, vec_id)").as("ts"))
-    val srcDir = Files.createTempDirectory("graft-st14").toString
+    val srcDir = TempDirs.create("graft-st14").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -1159,15 +1147,14 @@ class StreamingSpec extends SparkSpec {
     // no-op (no duplicate code rows), and the maintained generation
     // must serve ADC decisions identical to sim18's full build.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
-    val path = Files.createTempDirectory("graft-st13spec").toString
+    val path = TempDirs.create("graft-st13spec").toString
     val prefix = s"graft_st13spec_${System.nanoTime()}"
     val emb = graft.Tables.embeddings(spark, sf).select("vec_id", "embedding")
     val isNew = pmod(hash(col("vec_id")), lit(4)) === lit(0)
     graft.ops.VecIndex.pqPersist(spark, sf, path, prefix, Some(emb.filter(!isNew)))
-    val srcDir = Files.createTempDirectory("graft-st13src").toString
-    val ckpt = Files.createTempDirectory("graft-st13ckpt").toString
+    val srcDir = TempDirs.create("graft-st13src").toString
+    val ckpt = TempDirs.create("graft-st13ckpt").toString
     emb.filter(isNew).coalesce(1).write.parquet(s"$srcDir/part_new")
 
     val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
@@ -1221,15 +1208,14 @@ class StreamingSpec extends SparkSpec {
     // maintained index to serve decisions identical to the full
     // batch build (sim04).
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
-    val path = Files.createTempDirectory("graft-st10spec").toString
+    val path = TempDirs.create("graft-st10spec").toString
     val prefix = s"graft_st10spec_${System.nanoTime()}"
     val emb = graft.Tables.embeddings(spark, sf).select("vec_id", "embedding")
     val isNew = pmod(hash(col("vec_id")), lit(4)) === lit(0)
     graft.ops.VecIndex.persist(spark, sf, path, prefix, Some(emb.filter(!isNew)))
-    val srcDir = Files.createTempDirectory("graft-st10src").toString
-    val ckpt = Files.createTempDirectory("graft-st10ckpt").toString
+    val srcDir = TempDirs.create("graft-st10src").toString
+    val ckpt = TempDirs.create("graft-st10ckpt").toString
     emb.filter(isNew).coalesce(1).write.parquet(s"$srcDir/part_new")
 
     val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
@@ -1287,14 +1273,14 @@ class StreamingSpec extends SparkSpec {
     // decisions identical to the full in-session build (tx15).
     import org.apache.spark.sql.functions._
     val sf = "/root/testdata/sf0.001"
-    val path = Files.createTempDirectory("graft-st20spec").toString
+    val path = TempDirs.create("graft-st20spec").toString
     val prefix = s"graft_st20spec_${System.nanoTime()}"
     val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
     val isNew = pmod(hash(col("doc_id")), lit(4)) === lit(0)
     graft.ops.LexIndex.persist(spark, sf, path, prefix,
       Some(docs.filter(!isNew)))
-    val srcDir = Files.createTempDirectory("graft-st20src").toString
-    val ckpt = Files.createTempDirectory("graft-st20ckpt").toString
+    val srcDir = TempDirs.create("graft-st20src").toString
+    val ckpt = TempDirs.create("graft-st20ckpt").toString
     docs.filter(isNew).coalesce(1).write.parquet(s"$srcDir/part_new")
 
     val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
@@ -1357,14 +1343,13 @@ class StreamingSpec extends SparkSpec {
     // commit marker for batch 0 from the checkpoint, restart, and
     // let Structured Streaming re-run batch 0 for real.
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
     val Off = graft.ops.BandIndex.DayOffset
-    val path = Files.createTempDirectory("graft-st08spec").toString
+    val path = TempDirs.create("graft-st08spec").toString
     val prefix = s"graft_st08spec_${System.nanoTime()}"
     graft.ops.BandIndex.persist(spark, sf, path, prefix)
-    val srcDir = Files.createTempDirectory("graft-st08src").toString
-    val ckpt = Files.createTempDirectory("graft-st08ckpt").toString
+    val srcDir = TempDirs.create("graft-st08src").toString
+    val ckpt = TempDirs.create("graft-st08ckpt").toString
     val batchDocs = graft.Tables.documents(spark, sf)
       .filter(col("source") === graft.ops.Dedup.IncBatchSrc)
       .select("doc_id")
@@ -1446,7 +1431,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val sf = "/root/testdata/sf0.001"
     val ev = graft.Tables.events(spark, sf).select(col("user_id"), col("ts"), col("value"))
-    val srcDir = Files.createTempDirectory("graft-st03").toString
+    val srcDir = TempDirs.create("graft-st03").toString
     def stamp(sub: String): Unit = {
       val t = mtimeClock.addAndGet(2000)
       Files.walk(Paths.get(srcDir, sub)).iterator().forEachRemaining { p =>
@@ -1496,7 +1481,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("reorder buffer repairs cross-batch event-time disorder") {
-    val dir = Files.createTempDirectory("graft-reorder").toString
+    val dir = TempDirs.create("graft-reorder").toString
     // arrival order 12:10, 12:00, 12:20 (forced via mtimes + one file
     // per trigger) — event-time order is 12:00, 12:10, 12:20; the
     // buffer must pair each ping with its EVENT-time predecessor,
@@ -1528,7 +1513,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("held tail flushes reorderSec after the watermark passes it, not at TTL") {
-    val dir = Files.createTempDirectory("graft-tail-live").toString
+    val dir = TempDirs.create("graft-tail-live").toString
     // vehicle 8349 sends two pings then goes quiet; its 08:10 ping is
     // held in the reorder buffer. Another vehicle advances the
     // watermark to 08:50 — far SHORT of 08:10 + TTL (2 h) but past
@@ -1561,7 +1546,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("enrichment dedup keeps the batch-deterministic min payload across batches") {
-    val dir = Files.createTempDirectory("graft-dedup-min").toString
+    val dir = TempDirs.create("graft-dedup-min").toString
     // duplicate (vehicle, time) key with CONFLICTING payloads in
     // different micro-batches, larger payload arriving FIRST — the
     // first-arrival dedup would keep 52.30, the batch row_number
@@ -1597,13 +1582,13 @@ class StreamingSpec extends SparkSpec {
     // jitter among same-mtime files (the disorder the reorder buffer
     // must absorb) is reproduced, and the dir stays writable for the
     // end-of-capture sentinel below
-    val src = Files.createTempDirectory("graft-e2e-src")
+    val src = TempDirs.create("graft-e2e-src")
     new java.io.File(day23).listFiles().sortBy(_.getName).foreach { f =>
       Files.copy(f.toPath, src.resolve(f.getName),
         java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
     }
-    val out = Files.createTempDirectory("graft-e2e-gold").toString
-    val ckpt = Files.createTempDirectory("graft-e2e-ckpt").toString
+    val out = TempDirs.create("graft-e2e-gold").toString
+    val ckpt = TempDirs.create("graft-e2e-ckpt").toString
     val day = java.time.LocalDate.of(2026, 2, 23)
 
     // UN-deduped clean stream: enrichedStream dedups exactly (min
@@ -1686,7 +1671,7 @@ class StreamingSpec extends SparkSpec {
     // RocksDBStateStoreProvider spills to local disk; this pins that
     // the engine's flatMapGroupsWithState operators run (and produce
     // the same rows) under it.
-    val dir = Files.createTempDirectory("graft-rocksdb").toString
+    val dir = TempDirs.create("graft-rocksdb").toString
     writeBronze(dir, "f1.json",
       rec("189", "8349", 52.20, 21.00, "2026-02-23 08:00:00"),
       rec("189", "8349", 52.21, 21.01, "2026-02-23 08:10:00"))
@@ -1719,7 +1704,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming windowed per-line stats emit after watermark") {
-    val dir = Files.createTempDirectory("graft-stream2").toString
+    val dir = TempDirs.create("graft-stream2").toString
     writeBronze(dir, "b1.json",
       rec("189", "8349", 52.2, 21.0, "2026-02-23 12:00:00"),
       rec("189", "8350", 52.21, 21.01, "2026-02-23 12:05:00"),
@@ -1749,7 +1734,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val dir = Files.createTempDirectory("graft-stream-dedup").toString
+    val dir = TempDirs.create("graft-stream-dedup").toString
     // FileStreamSource orders same-mtime files arbitrarily — stamp
     // each batch's part files with the monotonic mtimeClock so the
     // originals are always the first micro-batch
@@ -1799,13 +1784,13 @@ class StreamingSpec extends SparkSpec {
     assume(new java.io.File(day23).isDirectory)
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val src = Files.createTempDirectory("graft-an-src")
+    val src = TempDirs.create("graft-an-src")
     new java.io.File(day23).listFiles().sortBy(_.getName).foreach { f =>
       Files.copy(f.toPath, src.resolve(f.getName),
         java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
     }
-    val out = Files.createTempDirectory("graft-an-out").toString
-    val ckpt = Files.createTempDirectory("graft-an-ckpt").toString
+    val out = TempDirs.create("graft-an-out").toString
+    val ckpt = TempDirs.create("graft-an-ckpt").toString
     val day = java.time.LocalDate.of(2026, 2, 23)
 
     // same watermark/TTL rationale as the partials test: 25 h covers
@@ -1881,9 +1866,9 @@ class StreamingSpec extends SparkSpec {
     assume(new java.io.File(day23).isDirectory)
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val src = Files.createTempDirectory("graft-rec-src")
-    val out = Files.createTempDirectory("graft-rec-out").toString
-    val ckpt = Files.createTempDirectory("graft-rec-ckpt").toString
+    val src = TempDirs.create("graft-rec-src")
+    val out = TempDirs.create("graft-rec-out").toString
+    val ckpt = TempDirs.create("graft-rec-ckpt").toString
     val day = java.time.LocalDate.of(2026, 2, 23)
     val captures = new java.io.File(day23).listFiles().sortBy(_.getName)
     val (first, rest) = captures.splitAt(captures.length / 2)
@@ -1997,9 +1982,9 @@ class StreamingSpec extends SparkSpec {
     assume(new java.io.File(day23).isDirectory)
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
-    val src = Files.createTempDirectory("graft-pt-src")
-    val out = Files.createTempDirectory("graft-pt-out").toString
-    val ckpt = Files.createTempDirectory("graft-pt-ckpt").toString
+    val src = TempDirs.create("graft-pt-src")
+    val out = TempDirs.create("graft-pt-out").toString
+    val ckpt = TempDirs.create("graft-pt-ckpt").toString
     val day = java.time.LocalDate.of(2026, 2, 23)
     val captures = new java.io.File(day23).listFiles().sortBy(_.getName)
     // 4 arrival tranches (capped files/trigger, so each tranche spans
@@ -2143,9 +2128,8 @@ class StreamingSpec extends SparkSpec {
     // C's serving probe equals sim18's full batch build (replay was
     // stamp-skipped).
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExprs.register(spark)
     val sf = "/root/testdata/sf0.001"
-    val root = Files.createTempDirectory("graft-e2e-compose").toString
+    val root = TempDirs.create("graft-e2e-compose").toString
     Seq("bronzeSrc", "docSrc", "vecSrc", "silverOut").foreach(d =>
       Files.createDirectories(Paths.get(root, d)))
 
@@ -2155,10 +2139,10 @@ class StreamingSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       // --- shared durable state: band index + PQ generation -------
-      val bandPath = Files.createTempDirectory("graft-e2e-band").toString
+      val bandPath = TempDirs.create("graft-e2e-band").toString
       val bandPrefix = s"graft_e2e_band_${System.nanoTime()}"
       graft.ops.BandIndex.persist(spark, sf, bandPath, bandPrefix)
-      val pqPath = Files.createTempDirectory("graft-e2e-pq").toString
+      val pqPath = TempDirs.create("graft-e2e-pq").toString
       val pqPrefix = s"graft_e2e_pq_${System.nanoTime()}"
       val emb = graft.Tables.embeddings(spark, sf).select("vec_id", "embedding")
       val isNew = pmod(hash(col("vec_id")), lit(4)) === lit(0)
