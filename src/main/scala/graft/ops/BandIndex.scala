@@ -34,9 +34,9 @@ import org.apache.spark.sql.functions.{col, concat_ws, hash, lit, pmod}
   * files into one, preserving the bucket spec, so probe cost stays
   * flat over the append history (SCALE_NOTES "index compaction").
   *
-  * The lifecycle plumbing (writes, compaction, tombstones, ledger,
-  * tiered folds, registries) is [[IndexCore]]'s; this object encodes
-  * batches into band/signature rows and probes them.
+  * The lifecycle plumbing (writes, compaction, tombstones, the commit
+  * log, tiered folds, registries) is [[IndexCore]]'s; this object
+  * encodes batches into band/signature rows and probes them.
   *
   * BandIndexSpec proves the plan property: with broadcast disabled,
   * the probe's physical plan contains NO shuffle exchange above either
@@ -72,7 +72,10 @@ object BandIndex {
       .withColumn("ingest_batch", lit(BaseBatch)), Bands, prefix, Some((path, buckets)))
     IndexCore.writeTable(sigs.withColumn("ingest_batch", lit(BaseBatch)),
       Sigs, prefix, Some((path, buckets)))
+    IndexCore.commitBuild(spark, tables(prefix))
   }
+
+  private def tables(prefix: String): Seq[String] = Seq(bandsTable(prefix), sigsTable(prefix))
 
   /** The incremental-batch decision table probed against the
     * PERSISTED index — same dataflow and output as dd13, but the
@@ -112,10 +115,10 @@ object BandIndex {
   // ENTIRE index to remove a bounded id set: correct, zero-exchange,
   // but corpus-linear I/O per right-to-be-forgotten batch. The
   // tombstone path makes the DELETE itself O(retired): expired ids land
-  // in a tiny `<prefix>_tombstones` table, every probe masks them with
-  // a broadcast anti-join (the streamed side keeps its bucketed
-  // partitioning), and the NEXT compaction physically purges the
-  // masked rows and clears the set. Decisions after `retireTombstone`
+  // in the index's commit log, every probe masks them with a broadcast
+  // anti-join (the streamed side keeps its bucketed partitioning), and
+  // the NEXT compaction physically purges the masked rows and clears
+  // the set in the same commit. Decisions after `retireTombstone`
   // are DEFINED identical to an eager `retire` — dd19's three-phase
   // oracle pins mask, purge, and their equality.
   // ------------------------------------------------------------------
@@ -125,11 +128,11 @@ object BandIndex {
     * the next [[compact]] absorbs them. */
   def retireTombstone(spark: SparkSession, prefix: String,
       expired: DataFrame): Unit =
-    IndexCore.recordTombstones(spark, prefix, bandsTable(prefix), expired)
+    IndexCore.recordTombstones(spark, bandsTable(prefix), expired)
 
   /** The persisted corpus frames as every probe reads them, batch or
     * stream ([[graft.streaming.Streams!.nearDupDedupStream]] takes
-    * `excludeBatch = None`): merge-log visibility applied (folded rows
+    * `excludeBatch = None`): fold visibility applied (folded rows
     * still on disk must not serve beside their merged copy),
     * optionally excluding one batch's rows
     * ([[maintainBatch]]'s replay fence), and tombstoned docs masked by
@@ -144,10 +147,10 @@ object BandIndex {
     * in-flight batch, so they are KEPT: `batch != N OR batch IS NULL`. */
   def corpusFrames(spark: SparkSession, prefix: String,
       excludeBatch: Option[Long]): (DataFrame, DataFrame) = {
-    val tomb = IndexCore.tombstoneFrame(spark, prefix)
-    val log = IndexCore.readMergeLog(spark, prefix)
+    val st = IndexCore.state(spark, bandsTable(prefix))
+    val tomb = IndexCore.retiredFrame(spark, st.retired)
     def f(t: String): DataFrame = {
-      val vis = spark.table(t).filter(IndexCore.visibleUnder(log))
+      val vis = spark.table(t).filter(IndexCore.visibleUnder(st.log(prefix)))
       val base = excludeBatch.foldLeft(vis)((d, n) =>
         d.filter(col("ingest_batch") =!= n || col("ingest_batch").isNull))
       tomb.fold(base)(ts =>
@@ -200,6 +203,7 @@ object BandIndex {
       batchId: Long = BaseBatch): Unit = {
     writeBandRows(sigs, prefix, batchId)
     writeSigRows(sigs, prefix, batchId)
+    IndexCore.commitAppend(sigs.sparkSession, tables(prefix), batchId)
   }
 
   /** One atomic, batch-stamped band-table append: a Spark parquet
@@ -217,9 +221,7 @@ object BandIndex {
       .withColumn("ingest_batch", lit(batchId)), Bands, prefix, None)
   }
 
-  /** One atomic, batch-stamped signature-table append (written SECOND
-    * in every maintenance path, so its stamp's presence certifies the
-    * whole batch landed). */
+  /** One atomic, batch-stamped signature-table append. */
   private def writeSigRows(sigs: DataFrame, prefix: String,
       batchId: Long): Unit =
     IndexCore.writeTable(
@@ -250,12 +252,15 @@ object BandIndex {
     * merge the probe's sort-merge join performs reads ONE run instead
     * of one per historical append. Pending tombstones
     * ([[retireTombstone]]) are physically PURGED by the same rewrite
-    * and the tombstone set is cleared — decisions are unchanged
-    * because the probes were already masking exactly these rows. */
+    * and the tombstone set is cleared in the commit that publishes
+    * both tables — decisions are unchanged because the probes were
+    * already masking exactly these rows. */
   def compact(spark: SparkSession, prefix: String): Unit = {
-    val tomb = IndexCore.tombstoneFrame(spark, prefix)
-    Seq(Bands, Sigs).foreach(IndexCore.compactTable(spark, _, prefix, tomb, "corpus_doc"))
-    IndexCore.clearTombstones(spark, prefix)
+    val retired = IndexCore.state(spark, bandsTable(prefix)).retired
+    val tomb = IndexCore.retiredFrame(spark, retired)
+    IndexCore.rewrite(spark, bandsTable(prefix), "compact", Seq(Bands, Sigs).map(
+      IndexCore.compacted(spark, _, prefix, tomb, "corpus_doc")))(st =>
+      st.copy(retired = st.retired -- retired.keys))
   }
 
   /** RETENTION — remove a set of corpus docs from the persisted index
@@ -268,7 +273,8 @@ object BandIndex {
     * one with a surviving second-best match falls back to it. */
   def retire(spark: SparkSession, prefix: String,
       expired: DataFrame): Unit =
-    Seq(Bands, Sigs).foreach(IndexCore.compactTable(spark, _, prefix, Some(expired), "corpus_doc"))
+    IndexCore.rewrite(spark, bandsTable(prefix), "retire", Seq(Bands, Sigs).map(
+      IndexCore.compacted(spark, _, prefix, Some(expired), "corpus_doc")))(identity)
 
   /** Sources retired by the dd18 catalog entry — chosen so the
     * retention is OBSERVABLE at both oracle scales: between them they
@@ -430,16 +436,17 @@ object BandIndex {
     * sigs table — one row per doc) into one merged segment across
     * BOTH tables, leaving the base tier's files byte-untouched
     * ([[IndexCore.tieredMerge]]). Appends stamp bands and sigs with
-    * the same batch id, so one merge-log commit retires both tables'
+    * the same batch id, so one fold commit retires both tables'
     * input rows; [[corpusFrames]]'s visibility filter is the single
     * read choke point. The fold is purely a LAYOUT event — band
     * decisions read raw rows, so probe answers are defined unchanged,
     * which is what dd22's oracle (dd16's SQL) checks. Refused while a
-    * maintained batch is mid-commit ([[IndexCore.requireLedgered]]).
+    * stamped batch is missing from the log
+    * ([[IndexCore.requireLedgered]]).
     * Returns true when a fold ran. */
   def tieredMerge(spark: SparkSession, prefix: String,
       maxTierRows: Long = Long.MaxValue): Boolean = {
-    IndexCore.requireLedgered(spark, prefix, sigsTable(prefix), "tieredMerge")
+    IndexCore.requireLedgered(spark, sigsTable(prefix), "tieredMerge")
     IndexCore.tieredMerge(spark, prefix, prefix, Seq(Bands, Sigs), maxTierRows)(
       (spec, merged, _) => IndexCore.writeTable(merged, spec, prefix, None))
   }
@@ -449,7 +456,7 @@ object BandIndex {
     * batch lands in 3 disjoint slices, each under its own stamp,
     * [[tieredMerge]] folds them into one merged segment (base files
     * byte-untouched, post-fold segment count asserted in-cycle), and
-    * the re-probe serves through the merge-log visibility filter.
+    * the re-probe serves through the fold visibility filter.
     * Decisions are DEFINED identical to dd16's — the oracle is the
     * same SQL. */
   def tieredCycle(spark: SparkSession, dir: String, tag: String,
@@ -541,10 +548,10 @@ object BandIndex {
     dec0.unionByName(dec1).orderBy("batch_doc")
   }
 
-  /** One ledger-guarded maintenance micro-batch: probe the CURRENT
-    * index with this batch's ids, append the novel docs, record the
-    * batch in the ledger — or, if the batch already landed, do
-    * NOTHING and return None ([[IndexCore.maintainOnce]]'s fence).
+  /** One log-fenced maintenance micro-batch: probe the CURRENT index
+    * with this batch's ids, append the novel docs, commit the batch id
+    * to the index's log — or, if the log already holds it, do NOTHING
+    * and return None ([[IndexCore.maintainOnce]]'s fence).
     *
     * This is the idempotent foreachBatch sink Structured Streaming's
     * exactly-once contract asks for. The failure mode a restart must
@@ -555,30 +562,28 @@ object BandIndex {
     *   - **Per-table idempotence**: every appended row carries the
     *     batch stamp and each table write is one atomic job commit,
     *     so the replay appends only to the table(s) the crash left
-    *     unwritten. Sigs are written SECOND, so their stamp certifies
-    *     the whole batch.
+    *     unwritten.
     *   - **Self-excluding probe**: the decision probe always excludes
     *     the in-flight batch's own rows (`ingest_batch != batchId`,
     *     pushed to the scans). Replay over a partial commit therefore
     *     probes EXACTLY the state the first attempt saw and emits
     *     bit-identical decisions.
     *
-    * The ledger row (written last, stored WITH the index) is the FAST
-    * guard, not load-bearing for correctness. [[selfFenceCycle]]
-    * drives the worst window (crash between the two table writes) as
-    * the st11 catalog entry; StreamingSpec proves the
-    * crash-after-record path through a real checkpoint restart. */
+    * The log commit (made last, stored WITH the index) is what makes
+    * the batch done. [[selfFenceCycle]] drives the worst window (crash
+    * between the two table writes) as the st11 catalog entry;
+    * StreamingSpec proves the crash-after-commit path through a real
+    * checkpoint restart. */
   def maintainBatch(spark: SparkSession, dir: String, prefix: String,
       ids: DataFrame, batchId: Long): Option[DataFrame] =
-    IndexCore.maintainOnce(spark, "maintainBatch", prefix, sigsTable(prefix),
-        ledgered = true, batchId) { landed =>
+    IndexCore.maintainOnce(spark, "maintainBatch", tables(prefix), batchId) { landed =>
       val (d0, batchSigs) = probeIdsSigned(spark, dir, prefix, ids, Some(batchId))
       val dec = d0.localCheckpoint()
       // the writes join the probe's pinned signatures down to the
       // admitted ids, so they read no table they mutate
       val sigs = sigsForAdmitted(batchSigs, novelIds(dec))
       if (!landed(bandsTable(prefix))) writeBandRows(sigs, prefix, batchId)
-      writeSigRows(sigs, prefix, batchId)
+      if (!landed(sigsTable(prefix))) writeSigRows(sigs, prefix, batchId)
       dec
     }
 
@@ -588,7 +593,7 @@ object BandIndex {
   /** st07's two-day cycle driven through [[maintainBatch]], with
     * day 0 REPLAYED in between — the batch analog of a checkpoint
     * restart that lost day 0's commit marker. The replay must be a
-    * ledger-skipped no-op (asserted here: a second mutation of the
+    * log-skipped no-op (asserted here: a second mutation of the
     * index would make day 1's decisions diverge from st07's). Output
     * is DEFINED identical to st07's, so the oracle is the same
     * two-phase SQL. */
@@ -600,7 +605,7 @@ object BandIndex {
         .getOrElse(sys.error("st08: fresh index claims day 0 already maintained"))
     }
     if (maintainBatch(spark, dir, c.prefix, day0Ids, 0L).nonEmpty)
-      sys.error("st08: replayed batch 0 was not ledger-skipped")
+      sys.error("st08: replayed batch 0 was not log-skipped")
     val dec1 = c.phase("maintain1") {
       maintainBatch(spark, dir, c.prefix, shifted(day0Ids), 1L)
         .getOrElse(sys.error("st08: day 1 already maintained on a fresh index"))
@@ -611,7 +616,7 @@ object BandIndex {
   /** st11: the exactly-once story's WORST crash window, driven as a
     * catalog entry. Day 0's first attempt probes and then "crashes"
     * between the two table writes: band rows for batch 0 are durably
-    * committed, signature rows and the ledger row are not. The replay
+    * committed, signature rows and the log commit are not. The replay
     * runs through [[maintainBatch]], which must (a) NOT skip, (b) emit
     * decisions BIT-IDENTICAL to the first attempt's — the
     * self-excluding probe fences out the orphaned band rows — and (c)
@@ -624,7 +629,7 @@ object BandIndex {
   def selfFenceCycle(spark: SparkSession, dir: String,
       tag: String): DataFrame = cycle(spark, dir, tag) { c =>
     val day0Ids = batchDocIds(spark, dir)
-    // First attempt: probe, commit BANDS ONLY, crash before sigs+ledger.
+    // First attempt: probe, write BANDS ONLY, crash before sigs + commit.
     val dec0a = c.phase("partial") {
       val (d0, batchSigs) = probeIdsSigned(spark, dir, c.prefix, day0Ids, Some(0L))
       val dec = d0.localCheckpoint()

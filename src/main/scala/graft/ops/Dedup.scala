@@ -956,10 +956,10 @@ object Dedup {
     // SIZE-TIERED fold (round 17): dd17's growth regime maintained by
     // the BOUNDED verb — the novel slices land under distinct stamps
     // (three sub-tier segments), BandIndex.tieredMerge folds them into
-    // one merged segment through IndexCore's merge log (the second
+    // one merged segment through IndexCore's fold commit (the second
     // family through that mechanism), the base build's files stay
     // byte-untouched (asserted in-cycle), and the re-probe reads
-    // through the merge-log visibility filter. The fold is a layout
+    // through the fold visibility filter. The fold is a layout
     // event — decisions are DEFINED identical to dd16's, so the
     // oracle is the same SQL.
     "dd22_band_tiered_merge" -> ((s, d) =>

@@ -1,5 +1,8 @@
 package graft.ops
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
@@ -13,12 +16,24 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   *
   * **What a family declares.**
   *   - One [[TableSpec]] per bucketed table: name suffix (the table is
-  *     `<prefix>_<suffix>`, stored at `<index path>/<suffix>`), bucket
+  *     `<prefix>_<suffix>`, stored at `<index root>/<suffix>`), bucket
   *     key and within-bucket sort columns.
   *   - One [[Family]]: the prefix stem, the temp-dir tag and every
-  *     table suffix it registers, from which `drop` is derived (the
-  *     shared side tables — tombstones, ledger, merge log — are
-  *     added here).
+  *     table suffix it registers, from which `drop` is derived.
+  *
+  * **The commit log.** Every index keeps one append-only directory
+  * `<index root>/_log/` of numbered JSON commits ([[State]]). Each
+  * commit holds the index's WHOLE state — the verb and batch that made
+  * it, the committed batch ids, each fold scope's folded and produced
+  * stamps, the retired ids (with Lex's `dl`), Lex's needs-reindex
+  * flag, and each table's location, row and file count — so resolving
+  * the state ([[state]]) reads the newest file on the driver, with no
+  * Spark job. A commit is written to a temp file and hard-linked to the
+  * next version number ([[commit]]): the link fails when that version
+  * exists, so a commit is complete or absent, and of two racing
+  * committers exactly one wins. Only the bucketed data tables (plus
+  * Lex's stats and dfcorr and Vec's codebook) live in the catalog,
+  * under their logical names.
   *
   * **Shared verbs.**
   *   - Writes: [[writeTable]] (build at a path, or append) over the
@@ -26,36 +41,42 @@ import org.apache.spark.sql.functions.{broadcast, col, lit}
   *     (`repartition(b, key)` → `bucketBy(b, key)` → `sortBy`, one
   *     file per bucket per write). Build-time bucket counts come from
   *     the caller (default [[DefaultBuckets]]); every later write
-  *     reads the count back from the catalog ([[bucketsOf]]).
-  *   - Rewrites: [[compactTable]] (per-bucket local rewrite, optional
-  *     broadcast anti-join purge) and every other full rewrite go
-  *     through [[swapTable]] — write beside the live table at a
-  *     location that does not exist yet, then the rename-aside swap
-  *     [[renameSwap]], the only place that renames tables.
-  *   - Side tables: [[appendSide]] (append, or create at the index
-  *     root) and [[dropWithFiles]] for tombstones, ledger, merge log.
+  *     reads the count back from the catalog ([[bucketsOf]]). A build
+  *     ends with [[commitBuild]], which starts the index's state over.
+  *   - Rewrites ([[rewrite]]; [[compacted]] is the per-bucket local
+  *     rewrite with an optional broadcast anti-join purge) never rename
+  *     a table: each new table is written through a temporary
+  *     registration to a fresh versioned location beside the old one,
+  *     ONE commit records every new location with the rest of the state
+  *     change, then `ALTER TABLE … SET LOCATION` points the catalog at
+  *     it and the old directory is deleted. [[state]] re-points any
+  *     table whose catalog location lags the commit (a crash between
+  *     commit and re-point), and the next rewrite of a table deletes
+  *     the versioned locations no commit took.
   *   - Size-tiered folds: [[tieredMerge]] — one footer sweep, GC, tier
-  *     pick, reserved output stamp, per-table rewrite, one atomic
-  *     merge-log commit ([[commitFold]]), post-commit GC. Readers
-  *     filter rows through [[visibleUnder]], so every crash point
-  *     serves exactly the pre- or post-fold content.
+  *     pick, reserved output stamp, per-table rewrite, one commit of
+  *     the scope's fold stamps, post-commit GC. Readers filter rows
+  *     through [[visibleUnder]], so every crash point serves exactly
+  *     the pre- or post-fold content.
+  *   - Retention: [[recordTombstones]] commits retired ids; probes
+  *     mask them with a broadcast anti-join against a local relation
+  *     ([[retiredFrame]]); a compaction purges them and clears the set
+  *     in the commit that publishes the purged tables.
   *   - Build-once indexes ([[ensurePersisted]]) and fresh per-run
   *     fixture indexes ([[cycle]]) share one registry, one serial and
   *     one lock.
   *
-  * **Exactly-once fence order** ([[maintainOnce]]), per batch id:
+  * **Exactly-once fence** ([[maintainOnce]]), per batch id:
   *   1. the id is ≥ 0 (negative stamps are reserved: [[BaseBatch]]
   *      for builds and ad-hoc appends, ≤ [[MergeStampCeil]] for fold
   *      outputs);
-  *   2. ledger fast path — a ledgered batch is done;
-  *   3. the certifying table (written last) carries the stamp — the
-  *      batch landed; the ledger row is backfilled. Single-table
-  *      families have no ledger: their stamp IS the ledger, extended
-  *      by [[foldedUnder]] because a fold re-stamps a batch's rows;
-  *   4. otherwise the batch runs, and each earlier table is written
-  *      only if its own stamp is absent ([[batchPresent]]).
+  *   2. a batch id in the newest commit is done;
+  *   3. otherwise the batch runs, each table is written only if its
+  *      own stamp is absent ([[batchPresent]]), and one commit adds
+  *      the id.
   * Rewrites that re-stamp rows first call [[requireLedgered]]: no
-  * stamped batch may be mid-commit when its stamps are destroyed.
+  * stamp in the footers may be missing from the log, or its replay
+  * fence would be destroyed with it.
   *
   * Footer-derived answers ([[segStats]]) are cached in a per-table
   * `_segstats_<col>.json` manifest validated against the live file
@@ -87,13 +108,18 @@ object IndexCore {
   private[ops] final case class Family(stem: String, dirTag: String,
       tables: Seq[String]) {
     def drop(spark: SparkSession, prefix: String): Unit =
-      (tables ++ Seq("tombstones", "ledger", "mergelog"))
-        .foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$s"))
+      tables.foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$s"))
   }
 
   private def meta(spark: SparkSession, table: String) =
     spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(table))
+
+  /** The catalog location of `table`, as a `file:` URI string. */
+  private[ops] def location(spark: SparkSession, table: String): String =
+    meta(spark, table).location.toString.stripSuffix("/")
+
+  private def dirOf(loc: String): Path = Paths.get(new java.net.URI(loc))
 
   /** The bucket count `table` was BUILT with — every post-build write
     * must use it: a mismatched bucketBy on append fails with
@@ -102,19 +128,19 @@ object IndexCore {
   private[ops] def bucketsOf(spark: SparkSession, table: String): Int =
     meta(spark, table).bucketSpec.map(_.numBuckets).getOrElse(DefaultBuckets)
 
-  /** JVM-wide serial for index prefixes, rewrite locations and aside
-    * names. Sessions from `spark.newSession()` share one catalog, so
-    * prefixes must be unique per JVM, not per session. */
+  /** JVM-wide serial for index prefixes and temp names. Sessions from
+    * `spark.newSession()` share one catalog, so prefixes must be
+    * unique per JVM, not per session. */
   private[ops] val serial = new java.util.concurrent.atomic.AtomicLong(0)
 
   private[ops] def deleteDir(path: String): Unit =
     try {
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        val walk = java.nio.file.Files.walk(root)
+      val root = Paths.get(path)
+      if (Files.exists(root)) {
+        val walk = Files.walk(root)
         try {
-          walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+          walk.sorted(java.util.Comparator.reverseOrder[Path]())
+            .forEach(p => { Files.deleteIfExists(p); () })
         } finally walk.close()
       }
     } catch { case NonFatal(_) => () }
@@ -131,9 +157,10 @@ object IndexCore {
     }, "graft-idxcore-cleanup"))
   }
 
-  private[ops] def newTempDir(tag: String): String = {
-    val p = java.nio.file.Files
-      .createTempDirectory(s"graft-bandidx-$tag").toString
+  /** A fresh `graft-bandidx-<tag>*` temp directory, deleted at JVM
+    * exit (or earlier by [[retireTempDir]]). */
+  private[graft] def newTempDir(tag: String): String = {
+    val p = Files.createTempDirectory(s"graft-bandidx-$tag").toString
     tempDirs.put(p, true)
     p
   }
@@ -217,6 +244,148 @@ object IndexCore {
   }
 
   // ------------------------------------------------------------------
+  // The commit log
+  // ------------------------------------------------------------------
+
+  /** One table as a commit records it: its location and the rows and
+    * parquet files on disk there when the commit was made. */
+  final case class TableState(location: String, rows: Long, files: Int)
+
+  /** The whole state of one index as of one commit (see the object
+    * doc). `retired` maps each retired id to its `dl` (Lex; None
+    * elsewhere). */
+  final case class State(version: Long, verb: String, batch: Long,
+      batches: Set[Long], folds: Map[String, MergeLog],
+      retired: Map[Long, Option[Long]], reindex: Boolean,
+      tables: Map[String, TableState]) {
+    def log(scope: String): MergeLog = folds.getOrElse(scope, MergeLog(Set.empty, Set.empty))
+  }
+
+  private val Empty = State(-1L, "", BaseBatch, Set.empty, Map.empty, Map.empty,
+    reindex = false, Map.empty)
+
+  /** The one JSON codec of the index metadata (the commit log and the
+    * segment-stats manifest): Jackson, from Spark's classpath. */
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+
+  private def fields(n: com.fasterxml.jackson.databind.JsonNode) =
+    n.properties().asScala.map(e => e.getKey -> e.getValue)
+
+  private def longs(n: com.fasterxml.jackson.databind.JsonNode): Set[Long] =
+    n.elements().asScala.map(_.asLong).toSet
+
+  private def decode(bytes: Array[Byte]): State = {
+    val n = json.readTree(bytes)
+    State(n.get("version").asLong, n.get("verb").asText, n.get("batch").asLong,
+      longs(n.get("batches")),
+      fields(n.get("folds")).map { case (k, v) =>
+        k -> MergeLog(longs(v.get("folded")), longs(v.get("outputs")))
+      }.toMap,
+      fields(n.get("retired")).map { case (k, v) =>
+        k.toLong -> Option.unless(v.isNull)(v.asLong)
+      }.toMap,
+      n.get("reindex").asBoolean,
+      fields(n.get("tables")).map { case (k, v) => k -> json.treeToValue(v, classOf[TableState]) }.toMap)
+  }
+
+  /** A test seam: called with a step name at each durable step of a
+    * verb — `wrote <table>` after a table write, `commit <verb>` before
+    * a commit, `committed <verb>` between a rewrite's commit and its
+    * re-point. A spec substitutes a throwing hook to crash a verb
+    * there. */
+  @volatile private[ops] var step: String => Unit = _ => ()
+
+  private def logDir(spark: SparkSession, anchor: String): Path =
+    dirOf(location(spark, anchor)).getParent.resolve("_log")
+
+  private def commitFile(dir: Path, version: Long): Path = dir.resolve(f"$version%020d.json")
+
+  private def newest(dir: Path): Option[Path] =
+    if (!Files.isDirectory(dir)) None
+    else {
+      val ls = Files.list(dir)
+      try ls.iterator.asScala.map(_.getFileName.toString)
+        .filter(_.matches("\\d{20}\\.json")).maxOption.map(dir.resolve)
+      finally ls.close()
+    }
+
+  private def readState(dir: Path): State =
+    newest(dir).fold(Empty)(p => decode(Files.readAllBytes(p)))
+
+  /** The newest commit file of the index `anchor` belongs to. */
+  private[graft] def lastCommit(spark: SparkSession, anchor: String): Option[Path] =
+    newest(logDir(spark, anchor))
+
+  /** A location this index's builds and rewrites own for the table
+    * committed at `committed`: the build location `<root>/<suffix>` or
+    * a versioned sibling `<root>/<suffix>_v<N>[_<k>]`. */
+  private def ownedSibling(loc: String, committed: String): Boolean =
+    Seq(loc, committed).map(dirOf).map(p => (p.getParent, versionBase(p))).distinct.size == 1
+
+  private def versionBase(p: Path): String =
+    p.getFileName.toString.replaceAll("_v\\d+(_\\d+)?$", "")
+
+  /** Point `table` at `to` and delete `from`, the location it leaves. */
+  private def relocate(spark: SparkSession, table: String, from: String, to: String): Unit = {
+    spark.sql(s"ALTER TABLE $table SET LOCATION '$to'")
+    spark.catalog.refreshTable(table)
+    deleteDir(dirOf(from).toString)
+  }
+
+  /** The index's state as of its newest commit, with every table the
+    * commit relocated pointed at its committed location (idempotent:
+    * it only acts after a crash between a rewrite's commit and its
+    * re-point). `anchor` is any of the index's tables — they share one
+    * root. Driver-only: reads one small file, runs no Spark job. */
+  private[ops] def state(spark: SparkSession, anchor: String): State = {
+    val st = readState(logDir(spark, anchor))
+    for ((t, ts) <- st.tables if spark.catalog.tableExists(t); loc = location(spark, t)
+        if loc != ts.location && ownedSibling(loc, ts.location))
+      relocate(spark, t, loc, ts.location)
+    st
+  }
+
+  /** Commit the next version of the index's state: `change` applied to
+    * the newest commit, stamped with `verb` and `batch`, with each
+    * table in `wrote` (name → location) recorded with its footer row
+    * and file counts (read through the manifest and memo, but never
+    * written to them — those stay the readers' cache). Fails when a
+    * racing committer took the version. */
+  private[ops] def commit(spark: SparkSession, anchor: String, verb: String, batch: Long,
+      wrote: Seq[(String, String)])(change: State => State): State = {
+    val dir = logDir(spark, anchor)
+    val prev = readState(dir)
+    val base = change(prev)
+    val next = base.copy(version = prev.version + 1, verb = verb, batch = batch,
+      tables = base.tables ++ wrote.map { case (t, loc) =>
+        val st = segStatsAt(spark, loc, "ingest_batch", persist = false)
+        t -> TableState(loc, st.map(_.rows).sum, st.size)
+      })
+    step(s"commit $verb")
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, ".commit", ".tmp")
+    try {
+      Files.write(tmp, json.writeValueAsBytes(next))
+      Files.createLink(commitFile(dir, next.version), tmp)
+    } finally Files.deleteIfExists(tmp)
+    next
+  }
+
+  private def at(spark: SparkSession, table: String): (String, String) =
+    table -> location(spark, table)
+
+  /** Start the index's state over after a build wrote `tables`. */
+  private[ops] def commitBuild(spark: SparkSession, tables: Seq[String]): Unit =
+    commit(spark, tables.head, "build", BaseBatch, tables.map(at(spark, _)))(_ => Empty)
+
+  /** Commit an ad-hoc append to `tables`: a stamp ≥ 0 joins the
+    * committed batches, so a later rewrite sees it as landed. */
+  private[ops] def commitAppend(spark: SparkSession, tables: Seq[String], batch: Long): Unit =
+    commit(spark, tables.head, "append", batch, tables.map(at(spark, _)))(st =>
+      if (batch >= 0) st.copy(batches = st.batches + batch) else st)
+
+  // ------------------------------------------------------------------
   // Bucketed writes and rewrites
   // ------------------------------------------------------------------
 
@@ -225,7 +394,7 @@ object IndexCore {
     * the batch-sized hash exchange — one file per bucket per write, a
     * file count independent of cluster width. Over a bucketed scan
     * of the same table the exchange is elided (the scan already has
-    * the partitioning), which is what makes [[compactTable]] a
+    * the partitioning), which is what makes [[compacted]] a
     * zero-exchange per-bucket rewrite. `at = Some(location)` lays the
     * table down there (overwriting a stale registration); None
     * appends. */
@@ -243,71 +412,62 @@ object IndexCore {
   private[ops] def writeTable(rows: DataFrame, spec: TableSpec, prefix: String,
       build: Option[(String, Int)]): Unit = {
     val t = spec.name(prefix)
-    build match {
-      case Some((path, b)) => writeBucketed(rows, spec, t, Some(s"$path/${spec.suffix}"), b)
-      case None => writeBucketed(rows, spec, t, None, bucketsOf(rows.sparkSession, t))
-    }
+    writeBucketed(rows, spec, t, build.map { case (path, _) => s"$path/${spec.suffix}" },
+      build.fold(bucketsOf(rows.sparkSession, t))(_._2))
+    step(s"wrote $t")
   }
 
   /** The files currently backing `table` (append growth and
     * compaction are asserted on this count). */
   def tableFiles(spark: SparkSession, table: String): Seq[String] =
-    tableFilesSized(spark, table).map(_._1)
+    filesAt(location(spark, table)).map(_._1)
 
-  /** [[tableFiles]] with sizes, in ONE filesystem pass — the live
-    * listing every footer-derived answer validates against. Skips
-    * `_temporary` subtrees (an in-flight write's task files must not
-    * be footer-probed) and tolerates files deleted mid-walk. Sorted
+  /** The parquet files under `loc` with sizes, in ONE filesystem pass —
+    * the live listing every footer-derived answer validates against.
+    * Skips `_temporary` subtrees (an in-flight write's task files must
+    * not be footer-probed) and tolerates files deleted mid-walk. Sorted
     * for stable memo keys. */
-  private[ops] def tableFilesSized(spark: SparkSession,
-      table: String): Seq[(String, Long)] = {
-    val dir = java.nio.file.Paths.get(meta(spark, table).location)
-    if (!java.nio.file.Files.exists(dir)) Seq.empty
+  private def filesAt(loc: String): Seq[(String, Long)] = {
+    val dir = dirOf(loc)
+    if (!Files.exists(dir)) Seq.empty
     else {
+      import java.nio.file.FileVisitResult.{CONTINUE, SKIP_SUBTREE}
+      type Attrs = java.nio.file.attribute.BasicFileAttributes
       val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      java.nio.file.Files.walkFileTree(dir,
-        new java.nio.file.SimpleFileVisitor[java.nio.file.Path] {
-          override def preVisitDirectory(d: java.nio.file.Path,
-              attrs: java.nio.file.attribute.BasicFileAttributes)
-              : java.nio.file.FileVisitResult =
-            if (d.getFileName != null && d.getFileName.toString == "_temporary")
-              java.nio.file.FileVisitResult.SKIP_SUBTREE
-            else java.nio.file.FileVisitResult.CONTINUE
-          override def visitFile(f: java.nio.file.Path,
-              attrs: java.nio.file.attribute.BasicFileAttributes)
-              : java.nio.file.FileVisitResult = {
-            if (attrs.isRegularFile && f.getFileName.toString.endsWith(".parquet"))
-              buf += ((f.toString, attrs.size()))
-            java.nio.file.FileVisitResult.CONTINUE
-          }
-          override def visitFileFailed(f: java.nio.file.Path,
-              e: java.io.IOException): java.nio.file.FileVisitResult =
-            java.nio.file.FileVisitResult.CONTINUE
-        })
+      Files.walkFileTree(dir, new java.nio.file.SimpleFileVisitor[Path] {
+        override def preVisitDirectory(d: Path, a: Attrs) =
+          if (d.getFileName != null && d.getFileName.toString == "_temporary") SKIP_SUBTREE
+          else CONTINUE
+        override def visitFile(f: Path, a: Attrs) = {
+          if (a.isRegularFile && f.getFileName.toString.endsWith(".parquet"))
+            buf += ((f.toString, a.size()))
+          CONTINUE
+        }
+        override def visitFileFailed(f: Path, e: java.io.IOException) = CONTINUE
+      })
       buf.sortBy(_._1).toSeq
     }
   }
 
   /** The index's storage root, derived from an anchor table's
-    * location — the side tables live WITH the index (same durability
+    * location — side tables live WITH the index (same durability
     * domain), so a restarted query sees exactly what the index
     * absorbed. */
   private[ops] def indexRootOf(spark: SparkSession, anchorTable: String): String = {
-    val loc = meta(spark, anchorTable).location.toString.stripSuffix("/")
+    val loc = location(spark, anchorTable)
     loc.substring(0, loc.lastIndexOf('/'))
   }
 
-  /** Bucket-preserving compaction: rewrite every current file of
-    * `spec`'s table into ONE file per bucket, same bucket and sort
-    * spec, then swap it in ([[swapTable]]). `minus` purges rows whose
-    * `minusIdCol` is in that (bounded) frame with a broadcast
-    * anti-join, which streams the bucketed side and keeps the
-    * per-bucket rewrite. The sort spec is part of the table's
-    * bucketing metadata: a rewrite that dropped a sort column would
-    * wedge every later append and loosen the footer bounds probes
-    * prune on. */
-  private[ops] def compactTable(spark: SparkSession, spec: TableSpec, prefix: String,
-      minus: Option[DataFrame], minusIdCol: String): Unit = {
+  /** Bucket-preserving compaction, as one [[rewrite]] entry: every
+    * current file of `spec`'s table rewritten into ONE file per bucket,
+    * same bucket and sort spec. `minus` purges rows whose `minusIdCol`
+    * is in that (bounded) frame with a broadcast anti-join, which
+    * streams the bucketed side and keeps the per-bucket rewrite. The
+    * sort spec is part of the table's bucketing metadata: a rewrite
+    * that dropped a sort column would wedge every later append and
+    * loosen the footer bounds probes prune on. */
+  private[ops] def compacted(spark: SparkSession, spec: TableSpec, prefix: String,
+      minus: Option[DataFrame], minusIdCol: String): (String, (String, String) => Unit) = {
     val table = spec.name(prefix)
     // the last writer may have been ANOTHER session (a streaming
     // foreachBatch runs in the query's session clone, whose appends
@@ -316,7 +476,7 @@ object IndexCore {
     // hasn't seen
     spark.catalog.refreshTable(table)
     val b = bucketsOf(spark, table)
-    swapTable(spark, table, "compact") { (tmpT, loc) =>
+    table -> { (tmpT, loc) =>
       // A bucketed scan yields exactly one bucket per task, so the
       // write lays each bucket back down as one file with no
       // exchange. Two planner settings keep that scan: with
@@ -324,10 +484,10 @@ object IndexCore {
       // it to size-based chunks (the writer's exchange was already
       // elided against it, so nothing "needs" the distribution); AQE's
       // local-read rewrite would likewise re-chunk the read.
-      val aqe = "spark.sql.adaptive.enabled"
-      val abs = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val was = Seq(aqe, abs).map(k => k -> spark.conf.get(k, "true"))
-      Seq(aqe, abs).foreach(spark.conf.set(_, "false"))
+      val keys = Seq("spark.sql.adaptive.enabled",
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled")
+      val was = keys.map(k => k -> spark.conf.get(k, "true"))
+      keys.foreach(spark.conf.set(_, "false"))
       try {
         val t = spark.table(table)
         val source = minus.fold(t) { ex =>
@@ -339,62 +499,58 @@ object IndexCore {
     }
   }
 
-  /** Replace `table` with a rewrite: `write(tmpTable, location)` lays
-    * the replacement down at a sibling location that does not exist
-    * yet (serials restart per JVM, so a counter alone could name an
-    * earlier JVM's leftover directory), then [[renameSwap]] promotes
-    * it and the old files are deleted. A failed promotion leaves the
-    * original registration in place and removes the temp table AND its
-    * files, so a retry cannot hit TableAlreadyExists. */
-  private[ops] def swapTable(spark: SparkSession, table: String, tag: String)(
-      write: (String, String) => Unit): Unit = {
-    val oldLoc = meta(spark, table).location.toString
-    val newLoc = Iterator.continually(
-        oldLoc.stripSuffix("/") + s"_$tag${serial.incrementAndGet()}")
-      .find(l => !java.nio.file.Files.exists(java.nio.file.Paths.get(l.stripPrefix("file:"))))
-      .get
-    val tmpT = s"${table}_$tag"
-    write(tmpT, newLoc)
-    try renameSwap(spark, table, tmpT)
-    catch {
-      case NonFatal(e) =>
-        try spark.sql(s"DROP TABLE IF EXISTS $tmpT")
-        catch { case NonFatal(_) => () }
-        deleteDir(newLoc.stripPrefix("file:"))
-        throw e
+  /** Replace tables of one index together (see the object doc):
+    * `writes` pairs each table with `write(tmpTable, location)`, which
+    * lays its new rows down through a temporary registration at a
+    * versioned location that does not exist yet (an earlier JVM may
+    * have left one of the same name). ONE commit — `change` plus every
+    * new location — publishes them; the catalog is re-pointed and the
+    * old directories deleted afterwards. Before writing, versioned
+    * siblings that no commit took (a crashed rewrite's) are deleted. */
+  private[ops] def rewrite(spark: SparkSession, anchor: String, verb: String,
+      writes: Seq[(String, (String, String) => Unit)])(change: State => State): Unit = {
+    val next = state(spark, anchor).version + 1
+    val placed = writes.map { case (table, write) =>
+      val old = location(spark, table)
+      val base = versionBase(dirOf(old))
+      val root = dirOf(old).getParent
+      sweepUncommitted(root, base, old)
+      val fresh = Iterator.from(0).map(k => root.resolve(s"${base}_v$next" +
+        (if (k == 0) "" else s"_$k"))).find(!Files.exists(_)).get
+      val tmpT = s"${table}_$verb"
+      write(tmpT, fresh.toString)
+      val loc = location(spark, tmpT)
+      spark.sql(s"DROP TABLE $tmpT")
+      step(s"wrote $table")
+      (table, old, loc)
     }
-    deleteDir(oldLoc.stripPrefix("file:"))
+    commit(spark, anchor, verb, BaseBatch, placed.map(p => p._1 -> p._3))(change)
+    step(s"committed $verb")
+    placed.foreach { case (t, old, loc) => relocate(spark, t, old, loc) }
   }
 
-  /** The crash-safe rename swap — the only place index tables are
-    * renamed. A bare DROP-then-RENAME has a window where NO table is
-    * registered; instead the live table is renamed ASIDE first, then
-    * `incoming` takes its name, then the aside registration is
-    * dropped (its files stay; external tables keep their location).
-    * At every single-failure point either the original registration
-    * is intact or a complete aside-named table remains recoverable. A
-    * failed promotion restores the original name before rethrowing; a
-    * failed rollback is reported, not swallowed. */
-  private[ops] def renameSwap(spark: SparkSession, table: String,
-      incoming: String): Unit = {
-    val aside = s"${table}_old${serial.incrementAndGet()}"
-    spark.sql(s"ALTER TABLE $table RENAME TO $aside")
-    try spark.sql(s"ALTER TABLE $incoming RENAME TO $table")
-    catch {
-      case NonFatal(e) =>
-        try spark.sql(s"ALTER TABLE $aside RENAME TO $table")
-        catch {
-          case NonFatal(r) => System.err.println(
-            s"[indexcore] ROLLBACK FAILED for $table (recover manually from " +
-              s"$aside): ${r.getMessage}")
-        }
-        throw e
-    }
-    spark.sql(s"DROP TABLE $aside")
+  /** Delete the versioned `<base>_v<N>[_<k>]` directories under `root`
+    * that commit N does not name — outputs of rewrites that crashed or
+    * lost a commit race. Committed ones (live, or an earlier index's
+    * at the same path) stay. */
+  private def sweepUncommitted(root: Path, base: String, live: String): Unit = {
+    val versioned = (java.util.regex.Pattern.quote(base) + "_v(\\d+)(_\\d+)?").r
+    val log = root.resolve("_log")
+    val ls = Files.list(root)
+    try ls.iterator.asScala.toList.foreach { p =>
+      p.getFileName.toString match {
+        case versioned(v, _) if p != dirOf(live) =>
+          val f = commitFile(log, v.toLong)
+          val taken = Files.exists(f) &&
+            decode(Files.readAllBytes(f)).tables.values.exists(t => dirOf(t.location) == p)
+          if (!taken) deleteDir(p.toString)
+        case _ => ()
+      }
+    } finally ls.close()
   }
 
   // ------------------------------------------------------------------
-  // Side tables
+  // Side tables (Lex's dfcorr: data, not state)
   // ------------------------------------------------------------------
 
   /** Append `rows` to a side table, creating it at
@@ -411,9 +567,9 @@ object IndexCore {
     * resurrect what the drop cleared. */
   private[ops] def dropWithFiles(spark: SparkSession, table: String): Unit =
     if (spark.catalog.tableExists(table)) {
-      val loc = meta(spark, table).location.toString
+      val loc = location(spark, table)
       spark.sql(s"DROP TABLE $table")
-      deleteDir(loc.stripPrefix("file:"))
+      deleteDir(dirOf(loc).toString)
     }
 
   // ------------------------------------------------------------------
@@ -423,10 +579,10 @@ object IndexCore {
   // listing), validated entry by entry against one live listing (path
   // + size). Footers are read only for files the manifest has not
   // seen — O(arrivals) footer reads per verb instead of O(files). A
-  // missing, stale or torn manifest only causes re-reads; writes are
-  // atomic (tmp + rename). Updating lazily on READ covers ad-hoc
-  // appends, streaming session clones and external rewrites without
-  // trusting any writer to maintain it.
+  // missing, stale, torn or old-format manifest only causes re-reads;
+  // writes are atomic (tmp + rename). Updating lazily on READ covers
+  // ad-hoc appends, streaming session clones and external rewrites
+  // without trusting any writer to maintain it.
   // ------------------------------------------------------------------
 
   /** One file's footer-derived stats for a single long column.
@@ -447,59 +603,35 @@ object IndexCore {
   private val segStatsMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), (Seq[(String, Long)], Seq[SegStat])]
 
-  private def manifestPathFor(spark: SparkSession, table: String,
-      col: String): java.nio.file.Path =
-    java.nio.file.Paths.get(meta(spark, table).location).resolve(s"_segstats_$col.json")
-
-  private def readManifest(p: java.nio.file.Path): Map[String, SegStat] =
+  private def readManifest(p: Path): Map[String, SegStat] =
     try {
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val s = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val objPat = java.util.regex.Pattern.compile("\\{[^{}]*\\}")
-        val m = objPat.matcher(s)
-        val buf = scala.collection.mutable.Map.empty[String, SegStat]
-        def fld(o: String, k: String): Option[String] = {
-          val fm = java.util.regex.Pattern
-            .compile("\"" + k + "\":\"?([^\",}]+)\"?").matcher(o)
-          if (fm.find()) Some(fm.group(1)) else None
-        }
-        while (m.find()) {
-          val o = m.group()
-          for {
-            name <- fld(o, "p")
-            size <- fld(o, "s").flatMap(_.toLongOption)
-            rows <- fld(o, "r").flatMap(_.toLongOption)
-          } buf(name) = SegStat(name, size, rows,
-            fld(o, "mn").flatMap(_.toLongOption).getOrElse(Long.MaxValue),
-            fld(o, "mx").flatMap(_.toLongOption).getOrElse(Long.MinValue),
-            fld(o, "c").contains("1"), failed = false)
-        }
-        buf.toMap
-      }
+      if (!Files.exists(p)) Map.empty
+      else json.readTree(Files.readAllBytes(p)).get("files").elements().asScala.flatMap { o =>
+        def fld(k: String) = Option(o.get(k)).filter(_.canConvertToLong).map(_.asLong)
+        for (name <- Option(o.get("p")).map(_.asText); size <- fld("s"); rows <- fld("r"))
+          yield name -> SegStat(name, size, rows, fld("mn").getOrElse(Long.MaxValue),
+            fld("mx").getOrElse(Long.MinValue), fld("c").contains(1L), failed = false)
+      }.toMap
     } catch { case NonFatal(_) => Map.empty }
 
   /** Write the manifest atomically. Temp siblings a crashed writer
     * left behind are deleted first, so they cannot accumulate (a
     * concurrent writer's temp may go too; its move then fails, which
     * only costs a later footer re-read). */
-  private def writeManifest(p: java.nio.file.Path, stats: Seq[SegStat]): Unit =
+  private def writeManifest(p: Path, stats: Seq[SegStat]): Unit =
     try {
-      val stray = java.nio.file.Files.newDirectoryStream(p.getParent,
-        p.getFileName.toString + ".tmp*")
-      try stray.forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
+      val stray = Files.newDirectoryStream(p.getParent, p.getFileName.toString + ".tmp*")
+      try stray.forEach(f => { Files.deleteIfExists(f); () })
       finally stray.close()
-      val body = stats.map { st =>
-        val name = p.getParent.relativize(java.nio.file.Paths.get(st.path))
-        val mnmx = if (st.hasStats) s""","mn":${st.mn},"mx":${st.mx}""" else ""
-        s"""{"p":"$name","s":${st.size},"r":${st.rows}$mnmx,"c":${if (st.complete) 1 else 0}}"""
-      }.mkString("""{"files":[""", ",", "]}\n")
+      val files = stats.map { st =>
+        val mnmx = if (st.hasStats) Seq("mn" -> st.mn, "mx" -> st.mx) else Nil
+        scala.collection.immutable.ListMap(
+          Seq("p" -> p.getParent.relativize(Paths.get(st.path)).toString,
+            "s" -> st.size, "r" -> st.rows) ++ mnmx :+ ("c" -> (if (st.complete) 1 else 0)): _*)
+      }
       val tmp = p.resolveSibling(p.getFileName.toString + s".tmp${serial.incrementAndGet()}")
-      java.nio.file.Files.write(tmp,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      Files.write(tmp, json.writeValueAsBytes(Map("files" -> files)))
+      Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } catch { case NonFatal(_) => () }
 
@@ -522,35 +654,18 @@ object IndexCore {
   private def readFooterStat(spark: SparkSession, path: String, size: Long,
       col: String): SegStat =
     try {
-      val blocks = openFooter(spark, path).getBlocks
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      var rows = 0L
-      var complete = true
-      var i = 0
-      while (i < blocks.size()) {
-        val blk = blocks.get(i)
-        rows += blk.getRowCount
-        if (blk.getRowCount > 0L) {
-          var found = false
-          var j = 0
-          while (j < blk.getColumns.size()) {
-            val c = blk.getColumns.get(j)
-            if (c.getPath.toDotString == col && c.getStatistics != null &&
-                !c.getStatistics.isEmpty && c.getStatistics.hasNonNullValue) {
-              val st = c.getStatistics
-                .asInstanceOf[org.apache.parquet.column.statistics.LongStatistics]
-              mn = math.min(mn, st.genericGetMin)
-              mx = math.max(mx, st.genericGetMax)
-              found = true
-            }
-            j += 1
-          }
-          if (!found) complete = false
-        }
-        i += 1
-      }
-      SegStat(path, size, rows, mn, mx, complete, failed = false)
+      val blocks = openFooter(spark, path).getBlocks.asScala.toSeq
+      // per non-empty row group: the column's usable statistics, if any
+      val perBlock = blocks.filter(_.getRowCount > 0L).map(_.getColumns.asScala.collectFirst {
+        case c if c.getPath.toDotString == col && c.getStatistics != null &&
+            !c.getStatistics.isEmpty && c.getStatistics.hasNonNullValue =>
+          c.getStatistics.asInstanceOf[org.apache.parquet.column.statistics.LongStatistics]
+      })
+      val st = perBlock.flatten
+      SegStat(path, size, blocks.map(_.getRowCount).sum,
+        st.map(_.getMin).foldLeft(Long.MaxValue)(math.min),
+        st.map(_.getMax).foldLeft(Long.MinValue)(math.max),
+        complete = perBlock.forall(_.isDefined), failed = false)
     } catch {
       case NonFatal(_) =>
         SegStat(path, size, 0L, Long.MaxValue, Long.MinValue, complete = false, failed = true)
@@ -561,21 +676,24 @@ object IndexCore {
     * behind [[footerProvenAbsent]], [[fileSegments]] and
     * [[stampSetFromFooters]]. */
   private[ops] def segStats(spark: SparkSession, table: String,
-      col: String): Seq[SegStat] = {
-    val listing = tableFilesSized(spark, table)
-    val memoKey = (spark, table, col)
+      col: String): Seq[SegStat] = segStatsAt(spark, location(spark, table), col, persist = true)
+
+  private def segStatsAt(spark: SparkSession, loc: String, col: String,
+      persist: Boolean): Seq[SegStat] = {
+    val listing = filesAt(loc)
+    val memoKey = (spark, loc, col)
     segStatsMemo.get(memoKey) match {
       case Some((k, stats)) if k == listing => stats
       case _ =>
         segStatsMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-        val mPath = manifestPathFor(spark, table, col)
+        val mPath = dirOf(loc).resolve(s"_segstats_$col.json")
         val manifest = if (listing.isEmpty) Map.empty[String, SegStat]
           else readManifest(mPath)
         val parent = mPath.getParent
         var fresh = 0
         var failed = 0
         val stats = listing.map { case (p, sz) =>
-          val rel = parent.relativize(java.nio.file.Paths.get(p)).toString
+          val rel = parent.relativize(Paths.get(p)).toString
           manifest.get(rel).filter(_.size == sz) match {
             case Some(st) => st.copy(path = p)
             case None =>
@@ -584,7 +702,7 @@ object IndexCore {
               st
           }
         }
-        if (failed == 0) {
+        if (persist && failed == 0) {
           if (fresh > 0) writeManifest(mPath, stats)
           segStatsMemo.put(memoKey, (listing, stats))
         }
@@ -641,168 +759,96 @@ object IndexCore {
   // Tombstones — O(retired) retention, shared by all three families
   // ------------------------------------------------------------------
 
-  def tombstonesTable(prefix: String): String = s"${prefix}_tombstones"
-
-  /** Record expired ids (first column of `expired`) in the index's
-    * tombstone table — the O(retired) retention write. coalesce(1):
-    * the set is bounded by contract (it must broadcast at probe time),
-    * and without it the write's file count would scale with the
-    * deriving frame's task count, not with the retired set. */
-  private[ops] def recordTombstones(spark: SparkSession, prefix: String,
-      anchorTable: String, expired: DataFrame): Unit =
-    appendSide(spark, tombstonesTable(prefix), anchorTable, "tombstones",
-      expired.select(col(expired.columns.head).cast("long").as("retired_id")).coalesce(1))
-
-  /** The current tombstone set as a broadcast-hinted frame, or None.
-    * Refreshed before the read (same rationale as [[batchPresent]]).
-    * The broadcast hint keeps the anti-join a broadcast-hash join
-    * even with auto-broadcast disabled, so the masked scan keeps its
-    * bucketed output partitioning. */
-  private[ops] def tombstoneFrame(spark: SparkSession,
-      prefix: String): Option[DataFrame] = {
-    val t = tombstonesTable(prefix)
-    if (!spark.catalog.tableExists(t)) None
-    else {
-      spark.catalog.refreshTable(t)
-      Some(broadcast(spark.table(t).select("retired_id")))
-    }
+  /** Record expired ids (first column of `expired`) as retired in the
+    * index's log — the O(retired) retention write; the set is bounded
+    * by contract (it must broadcast at probe time). */
+  private[ops] def recordTombstones(spark: SparkSession, anchor: String,
+      expired: DataFrame): Unit = {
+    val ids = expired.select(col(expired.columns.head).cast("long"))
+      .collect().filterNot(_.isNullAt(0)).map(_.getLong(0))
+    commit(spark, anchor, "retireTombstone", BaseBatch, Nil)(st =>
+      st.copy(retired = ids.map(_ -> Option.empty[Long]).toMap ++ st.retired))
   }
 
-  /** Drop the tombstones after a compaction purged the masked rows. */
-  private[ops] def clearTombstones(spark: SparkSession, prefix: String): Unit =
-    dropWithFiles(spark, tombstonesTable(prefix))
+  /** A retired set as a broadcast-hinted (retired_id, dl) local
+    * relation, or None when empty. The broadcast hint keeps the
+    * anti-join a broadcast-hash join even with auto-broadcast disabled,
+    * so the masked scan keeps its bucketed output partitioning. */
+  private[ops] def retiredFrame(spark: SparkSession,
+      retired: Map[Long, Option[Long]]): Option[DataFrame] = {
+    import spark.implicits._
+    Option.when(retired.nonEmpty)(broadcast(retired.toSeq.sortBy(_._1).toDF("retired_id", "dl")))
+  }
 
   // ------------------------------------------------------------------
-  // Exactly-once maintenance — the append ledger and the fence
+  // Exactly-once maintenance — the fence
   // ------------------------------------------------------------------
-
-  def ledgerTable(prefix: String): String = s"${prefix}_ledger"
-
-  private[ops] def ledgerDoneIn(spark: SparkSession, ledgerTbl: String,
-      batchId: Long): Boolean =
-    spark.catalog.tableExists(ledgerTbl) &&
-      // a fresh batch is proven un-ledgered from footers — no refresh,
-      // no job; only a possibly-present id pays the exact check, which
-      // refreshes first: the ledger row may have been written through
-      // a streaming session clone
-      !footerProvenAbsent(spark, ledgerTbl, "batch_id", batchId) && {
-        spark.catalog.refreshTable(ledgerTbl)
-        !spark.table(ledgerTbl).filter(col("batch_id") === batchId).isEmpty
-      }
-
-  private[ops] def ledgerRecordIn(spark: SparkSession, ledgerTbl: String,
-      anchorTable: String, batchId: Long): Unit =
-    appendSide(spark, ledgerTbl, anchorTable, "ledger",
-      spark.range(1).select(lit(batchId).as("batch_id")))
 
   /** The exactly-once fence shared by every `maintainBatch` — the
-    * order in the object doc. `certifying` is the table written LAST,
-    * so its stamp proves the whole batch landed. With `ledgered` the
-    * ledger is the fast path and is (back)filled; without it the stamp
-    * is the ledger and [[foldedUnder]] extends it across folds. `write`
-    * runs the batch, given `landed(table)` so it can skip any earlier
-    * table a crashed attempt already wrote; it must write the
-    * certifying table. Returns None when the batch had landed. */
-  private[ops] def maintainOnce[T](spark: SparkSession, verb: String, prefix: String,
-      certifying: String, ledgered: Boolean, batchId: Long)(
-      write: (String => Boolean) => T): Option[T] = {
+    * order in the object doc. `tables` are the tables the batch writes
+    * (the first anchors the log); `write` runs the batch, given
+    * `landed(table)` so it can skip any table a crashed attempt
+    * already wrote. Returns None when the log holds the batch. */
+  private[ops] def maintainOnce[T](spark: SparkSession, verb: String, tables: Seq[String],
+      batchId: Long)(write: (String => Boolean) => T): Option[T] = {
     require(batchId >= 0,
       s"$verb batchId must be >= 0, got $batchId (ids < 0 are " +
         "reserved for the base-build/ad-hoc stamp)")
-    val ledger = ledgerTable(prefix)
-    def record(): Unit = if (ledgered) ledgerRecordIn(spark, ledger, certifying, batchId)
-    if (ledgered && ledgerDoneIn(spark, ledger, batchId)) None
-    else if (batchPresent(spark, certifying, batchId) ||
-        (!ledgered && foldedUnder(spark, certifying, batchId))) {
-      record()
-      None
-    } else {
+    if (state(spark, tables.head).batches.contains(batchId)) None
+    else {
       val out = write(t => batchPresent(spark, t, batchId))
-      record()
+      commit(spark, tables.head, verb, batchId, tables.map(at(spark, _)))(st =>
+        st.copy(batches = st.batches + batchId))
       Some(out)
     }
   }
 
   /** Refuse a rewrite that destroys batch stamps (fold, re-base,
-    * re-stamp) while any stamped batch in `stamped` is mid-commit
-    * (stamped but not ledgered): its replay fence would be gone and a
-    * checkpoint restart would double-append it. Indexes without a
-    * ledger never went through maintainBatch and are exempt. Both
-    * stamp sets come from footers when every file holds one stamp;
-    * otherwise from two exact distinct-collects. */
-  private[ops] def requireLedgered(spark: SparkSession, prefix: String,
-      stamped: String, verb: String): Unit = {
-    val lt = ledgerTable(prefix)
-    if (spark.catalog.tableExists(lt)) {
-      val unledgered = (stampSetFromFooters(spark, lt, "batch_id"),
-          stampSetFromFooters(spark, stamped, "ingest_batch")) match {
-        case (Some(ledgered), Some(stamps)) =>
-          stamps.filter(b => b >= 0 && !ledgered.contains(b)).toSeq
-        case _ =>
-          spark.catalog.refreshTable(lt)
-          spark.catalog.refreshTable(stamped)
-          val ledgered = spark.table(lt).select("batch_id").distinct()
-            .collect().map(_.getLong(0)).toSet
-          spark.table(stamped).select("ingest_batch").distinct()
-            .collect().map(_.getLong(0))
-            .filter(b => b >= 0 && !ledgered.contains(b)).toSeq
-      }
-      require(unledgered.isEmpty,
-        s"$verb($prefix): batch(es) ${unledgered.mkString(",")} are " +
-          "mid-commit (stamped but not ledgered) — replay them through " +
-          "maintainBatch before any maintenance rewrite, or their replay " +
-          "fence is destroyed and a restart double-appends them")
+    * re-stamp) while a stamp ≥ 0 in `stamped`'s footers is missing
+    * from the log — a batch mid-commit: its replay fence would be gone
+    * and a checkpoint restart would double-append it. The stamp set
+    * comes from footers when every file holds one stamp, otherwise
+    * from an exact distinct-collect. Returns the state it checked. */
+  private[ops] def requireLedgered(spark: SparkSession, stamped: String,
+      verb: String): State = {
+    val st = state(spark, stamped)
+    val stamps = stampSetFromFooters(spark, stamped, "ingest_batch").getOrElse {
+      spark.catalog.refreshTable(stamped)
+      spark.table(stamped).select("ingest_batch").distinct()
+        .collect().filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
     }
+    val missing = stamps.filter(b => b >= 0 && !st.batches.contains(b)).toSeq.sorted
+    require(missing.isEmpty,
+      s"$verb($stamped): batch(es) ${missing.mkString(",")} are " +
+        "mid-commit (stamped but not in the index's commit log) — replay " +
+        "them through maintainBatch before any maintenance rewrite, or " +
+        "their replay fence is destroyed and a restart double-appends them")
+    st
   }
 
   // ------------------------------------------------------------------
-  // Segment merge log — crash-safe size-tiered folds
+  // Crash-safe size-tiered folds
   // ------------------------------------------------------------------
 
   /** Merge outputs are stamped from a RESERVED range (≤ this value,
     * descending): real batches are ≥ 0 and the base build is
     * [[BaseBatch]], so a reserved stamp never collides with a real
-    * batch — and an UNCOMMITTED merge output (crash before the log
-    * append) is invisible by default. */
+    * batch — and an UNCOMMITTED merge output (crash before the commit)
+    * is invisible by default. */
   val MergeStampCeil: Long = -2L
 
-  def mergeLogTable(prefix: String): String = s"${prefix}_mergelog"
-
-  /** The committed merge history: `folded` = every stamp some fold
-    * consumed (its rows are dead); `outputs` = every stamp a committed
-    * fold produced (live unless later folded — cascaded tiers).
-    * Cleared on every full re-stamping rewrite, so both stay tiny. */
+  /** One fold scope's committed merge history: `folded` = every stamp
+    * some fold consumed (its rows are dead); `outputs` = every stamp a
+    * committed fold produced (live unless later folded — cascaded
+    * tiers). Cleared on every full re-stamping rewrite, so both stay
+    * tiny. */
   final case class MergeLog(folded: Set[Long], outputs: Set[Long]) {
     def nextStamp: Long =
       math.min(MergeStampCeil, outputs.minOption.getOrElse(MergeStampCeil + 1) - 1)
   }
 
-  /** Decoded merge logs keyed by the log table's LIVE file listing:
-    * the log only changes when a fold commits or a rewrite clears it,
-    * both of which change the listing — from any session, so the key
-    * also covers the cross-session staleness a refresh guards. */
-  private val mergeLogMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Seq[(String, Long)], MergeLog)]
-
-  private[ops] def readMergeLog(spark: SparkSession, prefix: String): MergeLog = {
-    val t = mergeLogTable(prefix)
-    if (!spark.catalog.tableExists(t)) MergeLog(Set.empty, Set.empty)
-    else {
-      val key = tableFilesSized(spark, t)
-      mergeLogMemo.get((spark, t)) match {
-        case Some((k, log)) if k == key => log
-        case _ =>
-          mergeLogMemo.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-          spark.catalog.refreshTable(t)
-          val rows = spark.table(t).select("out_stamp", "folded_stamp").collect()
-          val log = MergeLog(rows.map(_.getLong(1)).toSet, rows.map(_.getLong(0)).toSet)
-          mergeLogMemo.put((spark, t), (key, log))
-          log
-      }
-    }
-  }
-
-  /** Row-visibility predicate under the merge log, on `ingest_batch`:
+  /** Row-visibility predicate under a fold scope's log, on
+    * `ingest_batch`:
     *   - unstamped rows (legacy tables) are visible;
     *   - real stamps (≥ -1) are visible unless a committed fold
     *     consumed them;
@@ -810,8 +856,8 @@ object IndexCore {
     *     fold PRODUCED them and no later fold consumed them.
     * Literal comparisons and IN-lists on one long column — pushed and
     * footer-pruned. Readers apply it even with an EMPTY log: a fold
-    * that crashed before its first commit leaves reserved-stamp rows
-    * on disk with no log table at all. */
+    * that crashed before its commit leaves reserved-stamp rows on
+    * disk. */
   private[ops] def visibleUnder(log: MergeLog): Column = {
     val b = col("ingest_batch")
     val notFolded =
@@ -821,35 +867,14 @@ object IndexCore {
     b.isNull || (notFolded && (b >= lit(-1L) || liveOutput))
   }
 
-  /** Append the commit rows for one fold — `folded` stamps consumed,
-    * `out` produced — as ONE atomic job commit. The log is stored
-    * under its own table name, so table-scoped logs never collide
-    * under one index root. */
-  private[ops] def commitFold(spark: SparkSession, prefix: String,
-      anchorTable: String, folded: Seq[Long], out: Long): Unit = {
-    import spark.implicits._
-    val t = mergeLogTable(prefix)
-    appendSide(spark, t, anchorTable, t,
-      folded.map(f => (out, f)).toDF("out_stamp", "folded_stamp").coalesce(1))
-  }
-
-  /** Was `batchId` consumed by a committed fold under `scope`'s log?
-    * A fold re-stamps a batch's rows and GC deletes its files, so for
-    * a stamp-is-the-ledger table the log row is the durable evidence
-    * the batch landed. */
-  private[ops] def foldedUnder(spark: SparkSession, scope: String,
-      batchId: Long): Boolean =
-    spark.catalog.tableExists(mergeLogTable(scope)) &&
-      readMergeLog(spark, scope).folded.contains(batchId)
-
-  /** Drop the merge log after a full re-stamping rewrite (the stamps
-    * it names no longer exist). Every session's memo entry goes too:
-    * a re-created log must never serve the old decode. */
-  private[ops] def clearMergeLog(spark: SparkSession, prefix: String): Unit = {
-    val t = mergeLogTable(prefix)
-    mergeLogMemo.filterInPlace((k, _) => k._2 != t)
-    dropWithFiles(spark, t)
-  }
+  /** Commit one fold under `scope`: `folded` stamps consumed, `out`
+    * produced, with the tables it appended to. */
+  private[ops] def commitFold(spark: SparkSession, tables: Seq[String], scope: String,
+      folded: Seq[Long], out: Long): State =
+    commit(spark, tables.head, "tieredMerge", out, tables.map(at(spark, _))) { st =>
+      val log = st.log(scope)
+      st.copy(folds = st.folds + (scope -> MergeLog(log.folded ++ folded, log.outputs + out)))
+    }
 
   /** One fold in flight: the consumed stamps, the output stamp, and
     * the consumed row count (exact, from footers). */
@@ -862,15 +887,15 @@ object IndexCore {
     * files byte-untouched. One footer sweep per table feeds GC, the
     * tier pick and the stamp pick. `rewrite(spec, input, fold)` writes
     * the merged rows, given the folded rows re-stamped to `fold.out`;
-    * the commit is one merge-log append, and the inputs' files are
-    * GC'd after it (their rows are already invisible). Returns true
-    * when a fold ran (≥ 2 sub-tier segments). */
+    * the commit is [[commitFold]], and the inputs' files are GC'd
+    * after it (their rows are already invisible). Returns true when a
+    * fold ran (≥ 2 sub-tier segments). */
   private[ops] def tieredMerge(spark: SparkSession, prefix: String, scope: String,
       specs: Seq[TableSpec], maxTierRows: Long)(
       rewrite: (TableSpec, DataFrame, Fold) => Unit): Boolean = {
     val tables = specs.map(_.name(prefix))
     tables.foreach(spark.catalog.refreshTable)
-    val log = readMergeLog(spark, scope)
+    val log = state(spark, tables.head).log(scope)
     // GC any prior fold's leftovers FIRST: a crashed attempt's orphan
     // files must go before its stamp could be reused
     val segs = tables.map { t =>
@@ -893,10 +918,9 @@ object IndexCore {
         rewrite(spec, spark.table(t).filter(col("ingest_batch").isin(stamps: _*))
           .withColumn("ingest_batch", lit(fold.out)), fold)
       }
-      commitFold(spark, scope, tables.head, stamps, fold.out)
+      val log2 = commitFold(spark, tables, scope, stamps, fold.out).log(scope)
       // under the just-committed log the dead set is exactly the
       // folded stamps' files, already in hand from the sweep
-      val log2 = MergeLog(log.folded ++ stamps, log.outputs + fold.out)
       tables.zip(segs).foreach { case (t, s) =>
         gcDeadFilesOf(spark, t, log2, s.filter(x => stamps.contains(x._2)))
       }
@@ -914,7 +938,7 @@ object IndexCore {
     val before = baseFiles
     if (!fold) sys.error(s"$tag: sub-tier segments present but no fold ran")
     if (baseFiles != before) sys.error(s"$tag: the fold touched the base tier's files")
-    val segs = segmentSizes(spark, table, readMergeLog(spark, scope))
+    val segs = segmentSizes(spark, table, state(spark, table).log(scope))
     if (segs.size != 2) sys.error(s"$tag: expected base + merged segment, got ${segs.keySet}")
   }
 
@@ -971,10 +995,10 @@ object IndexCore {
         (log.folded.contains(mn) || (mn <= MergeStampCeil && !log.outputs.contains(mn)))
     }
     val deleted = dead.filter { case (f, _, _, _, _) =>
-      val p = java.nio.file.Paths.get(f)
-      try { java.nio.file.Files.deleteIfExists(p); () }
+      val p = Paths.get(f)
+      try { Files.deleteIfExists(p); () }
       catch { case NonFatal(_) => () }
-      !java.nio.file.Files.exists(p)
+      !Files.exists(p)
     }
     if (deleted.nonEmpty) spark.catalog.refreshTable(table)
     deleted.map(_._1)

@@ -58,13 +58,14 @@ import IndexCore.BaseBatch
   *     exactly the full build's postings for those docs), appends
   *     postings + docstats + ONE stats row under a fresh
   *     `ingest_batch` stamp.
-  *   - [[compact]] (tx18): [[IndexCore.compactTable]]'s per-bucket
+  *   - [[compact]] (tx18): [[IndexCore.compacted]]'s per-bucket
   *     local rewrite over both bucketed tables (one file per bucket,
   *     zero exchange), pending tombstones physically purged, stats
   *     re-based to a single row recomputed from the surviving
-  *     docstats.
+  *     docstats — all three published by one log commit that also
+  *     clears the tombstones.
   *   - [[retire]] (tx19): right-to-be-forgotten for documents — the
-  *     retired ids land in a tombstone table (O(retired) write; dl
+  *     retired ids land in the index's commit log (O(retired) write; dl
   *     recorded at retire time from the norms table so the stats
   *     correction never rescans anything), probes mask them with a
   *     broadcast anti-join AND subtract their (count, Σdl) from the
@@ -282,7 +283,14 @@ object LexIndex {
     else pinned
     writeDocstats(dls, path, prefix, batch, firstWrite, buckets)
     writeStats(dls, path, prefix, batch, firstWrite)
+    if (firstWrite) IndexCore.commitBuild(spark, tables(prefix))
+    else IndexCore.commitAppend(spark, tables(prefix), batch)
   }
+
+  /** The tables a batch writes, in write order; the first anchors the
+    * index's commit log. */
+  private def tables(prefix: String): Seq[String] =
+    Seq(postingsTable(prefix), docstatsTable(prefix), statsTable(prefix))
 
   // dl is functionally dependent on doc_id, so folding it into the
   // group key keeps the build a single shuffle (no corpus-sized
@@ -333,6 +341,7 @@ object LexIndex {
     val sw = st.write.mode(if (firstWrite) SaveMode.Overwrite else SaveMode.Append)
     (if (firstWrite) sw.option("path", s"$path/stats") else sw)
       .saveAsTable(statsTable(prefix))
+    IndexCore.step(s"wrote ${statsTable(prefix)}")
   }
 
   /** Append a NEW document batch: tokenize the batch only (tf and dl
@@ -356,18 +365,17 @@ object LexIndex {
     * batch stamp, and each write is one atomic job commit — so a
     * replay completes exactly the tables the crash left unwritten
     * ([[IndexCore.batchPresent]], storage-derived, holds across JVM
-    * restarts). A LEDGER row (BandIndex's mechanism, stored WITH the
-    * index, written LAST) certifies the completed batch — the stats
-    * stamp alone cannot (round-16 review): [[compact]] re-bases the
-    * stats table to a single BaseBatch row and
-    * [[reindexImpact]]/[[mergeReindex]] re-stamp postings, so after
-    * any maintenance rewrite the per-table stamps of ALREADY-FOLDED
-    * batches are gone and only the ledger can fence their replay.
-    * (The per-table stamp checks remain valid for the window they
-    * guard: a crash-interrupted batch is replayed BEFORE any later
-    * maintenance — [[IndexCore.requireLedgered]] enforces that ordering
-    * loudly.) A replayed micro-batch whose checkpoint commit marker
-    * was lost is a whole-batch no-op returning false. No
+    * restarts). The index's commit log (written LAST) certifies the
+    * completed batch — the stats stamp alone cannot:
+    * [[compact]] re-bases the stats table to a single
+    * BaseBatch row and [[reindexImpact]]/[[mergeReindex]] re-stamp
+    * postings, so after any maintenance rewrite the per-table stamps
+    * of ALREADY-FOLDED batches are gone and only the log can fence
+    * their replay. (The per-table stamp checks remain valid for the
+    * window they guard: a crash-interrupted batch is replayed BEFORE
+    * any later maintenance — [[IndexCore.requireLedgered]] enforces
+    * that ordering loudly.) A replayed micro-batch whose checkpoint
+    * commit marker was lost is a whole-batch no-op returning false. No
     * self-fencing probe is needed (BandIndex's extra mechanism):
     * this sink makes no decisions from index state — a replay only
     * rewrites missing tables, so every crash point converges to the
@@ -378,8 +386,7 @@ object LexIndex {
     * drives. */
   def maintainBatch(spark: SparkSession, dir: String, prefix: String,
       newDocs: DataFrame, batchId: Long): Boolean =
-    IndexCore.maintainOnce(spark, "maintainBatch", prefix, statsTable(prefix),
-        ledgered = true, batchId) { landed =>
+    IndexCore.maintainOnce(spark, "maintainBatch", tables(prefix), batchId) { landed =>
       // pinned for the same reason as writeBatch: the three writers
       // (plus the impact rank's boundary sampler) would otherwise
       // re-tokenize the batch once each
@@ -388,33 +395,28 @@ object LexIndex {
         writePostings(tok, path = "", prefix, batchId, firstWrite = false)
       if (!landed(docstatsTable(prefix)))
         writeDocstats(tok, path = "", prefix, batchId, firstWrite = false)
-      writeStats(tok, path = "", prefix, batchId, firstWrite = false)
+      if (!landed(statsTable(prefix)))
+        writeStats(tok, path = "", prefix, batchId, firstWrite = false)
     }.isDefined
 
-  /** Current tombstones as (retired_id, dl), or None. dl was recorded
-    * at retire time ([[retire]]), so the probe's stats correction is
-    * an aggregate over this O(retired) frame. */
-  private def tombstones(spark: SparkSession, prefix: String): Option[DataFrame] = {
-    val t = IndexCore.tombstonesTable(prefix)
-    if (!spark.catalog.tableExists(t)) None
-    else { spark.catalog.refreshTable(t); Some(spark.table(t)) }
-  }
+  /** The index's state as of its newest commit ([[IndexCore.state]]). */
+  private def state(spark: SparkSession, prefix: String): IndexCore.State =
+    IndexCore.state(spark, postingsTable(prefix))
 
   /** The postings table as EVERY reader and full rewrite must see it:
-    * refreshed (cross-session writers), with the merge log's row
-    * visibility applied ([[IndexCore.visibleUnder]] — folded segments
-    * dead, committed merge outputs live, uncommitted outputs
-    * invisible). One choke point so a fold can never double-serve or
-    * half-serve a segment, and a full rewrite can never resurrect
-    * folded rows. The predicate is literal comparisons on the stamp
-    * column — pushed and footer-pruned like every other fence. */
-  private def residentPostings(spark: SparkSession, prefix: String): DataFrame = {
+    * refreshed (cross-session writers), with the fold visibility of
+    * `st` applied ([[IndexCore.visibleUnder]] — folded segments dead,
+    * committed merge outputs live, uncommitted outputs invisible). One
+    * choke point so a fold can never double-serve or half-serve a
+    * segment, and a full rewrite can never resurrect folded rows. The
+    * predicate is literal comparisons on the stamp column — pushed and
+    * footer-pruned like every other fence. It applies even with no
+    * fold: a fold that crashed before its commit leaves reserved-stamp
+    * rows on disk that must stay invisible. */
+  private def residentPostings(spark: SparkSession, prefix: String,
+      st: IndexCore.State): DataFrame = {
     spark.catalog.refreshTable(postingsTable(prefix))
-    val log = IndexCore.readMergeLog(spark, prefix)
-    // the filter applies even with an EMPTY log: a fold that crashed
-    // before its first commit leaves reserved-stamp rows on disk with
-    // no log table at all — they must stay invisible
-    spark.table(postingsTable(prefix)).filter(IndexCore.visibleUnder(log))
+    spark.table(postingsTable(prefix)).filter(IndexCore.visibleUnder(st.log(prefix)))
   }
 
   /** Retire documents (right-to-be-forgotten): record (doc_id, dl)
@@ -439,22 +441,19 @@ object LexIndex {
     * tombstone ids alone, but exact df is not. */
   def retire(spark: SparkSession, prefix: String, docIds: DataFrame,
       corpus: Option[DataFrame] = None): Unit = {
+    val st = state(spark, prefix)
     val ids = broadcast(docIds
       .select(col(docIds.columns.head).cast("long").as("rid")))
     // cross-session-writer safety: the norms lookup must see every
     // appended file, not this session's cache
     spark.catalog.refreshTable(docstatsTable(prefix))
     val norms = spark.table(docstatsTable(prefix))
-    var expired = norms.join(ids, norms("doc_id") === col("rid"))
-      .select(col("doc_id").as("retired_id"), col("dl"))
-    tombstones(spark, prefix).foreach { ts =>
-      expired = expired.join(broadcast(ts.select(col("retired_id").as("already"))),
-        col("retired_id") === col("already"), "left_anti")
-    }
-    // pin the newly-expired set ONCE: it feeds two table writes, and
-    // the second must not re-derive it after the first mutated state
-    val exp = expired.localCheckpoint()
-    corpus.foreach { docs =>
+    val fresh = norms.join(ids, norms("doc_id") === col("rid"))
+      .select(col("doc_id"), col("dl")).collect()
+      .collect { case r if !st.retired.contains(r.getLong(0)) =>
+        r.getLong(0) -> Option.unless(r.isNullAt(1))(r.getLong(1))
+      }.toMap
+    for (docs <- corpus; exp <- IndexCore.retiredFrame(spark, fresh)) {
       val retiredDocs = docs.join(exp.select(col("retired_id").as("doc_id")), "doc_id")
       val pairs = tokenized(retiredDocs)
         .select(col("doc_id").as("retired_id"),
@@ -463,8 +462,8 @@ object LexIndex {
       IndexCore.appendSide(spark, dfcorrTable(prefix), postingsTable(prefix),
         "dfcorr", pairs.coalesce(1))
     }
-    IndexCore.appendSide(spark, IndexCore.tombstonesTable(prefix), postingsTable(prefix),
-      "tombstones", exp.coalesce(1))
+    IndexCore.commit(spark, postingsTable(prefix), "retire", BaseBatch, Nil)(s =>
+      s.copy(retired = s.retired ++ fresh))
   }
 
   def dfcorrTable(prefix: String): String = s"${prefix}_dfcorr"
@@ -501,123 +500,100 @@ object LexIndex {
 
   // ------------------------------------------------------------------
   // Needs-reindex fence (round-17 ADVICE): compact() physically purges
-  // tombstoned postings and clears the tombstone+dfcorr tables, but
-  // does NOT refresh stored imp_rank/df — after that state the capped
-  // lanes have neither valid metadata nor the side tables to correct
-  // it, so they must fail fast until a metadata-refreshing rewrite
-  // (reindexImpact / mergeReindex) runs. The fence is a marker file in
-  // the index root: durable, cross-session, written BEFORE the purge
-  // (a crash between purge and marker would otherwise leave exactly
-  // the silent overcount the fence exists to prevent).
+  // tombstoned postings and clears the tombstones and dfcorr, but does
+  // NOT refresh stored imp_rank/df — after that state the capped lanes
+  // have neither valid metadata nor the side tables to correct it, so
+  // they must fail fast until a metadata-refreshing rewrite
+  // (reindexImpact / mergeReindex) runs. The fence is the `reindex`
+  // flag of the index's commit log, set by the same commit that
+  // publishes the purge, so no crash point leaves the silent overcount
+  // the fence exists to prevent.
   // ------------------------------------------------------------------
 
-  private def markerPath(spark: SparkSession, prefix: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      IndexCore.indexRootOf(spark, postingsTable(prefix)).stripPrefix("file:"),
-      "_NEEDS_REINDEX")
-
-  private def setNeedsReindex(spark: SparkSession, prefix: String): Unit = {
-    val p = markerPath(spark, prefix)
-    if (!java.nio.file.Files.exists(p)) { java.nio.file.Files.createFile(p); () }
-  }
-
-  private def clearNeedsReindex(spark: SparkSession, prefix: String): Unit = {
-    java.nio.file.Files.deleteIfExists(markerPath(spark, prefix)); ()
-  }
-
-  private def requireCappedServable(spark: SparkSession, prefix: String,
+  private def requireCappedServable(st: IndexCore.State, prefix: String,
       caller: String): Unit =
-    require(!java.nio.file.Files.exists(markerPath(spark, prefix)),
+    require(!st.reindex,
       s"$caller($prefix): a compaction purged tombstoned postings without " +
         "refreshing imp_rank/df (the _NEEDS_REINDEX fence) — stored ranks " +
         "have holes and df overcounts; run reindexImpact or mergeReindex, " +
         "or serve through the exact probe")
 
   /** Compact both bucketed tables (one file per bucket, per-bucket
-    * local rewrite — [[IndexCore.compactTable]]'s plan), physically
-    * purging pending tombstones, then re-base the stats table to ONE
-    * row recomputed from the surviving norms and clear the
-    * tombstones. Probe decisions are unchanged — the masks were
-    * already hiding exactly the purged rows. */
+    * local rewrite — [[IndexCore.compacted]]'s plan), physically
+    * purging pending tombstones, and re-base the stats table to ONE
+    * row recomputed from the surviving norms — all three published by
+    * ONE commit that also clears the tombstones and raises the
+    * needs-reindex flag when it purged. Probe decisions are unchanged
+    * — the masks were already hiding exactly the purged rows. The
+    * fold log is KEPT: the rewrite preserves row stamps, so committed
+    * merge-output rows (reserved stamps) survive it and still need the
+    * log to be visible — only the re-stamping rewrites (reindexImpact
+    * / mergeReindex) clear it. */
   def compact(spark: SparkSession, prefix: String): Unit = {
-    IndexCore.requireLedgered(spark, prefix, docstatsTable(prefix), "compact")
-    val tomb = tombstones(spark, prefix).map(_.select("retired_id"))
-    val purging = tomb.exists(ts => !ts.isEmpty)
-    // A purge without a metadata refresh leaves stored imp_rank with
-    // holes and df overcounting, with the side tables that could
-    // correct them cleared below — fence the capped lanes FIRST
-    // (marker before purge, so no crash point leaves the
-    // silent-overcount state), cleared by reindexImpact /
-    // mergeReindex.
-    if (purging) setNeedsReindex(spark, prefix)
+    val st = IndexCore.requireLedgered(spark, docstatsTable(prefix), "compact")
+    val tomb = IndexCore.retiredFrame(spark, st.retired)
     // physically drop folded segments' dead files before the raw
-    // rewrite below reads the table — compactTable reads every row on
-    // disk, and resurrected fold inputs would double-count
-    IndexCore.gcDeadFiles(spark, postingsTable(prefix),
-      IndexCore.readMergeLog(spark, prefix))
-    IndexCore.compactTable(spark, Postings, prefix, tomb, "doc_id")
-    IndexCore.compactTable(spark, Docstats, prefix, tomb, "doc_id")
-    rebaseStats(spark, prefix, "compact")
-    // the merge log is KEPT: compactTable preserves row stamps, so
-    // committed merge-output rows (reserved stamps) survive the
-    // rewrite and still need the log to be visible — only the
-    // re-stamping rewrites (reindexImpact / mergeReindex) clear it
-  }
-
-  /** Re-base the stats table to ONE BaseBatch row recomputed from the
-    * surviving norms, then clear the side tables the purge made
-    * obsolete. The re-base is an EXTERNAL-location swap: a bare
-    * saveAsTable(Overwrite) would silently re-create the table as
-    * MANAGED under the persistent spark-warehouse — files that
-    * outlive the JVM and collide with the next session's prefix. */
-  private def rebaseStats(spark: SparkSession, prefix: String, tag: String): Unit = {
-    val st = spark.table(docstatsTable(prefix))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .select(lit(BaseBatch).as("ingest_batch"), col("n_docs"), col("sum_dl"))
-      .coalesce(1)
-    IndexCore.swapTable(spark, statsTable(prefix), tag) { (tmpT, loc) =>
-      st.write.option("path", loc).saveAsTable(tmpT)
-    }
-    IndexCore.clearTombstones(spark, prefix)
+    // rewrite below reads the table — it reads every row on disk, and
+    // resurrected fold inputs would double-count
+    IndexCore.gcDeadFiles(spark, postingsTable(prefix), st.log(prefix))
+    IndexCore.rewrite(spark, postingsTable(prefix), "compact", Seq(
+      IndexCore.compacted(spark, Postings, prefix, tomb, "doc_id"),
+      IndexCore.compacted(spark, Docstats, prefix, tomb, "doc_id"),
+      rebasedStats(spark, prefix, tomb)))(s => s.copy(retired = s.retired -- st.retired.keys,
+      reindex = s.reindex || st.retired.nonEmpty))
     IndexCore.dropWithFiles(spark, dfcorrTable(prefix))
   }
 
-  /** Rewrite the postings with impact metadata recomputed over
+  /** The stats table re-based to ONE BaseBatch row recomputed from the
+    * norms that survive `tomb`, as a [[IndexCore.rewrite]] entry (an
+    * EXTERNAL location: a bare saveAsTable(Overwrite) would silently
+    * re-create the table as MANAGED under the persistent
+    * spark-warehouse — files that outlive the JVM and collide with the
+    * next session's prefix). */
+  private def rebasedStats(spark: SparkSession, prefix: String,
+      tomb: Option[DataFrame]): (String, (String, String) => Unit) = {
+    val norms = spark.table(docstatsTable(prefix))
+    val st = tomb.fold(norms)(ts =>
+        norms.join(ts, norms("doc_id") === ts("retired_id"), "left_anti"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+      .select(lit(BaseBatch).as("ingest_batch"), col("n_docs"), col("sum_dl"))
+      .coalesce(1)
+    statsTable(prefix) -> ((tmpT, loc) =>
+      st.write.option("path", loc).mode(SaveMode.Overwrite).saveAsTable(tmpT))
+  }
+
+  /** The postings rewritten with impact metadata recomputed over
     * `resident` and every row re-stamped [[BaseBatch]], bucket-aligned
-    * (one file per bucket) through the external-location swap. */
-  private def restampPostings(spark: SparkSession, prefix: String, tag: String,
-      resident: DataFrame): Unit = {
+    * (one file per bucket), as a [[IndexCore.rewrite]] entry. */
+  private def restamped(spark: SparkSession, prefix: String,
+      resident: DataFrame): (String, (String, String) => Unit) = {
     val t = postingsTable(prefix)
     val b = IndexCore.bucketsOf(spark, t)
     val fresh = withImpactMeta(resident).withColumn("ingest_batch", lit(BaseBatch))
-    IndexCore.swapTable(spark, t, tag) { (tmpT, loc) =>
-      IndexCore.writeBucketed(fresh, Postings, tmpT, Some(loc), b)
-    }
+    t -> ((tmpT, loc) => IndexCore.writeBucketed(fresh, Postings, tmpT, Some(loc), b))
   }
 
-  /** After a re-stamping rewrite: the stamps the merge log names no
+  /** After a re-stamping rewrite: the stamps the fold log names no
     * longer exist, and the metadata the needs-reindex fence guarded
     * is fresh again. */
-  private def restamped(spark: SparkSession, prefix: String): Unit = {
-    IndexCore.clearMergeLog(spark, prefix)
-    clearNeedsReindex(spark, prefix)
-  }
+  private def restampedState(prefix: String)(s: IndexCore.State): IndexCore.State =
+    s.copy(folds = s.folds - prefix, reindex = false)
 
   /** Corpus stats as a 1-row frame (n_docs, sum_dl): the sum of the
     * batch-count-sized stats table, minus the tombstoned docs'
     * contribution (count and Σdl both recorded at retire time —
     * nothing here scales with the corpus). */
-  private def statsFrame(spark: SparkSession, prefix: String): DataFrame = {
+  private def statsFrame(spark: SparkSession, prefix: String,
+      st: IndexCore.State): DataFrame = {
     spark.catalog.refreshTable(statsTable(prefix))
-    // same merge-log visibility as the postings (a fold replaces its
-    // folded batches' stats rows with one summed row under the merge
-    // stamp — counting both sides would double the corpus; an
-    // uncommitted fold's row must stay invisible even with no log)
-    val log = IndexCore.readMergeLog(spark, prefix)
+    // same fold visibility as the postings (a fold replaces its folded
+    // batches' stats rows with one summed row under the merge stamp —
+    // counting both sides would double the corpus; an uncommitted
+    // fold's row must stay invisible)
     val base = spark.table(statsTable(prefix))
-      .filter(IndexCore.visibleUnder(log))
+      .filter(IndexCore.visibleUnder(st.log(prefix)))
       .agg(sum(col("n_docs")).as("nd0"), sum(col("sum_dl")).as("sd0"))
-    tombstones(spark, prefix) match {
+    IndexCore.retiredFrame(spark, st.retired) match {
       case None => base.select(col("nd0").as("n_docs"), col("sd0").as("sum_dl"))
       case Some(ts) =>
         val corr = ts.agg(count(lit(1)).as("ndr"),
@@ -670,16 +646,17 @@ object LexIndex {
     // capped lane; the EXACT probe recomputes df from the matched
     // postings (correct under appends and tombstones) — drop the
     // stored columns so they can't shadow the live aggregate
+    val st = state(spark, prefix)
     val matchedAll = termPruned(
-      residentPostings(spark, prefix).drop("imp_rank", "df"), qt, fixedTerms)
-    val matched = tombstones(spark, prefix).fold(matchedAll)(ts =>
+      residentPostings(spark, prefix, st).drop("imp_rank", "df"), qt, fixedTerms)
+    val matched = IndexCore.retiredFrame(spark, st.retired).fold(matchedAll)(ts =>
       matchedAll.join(broadcast(ts.select("retired_id")),
         matchedAll("doc_id") === col("retired_id"), "left_anti"))
     val dfc = matched.groupBy("term").agg(count(lit(1)).as("df"))
     scoreRankTopK(matched
       .join(broadcast(dfc), Seq("term"))
       .join(broadcast(qt), Seq("term"))
-      .crossJoin(broadcast(statsFrame(spark, prefix))))
+      .crossJoin(broadcast(statsFrame(spark, prefix, st))))
   }
 
   /** Restrict a postings frame to the workload's term vocabulary.
@@ -837,7 +814,8 @@ object LexIndex {
 
   private def segmentProbeFrame(spark: SparkSession, qt: DataFrame,
       prefix: String, fixedTerms: Option[Seq[String]]): DataFrame = {
-    requireCappedServable(spark, prefix, "segmentProbe")
+    val st = state(spark, prefix)
+    requireCappedServable(st, prefix, "segmentProbe")
     // Pending tombstones no longer demote this lane (round 17, VERDICT
     // item 3 — the Lucene live-docs read path): OVER-FETCH each
     // segment's cap by |tombstones| (at most nT fetched rows per term
@@ -846,9 +824,9 @@ object LexIndex {
     // anti-join, and let the existing re-cap window restore the exact
     // surviving top-C. The scan keeps a pushed literal
     // `imp_rank <= C + nT` — same footer pruning, slightly wider.
-    val tomb = tombstones(spark, prefix)
-    val nT = tomb.map(_.count()).getOrElse(0L)
-    val capped0 = termPruned(residentPostings(spark, prefix), qt, fixedTerms)
+    val tomb = IndexCore.retiredFrame(spark, st.retired)
+    val nT = st.retired.size.toLong
+    val capped0 = termPruned(residentPostings(spark, prefix, st), qt, fixedTerms)
       .filter(col("imp_rank") <= lit(ImpactCap + nT))
     // exact global df from the PRE-MASK fetch: each (term, batch)
     // contributes its stored df once (constant within the pair; its
@@ -899,21 +877,22 @@ object LexIndex {
     scoreRankTopK(recapped
       .join(broadcast(dfc), Seq("term"))
       .join(broadcast(qt), Seq("term"))
-      .crossJoin(broadcast(statsFrame(spark, prefix))))
+      .crossJoin(broadcast(statsFrame(spark, prefix, st))))
   }
 
   private def impactProbeFrame(spark: SparkSession, qt: DataFrame,
       prefix: String, fixedTerms: Option[Seq[String]]): DataFrame = {
-    requireCappedServable(spark, prefix, "impactProbe")
-    tombstones(spark, prefix) match {
+    val st = state(spark, prefix)
+    requireCappedServable(st, prefix, "impactProbe")
+    IndexCore.retiredFrame(spark, st.retired) match {
       case None =>
         // tombstone-free fast path: the stored rank IS the cap, no
         // extra window on the serving plan
-        val capped = termPruned(residentPostings(spark, prefix), qt, fixedTerms)
+        val capped = termPruned(residentPostings(spark, prefix, st), qt, fixedTerms)
           .filter(col("imp_rank") <= ImpactCap)
         scoreRankTopK(capped
           .join(broadcast(qt), Seq("term"))
-          .crossJoin(broadcast(statsFrame(spark, prefix))))
+          .crossJoin(broadcast(statsFrame(spark, prefix, st))))
       case Some(ts) =>
         // Pending tombstones (round 17, VERDICT item 3): over-fetch
         // the stored cap by |tombstones| (at most nT fetched rows per
@@ -926,8 +905,8 @@ object LexIndex {
         // the same per-term containment correction the segment lane
         // uses; on the single-segment index the catalog entry serves,
         // stored df is global, so the corrected df is the survivors'.
-        val nT = ts.count()
-        val capped0 = termPruned(residentPostings(spark, prefix), qt, fixedTerms)
+        val nT = st.retired.size.toLong
+        val capped0 = termPruned(residentPostings(spark, prefix, st), qt, fixedTerms)
           .filter(col("imp_rank") <= lit(ImpactCap + nT))
         val masked = capped0.join(broadcast(ts.select("retired_id")),
           capped0("doc_id") === col("retired_id"), "left_anti")
@@ -943,7 +922,7 @@ object LexIndex {
           .drop("corr")
         scoreRankTopK(corrected
           .join(broadcast(qt), Seq("term"))
-          .crossJoin(broadcast(statsFrame(spark, prefix))))
+          .crossJoin(broadcast(statsFrame(spark, prefix, st))))
     }
   }
 
@@ -957,16 +936,16 @@ object LexIndex {
     * two-phase ranking ([[withImpactMeta]]: range-partitioned local
     * ranks + segment offsets, so a zipf-heavy term can never
     * serialize the rebuild on one task) — re-written bucketed
-    * (term, imp_rank) via the external-location swap (a bare
-    * managed overwrite would leak warehouse files across JVMs — the
-    * tx18 lesson). The production analog is the merge/optimize pass
+    * (term, imp_rank) at a fresh external location ([[IndexCore.rewrite]];
+    * a bare managed overwrite would leak warehouse files across JVMs —
+    * the tx18 lesson). The production analog is the merge/optimize pass
     * every impact-ordered index runs (Anh & Moffat; Lucene's
     * forceMerge). */
   def reindexImpact(spark: SparkSession, prefix: String): Unit = {
-    IndexCore.requireLedgered(spark, prefix, docstatsTable(prefix), "reindexImpact")
-    restampPostings(spark, prefix, "reindex",
-      residentPostings(spark, prefix).select("term", "doc_id", "tf", "dl"))
-    restamped(spark, prefix)
+    val st = IndexCore.requireLedgered(spark, docstatsTable(prefix), "reindexImpact")
+    IndexCore.rewrite(spark, postingsTable(prefix), "reindex", Seq(restamped(spark, prefix,
+      residentPostings(spark, prefix, st).select("term", "doc_id", "tf", "dl"))))(
+      restampedState(prefix))
   }
 
   /** tx21: the dq08→reindex maintenance cycle made observable —
@@ -986,7 +965,7 @@ object LexIndex {
     * maintenance cycle — [[VecIndex.maintainedCycle]]'s analog, so a
     * restart after new arrivals can never serve a stale lexical
     * index. Fresh index on 3/4 of the corpus; the arriving quarter
-    * lands through the batch-stamp-guarded [[maintainBatch]]; the
+    * lands through the log-fenced [[maintainBatch]]; the
     * batch is REPLAYED (commit marker lost) and must be a
     * whole-batch no-op (asserted in-cycle); a compaction folds the
     * appended files back to one per bucket (the periodic compact a
@@ -1001,7 +980,7 @@ object LexIndex {
         if (!maintainBatch(spark, dir, c.prefix, docs.filter(isNewDoc), 0L))
           sys.error("st20: fresh index claims batch 0 already maintained")
         if (maintainBatch(spark, dir, c.prefix, docs.filter(isNewDoc), 0L))
-          sys.error("st20: replayed batch 0 was not stamp-skipped")
+          sys.error("st20: replayed batch 0 was not log-skipped")
       }
       // the PERIODIC verb is plain compact: this cycle serves the EXACT
       // probe, which ignores impact metadata, so the fused mergeReindex
@@ -1053,24 +1032,25 @@ object LexIndex {
     * imp_rank/df over the resident rows) in ONE postings rewrite,
     * instead of compact-then-reindex paying the corpus-sized write
     * twice. The docstats fold and the stats re-base ride along as
-    * [[compact]] does them; tombstones clear once nothing masked
-    * remains. After this pass the naive [[impactProbe]] is exact
+    * [[compact]] does them, and one commit publishes all three tables
+    * and clears the tombstones. After this pass the naive [[impactProbe]] is exact
     * again (single segment, global metadata), files are one per
     * bucket, and footer (term, imp_rank) bounds are fresh — the
     * state every serving path likes best. Skew posture is
     * [[withImpactMeta]]'s; the write is the same bucketed
-    * (term, imp_rank) layout via the external-location swap. */
+    * (term, imp_rank) layout at a fresh external location. */
   def mergeReindex(spark: SparkSession, prefix: String): Unit = {
-    IndexCore.requireLedgered(spark, prefix, docstatsTable(prefix), "mergeReindex")
-    val tomb = tombstones(spark, prefix).map(_.select("retired_id"))
-    val residentAll = residentPostings(spark, prefix)
+    val st = IndexCore.requireLedgered(spark, docstatsTable(prefix), "mergeReindex")
+    val tomb = IndexCore.retiredFrame(spark, st.retired)
+    val residentAll = residentPostings(spark, prefix, st)
       .select("term", "doc_id", "tf", "dl")
-    restampPostings(spark, prefix, "merge", tomb.fold(residentAll)(ts =>
-      residentAll.join(broadcast(ts),
-        residentAll("doc_id") === col("retired_id"), "left_anti")))
-    IndexCore.compactTable(spark, Docstats, prefix, tomb, "doc_id")
-    rebaseStats(spark, prefix, "merge")
-    restamped(spark, prefix)
+    IndexCore.rewrite(spark, postingsTable(prefix), "merge", Seq(
+      restamped(spark, prefix, tomb.fold(residentAll)(ts =>
+        residentAll.join(ts, residentAll("doc_id") === col("retired_id"), "left_anti"))),
+      IndexCore.compacted(spark, Docstats, prefix, tomb, "doc_id"),
+      rebasedStats(spark, prefix, tomb)))(s =>
+      restampedState(prefix)(s.copy(retired = s.retired -- st.retired.keys)))
+    IndexCore.dropWithFiles(spark, dfcorrTable(prefix))
   }
 
   /** SIZE-TIERED segment merge (round 17, VERDICT item 2) — the
@@ -1090,7 +1070,7 @@ object LexIndex {
     *     merged segment's impact metadata ([[withImpactMeta]] — the
     *     merged segment is ONE proper segment with its own local
     *     ranks and df), and appends it under a reserved stamp;
-    *   - the COMMIT is one atomic merge-log append
+    *   - the COMMIT is one log commit of the fold's stamps
     *     ([[IndexCore.commitFold]]): before it, the output rows are
     *     invisible by construction (reserved stamp not in the log)
     *     and the inputs still serve; after it, the inputs are dead
@@ -1112,7 +1092,7 @@ object LexIndex {
     * Returns true when a fold ran (≥ 2 sub-tier segments existed). */
   def tieredMerge(spark: SparkSession, prefix: String,
       maxTierRows: Long = Long.MaxValue): Boolean = {
-    IndexCore.requireLedgered(spark, prefix, docstatsTable(prefix), "tieredMerge")
+    IndexCore.requireLedgered(spark, docstatsTable(prefix), "tieredMerge")
     IndexCore.tieredMerge(spark, prefix, prefix, Seq(Postings), maxTierRows) {
       (spec, foldIn, fold) =>
         // rank-form choice from MEASURED metadata: the fold's input rows
@@ -1151,8 +1131,7 @@ object LexIndex {
     val fired = appended && {
       val t = postingsTable(prefix)
       spark.catalog.refreshTable(t)
-      val log = IndexCore.readMergeLog(spark, prefix)
-      IndexCore.segmentSizes(spark, t, log).size > maxSegments &&
+      IndexCore.segmentSizes(spark, t, state(spark, prefix).log(prefix)).size > maxSegments &&
         tieredMerge(spark, prefix)
     }
     (appended, fired)
@@ -1255,7 +1234,7 @@ object LexIndex {
           if (!appended) sys.error(s"tx27: fresh batch $r claims already maintained")
           if (fired) fires += 1
           val segs = IndexCore.segmentSizes(spark, postingsTable(c.prefix),
-            IndexCore.readMergeLog(spark, c.prefix)).size
+            state(spark, c.prefix).log(c.prefix)).size
           if (segs > bound + 1)
             sys.error(s"tx27: policy failed to bound segments: $segs > ${bound + 1}")
         }

@@ -1212,9 +1212,9 @@ object Similarity {
 
     // sim30 (round 17) = sim16's growth regime maintained by the
     // BOUNDED size-tiered fold (the third family through IndexCore's
-    // merge log): three stamped micro-batches, one fold, a
-    // replay-after-fold asserted a no-op (the merge-log fence that
-    // keeps stamp-is-the-ledger exactly-once through folds), probe
+    // fold commit): three stamped micro-batches, one fold, a
+    // replay-after-fold asserted a no-op (the log's batch fence keeps
+    // maintenance exactly-once through folds), probe
     // through the visibility filter. Final index = full corpus, so
     // the oracle is sim04's.
     "sim30_vec_tiered_merge" -> ((s, d) =>

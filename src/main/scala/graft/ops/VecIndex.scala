@@ -44,17 +44,17 @@ import IndexCore.BaseBatch
   *     re-assigned) and insert into the bucketed cell table; bucketBy
   *     is stable under append, so the probe's one-scan/pushed-bounds
   *     plan property survives (VecIndexSpec re-asserts it);
-  *   - [[compact]] (sim16): [[IndexCore.compactTable]]'s per-bucket
+  *   - [[compact]] (sim16): [[IndexCore.compacted]]'s per-bucket
   *     local rewrite applied to the cell table (key-agnostic — same
   *     zero-exchange one-file-per-bucket rewrite);
   *   - [[retire]] (sim17): right-to-be-forgotten for embeddings —
   *     the compaction rewrite with a broadcast anti-join on `vec_id`;
   *     post-retire probes behave as if the vectors were never
   *     indexed;
-  *   - [[maintainBatch]] (st10): exactly-once append as a SINGLE
-  *     durable commit — the batch stamp on the appended cell rows is
-  *     the ledger, so a replayed batch (commit marker lost) is a
-  *     whole-batch no-op with no crash window in between.
+  *   - [[maintainBatch]] (st10): exactly-once append fenced by the
+  *     index's commit log — a replayed batch (commit marker lost) is
+  *     a whole-batch no-op, and a replay after a crash before the
+  *     commit skips the cell write that already landed.
   *
   * Cites: reference has no vector ops; extension per SURVEY.md §2
   * ("similarity search — IVF as the scale path").
@@ -70,7 +70,7 @@ object VecIndex {
   private val PqCells = IndexCore.TableSpec("pqcells", "cluster", Seq("cluster"))
   private val Mat = IndexCore.TableSpec("mat", "vec_id", Seq("vec_id"))
   private val Fam = IndexCore.Family("graft_vec", "vec",
-    Seq("cells", "mat", "pqcells", "codebook", "cells_mergelog"))
+    Seq("cells", "mat", "pqcells", "codebook"))
 
   def cellsTable(prefix: String): String = Cells.name(prefix)
 
@@ -107,6 +107,7 @@ object VecIndex {
     IndexCore.writeTable(
       assignCells(e, centroids(spark, dir)).withColumn("ingest_batch", lit(BaseBatch)),
       Cells, prefix, Some((path, buckets)))
+    IndexCore.commitBuild(spark, Seq(cellsTable(prefix)))
   }
 
   // ------------------------------------------------------------------
@@ -128,15 +129,15 @@ object VecIndex {
   // and ADC, and the prefix funnel run through these functions.
   // ------------------------------------------------------------------
 
-  /** The cell table as every lane reads it: merge-log visibility
+  /** The cell table as every lane reads it: fold visibility
     * ([[tieredMerge]]; folded rows still on disk must not serve beside
-    * their merged copy, and the filter applies even with no log,
-    * because a fold that crashed before its first commit leaves
+    * their merged copy, and the filter applies even with no fold,
+    * because a fold that crashed before its commit leaves
     * reserved-stamp rows behind), then the tombstone mask. */
   private def cellFrame(spark: SparkSession, prefix: String): DataFrame = {
     val scope = cellsTable(prefix)
-    masked(spark, prefix, spark.table(scope)
-      .filter(IndexCore.visibleUnder(IndexCore.readMergeLog(spark, scope))))
+    val st = IndexCore.state(spark, scope)
+    masked(spark, st, spark.table(scope).filter(IndexCore.visibleUnder(st.log(scope))))
   }
 
   /** The code-cell table as every PQ lane reads it, under the same
@@ -144,13 +145,13 @@ object VecIndex {
     * retired vec_id leaves both read paths until the next compaction
     * purges it. */
   private def pqCellFrame(spark: SparkSession, prefix: String): DataFrame =
-    masked(spark, prefix, spark.table(pqCellsTable(prefix)))
+    masked(spark, IndexCore.state(spark, pqCellsTable(prefix)), spark.table(pqCellsTable(prefix)))
 
   /** `base` without the tombstoned vec_ids ([[retireTombstone]]), by a
     * broadcast anti-join: the scan keeps its bucketed partitioning. */
-  private def masked(spark: SparkSession, prefix: String,
+  private def masked(spark: SparkSession, st: IndexCore.State,
       base: DataFrame): DataFrame =
-    IndexCore.tombstoneFrame(spark, prefix).fold(base)(ts =>
+    IndexCore.retiredFrame(spark, st.retired).fold(base)(ts =>
       base.join(ts, base("vec_id") === ts("retired_id"), "left_anti"))
 
   /** The catalog's fixed query batch as a (vec_id, embedding[, label])
@@ -405,8 +406,10 @@ object VecIndex {
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val probes = probeCells(queries, "query_id", "qe", centroids(spark, dir),
       Seq(col("query_id"), col("cent_id").as("cluster")))
-    adcTopK(candidates(spark, dir, pqCellFrame(spark, prefix), probes, Unlabeled),
-      queries, spark.table(codebookTable(prefix)), Similarity.KnnK, Seq(col("cluster")))
+    // the cell frame first: resolving the index's state re-points the
+    // codebook too, when a generation swap crashed before its re-point
+    val cand = candidates(spark, dir, pqCellFrame(spark, prefix), probes, Unlabeled)
+    adcTopK(cand, queries, spark.table(codebookTable(prefix)), Similarity.KnnK, Seq(col("cluster")))
   }
 
   /** ADC top-k over candidates carrying (query_id, vec_id, c0..cM-1):
@@ -458,9 +461,9 @@ object VecIndex {
     * candidate, but stateless and bounded by the probed cells. */
   def pqAnnTopK(spark: SparkSession, dir: String, prefix: String,
       queries: DataFrame): DataFrame = {
-    val cb = spark.table(codebookTable(prefix))
     val cand = candidates(spark, dir, pqCellFrame(spark, prefix),
       streamProbeCells(spark, dir, queries, Unlabeled), Unlabeled)
+    val cb = spark.table(codebookTable(prefix)) // after the state resolve, as in pqProbe
     streamTopK((0 until Similarity.PqM).foldLeft(cand) { (df, m) =>
       df.join(broadcast(cb.select(col("code").as(s"k$m"), col("cw").as(s"cw$m"))),
           col(s"c$m") === col(s"k$m"))
@@ -499,38 +502,50 @@ object VecIndex {
   }
 
   /** Compact `spec`'s cell table to one file per bucket
-    * ([[IndexCore.compactTable]]), purging pending tombstones. The
+    * ([[IndexCore.compacted]]), purging pending tombstones. The
     * tombstone set is per-PREFIX: it is cleared only when the sibling
     * cell table does not exist, since that table may still carry
     * masked rows. */
   private def compactCells(spark: SparkSession, prefix: String,
       spec: IndexCore.TableSpec, sibling: IndexCore.TableSpec): Unit = {
-    IndexCore.compactTable(spark, spec, prefix,
-      IndexCore.tombstoneFrame(spark, prefix), "vec_id")
-    if (!spark.catalog.tableExists(sibling.name(prefix)))
-      IndexCore.clearTombstones(spark, prefix)
+    val retired = IndexCore.state(spark, spec.name(prefix)).retired
+    val clear = !spark.catalog.tableExists(sibling.name(prefix))
+    rewriteCells(spark, prefix, spec, "compact", IndexCore.retiredFrame(spark, retired))(st =>
+      if (clear) st.copy(retired = st.retired -- retired.keys) else st)
   }
 
-  /** Exactly-once append, SINGLE-DURABLE-COMMIT form: the batch's cell
-    * rows carry `batchId` as their stamp and a parquet append is one
-    * atomic job commit, so the append IS its own ledger entry — there
-    * is no append→record window ([[IndexCore.maintainOnce]] without a
-    * ledger). The replay fence is the stamp, extended by the merge log
-    * ([[IndexCore.foldedUnder]]): a tiered fold re-stamps a batch's
-    * rows and GC deletes its files. A replayed micro-batch whose
-    * commit marker was lost is a whole-batch no-op returning false. */
+  private def rewriteCells(spark: SparkSession, prefix: String, spec: IndexCore.TableSpec,
+      verb: String, minus: Option[DataFrame])(change: IndexCore.State => IndexCore.State): Unit =
+    IndexCore.rewrite(spark, spec.name(prefix), verb,
+      Seq(IndexCore.compacted(spark, spec, prefix, minus, "vec_id")))(change)
+
+  /** Exactly-once append through the index's commit log
+    * ([[IndexCore.maintainOnce]]): a batch id the log holds is a
+    * whole-batch no-op returning false — a tiered fold re-stamps the
+    * batch's rows and GC deletes its files, but the id stays in the
+    * log. Otherwise the cell rows are appended under `batchId` unless
+    * a crashed attempt's rows already landed, and one commit records
+    * the id. */
   private def maintainCells(spark: SparkSession, dir: String, prefix: String,
       spec: IndexCore.TableSpec, newVecs: DataFrame, batchId: Long,
-      verb: String): Boolean =
-    IndexCore.maintainOnce(spark, verb, prefix, spec.name(prefix),
-      ledgered = false, batchId)(_ => appendCells(spark, dir, spec, newVecs, prefix, batchId))
-      .isDefined
+      verb: String): Boolean = {
+    val t = spec.name(prefix)
+    IndexCore.maintainOnce(spark, verb, Seq(t), batchId)(landed =>
+      if (!landed(t)) appendCells(spark, dir, spec, newVecs, prefix, batchId)).isDefined
+  }
+
+  /** [[appendCells]] committed as an ad-hoc append. */
+  private def appendCommitted(spark: SparkSession, dir: String, spec: IndexCore.TableSpec,
+      newVecs: DataFrame, prefix: String, batchId: Long): Unit = {
+    appendCells(spark, dir, spec, newVecs, prefix, batchId)
+    IndexCore.commitAppend(spark, Seq(spec.name(prefix)), batchId)
+  }
 
   /** Append a NEW embedding batch to the persisted index (ad-hoc
     * appends stamp [[BaseBatch]]; see [[appendCells]]). */
   def append(spark: SparkSession, dir: String, newVecs: DataFrame,
       prefix: String, batchId: Long = BaseBatch): Unit =
-    appendCells(spark, dir, Cells, newVecs, prefix, batchId)
+    appendCommitted(spark, dir, Cells, newVecs, prefix, batchId)
 
   /** Compact the cell table to one file per bucket — probe decisions
     * and the plan property are unchanged; the per-bucket merge reads
@@ -544,16 +559,16 @@ object VecIndex {
     * retired vectors were never indexed. */
   def retire(spark: SparkSession, prefix: String,
       expired: DataFrame): Unit =
-    IndexCore.compactTable(spark, Cells, prefix, Some(expired), "vec_id")
+    rewriteCells(spark, prefix, Cells, "retire", Some(expired))(identity)
 
-  /** O(retired)-cost retention: append the expired vec_ids to the
-    * index's tombstone table. [[probe]] masks them immediately; the
+  /** O(retired)-cost retention: commit the expired vec_ids to the
+    * index's retired set. [[probe]] masks them immediately; the
     * next [[compact]] physically purges them and clears the set.
     * sim20's three-phase oracle pins mask, purge, and their equality
     * to an eager retire. */
   def retireTombstone(spark: SparkSession, prefix: String,
       expired: DataFrame): Unit =
-    IndexCore.recordTombstones(spark, prefix, cellsTable(prefix), expired)
+    IndexCore.recordTombstones(spark, cellsTable(prefix), expired)
 
   /** Exactly-once append of a streaming batch (see [[maintainCells]]). */
   def maintainBatch(spark: SparkSession, dir: String, prefix: String,
@@ -563,7 +578,7 @@ object VecIndex {
   /** SIZE-TIERED segment merge for the cell table
     * ([[IndexCore.tieredMerge]]): fold only the batch-stamped segments
     * at or below `maxTierRows` into one merged segment, base files
-    * byte-untouched. The log is scoped to the CELLS table (code-cell
+    * byte-untouched. The fold is scoped to the CELLS table (code-cell
     * stamps are independent — a shared prefix must not have one
     * table's fold kill the other's stamps), and the fold is purely a
     * layout event: cell rows are row-local, so probe answers are
@@ -632,7 +647,7 @@ object VecIndex {
     * stamp), [[tieredMerge]] folds them into one merged segment (base
     * files byte-untouched, post-fold segment count asserted
     * in-cycle), a REPLAY of a folded batch is asserted a no-op (the
-    * merge-log fence), and the probe serves through the visibility
+    * log fence), and the probe serves through the visibility
     * filter. The final index equals the full corpus, so the entry
     * shares sim04's oracle. */
   def tieredCycle(spark: SparkSession, dir: String, tag: String): DataFrame =
@@ -646,11 +661,11 @@ object VecIndex {
       c.phase("merge") {
         IndexCore.checkedFold(spark, tag, cellsTable(c.prefix), cellsTable(c.prefix))(
           tieredMerge(spark, c.prefix))
-        // the merge-log replay fence: a folded batch's replay must be a
+        // the log's replay fence: a folded batch's replay must be a
         // no-op even though its stamp's files are GC'd
         if (maintainBatch(spark, dir, c.prefix, slice(e, 0), batchId = 0L))
           sys.error(s"$tag: a folded batch replayed as new — the " +
-            "merge-log fence failed and the index double-appended")
+            "log fence failed and the index double-appended")
       }
       c.probe("probe")(probe(spark, dir, c.prefix))
     }
@@ -676,10 +691,10 @@ object VecIndex {
         .orderBy("phase", "query_id", "neighbor_id")
     }
 
-  /** st10: sim15's cycle driven through the batch-stamp-guarded
+  /** st10: sim15's cycle driven through the log-fenced
     * [[maintainBatch]], with the batch REPLAYED in between — the
     * batch analog of a checkpoint restart that lost the commit
-    * marker. The replay must be a stamp-skipped no-op (asserted
+    * marker. The replay must be a log-skipped no-op (asserted
     * here; a double append would duplicate cell members — harmless
     * for THIS aggregate's output, so the real gate is the skip
     * assertion plus StreamingSpec's restart test). Final probe equals
@@ -690,7 +705,7 @@ object VecIndex {
         if (!maintainBatch(spark, dir, c.prefix, e.filter(isNewVec), 0L))
           sys.error("st10: fresh index claims batch 0 already maintained")
         if (maintainBatch(spark, dir, c.prefix, e.filter(isNewVec), 0L))
-          sys.error("st10: replayed batch 0 was not stamp-skipped")
+          sys.error("st10: replayed batch 0 was not log-skipped")
       }
       c.probe("probe")(probe(spark, dir, c.prefix))
     }
@@ -757,6 +772,7 @@ object VecIndex {
       Tables.embeddings(spark, dir).select("vec_id", "embedding"))
     IndexCore.writeTable(pqRows(spark, dir, e, cb).withColumn("ingest_batch", lit(BaseBatch)),
       PqCells, prefix, Some((path, buckets)))
+    IndexCore.commitBuild(spark, Seq(pqCellsTable(prefix), codebookTable(prefix)))
   }
 
   /** Code-cell rows (cluster, vec_id, c0..cM-1) for a (vec_id,
@@ -783,10 +799,10 @@ object VecIndex {
   // monitor over the embedding-norm/cell-occupancy histograms is the
   // trigger signal), the remedy is a NEW GENERATION: pqPersist to a
   // fresh prefix (retrain + re-encode from the raw vectors — one
-  // corpus pass, the same cost as the original build) and swap
-  // serving atomically via the catalog-rename discipline
-  // IndexCore.compactTable already uses. Nothing in the probe path
-  // ever reads two generations at once.
+  // corpus pass, the same cost as the original build) and swap it
+  // into serving with pqSwapGeneration, whose one log commit moves
+  // the code cells and the codebook together. Nothing in the probe
+  // path ever reads two generations at once.
   // ------------------------------------------------------------------
 
   /** Append a NEW embedding batch to the persisted PQ serving index:
@@ -795,7 +811,7 @@ object VecIndex {
     * table ([[appendCells]]). */
   def pqAppend(spark: SparkSession, dir: String, newVecs: DataFrame,
       prefix: String, batchId: Long = BaseBatch): Unit =
-    appendCells(spark, dir, PqCells, newVecs, prefix, batchId)
+    appendCommitted(spark, dir, PqCells, newVecs, prefix, batchId)
 
   /** Compact the code-cell table to one file per bucket (the codebook
     * table, M·K rows, never needs compaction). */
@@ -803,18 +819,27 @@ object VecIndex {
     compactCells(spark, prefix, PqCells, Cells)
 
   /** GENERATION PROMOTION — the codebook-drift remedy's final step
-    * (the codebook-generation contract above): atomically swap serving
-    * from `prefix`'s tables to `newPrefix`'s freshly built generation
-    * (retrained codebook + re-encoded code cells), under the serving
-    * prefix's names, through [[IndexCore.renameSwap]]'s crash-safe
-    * rename-aside discipline. Old-generation files stay on disk under
-    * their original path; the caller's temp-dir lifecycle owns them.
-    * The codebook swaps WITH the cells — serving never sees a
-    * codebook from one generation against codes from another. */
+    * (the codebook-generation contract above): serve `newPrefix`'s
+    * freshly built generation (retrained codebook + re-encoded code
+    * cells) under `prefix`'s names. Both tables are copied beside the
+    * serving ones (the cells bucketed with the serving table's count)
+    * and ONE [[IndexCore.rewrite]] commit moves them together, so
+    * every crash point serves the old generation or the new one, never
+    * a codebook from one against codes from the other. The old
+    * generation's directories go with the rewrite; the new
+    * generation's names are dropped afterwards, and its files stay
+    * with the caller's temp-dir lifecycle. */
   def pqSwapGeneration(spark: SparkSession, prefix: String,
-      newPrefix: String): Unit =
-    Seq(pqCellsTable _, codebookTable _).foreach(f =>
-      IndexCore.renameSwap(spark, f(prefix), f(newPrefix)))
+      newPrefix: String): Unit = {
+    val b = IndexCore.bucketsOf(spark, pqCellsTable(prefix))
+    IndexCore.rewrite(spark, pqCellsTable(prefix), "generation", Seq(
+      pqCellsTable(prefix) -> ((tmpT: String, loc: String) => IndexCore.writeBucketed(
+        spark.table(pqCellsTable(newPrefix)), PqCells, tmpT, Some(loc), b)),
+      codebookTable(prefix) -> ((tmpT: String, loc: String) =>
+        spark.table(codebookTable(newPrefix)).write.option("path", loc)
+          .mode(SaveMode.Overwrite).saveAsTable(tmpT))))(identity)
+    Seq(pqCellsTable _, codebookTable _).foreach(f => spark.sql(s"DROP TABLE ${f(newPrefix)}"))
+  }
 
   /** O(retired) retention for the SERVING index — [[retireTombstone]]
     * anchored at the code-cell table (a PQ-only generation has no raw
@@ -822,7 +847,7 @@ object VecIndex {
     * [[pqProbe]] immediately; purged by the next [[pqCompact]]. */
   def pqRetireTombstone(spark: SparkSession, prefix: String,
       expired: DataFrame): Unit =
-    IndexCore.recordTombstones(spark, prefix, pqCellsTable(prefix), expired)
+    IndexCore.recordTombstones(spark, pqCellsTable(prefix), expired)
 
   /** RETENTION for the serving index — remove a bounded vec_id set
     * from the code cells in place (broadcast anti-join inside the
@@ -830,7 +855,7 @@ object VecIndex {
     * no per-vector data). */
   def pqRetire(spark: SparkSession, prefix: String,
       expired: DataFrame): Unit =
-    IndexCore.compactTable(spark, PqCells, prefix, Some(expired), "vec_id")
+    rewriteCells(spark, prefix, PqCells, "retire", Some(expired))(identity)
 
   /** Exactly-once append for the serving index — the same
     * single-durable-commit design as [[maintainBatch]]. */
@@ -877,10 +902,10 @@ object VecIndex {
         .orderBy("phase", "query_id", "neighbor_id")
     }
 
-  /** st13: sim19's append driven through the batch-stamp-guarded
+  /** st13: sim19's append driven through the log-fenced
     * [[pqMaintainBatch]], with the batch REPLAYED in between — the
     * batch analog of a checkpoint restart that lost the commit
-    * marker. The replay must be a stamp-skipped no-op (asserted
+    * marker. The replay must be a log-skipped no-op (asserted
     * here); the final serve equals sim18's full build, same composed
     * oracle. StreamingSpec drives the same maintenance through a real
     * readStream foreachBatch with a checkpoint restart. */
@@ -890,7 +915,7 @@ object VecIndex {
         if (!pqMaintainBatch(spark, dir, c.prefix, e.filter(isNewVec), 0L))
           sys.error("st13: fresh index claims batch 0 already maintained")
         if (pqMaintainBatch(spark, dir, c.prefix, e.filter(isNewVec), 0L))
-          sys.error("st13: replayed batch 0 was not stamp-skipped")
+          sys.error("st13: replayed batch 0 was not log-skipped")
       }
       c.probe("probe")(pqProbe(spark, dir, c.prefix))
     }
@@ -995,12 +1020,14 @@ object VecIndex {
   def matTable(prefix: String): String = Mat.name(prefix)
 
   def persistMat(spark: SparkSession, dir: String, path: String,
-      prefix: String, buckets: Int = Buckets): Unit =
+      prefix: String, buckets: Int = Buckets): Unit = {
     IndexCore.writeTable(Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         expr(s"slice(embedding, 1, ${Similarity.MatryoshkaPrefix})").as("pfx"),
         col("embedding"))
       .withColumn("ingest_batch", lit(BaseBatch)), Mat, prefix, Some((path, buckets)))
+    IndexCore.commitBuild(spark, Seq(matTable(prefix)))
+  }
 
   /** Matryoshka serving against the persisted-prefix layout: the
     * candidate pass scans ONLY (vec_id, pfx) — Round15OpsSpec pins

@@ -734,10 +734,10 @@ object Streams {
     "st07_stream_index_maintain" -> ((s, d) =>
       graft.ops.BandIndex.sequencedCycle(s, d, "st07")),
 
-    // st07's cycle driven through the ledger-guarded maintainBatch
+    // st07's cycle driven through the log-fenced maintainBatch
     // sink, with day 0 REPLAYED in between — the batch analog of a
-    // checkpoint restart that lost day 0's commit marker. The ledger
-    // (stored WITH the index) turns the replay into a whole-batch
+    // checkpoint restart that lost day 0's commit marker. The index's
+    // commit log (stored WITH the index) turns the replay into a whole-batch
     // no-op; a second mutation would flip every day-0 novel to
     // dup_of-itself on day 1, which the shared two-phase oracle
     // would catch. StreamingSpec additionally proves the replay path
@@ -747,7 +747,7 @@ object Streams {
 
     // The exactly-once design's WORST crash window driven end to end
     // (round 11): day 0's first attempt commits its band rows and
-    // then "crashes" before the signature rows and the ledger. The
+    // then "crashes" before the signature rows and the log commit. The
     // replay must re-probe behind the self-excluding batch fence
     // (bit-identical decisions to the crashed attempt — asserted
     // in-cycle), complete only the missing table (no duplicate band
@@ -773,7 +773,7 @@ object Streams {
     // STREAMING MAINTENANCE for the vector index (round-11; VERDICT
     // r10 item 6) — st08's exactly-once discipline composed with
     // VecIndex.append: a fresh index on 3/4 of the corpus takes a
-    // new-embeddings micro-batch through the ledger-guarded
+    // new-embeddings micro-batch through the log-fenced
     // maintainBatch, the batch is REPLAYED (commit marker lost) and
     // must be a whole-batch no-op, then the serving probe runs
     // against the maintained index. Final decisions are DEFINED
@@ -798,7 +798,7 @@ object Streams {
     // STREAMING MAINTENANCE for the PQ SERVING index (round 12 —
     // st10's discipline one level up): a fresh generation on 3/4 of
     // the corpus takes a new-embeddings micro-batch through the
-    // batch-stamp-guarded pqMaintainBatch (encoding against the
+    // log-fenced pqMaintainBatch (encoding against the
     // generation's PERSISTED codebook), the batch is REPLAYED
     // (commit marker lost) and must be a whole-batch no-op, then the
     // ADC serve runs against the maintained code cells. Final
@@ -878,8 +878,8 @@ object Streams {
     // maintenance since round 11, but until now a restart after new
     // document arrivals would serve a STALE lexical postings index.
     // A fresh index on 3/4 of the corpus takes the arriving quarter
-    // through the batch-stamp-guarded LexIndex.maintainBatch (stats
-    // row written LAST certifies the batch; per-table idempotence
+    // through the log-fenced LexIndex.maintainBatch (the log commit
+    // made LAST certifies the batch; per-table idempotence
     // completes exactly what a crash left unwritten), the batch is
     // REPLAYED (commit marker lost) and must be a whole-batch no-op,
     // a compaction folds the appended files to one per bucket, then
@@ -915,7 +915,7 @@ object Streams {
     // changed the dataflow's semantics.
     ("st06_stream_index_probe" -> oracleBase("st05_stream_neardup")) +
     ("st07_stream_index_maintain" -> st07OracleSql) +
-    // st08 = st07's decisions, with a ledger-skipped replay in the
+    // st08 = st07's decisions, with a log-skipped replay in the
     // middle; DEFINED identical, so the oracle is the same SQL — a
     // divergence means the replay mutated the index after all.
     ("st08_stream_exactly_once" -> st07OracleSql) +
@@ -929,7 +929,7 @@ object Streams {
     // equal the batch IVF ANN row for row.
     ("st09_stream_ann_probe" -> st09OracleSql) +
     // st10 = sim04's decisions from a maintained (build-on-3/4 →
-    // ledger-guarded append → replay-skipped) index; DEFINED
+    // log-fenced append → replay-skipped) index; DEFINED
     // identical to the full build, so the oracle is sim04's — a
     // divergence means the maintenance mutated the decisions.
     ("st10_stream_ann_maintain" -> graft.ops.Similarity.oracle("sim04_ivf_ann")) +
@@ -937,12 +937,12 @@ object Streams {
     // st09 wrapper shape, adc_dist instead of cosine).
     ("st12_stream_pq_serving" -> st12OracleSql) +
     // st13 = sim18's decisions from a maintained (build-on-3/4 →
-    // stamp-guarded append → replay-skipped) generation; DEFINED
+    // log-fenced append → replay-skipped) generation; DEFINED
     // identical to the full build, so the oracle is sim18's — a
     // divergence means maintenance re-encoded or mutated the cells.
     ("st13_stream_pq_maintain" -> graft.ops.Similarity.oracle("sim18_ivfpq_probe")) +
     // st20 = tx15's decisions from a maintained (build-on-3/4 →
-    // stamp-guarded append + replay no-op → compact) lexical index:
+    // log-fenced append + replay no-op → compact) lexical index:
     // the final index equals the full corpus, so the oracle is
     // tx15's — a divergence means maintenance changed serving.
     ("st20_stream_lex_maintain" -> graft.ops.TextAnalysis.oracle("tx15_bm25_topk")) +

@@ -6,8 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * maintenance-cycle catalog entry to its individual Spark JOBS, by
   * call site — the Phases registry splits a cycle into 3–4 coarse
   * phases, but optimizing a 9 s append phase needs to know which of
-  * its ~20 actions (stamp probes, ledger reads, bucketed writes,
-  * fold commits, GC listings) actually cost. Usage:
+  * its ~20 actions (stamp probes, bucketed writes, log commits, GC
+  * listings) actually cost. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     tools/run.sh graft.tools.MaintainProfile <catalog-query> [more]

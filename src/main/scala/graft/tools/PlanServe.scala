@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   * index-lifecycle catalog entries. Those entries return
   * localCheckpoint-pinned decision frames (so their catalog plan is
   * an opaque `Scan ExistingRDD`); the plan claims that matter — the
-  * pushed impact cap, the merge-log visibility predicate, the
+  * pushed impact cap, the fold visibility predicate, the
   * tombstone over-fetch + broadcast mask + re-cap, the bucket-pruned
   * band probe — live on the PROBE functions. This builds each
   * family's fixture state (persist → append → fold / retire) at the
@@ -33,8 +33,7 @@ object PlanServe {
     // segment (tx23/tx26/tx27's serving lane)
     {
       val prefix = s"graft_lex_planserve_${Integer.toHexString(dir.hashCode)}"
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-planserve-lex").toString
+      val path = IndexCore.newTempDir("planserve-lex")
       LexIndex.persist(spark, dir, path, prefix,
         Some(docs.filter(pmod(col("doc_id"), lit(4)) =!= lit(0))))
       Seq(0, 4, 8).foreach { r =>

@@ -213,8 +213,7 @@ object ScaleStress {
             col("doc_id") < 10000000L)
           .select("doc_id")
         def buildIdx(sub: String): String = {
-          val path = java.nio.file.Files
-            .createTempDirectory(s"graft-stress-ret-$sub").toString
+          val path = graft.ops.IndexCore.newTempDir(s"stress-ret-$sub")
           val prefix = s"graft_stress_ret_${sub}_${System.nanoTime()}"
           BandIndex.persist(spark, dir, path, prefix)
           prefix
@@ -231,7 +230,9 @@ object ScaleStress {
         val t1 = System.nanoTime()
         BandIndex.retireTombstone(spark, pTomb, expired)
         val tTomb = (System.nanoTime() - t1) / 1e9
-        val tombBytes = tableBytes(Seq(graft.ops.IndexCore.tombstonesTable(pTomb)))
+        // the retire writes one commit to the index's log
+        val tombBytes = graft.ops.IndexCore.lastCommit(spark, BandIndex.bandsTable(pTomb))
+          .fold(0L)(java.nio.file.Files.size)
         BandIndex.drop(spark, pTomb)
         (tEager, tTomb, tombBytes, idxBytes)
       }

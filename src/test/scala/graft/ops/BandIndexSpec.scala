@@ -299,9 +299,9 @@ class BandIndexSpec extends SparkSpec {
     BandIndex.retireTombstone(spark, prefix, expired)
     assert(dataFiles() == filesBefore,
       "tombstone retention touched the index's data files")
-    val tombBytes = IndexCore
-      .tableFiles(spark, IndexCore.tombstonesTable(prefix))
-      .map(p => java.nio.file.Files.size(java.nio.file.Paths.get(p))).sum
+    // the retire is one commit to the index's log
+    val tombBytes = IndexCore.lastCommit(spark, BandIndex.bandsTable(prefix))
+      .fold(0L)(java.nio.file.Files.size)
     val indexBytes = filesBefore
       .map(p => java.nio.file.Files.size(java.nio.file.Paths.get(p))).sum
     assert(tombBytes > 0 && tombBytes < indexBytes / 10,
@@ -348,7 +348,7 @@ class BandIndexSpec extends SparkSpec {
     // purge: compaction absorbs the tombstones, clears the set, and
     // changes nothing observable
     BandIndex.compact(spark, prefix)
-    assert(!spark.catalog.tableExists(IndexCore.tombstonesTable(prefix)),
+    assert(IndexCore.state(spark, BandIndex.bandsTable(prefix)).retired.isEmpty,
       "compaction did not clear the tombstone set")
     Seq(BandIndex.bandsTable(prefix), BandIndex.sigsTable(prefix)).foreach { t =>
       assert(IndexCore.tableFiles(spark, t).size <= BandIndex.Buckets,
@@ -474,43 +474,38 @@ class BandIndexSpec extends SparkSpec {
     }
   }
 
-  test("replay after a lost ledger backfills it and converges to the fast guard") {
-    // Crash window: sigs landed (batch fully absorbed) but the ledger
-    // row was lost. The first replay must (a) no-op via the
-    // sigs-present fence and (b) BACKFILL the ledger so every future
-    // replay takes the tiny ledger read instead of re-paying the
-    // stats-pruned fence scan.
+  test("replay after a lost commit re-commits the batch without writing a row") {
+    // Crash window: both tables landed (batch fully absorbed) but the
+    // log commit was lost. The replay must (a) re-decide exactly what
+    // the first attempt decided, (b) write no row — every table's
+    // stamp is present — and (c) commit the batch, so the next replay
+    // is the log's whole-batch no-op.
     import org.apache.spark.sql.functions.col
     val prefix = BandIndex.ensurePersisted(spark, sf, "specledger")
+    val bands = BandIndex.bandsTable(prefix)
     val day0Ids = graft.Tables.documents(spark, sf)
       .filter(col("source") === Dedup.IncBatchSrc)
       .select("doc_id")
-    assert(BandIndex.maintainBatch(spark, sf, prefix, day0Ids, 0L).nonEmpty,
-      "first maintenance of a fresh index must run")
+    val first = BandIndex.maintainBatch(spark, sf, prefix, day0Ids, 0L)
+      .getOrElse(fail("first maintenance of a fresh index must run"))
+      .collect().map(_.toString).toSeq.sorted
+    def rows() = Seq(bands, BandIndex.sigsTable(prefix)).map(spark.table(_).count())
+    val landed = rows()
 
-    // simulate the lost ledger: drop the table and delete its files
-    val ledger = IndexCore.ledgerTable(prefix)
-    val root = IndexCore.indexRootOf(spark, BandIndex.bandsTable(prefix))
-    spark.sql(s"DROP TABLE IF EXISTS $ledger")
-    val dir = new java.io.File(new java.net.URI(
-      if (root.startsWith("file:")) root else s"file:$root").getPath, "ledger")
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmr)); f.delete(); ()
-    }
-    rmr(dir)
-    assert(!IndexCore.ledgerDoneIn(spark, ledger, 0L),
-      "fixture failed to lose the ledger row")
+    // simulate the lost commit: delete the newest log version
+    java.nio.file.Files.delete(IndexCore.lastCommit(spark, bands).get)
+    assert(!IndexCore.state(spark, bands).batches.contains(0L),
+      "fixture failed to lose the commit")
 
-    // replay: sigs-present fence fires, batch is NOT re-run, and the
-    // ledger row is backfilled
-    assert(BandIndex.maintainBatch(spark, sf, prefix, day0Ids, 0L).isEmpty,
-      "replay of a fully-landed batch must no-op")
-    assert(IndexCore.ledgerDoneIn(spark, ledger, 0L),
-      "sigs-present fence did not backfill the ledger")
+    val replay = BandIndex.maintainBatch(spark, sf, prefix, day0Ids, 0L)
+      .getOrElse(fail("a batch missing from the log must replay"))
+      .collect().map(_.toString).toSeq.sorted
+    assert(replay == first, "replay decisions diverge from the first attempt's")
+    assert(rows() == landed, "replay of a fully-landed batch wrote rows")
+    assert(IndexCore.state(spark, bands).batches.contains(0L),
+      "replay did not re-commit the batch")
 
-    // converged: the next replay takes the ledger short-circuit (same
-    // observable no-op; the backfill assertion above is what pins
-    // WHICH guard answers it)
+    // converged: the next replay is the log's whole-batch no-op
     assert(BandIndex.maintainBatch(spark, sf, prefix, day0Ids, 0L).isEmpty)
   }
 }

@@ -404,7 +404,7 @@ class Round16OpsSpec extends SparkSpec {
       val p = spark.table(LexIndex.postingsTable(prefix))
       assert(p.filter(col("doc_id") === victimId).count() == 0,
         "retired doc survived the fused rewrite")
-      assert(!spark.catalog.tableExists(IndexCore.tombstonesTable(prefix)),
+      assert(IndexCore.state(spark, LexIndex.postingsTable(prefix)).retired.isEmpty,
         "tombstones not cleared after the purge")
       val bad = p.groupBy("term").agg(
         count(lit(1)).as("n"),

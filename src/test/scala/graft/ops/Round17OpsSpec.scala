@@ -136,10 +136,10 @@ class Round17OpsSpec extends SparkSpec {
       assert(served(prefix) == before,
         "an uncommitted merge output leaked into serving")
       // the single log append flips the fold on
-      IndexCore.commitFold(spark, prefix, t, Seq(0L, 4L), -2L)
+      IndexCore.commitFold(spark, Seq(t), prefix, Seq(0L, 4L), -2L)
       assert(served(prefix) == before,
         "the committed fold changed an answer (content identity broken)")
-      val log = IndexCore.readMergeLog(spark, prefix)
+      val log = IndexCore.state(spark, t).log(prefix)
       assert(log.folded == Set(0L, 4L) && log.outputs == Set(-2L))
       // GC removes exactly the dead inputs
       assert(IndexCore.gcDeadFiles(spark, t, log) > 0)
@@ -190,10 +190,10 @@ class Round17OpsSpec extends SparkSpec {
       assert(dec() == before,
         "an uncommitted band fold output leaked into serving")
       // one log append flips the fold on; inputs dead pre-GC
-      IndexCore.commitFold(spark, prefix, bt, Seq(0L, 1L), -2L)
+      IndexCore.commitFold(spark, Seq(bt, st), prefix, Seq(0L, 1L), -2L)
       assert(dec() == before,
         "the committed band fold changed an answer before GC (double-serve)")
-      val log = IndexCore.readMergeLog(spark, prefix)
+      val log = IndexCore.state(spark, bt).log(prefix)
       assert(log.folded == Set(0L, 1L) && log.outputs == Set(-2L))
       assert(IndexCore.gcDeadFiles(spark, bt, log) > 0)
       assert(IndexCore.gcDeadFiles(spark, st, log) > 0)
@@ -209,7 +209,7 @@ class Round17OpsSpec extends SparkSpec {
     // the THIRD family through the merge log. The family-specific
     // invariant: its maintenance is stamp-is-the-ledger, so after a
     // fold + GC the stamp probe alone would replay a folded batch —
-    // the merge-log fence (IndexCore.foldedUnder) must catch it.
+    // the log's batch fence must catch it.
     val e = graft.Tables.embeddings(spark, sf).select("vec_id", "embedding")
     val newVec = pmod(hash(col("vec_id")), lit(4)) === lit(0)
     val prefix = s"graft_r17_vec_${System.nanoTime()}"
@@ -234,10 +234,10 @@ class Round17OpsSpec extends SparkSpec {
         .bucketBy(b, "cluster").sortBy("cluster").saveAsTable(t)
       assert(dec() == before,
         "an uncommitted vector fold output leaked into serving")
-      IndexCore.commitFold(spark, t, t, Seq(0L, 1L), -2L)
+      IndexCore.commitFold(spark, Seq(t), t, Seq(0L, 1L), -2L)
       assert(dec() == before,
         "the committed vector fold changed an answer before GC (double-serve)")
-      val log = IndexCore.readMergeLog(spark, t)
+      val log = IndexCore.state(spark, t).log(t)
       assert(IndexCore.gcDeadFiles(spark, t, log) > 0)
       assert(dec() == before)
       // replay of a folded batch: stamp files are gone, the log row

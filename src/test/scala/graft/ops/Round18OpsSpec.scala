@@ -109,18 +109,19 @@ class Round18OpsSpec extends SparkSpec {
   test("requireLedgered's footer path still fences a stamped-but-unledgered batch") {
     val prefix = freshLex("m3", Seq.empty)
     val docs = graft.Tables.documents(spark, sf)
-    // ledger exists after one maintained batch …
+    // the log holds one maintained batch …
     assert(LexIndex.maintainBatch(spark, sf, prefix,
       docs.filter(pmod(col("doc_id"), lit(12)) === lit(0)), 0L))
-    // … then a raw append stamps batch 7 with NO ledger row: the
+    // … then a raw table write stamps batch 7 with NO commit: the
     // mid-commit state every maintenance rewrite must refuse
-    LexIndex.append(spark, sf,
-      docs.filter(pmod(col("doc_id"), lit(12)) === lit(4)), prefix, batch = 7L)
-    // precondition for the footer path: both stamp sets derivable
+    LexIndex.writeDocstats(LexIndex.tokenized(
+      docs.filter(pmod(col("doc_id"), lit(12)) === lit(4))), path = "",
+      prefix, 7L, firstWrite = false)
+    // precondition for the footer path: the log's batches and the
+    // footer stamp set are both known
+    assert(IndexCore.state(spark, LexIndex.postingsTable(prefix)).batches == Set(0L))
     assert(IndexCore.stampSetFromFooters(spark,
-      IndexCore.ledgerTable(prefix), "batch_id").contains(Set(0L)))
-    assert(IndexCore.stampSetFromFooters(spark,
-      LexIndex.docstatsTable(prefix), "ingest_batch").isDefined)
+      LexIndex.docstatsTable(prefix), "ingest_batch").contains(Set(-1L, 0L, 7L)))
     val e = intercept[IllegalArgumentException] {
       LexIndex.tieredMerge(spark, prefix)
     }

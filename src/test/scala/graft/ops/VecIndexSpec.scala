@@ -382,7 +382,7 @@ class VecIndexSpec extends SparkSpec {
         == expected, "tombstone-masked ADC serve diverges from eager retire")
 
       VecIndex.pqCompact(spark, prefix)
-      assert(!spark.catalog.tableExists(IndexCore.tombstonesTable(prefix)),
+      assert(IndexCore.state(spark, VecIndex.pqCellsTable(prefix)).retired.isEmpty,
         "pqCompact did not clear the tombstone set")
       val survivors = spark.table(VecIndex.pqCellsTable(prefix))
         .filter(col("vec_id").isin(expiredIds.toSeq: _*)).count()
