@@ -328,7 +328,7 @@ object Bench {
     * minutes for all three host axes (all-core CPU ref, trivial scan,
     * memory bandwidth) to enter the best-ever band before a sweep.
     * Returns (axesOk, calibration, trivialMs); ratchets nothing.
-    * Shared with [[graft.tools.BenchCold]] — round 12's three
+    * Shared with `tools/BenchCold` — round 12's three
     * degraded cold captures in one afternoon (mem_bw 35–68 GB/s vs
     * the 82–84 band, every swing host-attributed by cold_compare)
     * showed the cold instrument needs this gate as much as the warm
@@ -388,7 +388,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Session.local(cpus.toInt)
-    graft.tools.Logs.muteReviewedWindowWarning()
     // Quiet-machine guard: wait for ambient load to settle and stamp
     // the artifact so contention-polluted totals are self-labelling
     // (round-4 lesson — see tools/LoadGuard; threshold tightened to
@@ -513,7 +512,7 @@ object Bench {
     // degraded-host trigger compares the GRADED phases instead, so a
     // bandwidth wobble on dd17's 8 s of fixture writes can neither
     // trip the guard nor hide a real probe/compact regression.
-    val phases = graft.Phases.json()
+    val phases = graft.Metrics.spansJson()
     val priorPhases = prior.map(extractPhases).getOrElse(Map.empty)
     val gradedRatio = gradedCommonRatio(results, priorQueries,
       extractPhases(s"""{"phases":$phases}"""), priorPhases)

@@ -16,7 +16,24 @@ object Session {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    muteReviewedWindowWarning()
     Tables.pin(spark)
     spark
   }
+
+  /** Mute WindowExec's "No Partition Defined ... serious performance
+    * degradation" warning, which carries no signal here: Spark 4's
+    * EliminateWindowPartitions turns every constant-partition window
+    * into an empty partitionSpec, so the engine's bounded prefix-sum
+    * windows look to the executor like a global-sort hazard. The
+    * distinction is enforced instead by PlanLintSpec's allowlist gate
+    * (every unpartitioned catalog window carries a written boundedness
+    * argument) and Round18OpsSpec (no maintenance cycle executes one),
+    * so a new offender still breaks the build. Scoped to the window
+    * package; a non-log4j2 backend keeps the warning. */
+  private def muteReviewedWindowWarning(): Unit =
+    try org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window",
+      org.apache.logging.log4j.Level.ERROR)
+    catch { case _: Throwable => () }
 }

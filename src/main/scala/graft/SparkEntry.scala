@@ -24,14 +24,12 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Relational.queries ++ Joins.queries ++ Breadth.queries ++ Dedup.queries ++
       Similarity.queries ++ TextAnalysis.queries ++ LexIndex.queries ++ Curation.queries ++
-      Multimodal.queries ++ Multimodal.queries2 ++ Multimodal.queries3 ++
-      DataQuality.queries ++ Incremental.queries ++ Streams.queries ++
+      Multimodal.queries ++ DataQuality.queries ++ Incremental.queries ++ Streams.queries ++
       Analytics.queries ++ Layout.queries ++ Graph.queries ++ Pipeline.queries
 
   def oracleSql: Map[String, String] =
     Relational.oracle ++ Joins.oracle ++ Breadth.oracle ++ Dedup.oracle ++
       Similarity.oracle ++ TextAnalysis.oracle ++ LexIndex.oracle ++ Curation.oracle ++
-      Multimodal.oracle ++ Multimodal.oracle2 ++ Multimodal.oracle3 ++
-      DataQuality.oracle ++ Incremental.oracle ++ Streams.oracle ++
+      Multimodal.oracle ++ DataQuality.oracle ++ Incremental.oracle ++ Streams.oracle ++
       Analytics.oracle ++ Layout.oracle ++ Graph.oracle ++ Pipeline.oracle
 }

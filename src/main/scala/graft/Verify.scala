@@ -7,7 +7,6 @@ object Verify {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Session.local(cpus.toInt)
-    graft.tools.Logs.muteReviewedWindowWarning()
     new java.io.File(outDir).mkdirs()
     // Dev knob (unset in the driver's run): restrict the dump to a
     // comma-separated subset for fast single-operator iteration.

@@ -210,7 +210,7 @@ object IndexCore {
   /** One fixture cycle's handle: its index prefix and the timed phases
     * recorded under its tag (the bench artifact's `phases` map). */
   private[ops] final class Cycle(tag: String, val prefix: String) {
-    def phase[T](name: String)(body: => T): T = graft.Phases.time(tag, name)(body)
+    def phase[T](name: String)(body: => T): T = graft.Metrics.span(tag, name)(body)
 
     /** A timed probe, materialized here so the phases sum to the
       * cycle's wall time and the result outlives the cycle's tables. */
@@ -227,7 +227,7 @@ object IndexCore {
       fam: Family)(persist: (String, String) => Unit)(
       body: Cycle => DataFrame): DataFrame = {
     val key = (spark, dir, tag)
-    val (prefix, path) = graft.Phases.time(tag, "persist") {
+    val (prefix, path) = graft.Metrics.span(tag, "persist") {
       lock.synchronized {
         lastCycle.remove(key).foreach { case (f, p, d) =>
           f.drop(spark, p)

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, hash, lit, min, monotonically_increasing_id, pmod, row_number, spark_partition_id, sum}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, count, expr, hash, lit, min, monotonically_increasing_id, pmod, row_number, size, spark_partition_id, sum}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Tables
@@ -470,12 +470,15 @@ object LexIndex {
 
   /** Per-term df corrections for the CURRENT tombstones: how many
     * pending-retired docs contain each term — the broadcast-sized
-    * frame the capped lanes subtract from stored df. Fails loudly
-    * when any pending tombstone has no recorded containment (a
-    * text-less [[retire]]): serving a silently-overcounted df is the
+    * frame the capped lanes subtract from stored df. A retire retried
+    * after a crash before its commit appends its containment rows
+    * again, so each doc counts once per term however many copies
+    * landed. Fails loudly when any pending tombstone (`retired`, the
+    * ids of `tomb`) has no recorded containment (a text-less
+    * [[retire]]): serving a silently-overcounted df is the
     * degradation the round-16 fail-fast existed to prevent. */
   private def dfCorrCounts(spark: SparkSession, prefix: String,
-      tomb: DataFrame): DataFrame = {
+      tomb: DataFrame, retired: Set[Long]): DataFrame = {
     val t = dfcorrTable(prefix)
     require(spark.catalog.tableExists(t),
       s"capped serving under pending tombstones needs the retired docs' " +
@@ -485,16 +488,14 @@ object LexIndex {
     spark.catalog.refreshTable(t)
     val corr = spark.table(t)
       .join(broadcast(tomb.select("retired_id")), Seq("retired_id"), "left_semi")
-    val uncovered = broadcast(tomb.select("retired_id"))
-      .join(corr.select(col("retired_id").as("cid")).distinct(),
-        col("retired_id") === col("cid"), "left_anti")
-      .limit(1).collect()
+    val uncovered = retired --
+      corr.select("retired_id").distinct().collect().map(_.getLong(0))
     require(uncovered.isEmpty,
-      s"pending tombstone ${uncovered.headOption.map(_.getLong(0))} has no " +
+      s"pending tombstone ${uncovered.minOption} has no " +
         s"recorded term containment in $t — it was retired without text; " +
         "run compact + reindexImpact (or mergeReindex) before capped serving")
     broadcast(corr.filter(col("term").isNotNull)
-      .groupBy("term").agg(count(lit(1)).as("corr")))
+      .groupBy("term").agg(size(collect_set(col("retired_id"))).as("corr")))
   }
 
 
@@ -840,7 +841,7 @@ object LexIndex {
     val dfc = tomb match {
       case None => dfc0.select(col("term"), col("df0").as("df"))
       case Some(ts) =>
-        dfc0.join(dfCorrCounts(spark, prefix, ts), Seq("term"), "left")
+        dfc0.join(dfCorrCounts(spark, prefix, ts, st.retired.keySet), Seq("term"), "left")
           .select(col("term"),
             (col("df0") - coalesce(col("corr"), lit(0L))).as("df"))
     }
@@ -917,7 +918,7 @@ object LexIndex {
           .filter(col("brk") <= ImpactCap)
           .drop("brk")
         val corrected = recapped
-          .join(dfCorrCounts(spark, prefix, ts), Seq("term"), "left")
+          .join(dfCorrCounts(spark, prefix, ts, st.retired.keySet), Seq("term"), "left")
           .withColumn("df", col("df") - coalesce(col("corr"), lit(0L)))
           .drop("corr")
         scoreRankTopK(corrected

@@ -138,24 +138,6 @@ object Multimodal {
     }
   }
 
-  val queries: Map[String, Q] = Map(
-    // Binary media column → batched mapPartitions decode (REAL
-    // ImageIO, see object doc) → typed feature frame. The encode
-    // stage stands in for reading media bytes off object storage;
-    // everything downstream of the binary column is exactly the
-    // production dataflow.
-    "mm01_media_features" -> ((s, d) => {
-      import s.implicits._
-      val media = graft.Tables.documents(s, d)
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          MediaRow(id, "image/png", encodePng(id, Option(text).getOrElse("")))
-        })
-      decodeFeatures(media).toDF().orderBy("doc_id")
-    })
-  )
-
   /** Frame-sampling parameters: one GIF frame per [[FrameBytes]]-byte
     * chunk of text; every [[SampleEvery]]-th frame is decoded and
     * kept. Frame raster dims derive from doc_id (both ≥ 1). */
@@ -472,7 +454,26 @@ object Multimodal {
     }
   }
 
-  val queries2: Map[String, Q] = Map(
+  /** Chunk size for the mm03 manifest. */
+  val ChunkBytes = 64
+
+  val queries: Map[String, Q] = Map(
+    // Binary media column → batched mapPartitions decode (REAL
+    // ImageIO, see object doc) → typed feature frame. The encode
+    // stage stands in for reading media bytes off object storage;
+    // everything downstream of the binary column is exactly the
+    // production dataflow.
+    "mm01_media_features" -> ((s, d) => {
+      import s.implicits._
+      val media = graft.Tables.documents(s, d)
+        .select(col("doc_id"), col("text"))
+        .as[(Long, String)]
+        .mapPartitions(_.map { case (id, text) =>
+          MediaRow(id, "image/png", encodePng(id, Option(text).getOrElse("")))
+        })
+      decodeFeatures(media).toDF().orderBy("doc_id")
+    }),
+
     // Video-shaped frame sampling over REAL multi-frame payloads
     // (round 14): animated-GIF bytes → batched mapPartitions decode
     // (mm01's pattern) → every SampleEvery-th frame read, half-scale
@@ -500,13 +501,8 @@ object Multimodal {
         it.grouped(DecodeBatchSize)
           .flatMap(_.iterator.flatMap(decodeFrameSamplesPooled(_, reader)))
       }.toDF().orderBy("doc_id", "frame_idx")
-    })
-  )
+    }),
 
-  /** Chunk size for the mm03 manifest. */
-  val ChunkBytes = 64
-
-  val queries3: Map[String, Q] = Map(
     // Chunk-digest manifest: fixed-size chunks of the media payload,
     // one digest row each — the content-addressable index media
     // dedup/delta-sync pipelines build before any byte shipping.
@@ -720,7 +716,74 @@ object Multimodal {
     }
   }
 
-  val oracle3: Map[String, String] = Map(
+  val oracle: Map[String, String] = Map(
+    // mm01: the DECODED features re-derived arithmetically from the
+    // encode parameters (dims/channels from doc_id, pixel bytes from
+    // the ASCII text — byte == codepoint for this corpus). The Spark
+    // side must round-trip real PNG bytes through `ImageIO` to
+    // reproduce these numbers; a decoder that echoed metadata instead
+    // of decoding would still pass, but one that decoded WRONGLY
+    // (dims, band count, or any of the first 64 pixel samples)
+    // hash-mismatches.
+    "mm01_media_features" ->
+      s"""SELECT doc_id,
+        |  'image/png' AS mime,
+        |  CAST(doc_id % 64 + 1 AS INT) AS width,
+        |  CAST(doc_id % 48 + 1 AS INT) AS height,
+        |  CAST(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 3 END AS INT) AS channels,
+        |  CAST(list_reduce(
+        |    list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(
+        |        generate_series(0, CAST(least($ChecksumPixels,
+        |          (doc_id % 64 + 1) * (doc_id % 48 + 1)) AS INT) - 1),
+        |        i -> CAST(CASE WHEN strlen(text) = 0 THEN 0
+        |                  ELSE unicode(substr(text,
+        |                    CAST(i % strlen(text) AS INT) + 1, 1))
+        |                  END AS BIGINT))),
+        |    (a, b) -> a + b) AS BIGINT) AS pix_checksum
+        |FROM documents ORDER BY doc_id""".stripMargin,
+
+    // mm02's oracle recomputes the DECODED frame features from the
+    // encode parameters: frame f's pixel (x, y) is the text byte at
+    // f·FrameBytes + ((y·w + x) mod chunkLen) (ASCII corpus: byte ==
+    // codepoint), the half-scale resample reads decoded (2x, 2y), and
+    // the checksum sums the resampled pixels. The Spark side must
+    // round-trip real animated-GIF bytes through ImageIO to reproduce
+    // these numbers frame for frame.
+    "mm02_frame_sample" ->
+      s"""WITH f AS (
+         |  SELECT doc_id, text, strlen(text) AS len,
+         |         CAST(doc_id % 16 + 1 AS INT) AS w,
+         |         CAST(doc_id % 12 + 1 AS INT) AS h,
+         |         CAST(ceil(strlen(text) / $FrameBytes.0) AS INT) AS n_frames
+         |  FROM documents
+         |),
+         |fr AS (
+         |  SELECT doc_id, text, len, w, h,
+         |         CAST(unnest(list_filter(generate_series(0, n_frames - 1),
+         |           i -> i % $SampleEvery = 0)) AS INT) AS frame_idx
+         |  FROM f
+         |),
+         |c AS (
+         |  SELECT doc_id, frame_idx, w, h,
+         |         frame_idx * $FrameBytes AS off,
+         |         CAST(least($FrameBytes, len - frame_idx * $FrameBytes) AS INT) AS clen,
+         |         (w + 1) // 2 AS rw, (h + 1) // 2 AS rh, text
+         |  FROM fr
+         |)
+         |SELECT doc_id, frame_idx,
+         |       CAST(unicode(substr(text, off + 1, 1)) AS INT) AS first_byte,
+         |       CAST(rw AS INT) AS resized_w,
+         |       CAST(rh AS INT) AS resized_h,
+         |       CAST(list_reduce(
+         |         list_prepend(CAST(0 AS BIGINT), flatten(
+         |           list_transform(generate_series(0, rh - 1), y ->
+         |             list_transform(generate_series(0, rw - 1), x ->
+         |               CAST(unicode(substr(text,
+         |                 off + ((2 * y * w + 2 * x) % clen) + 1, 1)) AS BIGINT))))),
+         |         (a, b) -> a + b) AS BIGINT) AS resized_checksum
+         |FROM c ORDER BY doc_id, frame_idx""".stripMargin,
+
     // every decoded sample replayed as ascii()·257−32768; peak and
     // energy are exact integer folds, rms one IEEE sqrt both engines
     // compute identically from the same integers.
@@ -879,76 +942,5 @@ object Multimodal {
          |SELECT doc_a, doc_b, hamming FROM ver
          |WHERE hamming <= $HammingMax ORDER BY doc_a, doc_b""".stripMargin
     }
-  )
-
-  // mm02's oracle recomputes the DECODED frame features from the
-  // encode parameters: frame f's pixel (x, y) is the text byte at
-  // f·FrameBytes + ((y·w + x) mod chunkLen) (ASCII corpus: byte ==
-  // codepoint), the half-scale resample reads decoded (2x, 2y), and
-  // the checksum sums the resampled pixels. The Spark side must
-  // round-trip real animated-GIF bytes through ImageIO to reproduce
-  // these numbers frame for frame.
-  val oracle2: Map[String, String] = Map(
-    "mm02_frame_sample" ->
-      s"""WITH f AS (
-         |  SELECT doc_id, text, strlen(text) AS len,
-         |         CAST(doc_id % 16 + 1 AS INT) AS w,
-         |         CAST(doc_id % 12 + 1 AS INT) AS h,
-         |         CAST(ceil(strlen(text) / $FrameBytes.0) AS INT) AS n_frames
-         |  FROM documents
-         |),
-         |fr AS (
-         |  SELECT doc_id, text, len, w, h,
-         |         CAST(unnest(list_filter(generate_series(0, n_frames - 1),
-         |           i -> i % $SampleEvery = 0)) AS INT) AS frame_idx
-         |  FROM f
-         |),
-         |c AS (
-         |  SELECT doc_id, frame_idx, w, h,
-         |         frame_idx * $FrameBytes AS off,
-         |         CAST(least($FrameBytes, len - frame_idx * $FrameBytes) AS INT) AS clen,
-         |         (w + 1) // 2 AS rw, (h + 1) // 2 AS rh, text
-         |  FROM fr
-         |)
-         |SELECT doc_id, frame_idx,
-         |       CAST(unicode(substr(text, off + 1, 1)) AS INT) AS first_byte,
-         |       CAST(rw AS INT) AS resized_w,
-         |       CAST(rh AS INT) AS resized_h,
-         |       CAST(list_reduce(
-         |         list_prepend(CAST(0 AS BIGINT), flatten(
-         |           list_transform(generate_series(0, rh - 1), y ->
-         |             list_transform(generate_series(0, rw - 1), x ->
-         |               CAST(unicode(substr(text,
-         |                 off + ((2 * y * w + 2 * x) % clen) + 1, 1)) AS BIGINT))))),
-         |         (a, b) -> a + b) AS BIGINT) AS resized_checksum
-         |FROM c ORDER BY doc_id, frame_idx""".stripMargin
-  )
-
-  /** Oracle: the DECODED features re-derived arithmetically from the
-    * encode parameters (dims/channels from doc_id, pixel bytes from
-    * the ASCII text — byte == codepoint for this corpus). The Spark
-    * side must round-trip real PNG bytes through `ImageIO` to
-    * reproduce these numbers; a decoder that echoed metadata instead
-    * of decoding would still pass, but one that decoded WRONGLY
-    * (dims, band count, or any of the first 64 pixel samples)
-    * hash-mismatches. */
-  val oracle: Map[String, String] = Map(
-    "mm01_media_features" ->
-      s"""SELECT doc_id,
-        |  'image/png' AS mime,
-        |  CAST(doc_id % 64 + 1 AS INT) AS width,
-        |  CAST(doc_id % 48 + 1 AS INT) AS height,
-        |  CAST(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 3 END AS INT) AS channels,
-        |  CAST(list_reduce(
-        |    list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(
-        |        generate_series(0, CAST(least($ChecksumPixels,
-        |          (doc_id % 64 + 1) * (doc_id % 48 + 1)) AS INT) - 1),
-        |        i -> CAST(CASE WHEN strlen(text) = 0 THEN 0
-        |                  ELSE unicode(substr(text,
-        |                    CAST(i % strlen(text) AS INT) + 1, 1))
-        |                  END AS BIGINT))),
-        |    (a, b) -> a + b) AS BIGINT) AS pix_checksum
-        |FROM documents ORDER BY doc_id""".stripMargin
   )
 }

@@ -16,7 +16,6 @@ object AnsiProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = graft.Session.local(cpus.toInt)
-    Logs.muteReviewedWindowWarning()
 
     def sweep(ansiOn: Boolean): Map[String, Either[String, Seq[String]]] = {
       // set explicitly in both lanes, so neither inherits the other's

@@ -23,7 +23,6 @@ object BenchCold {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = graft.Session.local(cpus.toInt)
-    Logs.muteReviewedWindowWarning()
 
     def coldReset(): Unit = {
       graft.ops.Relational.clearMemo(spark)
@@ -135,13 +134,13 @@ object BenchCold {
     // VERDICT r15 item 8): the warm artifact has carried `phases` +
     // the graded ratio since round 14, but the COLD map reported only
     // opaque full-cycle walls, so cold round-over-round attribution of
-    // maintenance-cost changes stayed prose-driven. Phases holds the
+    // maintenance-cost changes stayed prose-driven. Spans hold the
     // LAST recording — under min-of-2 cold sweeps, sweep 2's values,
     // the same regime the headline cold numbers report. The graded
     // ratio (write phases excluded — the host-bandwidth antenna)
     // rides next to the raw common ratio for the same degraded-host
     // reading the warm guard does.
-    val phases = graft.Phases.json()
+    val phases = graft.Metrics.spansJson()
     val priorPhases = prior.map(graft.Bench.extractPhases).getOrElse(Map.empty)
     val gradedRatio = graft.Bench.gradedCommonRatio(resMap, priorQueries,
       graft.Bench.extractPhases(s"""{"phases":$phases}"""), priorPhases)

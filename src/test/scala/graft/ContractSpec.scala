@@ -45,7 +45,6 @@ class ContractSpec extends AnyFunSuite {
       "Similarity" -> ops.Similarity.queries, "TextAnalysis" -> ops.TextAnalysis.queries,
       "LexIndex" -> ops.LexIndex.queries,
       "Curation" -> ops.Curation.queries, "Multimodal" -> ops.Multimodal.queries,
-      "Multimodal2" -> ops.Multimodal.queries2, "Multimodal3" -> ops.Multimodal.queries3,
       "DataQuality" -> ops.DataQuality.queries, "Incremental" -> ops.Incremental.queries,
       "Streams" -> streaming.Streams.queries, "Analytics" -> ops.Analytics.queries,
       "Layout" -> ops.Layout.queries, "Graph" -> ops.Graph.queries,

@@ -377,8 +377,8 @@ class BandIndexSpec extends SparkSpec {
     // sf0.001 batch probes an index built from the sf0.001 corpus
     // and one built from the 10× sf0.1 corpus, and total shuffle
     // write bytes must stay within 2× while the corpus grows 10×.
-    // (Measured 0.96× — tools/ShuffleProbe; the bound is loose only
-    // for compression jitter.)
+    // (Measured 0.96×; the bound is loose only for compression
+    // jitter.)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val small = BandIndex.ensurePersisted(spark, sf, "shufsmall")
@@ -392,7 +392,7 @@ class BandIndexSpec extends SparkSpec {
           spark.table(BandIndex.bandsTable(prefix)),
           spark.table(BandIndex.sigsTable(prefix))).count()
         run() // warm: neither measurement pays first-run codegen
-        graft.tools.ShuffleProbe.shuffleWriteBytes(spark)(run())
+        graft.Metrics.record(spark)(run())._2.shuffleWriteBytes
       }
       val smallBytes = probeBytes(small)
       val bigBytes = probeBytes(big)

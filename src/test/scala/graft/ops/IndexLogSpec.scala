@@ -4,7 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 
@@ -52,6 +51,30 @@ class IndexLogSpec extends SparkSpec {
     } finally {
       LexIndex.drop(spark, prefix); LexIndex.drop(spark, ref)
       IndexCore.retireTempDir(path); IndexCore.retireTempDir(refPath)
+    }
+  }
+
+  test("a retire retried after a crash at its commit keeps the capped lanes' df exact") {
+    val docs = graft.Tables.documents(spark, sf)
+    val dense = pmod(col("doc_id"), lit(4)) === lit(0)
+    val prefix = s"graft_log_retry_${System.nanoTime()}"
+    val path = IndexCore.newTempDir("logretry")
+    try {
+      LexIndex.persist(spark, sf, path, prefix, Some(docs.filter(!dense)))
+      LexIndex.append(spark, sf, docs.filter(dense), prefix, batch = 1L)
+      val victimId = LexIndex.segmentProbe(spark, sf, prefix)
+        .filter(col("query_id") === 0 && col("rk") === 1).collect().head.getLong(2)
+      val victim = spark.range(1).select(lit(victimId).as("doc_id"))
+      // the crashed attempt has already appended the victim's term
+      // containment when the retry appends it again
+      crashAt("commit retire")(LexIndex.retire(spark, prefix, victim, Some(docs)))
+      LexIndex.retire(spark, prefix, victim, Some(docs))
+      val served = rows(LexIndex.segmentProbe(spark, sf, prefix))
+      LexIndex.mergeReindex(spark, prefix)
+      val rebuilt = rows(LexIndex.impactProbe(spark, sf, prefix))
+      assert(served == rebuilt, s"masked serving after the retried retire differs from the rewrite: ${diff(served, rebuilt)}")
+    } finally {
+      LexIndex.drop(spark, prefix); IndexCore.retireTempDir(path)
     }
   }
 
@@ -206,27 +229,6 @@ class IndexLogSpec extends SparkSpec {
 
   // ---- the state resolve and the last commit ------------------------
 
-  /** Spark jobs started while `body` runs, bracketed by two marker jobs
-    * so every job event before the closing marker has been delivered. */
-  private def jobsDuring(body: => Unit): Int = {
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    def marker(): Int = {
-      val id = s"graft-log-marker-${System.nanoTime()}"
-      sc.setJobGroup(id, id)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      Iterator.continually(Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .getOrElse(fail("marker job event never arrived"))).takeWhile(_ != id).size
-    }
-    sc.addSparkListener(listener)
-    try { marker(); body; marker() }
-    finally sc.removeSparkListener(listener)
-  }
-
   test("resolving an index's state runs no Spark job, re-pointing a table included") {
     val prefix = s"graft_log_jobs_${System.nanoTime()}"
     val path = IndexCore.newTempDir("logjobs")
@@ -241,11 +243,11 @@ class IndexLogSpec extends SparkSpec {
         json.readTree(Files.readAllBytes(f)).get("tables").get(bands).get("location").asText).get
       val lagging = IndexCore.location(spark, bands)
       assert(lagging != committed, "fixture: the catalog must lag the commit")
-      assert(jobsDuring(IndexCore.state(spark, bands)) == 0,
+      assert(graft.Metrics.record(spark)(IndexCore.state(spark, bands))._2.jobs.size == 0,
         "resolving the state started a Spark job")
       assert(IndexCore.location(spark, bands) == committed,
         s"the state resolve did not re-point $bands (was $lagging)")
-      assert(jobsDuring(IndexCore.state(spark, bands)) == 0)
+      assert(graft.Metrics.record(spark)(IndexCore.state(spark, bands))._2.jobs.size == 0)
     } finally {
       BandIndex.drop(spark, prefix); IndexCore.retireTempDir(path)
     }

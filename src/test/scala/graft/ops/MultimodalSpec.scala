@@ -83,10 +83,10 @@ class MultimodalSpec extends SparkSpec {
       (1L, "some payload bytes here", "en", "src0", 23L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val chunks = Multimodal.queries3("mm03_chunk_manifest")(spark, dir)
+    val chunks = Multimodal.queries("mm03_chunk_manifest")(spark, dir)
     assert(chunks.filter(org.apache.spark.sql.functions.col("doc_id") === 0L).count() === 0)
     assert(chunks.filter(org.apache.spark.sql.functions.col("doc_id") === 1L).count() === 1)
-    val frames = Multimodal.queries2("mm02_frame_sample")(spark, dir)
+    val frames = Multimodal.queries("mm02_frame_sample")(spark, dir)
     assert(frames.filter(org.apache.spark.sql.functions.col("doc_id") === 0L).count() === 0)
     assert(frames.filter(org.apache.spark.sql.functions.col("doc_id") === 1L).count() === 1)
   }
@@ -121,7 +121,7 @@ class MultimodalSpec extends SparkSpec {
     // second sampled frame (len ≥ FrameBytes·SampleEvery + 1) yields
     // more than one decoded-frame row
     val dirSf = "/root/testdata/sf0.001"
-    val perDoc = Multimodal.queries2("mm02_frame_sample")(spark, dirSf)
+    val perDoc = Multimodal.queries("mm02_frame_sample")(spark, dirSf)
       .groupBy("doc_id").count()
     val long = graft.Tables.documents(spark, dirSf)
       .filter(org.apache.spark.sql.functions.length(col("text"))
@@ -151,7 +151,7 @@ class MultimodalSpec extends SparkSpec {
     assert(bad.k0 === -1L && bad.k3 === -1L)
     // the catalog entry: pairs exist at sf0.001, every pair shares at
     // least one band key (the LSH containment) and obeys the bound
-    val pairs = Multimodal.queries3("mm05_perceptual_dedup")(spark, sf).collect()
+    val pairs = Multimodal.queries("mm05_perceptual_dedup")(spark, sf).collect()
     assert(pairs.nonEmpty, "no perceptual near-dup pairs at sf0.001 — vacuous fixture")
     assert(pairs.forall(_.getLong(2) <= Multimodal.HammingMax))
     import spark.implicits._

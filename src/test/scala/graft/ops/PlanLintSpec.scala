@@ -275,4 +275,25 @@ class PlanLintSpec extends SparkSpec {
       s"pushable-filtered parquet scans with no pushdown (add to pushdownExempt " +
         s"only with a written reason):\n${violations.mkString("\n")}")
   }
+
+  test("no main source outside graft/tools imports or names graft.tools") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val tools = root.resolve("graft/tools")
+    assert(Files.isDirectory(tools), s"run from the project root: no $tools")
+    // the one exception: Bench's quiet-machine guard, until the bench
+    // retires its host-axes gate
+    val allowed = Map(root.resolve("graft/Bench.scala") -> "graft.tools.LoadGuard")
+    val names = """\bgraft\.tools\b|\bimport\s+tools\.""".r
+    val walk = Files.walk(root)
+    val offenders = try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(tools))
+      .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if names.findFirstIn(allowed.get(p).fold(line)(line.replace(_, ""))).nonEmpty =>
+          s"$p:${i + 1}: ${line.trim}"
+      }).toList
+    finally walk.close()
+    assert(offenders.isEmpty, s"main code depends on the dev tools:\n${offenders.mkString("\n")}")
+  }
 }

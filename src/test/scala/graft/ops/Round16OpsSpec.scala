@@ -204,7 +204,7 @@ class Round16OpsSpec extends SparkSpec {
     // KL ~ 0, the gate must NOT fire, no reindex phase runs
     val quiet = corpus(lit("query filter join alpha beta"))
     q2Run(quiet)
-    val phasesQuiet = graft.Phases.snapshot().getOrElse("tx22", Seq.empty)
+    val phasesQuiet = graft.Metrics.spans().getOrElse("tx22", Seq.empty)
     assert(phasesQuiet.exists(_._1 == "drift"), "drift gate never ran")
     assert(!phasesQuiet.exists(_._1 == "reindex"),
       s"quiet corpus fired the rebuild: ${phasesQuiet.map(_._1)}")
@@ -214,7 +214,7 @@ class Round16OpsSpec extends SparkSpec {
     // (global impact order restored end to end)
     val drifted = corpus(lit("stream window batch dup zulu"))
     val served = q2Run(drifted)
-    val phasesDrift = graft.Phases.snapshot().getOrElse("tx22", Seq.empty)
+    val phasesDrift = graft.Metrics.spans().getOrElse("tx22", Seq.empty)
     assert(phasesDrift.exists(_._1 == "reindex"),
       s"drifted corpus did not fire the rebuild: ${phasesDrift.map(_._1)}")
     val prefix = s"graft_lex_tx22full_${System.nanoTime()}"

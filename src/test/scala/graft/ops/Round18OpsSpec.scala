@@ -162,55 +162,28 @@ class Round18OpsSpec extends SparkSpec {
     // windows are all term-/query-partitioned by design.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val offenders = java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-    val delivered = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def scan(p: SparkPlan): Unit = {
-        val expanded = p match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case x => x
-        }
-        expanded match {
-          case w: org.apache.spark.sql.execution.window.WindowExecBase
-              if w.partitionSpec.isEmpty =>
-            offenders.add(w.windowExpression.mkString(",").take(120)); ()
-          case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
-              if w.partitionSpec.isEmpty =>
-            offenders.add(w.toString.take(120)); ()
-          case _ =>
-        }
-        expanded.children.foreach(scan)
-        expanded.subqueries.foreach(scan)
+    def offenders(p: SparkPlan): Seq[String] = {
+      val expanded = p match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case x => x
       }
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = {
-        try scan(qe.executedPlan) catch { case _: Throwable => () }
-        delivered.incrementAndGet(); ()
-      }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = { delivered.incrementAndGet(); () }
+      (expanded match {
+        case w: org.apache.spark.sql.execution.window.WindowExecBase
+            if w.partitionSpec.isEmpty => Seq(w.windowExpression.mkString(",").take(120))
+        case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
+            if w.partitionSpec.isEmpty => Seq(w.toString.take(120))
+        case _ => Nil
+      }) ++ (expanded.children ++ expanded.subqueries).flatMap(offenders)
     }
-    spark.listenerManager.register(listener)
-    try {
+    val (_, rec) = graft.Metrics.record(spark) {
       LexIndex.autoMaintainCycle(spark, sf, "r18winlex").count()
       BandIndex.tieredCycle(spark, sf, "r18winband").count()
-      // listener events are delivered asynchronously: read the offender
-      // set only once the count of delivered plans has stopped growing
-      // (stable across a 2 s window, 120 s at most)
-      val deadline = System.nanoTime() + 120L * 1000000000L
-      var seen = -1L
-      while (delivered.get() != seen && System.nanoTime() < deadline) {
-        seen = delivered.get()
-        Thread.sleep(2000)
-      }
-    } finally spark.listenerManager.unregister(listener)
-    assert(delivered.get() > 0,
-      "the listener saw no executed plan — the gate would pass vacuously")
-    assert(offenders.isEmpty,
-      s"maintenance cycles executed unpartitioned windows: $offenders")
+    }
+    val found = rec.plans.flatMap(p => offenders(p._2.executedPlan)).distinct
+    assert(rec.plans.nonEmpty,
+      "the record holds no executed plan — the gate would pass vacuously")
+    assert(found.isEmpty,
+      s"maintenance cycles executed unpartitioned windows: $found")
   }
 
   test("manifest trims to the live listing after compaction and GC") {

@@ -471,7 +471,7 @@ class VecIndexSpec extends SparkSpec {
       def probeBytes(prefix: String): Long = {
         val run = () => VecIndex.probe(spark, sf, prefix).count()
         run() // warm: neither measurement pays first-run codegen
-        graft.tools.ShuffleProbe.shuffleWriteBytes(spark)(run())
+        graft.Metrics.record(spark)(run())._2.shuffleWriteBytes
       }
       val smallBytes = probeBytes(small)
       val bigBytes = probeBytes(big)
